@@ -49,9 +49,15 @@ def queries():
 
 
 def oracles():
-    """name -> DuckDB oracle SQL (only for oracle-checkable queries)."""
-    from hdfs_mr_spark.registry import all_specs
+    """name -> DuckDB oracle SQL (only for oracle-checkable queries).
 
+    Writes every media fixture the SQL reads first, so a caller that
+    runs an oracle before its Spark query still finds the file."""
+    from hdfs_mr_spark.registry import all_specs
+    from hdfs_mr_spark.sources.media import FIXTURES, fixture
+
+    for name in FIXTURES:
+        fixture(name)
     return {
         name: spec.oracle
         for name, spec in all_specs().items()

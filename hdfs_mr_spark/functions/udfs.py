@@ -25,6 +25,11 @@ from pyspark.sql import functions as F
 from hdfs_mr_spark.io import table
 from hdfs_mr_spark.registry import query
 
+# Media fixtures (sources/media.py FIXTURES): oracle SQL is a static
+# string (driver contract) that embeds fixture_path(name) at import;
+# query bodies call fixture(name), which writes the parquet on first use.
+from hdfs_mr_spark.sources.media import fixture, fixture_path
+
 # Worker-side module resolution (driver-contract hardening): kernels
 # that call the tested MODULE codecs must import hdfs_mr_spark ON THE
 # WORKER, but Python workers inherit neither the driver's sys.path nor
@@ -41,9 +46,10 @@ REPO_ROOT = str(_Path(__file__).resolve().parents[2])
 
 
 def repo_kernel(module: str, name: str):
-    """mapInPandas kernel factory: resolves ``module.name`` ON THE
-    WORKER (repo root injected into sys.path first) and delegates the
-    batch iterator to it. The returned closure is created at runtime,
+    """mapInPandas / applyInPandas kernel factory: resolves
+    ``module.name`` ON THE WORKER (repo root injected into sys.path
+    first) and delegates its one argument (the batch iterator, or the
+    group frame) to it. The returned closure is created at runtime,
     so cloudpickle serializes it BY VALUE — no importable-module
     requirement at unpickle time, unlike passing the module-level
     function object directly."""
@@ -56,7 +62,7 @@ def repo_kernel(module: str, name: str):
         if root not in sys.path:
             sys.path.insert(0, root)
         fn = getattr(importlib.import_module(module), name)
-        yield from fn(batches)
+        return fn(batches)
 
     return kernel
 
@@ -398,38 +404,6 @@ def llm_multimodal_decode(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-# Static media fixture for the REAL-decode query: oracle SQL is a static
-# string (driver contract), so both engines must read one fixed path —
-# same pattern as scans._ORACLE_FIX. Best-effort at import in case the
-# driver runs the oracle before our spark callable.
-try:  # pragma: no cover
-    from hdfs_mr_spark.sources.media import materialize_media
-
-    _MEDIA_FIX = materialize_media()
-except Exception as _media_exc:  # noqa: BLE001
-    # placeholder path keeps import working; log the real cause so a
-    # later oracle file-not-found is diagnosable (ADVICE r3)
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "media fixture materialization failed (media oracles will miss "
-        "their parquet): %r", _media_exc,
-    )
-    _MEDIA_FIX = "/tmp/hmr_media_unavailable.parquet"
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_FIX
-    from hdfs_mr_spark.sources.media import materialize_media_px
-
-    _MEDIA_PX = materialize_media_px()
-except Exception as _media_px_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "pixel media fixture materialization failed: %r", _media_px_exc,
-    )
-    _MEDIA_PX = "/tmp/hmr_media_px_unavailable.parquet"
-
-
 def _px_oracle_sql() -> str:
     """Build the llm_multimodal_pixels oracle: per-image channel sums of
     the full-resolution decode and of the 2x integer box downsample,
@@ -470,7 +444,7 @@ WITH m AS (
   SELECT doc_id,
          8 + (doc_id * 37) % 56 AS w,
          8 + (doc_id * 53) % 56 AS h
-  FROM '{_MEDIA_PX}'
+  FROM '{fixture_path('media_px')}'
 ),
 md AS (SELECT doc_id, w, h, (w + 1) // 2 AS ow, (h + 1) // 2 AS oh FROM m)
 SELECT doc_id,
@@ -592,28 +566,14 @@ def llm_multimodal_pixels(spark, sf_dir):
             )
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_px
 
-    df = spark.read.parquet(materialize_media_px())
+    df = spark.read.parquet(fixture("media_px"))
     return fan_out(df).mapInPandas(
         pixel_batches,
         "doc_id long, width int, height int, ds_width int, ds_height int, "
         "sum_r long, sum_g long, sum_b long, "
         "ds_sum_r long, ds_sum_g long, ds_sum_b long",
     ).orderBy("doc_id")
-
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_PX
-    from hdfs_mr_spark.sources.media import materialize_media_jpeg
-
-    _MEDIA_JPEG = materialize_media_jpeg()
-except Exception as _media_jpeg_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "JPEG media fixture materialization failed: %r", _media_jpeg_exc,
-    )
-    _MEDIA_JPEG = "/tmp/hmr_media_jpeg_unavailable.parquet"
 
 
 def _jpeg_px_oracle_sql() -> str:
@@ -642,7 +602,7 @@ WITH m AS (
   SELECT doc_id,
          9 + (doc_id * 41) % 55 AS w,
          9 + (doc_id * 59) % 55 AS h
-  FROM '{_MEDIA_JPEG}'
+  FROM '{fixture_path('media_jpeg')}'
 )
 SELECT doc_id,
        CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -857,9 +817,8 @@ def llm_multimodal_pixels_jpeg(spark, sf_dir):
             )
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_jpeg
 
-    df = spark.read.parquet(materialize_media_jpeg())
+    df = spark.read.parquet(fixture("media_jpeg"))
     return fan_out(df).mapInPandas(
         jpeg_batches,
         "doc_id long, width int, height int, n_blocks int, "
@@ -880,7 +839,7 @@ SELECT doc_id, mime,
                  ELSE ('0x' || substr(hex(payload), 189, 4))::BIGINT
             END AS INTEGER) AS height,
        CAST(octet_length(payload) AS BIGINT) AS n_bytes
-FROM '{_MEDIA_FIX}'
+FROM '{fixture_path('media')}'
 ORDER BY doc_id
 """,
     family="2.11 llm multimodal",
@@ -943,9 +902,7 @@ def llm_multimodal_decode_real(spark, sf_dir):
                  "height": "int32", "n_bytes": "int64"}
             )
 
-    from hdfs_mr_spark.sources.media import materialize_media
-
-    df = spark.read.parquet(materialize_media())
+    df = spark.read.parquet(fixture("media"))
     return df.mapInPandas(
         decode_batches,
         "doc_id long, mime string, width int, height int, n_bytes long",
@@ -1292,7 +1249,7 @@ WITH dims AS (
               THEN ('0x' || substr(hex(payload), 41, 8))::BIGINT
               ELSE ('0x' || substr(hex(payload), 189, 4))::BIGINT
          END AS h
-  FROM '{_MEDIA_FIX}'
+  FROM '{fixture_path('media')}'
 )
 SELECT doc_id, mime,
        CAST(w AS INTEGER) AS src_w, CAST(h AS INTEGER) AS src_h,
@@ -1360,26 +1317,11 @@ def llm_multimodal_resize_real(spark, sf_dir):
                  "dst_w": "int32", "dst_h": "int32"}
             )
 
-    from hdfs_mr_spark.sources.media import materialize_media
-
-    df = spark.read.parquet(materialize_media())
+    df = spark.read.parquet(fixture("media"))
     return df.mapInPandas(
         resize_batches,
         "doc_id long, mime string, src_w int, src_h int, dst_w int, dst_h int",
     ).orderBy("doc_id")
-
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_FIX
-    from hdfs_mr_spark.sources.media import materialize_audio
-
-    _AUDIO_FIX = materialize_audio()
-except Exception as _audio_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "audio fixture materialization failed: %r", _audio_exc,
-    )
-    _AUDIO_FIX = "/tmp/hmr_media_audio_unavailable.parquet"
 
 
 @query(
@@ -1389,7 +1331,7 @@ WITH p AS (
   SELECT doc_id,
          CASE WHEN doc_id % 2 = 0 THEN 8000 ELSE 16000 END AS rate,
          800 + (doc_id * 191) % 1600 AS n
-  FROM '{_AUDIO_FIX}'
+  FROM '{fixture_path('media_audio')}'
 ),
 pf AS (
   SELECT doc_id, rate, n, rate // 50 AS frame,
@@ -1435,7 +1377,7 @@ def llm_multimodal_audio_frames(spark, sf_dir):
     task, per-row numpy work, no shuffle before the tiny per-clip
     aggregate; at 100 TB parallelism is the clip count and this is the
     feature-extract stage of an audio ingest DAG."""
-    df = spark.read.parquet(_AUDIO_FIX)
+    df = spark.read.parquet(fixture("media_audio"))
 
     def frame_batches(batches):
         import struct
@@ -1516,7 +1458,7 @@ WITH m AS (
   SELECT doc_id,
          8 + (doc_id * 37) % 56 AS w,
          8 + (doc_id * 53) % 56 AS h
-  FROM '{_MEDIA_PX}'
+  FROM '{fixture_path('media_px')}'
 ),
 p AS (
   SELECT doc_id,
@@ -1647,9 +1589,8 @@ def llm_multimodal_phash(spark, sf_dir):
             yield pd.DataFrame(rows, columns=["doc_id", "phash"]).astype("int64")
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_px
 
-    df = spark.read.parquet(materialize_media_px())
+    df = spark.read.parquet(fixture("media_px"))
     hashes = fan_out(df).mapInPandas(
         phash_batches, "doc_id long, phash long"
     ).localCheckpoint()
@@ -1671,19 +1612,6 @@ def llm_multimodal_phash(spark, sf_dir):
         )
         .orderBy("doc_id")
     )
-
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_JPEG
-    from hdfs_mr_spark.sources.media import materialize_media_jpeg_color
-
-    _MEDIA_JPEG_COLOR = materialize_media_jpeg_color()
-except Exception as _media_jpeg_color_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "color JPEG fixture materialization failed: %r", _media_jpeg_color_exc,
-    )
-    _MEDIA_JPEG_COLOR = "/tmp/hmr_media_jpeg_color_unavailable.parquet"
 
 
 def _jpeg_color_oracle_sql() -> str:
@@ -1710,7 +1638,7 @@ WITH m AS (
   SELECT doc_id,
          9 + (doc_id * 41) % 55 AS w,
          9 + (doc_id * 59) % 55 AS h
-  FROM '{_MEDIA_JPEG_COLOR}'
+  FROM '{fixture_path('media_jpeg_color')}'
 )
 SELECT doc_id,
        CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -1917,27 +1845,13 @@ def llm_multimodal_pixels_jpeg_color(spark, sf_dir):
             )
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_jpeg_color
 
-    df = spark.read.parquet(materialize_media_jpeg_color())
+    df = spark.read.parquet(fixture("media_jpeg_color"))
     return fan_out(df).mapInPandas(
         color_batches,
         "doc_id long, width int, height int, "
         "sum_c0 long, sum_c1 long, sum_c2 long, wsum_x long, wsum_y long",
     ).orderBy("doc_id")
-
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_JPEG
-    from hdfs_mr_spark.sources.media import materialize_media_jpeg_420
-
-    _MEDIA_JPEG_420 = materialize_media_jpeg_420()
-except Exception as _media_jpeg_420_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "4:2:0 JPEG fixture materialization failed: %r", _media_jpeg_420_exc,
-    )
-    _MEDIA_JPEG_420 = "/tmp/hmr_media_jpeg_420_unavailable.parquet"
 
 
 def _jpeg_420_oracle_sql() -> str:
@@ -1971,7 +1885,7 @@ WITH m AS (
   SELECT doc_id,
          9 + (doc_id * 37) % 55 AS w,
          9 + (doc_id * 53) % 55 AS h
-  FROM '{_MEDIA_JPEG_420}'
+  FROM '{fixture_path('media_jpeg_420')}'
 )
 SELECT doc_id,
        CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -2202,28 +2116,13 @@ def llm_multimodal_pixels_jpeg_420(spark, sf_dir):
             )
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_jpeg_420
 
-    df = spark.read.parquet(materialize_media_jpeg_420())
+    df = spark.read.parquet(fixture("media_jpeg_420"))
     return fan_out(df).mapInPandas(
         batches_420,
         "doc_id long, width int, height int, "
         "sum_c0 long, sum_c1 long, sum_c2 long, wsum_x long, wsum_y long",
     ).orderBy("doc_id")
-
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_JPEG
-    from hdfs_mr_spark.sources.media import materialize_media_jpeg_rst
-
-    _MEDIA_JPEG_RST = materialize_media_jpeg_rst()
-except Exception as _media_jpeg_rst_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "restart-marker JPEG fixture materialization failed: %r",
-        _media_jpeg_rst_exc,
-    )
-    _MEDIA_JPEG_RST = "/tmp/hmr_media_jpeg_rst_unavailable.parquet"
 
 
 def _jpeg_rst_oracle_sql() -> str:
@@ -2249,7 +2148,7 @@ WITH m AS (
   SELECT doc_id,
          9 + (doc_id * 41) % 55 AS w,
          9 + (doc_id * 59) % 55 AS h
-  FROM '{_MEDIA_JPEG_RST}'
+  FROM '{fixture_path('media_jpeg_rst')}'
 )
 SELECT doc_id,
        CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -2329,27 +2228,13 @@ def llm_multimodal_pixels_jpeg_rst(spark, sf_dir):
             )
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_jpeg_rst
 
-    df = spark.read.parquet(materialize_media_jpeg_rst())
+    df = spark.read.parquet(fixture("media_jpeg_rst"))
     return fan_out(df).mapInPandas(
         rst_batches,
         "doc_id long, width int, height int, restart_interval int, "
         "sum_px long, wsum_x long, wsum_y long",
     ).orderBy("doc_id")
-
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_JPEG
-    from hdfs_mr_spark.sources.media import materialize_media_px_adam7
-
-    _MEDIA_PX_ADAM7 = materialize_media_px_adam7()
-except Exception as _media_adam7_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "Adam7 PNG fixture materialization failed: %r", _media_adam7_exc,
-    )
-    _MEDIA_PX_ADAM7 = "/tmp/hmr_media_px_adam7_unavailable.parquet"
 
 
 def _png_adam7_oracle_sql() -> str:
@@ -2377,7 +2262,7 @@ WITH m AS (
   SELECT doc_id,
          8 + (doc_id * 37) % 56 AS w,
          8 + (doc_id * 53) % 56 AS h
-  FROM '{_MEDIA_PX_ADAM7}'
+  FROM '{fixture_path('media_px_adam7')}'
 )
 SELECT doc_id,
        CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -2443,27 +2328,13 @@ def llm_multimodal_pixels_interlaced(spark, sf_dir):
             )
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_px_adam7
 
-    df = spark.read.parquet(materialize_media_px_adam7())
+    df = spark.read.parquet(fixture("media_px_adam7"))
     return fan_out(df).mapInPandas(
         adam7_batches,
         "doc_id long, width int, height int, "
         "sum_c0 long, sum_c1 long, sum_c2 long, wsum_x long, wsum_y long",
     ).orderBy("doc_id")
-
-
-try:  # pragma: no cover — same static-path contract as _AUDIO_FIX
-    from hdfs_mr_spark.sources.media import materialize_audio_stereo
-
-    _AUDIO_STEREO_FIX = materialize_audio_stereo()
-except Exception as _audio_stereo_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "stereo audio fixture materialization failed: %r", _audio_stereo_exc,
-    )
-    _AUDIO_STEREO_FIX = "/tmp/hmr_media_audio_stereo_unavailable.parquet"
 
 
 @query(
@@ -2473,7 +2344,7 @@ WITH p AS (
   SELECT doc_id,
          CASE WHEN doc_id % 2 = 0 THEN 8000 ELSE 16000 END AS rate,
          800 + (doc_id * 191) % 1600 AS n
-  FROM '{_AUDIO_STEREO_FIX}'
+  FROM '{fixture_path('media_audio_stereo')}'
 ),
 s AS (
   SELECT p.doc_id, p.rate, p.n,
@@ -2549,29 +2420,14 @@ def llm_multimodal_audio_stereo(spark, sf_dir):
             )
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_audio_stereo
 
-    df = spark.read.parquet(materialize_audio_stereo())
+    df = spark.read.parquet(fixture("media_audio_stereo"))
     return fan_out(df).mapInPandas(
         stereo_batches,
         "doc_id long, rate int, n_samples long, "
         "sum_abs_l long, sum_abs_r long, peak_l long, peak_r long, "
         "energy_l long, energy_r long, cross_lr long",
     ).orderBy("doc_id")
-
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_JPEG
-    from hdfs_mr_spark.sources.media import materialize_media_jpeg_prog
-
-    _MEDIA_JPEG_PROG = materialize_media_jpeg_prog()
-except Exception as _media_jpeg_prog_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "progressive JPEG fixture materialization failed: %r",
-        _media_jpeg_prog_exc,
-    )
-    _MEDIA_JPEG_PROG = "/tmp/hmr_media_jpeg_prog_unavailable.parquet"
 
 
 def _jpeg_prog_oracle_sql() -> str:
@@ -2600,7 +2456,7 @@ WITH m AS (
   SELECT doc_id,
          9 + (doc_id * 41) % 55 AS w,
          9 + (doc_id * 59) % 55 AS h
-  FROM '{_MEDIA_JPEG_PROG}'
+  FROM '{fixture_path('media_jpeg_prog')}'
 )
 SELECT doc_id,
        CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -2668,28 +2524,13 @@ def llm_multimodal_pixels_jpeg_progressive(spark, sf_dir):
             )
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_jpeg_prog
 
-    df = spark.read.parquet(materialize_media_jpeg_prog())
+    df = spark.read.parquet(fixture("media_jpeg_prog"))
     return fan_out(df).mapInPandas(
         prog_batches,
         "doc_id long, width int, height int, "
         "sum_c0 long, sum_c1 long, sum_c2 long, wsum_x long, wsum_y long",
     ).orderBy("doc_id")
-
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_JPEG
-    from hdfs_mr_spark.sources.media import materialize_media_jpeg_prog_sa
-
-    _MEDIA_JPEG_PROG_SA = materialize_media_jpeg_prog_sa()
-except Exception as _media_jpeg_prog_sa_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "SA progressive JPEG fixture materialization failed: %r",
-        _media_jpeg_prog_sa_exc,
-    )
-    _MEDIA_JPEG_PROG_SA = "/tmp/hmr_media_jpeg_prog_sa_unavailable.parquet"
 
 
 def _jpeg_prog_sa_oracle_sql() -> str:
@@ -2715,7 +2556,7 @@ WITH m AS (
   SELECT doc_id,
          9 + (doc_id * 41) % 55 AS w,
          9 + (doc_id * 59) % 55 AS h
-  FROM '{_MEDIA_JPEG_PROG_SA}'
+  FROM '{fixture_path('media_jpeg_prog_sa')}'
 )
 SELECT doc_id,
        CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -2799,27 +2640,13 @@ def llm_multimodal_pixels_jpeg_prog_sa(spark, sf_dir):
             )
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_jpeg_prog_sa
 
-    df = spark.read.parquet(materialize_media_jpeg_prog_sa())
+    df = spark.read.parquet(fixture("media_jpeg_prog_sa"))
     return fan_out(df).mapInPandas(
         sa_batches,
         "doc_id long, width int, height int, al int, "
         "sum_c0 long, sum_c1 long, sum_c2 long",
     ).orderBy("doc_id")
-
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_FIX
-    from hdfs_mr_spark.sources.media import materialize_media_gif
-
-    _MEDIA_GIF = materialize_media_gif()
-except Exception as _media_gif_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "GIF fixture materialization failed: %r", _media_gif_exc,
-    )
-    _MEDIA_GIF = "/tmp/hmr_media_gif_unavailable.parquet"
 
 
 def _gif_oracle_sql() -> str:
@@ -2851,7 +2678,7 @@ WITH m AS (
   SELECT doc_id,
          8 + (doc_id * 37) % 56 AS w,
          8 + (doc_id * 53) % 56 AS h
-  FROM '{_MEDIA_GIF}'
+  FROM '{fixture_path('media_gif')}'
 )
 SELECT doc_id,
        CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -2916,27 +2743,13 @@ def llm_multimodal_pixels_gif(spark, sf_dir):
             )
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_gif
 
-    df = spark.read.parquet(materialize_media_gif())
+    df = spark.read.parquet(fixture("media_gif"))
     return fan_out(df).mapInPandas(
         gif_batches,
         "doc_id long, width int, height int, "
         "sum_c0 long, sum_c1 long, sum_c2 long, wsum_x long, wsum_y long",
     ).orderBy("doc_id")
-
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_GIF
-    from hdfs_mr_spark.sources.media import materialize_media_gif_anim
-
-    _MEDIA_GIF_ANIM = materialize_media_gif_anim()
-except Exception as _media_gif_anim_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "animated GIF fixture materialization failed: %r", _media_gif_anim_exc,
-    )
-    _MEDIA_GIF_ANIM = "/tmp/hmr_media_gif_anim_unavailable.parquet"
 
 
 def _gif_anim_oracle_sql() -> str:
@@ -2966,7 +2779,7 @@ WITH m AS (
          8 + (doc_id * 37) % 56 AS w,
          8 + (doc_id * 53) % 56 AS h,
          4 + doc_id % 9 AS nf
-  FROM '{_MEDIA_GIF_ANIM}'
+  FROM '{fixture_path('media_gif_anim')}'
 ),
 fr AS (
   SELECT m.doc_id, m.w, m.h, m.nf, r.f
@@ -3031,9 +2844,8 @@ def llm_multimodal_framesample_gif(spark, sf_dir):
             )
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_gif_anim
 
-    df = spark.read.parquet(materialize_media_gif_anim())
+    df = spark.read.parquet(fixture("media_gif_anim"))
     return fan_out(df).mapInPandas(
         frame_batches,
         "doc_id long, n_frames int, frame_idx int, "
@@ -3053,7 +2865,7 @@ WITH m AS (
   SELECT doc_id,
          8 + (doc_id * 37) % 56 AS w,
          8 + (doc_id * 53) % 56 AS h
-  FROM '{_MEDIA_PX}'
+  FROM '{fixture_path('media_px')}'
 ),
 md AS (
   SELECT doc_id, w, h,
@@ -3204,9 +3016,8 @@ def llm_multimodal_resize_pixels(spark, sf_dir):
             )
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_px
 
-    df = spark.read.parquet(materialize_media_px())
+    df = spark.read.parquet(fixture("media_px"))
     return fan_out(df).mapInPandas(
         resize_batches,
         "doc_id long, src_w int, src_h int, dst_w int, dst_h int, "
@@ -3245,13 +3056,13 @@ WITH mp AS (
   SELECT doc_id,
          8 + (doc_id * 37) % 56 AS w,
          8 + (doc_id * 53) % 56 AS h
-  FROM '{_MEDIA_PX}'
+  FROM '{fixture_path('media_px')}'
 ),
 mj AS (
   SELECT doc_id + 1000 AS doc_id, doc_id AS jdoc,
          9 + (doc_id * 41) % 55 AS w,
          9 + (doc_id * 59) % 55 AS h
-  FROM '{_MEDIA_JPEG}'
+  FROM '{fixture_path('media_jpeg')}'
 ),
 pp AS (SELECT doc_id, {fold(png_gray)} AS phash FROM mp),
 p AS (
@@ -3504,14 +3315,12 @@ def _mixed_phash_frame(spark):
     from hdfs_mr_spark.io import fan_out
     from hdfs_mr_spark.sources.media import (
         jpeg_encode_gray,
-        materialize_media_jpeg,
-        materialize_media_px,
         media_px_dims,
         media_px_value,
     )
 
-    png = spark.read.parquet(materialize_media_px())
-    jpg = spark.read.parquet(materialize_media_jpeg()).select(
+    png = spark.read.parquet(fixture("media_px"))
+    jpg = spark.read.parquet(fixture("media_jpeg")).select(
         (F.col("doc_id") + 1000).alias("doc_id"), "payload"
     )
     # the cross-format duplicate: a real JPEG on a 64x72 canvas whose
@@ -3777,7 +3586,7 @@ WITH p AS (
   SELECT doc_id,
          CASE WHEN doc_id % 2 = 0 THEN 8000 ELSE 16000 END AS rate,
          800 + (doc_id * 191) % 1600 AS n
-  FROM '{_AUDIO_FIX}'
+  FROM '{fixture_path('media_audio')}'
 ),
 pf AS (
   SELECT doc_id, rate // 50 AS frame, n // (rate // 50) AS nf FROM p
@@ -3852,7 +3661,7 @@ def llm_multimodal_audio_vad(spark, sf_dir):
     frames op, parallelism = clip count. Kernel and rollup are the
     module-level vad_energy_batches / vad_rollup, shared verbatim
     with the streaming twin stream_audio_vad."""
-    df = spark.read.parquet(_AUDIO_FIX)
+    df = spark.read.parquet(fixture("media_audio"))
     fe = df.mapInPandas(
         repo_kernel("hdfs_mr_spark.functions.udfs", "vad_energy_batches"),
         schema="doc_id bigint, f bigint, energy bigint",
@@ -3864,19 +3673,6 @@ def llm_multimodal_audio_vad(spark, sf_dir):
 # Indexed-color (PLTE) PNG pixels — registers the round-7 palette
 # decoder (sources/media.py png_decode_palette) as a first-class query
 # (VERDICT r7 item 1: the decoder existed but had no consumer).
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_GIF
-    from hdfs_mr_spark.sources.media import materialize_media_px_palette
-
-    _MEDIA_PAL = materialize_media_px_palette()
-except Exception as _media_pal_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "palette-PNG fixture materialization failed: %r", _media_pal_exc,
-    )
-    _MEDIA_PAL = "/tmp/hmr_media_px_palette_unavailable.parquet"
-
 
 def palette_px_batches(batches):
     """mapInPandas kernel: pixel-true indexed-color PNG decode (PLTE
@@ -3947,7 +3743,7 @@ WITH m AS (
   SELECT doc_id,
          8 + (doc_id * 37) % 56 AS w,
          8 + (doc_id * 53) % 56 AS h
-  FROM '{_MEDIA_PAL}'
+  FROM '{fixture_path('media_px_palette')}'
 )
 SELECT doc_id,
        CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -3982,7 +3778,7 @@ def llm_multimodal_pixels_palette(spark, sf_dir):
     repo_kernel (worker-side repo-root injection)."""
     from hdfs_mr_spark.io import fan_out
 
-    df = spark.read.parquet(_MEDIA_PAL)
+    df = spark.read.parquet(fixture("media_px_palette"))
     return fan_out(df).mapInPandas(
         repo_kernel("hdfs_mr_spark.functions.udfs", "palette_px_batches"),
         "doc_id long, width int, height int, n_palette int, "
@@ -3994,20 +3790,6 @@ def llm_multimodal_pixels_palette(spark, sf_dir):
 # Mixed multi-channel / IEEE-float WAV (VERDICT r6 item 8): surround
 # PCM16 (3-6 channels) and float32 clips in ONE fixture, so the parser
 # must dispatch on the fmt chunk per blob, not assume a layout.
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_GIF
-    from hdfs_mr_spark.sources.media import materialize_audio_multi
-
-    _AUDIO_MULTI = materialize_audio_multi()
-except Exception as _audio_multi_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "multi-channel audio fixture materialization failed: %r",
-        _audio_multi_exc,
-    )
-    _AUDIO_MULTI = "/tmp/hmr_media_audio_multi_unavailable.parquet"
-
 
 def audio_multi_batches(batches):
     """mapInPandas kernel: chunk-walking parse of mixed PCM16-surround /
@@ -4073,7 +3855,7 @@ WITH m AS (
               ELSE 1 + doc_id % 4 END AS nch,
          CASE WHEN doc_id % 2 = 0 THEN 8000 ELSE 16000 END AS rate,
          800 + (doc_id * 191) % 1600 AS n
-  FROM '{_AUDIO_MULTI}'
+  FROM '{fixture_path('media_audio_multi')}'
 ),
 chx AS (
   SELECT m.*, c.ch FROM m, range(0, 6) c(ch) WHERE c.ch < m.nch
@@ -4115,7 +3897,7 @@ def llm_multimodal_audio_multichannel(spark, sf_dir):
     count."""
     from hdfs_mr_spark.io import fan_out
 
-    df = spark.read.parquet(_AUDIO_MULTI)
+    df = spark.read.parquet(fixture("media_audio_multi"))
     return fan_out(df).mapInPandas(
         repo_kernel("hdfs_mr_spark.functions.udfs", "audio_multi_batches"),
         "doc_id long, fmt_code int, n_channels int, rate int, ch int, "
@@ -4126,20 +3908,6 @@ def llm_multimodal_audio_multichannel(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Transparent indexed-color PNG (tRNS) — the alpha mechanism color
 # type 3 actually uses in crawl data (logos, icons, sprites).
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_PAL
-    from hdfs_mr_spark.sources.media import materialize_media_px_palette_trns
-
-    _MEDIA_PAL_TRNS = materialize_media_px_palette_trns()
-except Exception as _media_pal_trns_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "tRNS palette fixture materialization failed: %r",
-        _media_pal_trns_exc,
-    )
-    _MEDIA_PAL_TRNS = "/tmp/hmr_media_px_palette_trns_unavailable.parquet"
-
 
 def palette_rgba_batches(batches):
     """mapInPandas kernel: indexed-color + tRNS decode to RGBA ->
@@ -4211,7 +3979,7 @@ WITH m AS (
   SELECT doc_id,
          8 + (doc_id * 37) % 56 AS w,
          8 + (doc_id * 53) % 56 AS h
-  FROM '{_MEDIA_PAL_TRNS}'
+  FROM '{fixture_path('media_px_palette_trns')}'
 )
 SELECT doc_id,
        CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -4245,25 +4013,12 @@ def llm_multimodal_pixels_palette_alpha(spark, sf_dir):
     image count."""
     from hdfs_mr_spark.io import fan_out
 
-    df = spark.read.parquet(_MEDIA_PAL_TRNS)
+    df = spark.read.parquet(fixture("media_px_palette_trns"))
     return fan_out(df).mapInPandas(
         repo_kernel("hdfs_mr_spark.functions.udfs", "palette_rgba_batches"),
         "doc_id long, width int, height int, n_palette int, n_trns int, "
         "sum_c0 long, sum_c1 long, sum_c2 long, sum_alpha long, premul long",
     ).orderBy("doc_id")
-
-
-try:  # pragma: no cover — same static-path contract as _MEDIA_PX
-    from hdfs_mr_spark.sources.media import materialize_media_bmp
-
-    _MEDIA_BMP = materialize_media_bmp()
-except Exception as _media_bmp_exc:  # noqa: BLE001
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "BMP media fixture materialization failed: %r", _media_bmp_exc,
-    )
-    _MEDIA_BMP = "/tmp/hmr_media_bmp_unavailable.parquet"
 
 
 def _bmp_px_oracle_sql() -> str:
@@ -4286,7 +4041,7 @@ WITH m AS (
   SELECT doc_id,
          8 + (doc_id * 37) % 56 AS w,
          8 + (doc_id * 53) % 56 AS h
-  FROM '{_MEDIA_BMP}'
+  FROM '{fixture_path('media_bmp')}'
 )
 SELECT doc_id,
        CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -4357,7 +4112,7 @@ def llm_multimodal_pixels_bmp(spark, sf_dir):
                          "sum_r", "sum_g", "sum_b"],
             )
 
-    src = spark.read.parquet(_MEDIA_BMP)
+    src = spark.read.parquet(fixture("media_bmp"))
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("width", T.IntegerType()),
@@ -4375,8 +4130,6 @@ def _avi_framesample_oracle_sql() -> str:
     (avi_frame_block_value) — no RIFF walk, no Huffman decode. Dims
     and frame counts come from the same closed forms the fixture
     writer used (jpeg_px_dims / avi_n_frames)."""
-    from hdfs_mr_spark.sources.media import materialize_media_avi
-
     val = "((5 * ((i % w) // 8) + 11 * ((i // w) // 8)" \
           " + 3 * doc_id + 17 * f) % 256)"
     return f"""
@@ -4385,7 +4138,7 @@ WITH m AS (
          9 + (doc_id * 41) % 55 AS w,
          9 + (doc_id * 59) % 55 AS h,
          4 + doc_id % 7 AS nf
-  FROM '{materialize_media_avi()}'
+  FROM '{fixture_path('media_avi')}'
 ),
 fr AS (
   SELECT m.doc_id, m.w, m.h, m.nf, r.f
@@ -4454,9 +4207,8 @@ def llm_multimodal_framesample_avi(spark, sf_dir):
             })
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_avi
 
-    df = spark.read.parquet(materialize_media_avi())
+    df = spark.read.parquet(fixture("media_avi"))
     return fan_out(df).mapInPandas(
         frame_batches,
         "doc_id long, n_frames int, frame_idx int, luma_sum long",
@@ -4469,8 +4221,6 @@ def _scene_detect_oracle_sql() -> str:
     scene-stepped block formula (avi_scene_block_value) — no RIFF walk,
     no Huffman decode. Milli-units with integer floor division keep
     both engines bit-equal; the cut verdict is a pure comparison."""
-    from hdfs_mr_spark.sources.media import materialize_media_scene
-
     def val(frame):
         return ("((5 * ((i % w) // 8) + 11 * ((i // w) // 8)"
                 f" + 3 * doc_id + 29 * ({frame} // slen)) % 256)")
@@ -4482,7 +4232,7 @@ WITH m AS (
          9 + (doc_id * 59) % 55 AS h,
          4 + doc_id % 7 AS nf,
          2 + doc_id % 2 AS slen
-  FROM '{materialize_media_scene()}'
+  FROM '{fixture_path('media_scene_avi')}'
 ),
 pr AS (
   SELECT m.doc_id, m.w, m.h, m.slen, r.f
@@ -4574,9 +4324,8 @@ def llm_multimodal_scene_detect(spark, sf_dir):
             })
 
     from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import materialize_media_scene
 
-    df = spark.read.parquet(materialize_media_scene())
+    df = spark.read.parquet(fixture("media_scene_avi"))
     return fan_out(df).mapInPandas(
         scene_batches,
         "doc_id long, frame_idx int, mean_delta_milli long, is_cut boolean",
@@ -4590,7 +4339,7 @@ WITH p AS (
   SELECT doc_id,
          CASE WHEN doc_id % 2 = 0 THEN 8000 ELSE 16000 END AS rate,
          800 + (doc_id * 191) % 1600 AS n
-  FROM '{_AUDIO_FIX}'
+  FROM '{fixture_path('media_audio')}'
 ),
 pf AS (
   SELECT doc_id, rate // 50 AS frame, n // (rate // 50) AS nf FROM p
@@ -4642,7 +4391,7 @@ def llm_multimodal_audio_spectral(spark, sf_dir):
     mapInPandas, numpy strided reshape per clip (the three bins are
     sign-mask dot products, vectorized), no shuffle before the tiny
     per-clip aggregate."""
-    df = spark.read.parquet(_AUDIO_FIX)
+    df = spark.read.parquet(fixture("media_audio"))
 
     def spectral_batches(batches):
         import struct

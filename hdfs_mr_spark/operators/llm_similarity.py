@@ -4084,20 +4084,26 @@ def _hnsw_beam_search(nodes, c, edges, banned_base=None):
     the driver as the exact IEEE twin of the Spark/DuckDB left fold
     (acc = 0.0; acc += a[i]*b[i] — same op sequence, same doubles;
     norms are NOT recomputed: they ride in on the collected rows from
-    the same _norm expression). Replaces 3 rounds x {2 rank-windows +
-    3 shuffled joins + eager localCheckpoint} on frames of ~10^3 rows
-    — the old form's per-round machinery cost ~0.7 s/round against
-    ~120 actual scorings. The pointer-chasing serving shape is what a
-    graph index IS at 100 TB: bounded reads against a stored,
-    src-partitioned edge table. Pinned bit-for-bit against a literal
-    replica of the replaced Spark pipeline by
-    tests/test_units.py::test_hnsw_driver_search_matches_spark_form."""
+    the same _norm expression) for every nonzero-norm pair. Zero-norm
+    pairs are where the forms diverge: the driver drops them, so a
+    query can return FEWER than top-5 rows (none at all for a
+    zero-norm query vector), where the replaced Spark form emitted
+    NULL-cosine filler rows ranked last. Replaces 3 rounds x
+    {2 rank-windows + 3 shuffled joins + eager localCheckpoint} on
+    frames of ~10^3 rows — the old form's per-round machinery cost
+    ~0.7 s/round against ~120 actual scorings. The pointer-chasing
+    serving shape is what a graph index IS at 100 TB: bounded reads
+    against a stored, src-partitioned edge table. Pinned bit-for-bit
+    (nonzero norms) against a literal replica of the replaced Spark
+    pipeline by tests/test_units.py::test_hnsw_driver_search_matches_spark_form."""
     spark = nodes.sparkSession
 
     def fold_cos(qe, qn, emb, nrm):
-        # zero-norm guard: the replaced Spark expression yielded NULL
-        # cosine under non-ANSI /0 (sorted last, never beating a real
-        # score) — return None and let callers skip, instead of raising
+        # zero-norm guard: return None and let callers skip the pair
+        # instead of raising. NOT a twin of the replaced Spark form:
+        # that yielded a NULL cosine under non-ANSI /0 and kept the row
+        # (sorted last), so it could fill top-5 with NULL-cosine rows
+        # where this search returns fewer rows
         if qn * nrm == 0:
             return None
         acc = 0.0

@@ -3670,6 +3670,33 @@ def llm_rag_fusion_rrf(spark, sf_dir):
     )
 
 
+def _wordpiece_walk(pdf):
+    """Greedy longest-match walk per word over step rows
+    (word, p, blen), ≤16 hops each -> (word, toks). Every position
+    p ≤ wlen should have a step row (single chars are always in
+    vocabulary); a missing one raises ValueError naming the word and
+    position."""
+    import pandas as pd
+
+    out_w, out_t = [], []
+    for word, g in pdf.groupby("word", sort=False):
+        blen = dict(zip(g["p"].astype(int), g["blen"].astype(int)))
+        wlen = len(word)
+        pos, toks = 1, 0
+        while pos <= wlen:
+            hop = blen.get(pos)
+            if hop is None:
+                raise ValueError(
+                    f"wordpiece walk: no step row for word {word!r} "
+                    f"at position {pos}"
+                )
+            pos += hop
+            toks += 1
+        out_w.append(word)
+        out_t.append(toks)
+    return pd.DataFrame({"word": out_w, "toks": out_t})
+
+
 @query(
     "llm_tokenizer_wordpiece",
     oracle="""
@@ -3808,28 +3835,15 @@ def llm_tokenizer_wordpiece(spark, sf_dir):
         .groupBy("word", "p")
         .agg(F.max("len").alias("blen"))
     )
-    import pandas as pd
-
-    def walk(pdf: pd.DataFrame) -> pd.DataFrame:
-        # greedy longest-match walk per word, ≤16 hops each: every
-        # position p ≤ wlen has a step row (single chars are always in
-        # vocabulary), so blen[pos] is total on the walked domain
-        out_w, out_t = [], []
-        for word, g in pdf.groupby("word", sort=False):
-            blen = dict(zip(g["p"].astype(int), g["blen"].astype(int)))
-            wlen = len(word)
-            pos, toks = 1, 0
-            while pos <= wlen:
-                pos += blen[pos]
-                toks += 1
-            out_w.append(word)
-            out_t.append(toks)
-        return pd.DataFrame({"word": out_w, "toks": out_t})
+    from hdfs_mr_spark.functions.udfs import repo_kernel
 
     toksw = (
         step.withColumn("bkt", F.pmod(F.xxhash64("word"), F.lit(256)))
         .groupBy("bkt")
-        .applyInPandas(walk, "word string, toks int")
+        .applyInPandas(
+            repo_kernel("hdfs_mr_spark.operators.llm_text", "_wordpiece_walk"),
+            "word string, toks int",
+        )
     )
     j = occ.join(toksw, "word").withColumn("wlen", F.length("word"))
     return (

@@ -17,16 +17,20 @@ stdlib:
   (chunk walk / marker scan), NOT fixed-offset peeks — they work on any
   real file, and unit tests feed them hand-mangled variants.
 
-``materialize_media`` writes the blobs once per testdata fingerprint as
-a small parquet (doc_id, mime, payload) both engines read — the same
-static-fixture pattern scan_csv uses.
+:data:`FIXTURES` names every media parquet the multimodal queries read
+(row count + generator). :func:`fixture` writes one on first use under
+the sf0.01 fingerprint dir — the same static-path pattern scan_csv
+uses — and :func:`fixture_path` gives the path oracle SQL embeds.
 """
 
 from __future__ import annotations
 
+import functools
 import math
+import os
 import struct
 import zlib
+from collections.abc import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -130,30 +134,15 @@ def media_dims(doc_id: int) -> tuple[int, int]:
     return 16 + (doc_id * 7919) % 240, 16 + (doc_id * 104729) % 240
 
 
-def materialize_media(sf_dir: str = ORACLE_SF) -> str:
-    """Write the media fixture parquet (doc_id, mime, payload) once per
-    testdata fingerprint; even doc_id -> PNG, odd -> JPEG."""
-    path = _fixture_dir(sf_dir) / "media.parquet"
-    if not path.exists():
-        ids, mimes, blobs = [], [], []
-        for doc_id in range(N_MEDIA):
-            w, h = media_dims(doc_id)
-            if doc_id % 2 == 0:
-                mime, blob = "image/png", make_png(
-                    w, h, (doc_id % 256, (doc_id * 3) % 256, (doc_id * 7) % 256)
-                )
-            else:
-                mime, blob = "image/jpeg", make_jpeg(w, h)
-            ids.append(doc_id)
-            mimes.append(mime)
-            blobs.append(blob)
-        pq.write_table(
-            pa.table({"doc_id": pa.array(ids, pa.int64()),
-                      "mime": pa.array(mimes, pa.string()),
-                      "payload": pa.array(blobs, pa.binary())}),
-            path,
-        )
-    return str(path)
+def make_media(doc_id: int) -> tuple[str, bytes]:
+    """(mime, blob) of the mixed ``media`` fixture: even doc_id -> PNG,
+    odd -> JPEG."""
+    w, h = media_dims(doc_id)
+    if doc_id % 2:
+        return "image/jpeg", make_jpeg(w, h)
+    return "image/png", make_png(
+        w, h, (doc_id % 256, (doc_id * 3) % 256, (doc_id * 7) % 256)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -378,23 +367,6 @@ def make_gradient_png_adam7(doc_id: int) -> bytes:
         lambda x, y, c: media_px_value(x, y, c, doc_id), w, h,
         filter_seed=doc_id,
     )
-
-
-def materialize_media_px_adam7(sf_dir: str = ORACLE_SF) -> str:
-    """Write the Adam7 pixel fixture parquet once per fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_px_adam7.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_PX))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_gradient_png_adam7(i) for i in ids], pa.binary()
-                ),
-            }),
-            path,
-        )
-    return str(path)
 
 
 # ---------------------------------------------------------------------------
@@ -632,42 +604,6 @@ def png_decode_palette_rgba(b: bytes) -> tuple[int, int, int, int, bytes]:
     return w, h, npal, len(trns), bytes(out)
 
 
-def materialize_media_px_palette_trns(sf_dir: str = ORACLE_SF) -> str:
-    """Write the transparent-palette-PNG fixture parquet once per
-    fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_px_palette_trns.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_PAL))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_gradient_png_palette_trns(i) for i in ids],
-                    pa.binary(),
-                ),
-            }),
-            path,
-        )
-    return str(path)
-
-
-def materialize_media_px_palette(sf_dir: str = ORACLE_SF) -> str:
-    """Write the palette-PNG pixel fixture parquet once per fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_px_palette.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_PAL))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_gradient_png_palette(i) for i in ids], pa.binary()
-                ),
-            }),
-            path,
-        )
-    return str(path)
-
-
 def box_downsample(px: bytes, w: int, h: int, factor: int = 2):
     """Integer box-filter downsample of raw RGB bytes: each output
     channel is floor(mean) over its (up to factor x factor) input
@@ -686,22 +622,6 @@ def box_downsample(px: bytes, w: int, h: int, factor: int = 2):
                         s += px[(y * w + x) * 3 + c]
                 out[(oy * ow + ox) * 3 + c] = s // cnt
     return ow, oh, bytes(out)
-
-
-def materialize_media_px(sf_dir: str = ORACLE_SF) -> str:
-    """Write the pixel fixture parquet (doc_id, payload) of gradient
-    PNGs once per testdata fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_px.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_PX))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array([make_gradient_png(i) for i in ids], pa.binary()),
-            }),
-            path,
-        )
-    return str(path)
 
 
 # ---------------------------------------------------------------------------
@@ -1884,24 +1804,6 @@ def make_gradient_jpeg_progressive(doc_id: int) -> bytes:
     return jpeg_encode_progressive_ss(comps, w, h, qtab)
 
 
-def materialize_media_jpeg_prog(sf_dir: str = ORACLE_SF) -> str:
-    """Write the progressive JPEG fixture parquet once per fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_jpeg_prog.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_JPEG))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_gradient_jpeg_progressive(i) for i in ids],
-                    pa.binary(),
-                ),
-            }),
-            path,
-        )
-    return str(path)
-
-
 def make_gradient_jpeg_progressive_sa(doc_id: int) -> bytes:
     """A real FULL-progressive JPEG (spectral selection + successive
     approximation, Al ladder = 1 + doc_id % 3 down to 0) whose
@@ -1922,95 +1824,6 @@ def make_gradient_jpeg_progressive_sa(doc_id: int) -> bytes:
                 comps[c].append(blk)
     return jpeg_encode_progressive_sa(comps, w, h, qtab,
                                       al=1 + doc_id % 3)
-
-
-def materialize_media_jpeg_prog_sa(sf_dir: str = ORACLE_SF) -> str:
-    """Write the successive-approximation progressive JPEG fixture
-    parquet once per fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_jpeg_prog_sa.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_JPEG))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_gradient_jpeg_progressive_sa(i) for i in ids],
-                    pa.binary(),
-                ),
-            }),
-            path,
-        )
-    return str(path)
-
-
-def materialize_media_jpeg_rst(sf_dir: str = ORACLE_SF) -> str:
-    """Write the restart-marker JPEG fixture parquet once per
-    fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_jpeg_rst.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_JPEG))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_gradient_jpeg_rst(i) for i in ids], pa.binary()
-                ),
-            }),
-            path,
-        )
-    return str(path)
-
-
-def materialize_media_jpeg_420(sf_dir: str = ORACLE_SF) -> str:
-    """Write the 4:2:0 JPEG pixel fixture parquet once per fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_jpeg_420.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_JPEG))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_gradient_jpeg_420(i) for i in ids], pa.binary()
-                ),
-            }),
-            path,
-        )
-    return str(path)
-
-
-def materialize_media_jpeg_color(sf_dir: str = ORACLE_SF) -> str:
-    """Write the color JPEG pixel fixture parquet once per fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_jpeg_color.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_JPEG))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_gradient_jpeg_color(i) for i in ids], pa.binary()
-                ),
-            }),
-            path,
-        )
-    return str(path)
-
-
-def materialize_media_jpeg(sf_dir: str = ORACLE_SF) -> str:
-    """Write the JPEG pixel fixture parquet (doc_id, payload) once per
-    testdata fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_jpeg.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_JPEG))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_gradient_jpeg(i) for i in ids], pa.binary()
-                ),
-            }),
-            path,
-        )
-    return str(path)
 
 
 # ---------------------------------------------------------------------------
@@ -2203,57 +2016,6 @@ def parse_wav_ex(b: bytes) -> tuple[int, int, int, bytes]:
     if rate is None or data is None:
         raise ValueError("missing fmt or data chunk")
     return rate, nch, fmt_code, data
-
-
-def materialize_audio_multi(sf_dir: str = ORACLE_SF) -> str:
-    """Write the mixed multi-channel/float audio fixture parquet once
-    per fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_audio_multi.parquet"
-    if not path.exists():
-        ids = list(range(N_AUDIO))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_wav_multi(i) for i in ids], pa.binary()
-                ),
-            }),
-            path,
-        )
-    return str(path)
-
-
-def materialize_audio_stereo(sf_dir: str = ORACLE_SF) -> str:
-    """Write the stereo audio fixture parquet once per fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_audio_stereo.parquet"
-    if not path.exists():
-        ids = list(range(N_AUDIO))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_wav_stereo(i) for i in ids], pa.binary()
-                ),
-            }),
-            path,
-        )
-    return str(path)
-
-
-def materialize_audio(sf_dir: str = ORACLE_SF) -> str:
-    """Write the audio fixture parquet (doc_id, payload) of WAV clips
-    once per testdata fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_audio.parquet"
-    if not path.exists():
-        ids = list(range(N_AUDIO))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array([make_wav(i) for i in ids], pa.binary()),
-            }),
-            path,
-        )
-    return str(path)
 
 
 # ---------------------------------------------------------------------------
@@ -2477,23 +2239,6 @@ def gif_decode_pixels(b: bytes) -> tuple[int, int, bytes]:
     raise ValueError("no image data")
 
 
-def materialize_media_gif(sf_dir: str = ORACLE_SF) -> str:
-    """Write the GIF fixture parquet once per fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_gif.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_PX))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_gradient_gif(i) for i in ids], pa.binary()
-                ),
-            }),
-            path,
-        )
-    return str(path)
-
-
 def gif_frame_index(x: int, y: int, f: int, doc_id: int) -> int:
     """Generative pixel-index formula for frame f of the animated
     fixture."""
@@ -2590,23 +2335,6 @@ def gif_decode_frames(b: bytes) -> tuple[int, int, list[bytes]]:
     return fw, fh, frames
 
 
-def materialize_media_gif_anim(sf_dir: str = ORACLE_SF) -> str:
-    """Write the animated GIF fixture parquet once per fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_gif_anim.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_PX))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_animated_gif(i) for i in ids], pa.binary()
-                ),
-            }),
-            path,
-        )
-    return str(path)
-
-
 # ---------------------------------------------------------------------------
 # BMP pixel-true path (r9): 24-bit uncompressed BI_RGB with the three
 # format quirks a decoder must get right — BGR byte order, BOTTOM-UP
@@ -2658,24 +2386,6 @@ def bmp_decode_pixels(blob: bytes) -> tuple[int, int, bytes]:
             i = 3 * (y * w + x)
             out[i], out[i + 1], out[i + 2] = r, g, b
     return w, h, bytes(out)
-
-
-def materialize_media_bmp(sf_dir: str = ORACLE_SF) -> str:
-    """Write the BMP fixture parquet (doc_id, payload) once per
-    testdata fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_bmp.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_PX))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_gradient_bmp(i) for i in ids], pa.binary()
-                ),
-            }),
-            path,
-        )
-    return str(path)
 
 
 # ---------------------------------------------------------------------------
@@ -2806,39 +2516,66 @@ def avi_decode_frames(b: bytes) -> tuple[int, int, int, list[bytes]]:
     return w, h, nf, info["frames"]
 
 
-def materialize_media_avi(sf_dir: str = ORACLE_SF) -> str:
-    """Write the MJPEG-AVI fixture parquet once per fingerprint."""
-    path = _fixture_dir(sf_dir) / "media_avi.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_PX))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_mjpeg_avi(i) for i in ids], pa.binary()
-                ),
-            }),
-            path,
-        )
-    return str(path)
+# ---------------------------------------------------------------------------
+# Fixture table: every media parquet is (doc_id, payload) over
+# doc_id 0..n-1 with payload = generator(doc_id). A generator returning
+# (mime, payload) adds a mime column (only ``media``). Files live under
+# the ORACLE_SF fingerprint dir at a static path, so oracle SQL embeds
+# fixture_path(name) at import while query bodies call fixture(name).
+
+FIXTURES: dict[str, tuple[int, Callable]] = {
+    "media": (N_MEDIA, make_media),
+    "media_px": (N_MEDIA_PX, make_gradient_png),
+    "media_px_adam7": (N_MEDIA_PX, make_gradient_png_adam7),
+    "media_px_palette": (N_MEDIA_PAL, make_gradient_png_palette),
+    "media_px_palette_trns": (N_MEDIA_PAL, make_gradient_png_palette_trns),
+    "media_jpeg": (N_MEDIA_JPEG, make_gradient_jpeg),
+    "media_jpeg_color": (N_MEDIA_JPEG, make_gradient_jpeg_color),
+    "media_jpeg_420": (N_MEDIA_JPEG, make_gradient_jpeg_420),
+    "media_jpeg_rst": (N_MEDIA_JPEG, make_gradient_jpeg_rst),
+    "media_jpeg_prog": (N_MEDIA_JPEG, make_gradient_jpeg_progressive),
+    "media_jpeg_prog_sa": (N_MEDIA_JPEG, make_gradient_jpeg_progressive_sa),
+    "media_audio": (N_AUDIO, make_wav),
+    "media_audio_stereo": (N_AUDIO, make_wav_stereo),
+    "media_audio_multi": (N_AUDIO, make_wav_multi),
+    "media_gif": (N_MEDIA_PX, make_gradient_gif),
+    "media_gif_anim": (N_MEDIA_PX, make_animated_gif),
+    "media_bmp": (N_MEDIA_PX, make_gradient_bmp),
+    "media_avi": (N_MEDIA_PX, make_mjpeg_avi),
+    "media_scene_avi": (
+        N_MEDIA_PX,
+        functools.partial(make_mjpeg_avi, block_fn=avi_scene_block_value),
+    ),
+}
 
 
-def materialize_media_scene(sf_dir: str = ORACLE_SF) -> str:
-    """Write the scene-structured MJPEG-AVI fixture parquet once per
-    fingerprint (same container writer as media_avi, scene-stepped
-    frame content — llm_multimodal_scene_detect's input)."""
-    path = _fixture_dir(sf_dir) / "media_scene_avi.parquet"
-    if not path.exists():
-        ids = list(range(N_MEDIA_PX))
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array(ids, pa.int64()),
-                "payload": pa.array(
-                    [make_mjpeg_avi(i, avi_scene_block_value)
-                     for i in ids],
-                    pa.binary(),
-                ),
-            }),
-            path,
-        )
-    return str(path)
+def fixture_path(name: str) -> str:
+    """Static parquet path of fixture ``name``; writes no file."""
+    if name not in FIXTURES:
+        raise KeyError(f"unknown media fixture {name!r}")
+    return str(_fixture_dir(ORACLE_SF) / f"{name}.parquet")
+
+
+def fixture(name: str) -> str:
+    """Path of fixture ``name``, writing the parquet first if it is
+    missing. A failing generator raises naming the fixture and leaves
+    no file behind (the table is built before anything is written, and
+    the write lands via rename)."""
+    path = fixture_path(name)
+    if not os.path.exists(path):
+        n, gen = FIXTURES[name]
+        try:
+            rows = [gen(i) for i in range(n)]
+        except Exception as e:
+            raise RuntimeError(
+                f"media fixture {name!r}: generator failed: {e!r}"
+            ) from e
+        cols = {"doc_id": pa.array(range(n), pa.int64())}
+        if rows and isinstance(rows[0], tuple):
+            cols["mime"] = pa.array([m for m, _ in rows], pa.string())
+            rows = [b for _, b in rows]
+        cols["payload"] = pa.array(rows, pa.binary())
+        tmp = f"{path}.{os.getpid()}.tmp"
+        pq.write_table(pa.table(cols), tmp)
+        os.replace(tmp, path)
+    return path

@@ -1156,35 +1156,36 @@ def stream_python_datasource(spark, sf_dir):
     return spark.table(name).orderBy("part").localCheckpoint()
 
 
-def _audio_stream_src() -> str:
-    """Split the WAV-clip fixture parquet into 4 doc_id-ordered files
-    in a fingerprinted dir so an availableNow drain with
+def _media_stream_src(name: str) -> str:
+    """Split media fixture ``name`` into 4 doc_id-ordered parquet
+    shards (fingerprinted dir) so an availableNow drain with
     maxFilesPerTrigger=1 runs REAL multiple micro-batches over blob
-    rows — the arriving-media-shards ingest shape. Clips are
-    independent rows, so batch boundaries never split a clip."""
+    rows — the arriving-media-shards ingest shape. Blobs are
+    independent rows, so batch boundaries never split a clip or an
+    image."""
+    import os
+    import time
+
     import pyarrow.parquet as pq
 
-    from hdfs_mr_spark.sources.media import materialize_audio
+    from hdfs_mr_spark.sources.media import fixture
     from hdfs_mr_spark.sources.scans import ORACLE_SF, _fixture_dir
 
-    src = materialize_audio()
-    d = _fixture_dir(ORACLE_SF) / "audio_stream"
+    src = fixture(name)
+    d = _fixture_dir(ORACLE_SF) / f"{name}_stream"
     done = d / "_SPLIT_DONE"
     if not done.exists():
         d.mkdir(parents=True, exist_ok=True)
         t = pq.read_table(src)
         step = -(-t.num_rows // _N_STREAM_FILES)
-        import os as _os
-        import time as _time
-
-        now = _time.time()
+        now = time.time()
         for i in range(_N_STREAM_FILES):
             pth = d / f"part-{i:02d}.parquet"
             pq.write_table(t.slice(i * step, step), pth)
             # pin mtime order (see _docs_stream_src): per-row kernels are
             # batch-order-invariant, but determinism should not rest on
             # fs timestamp granularity
-            _os.utime(pth, (now - 60 * (_N_STREAM_FILES - i),) * 2)
+            os.utime(pth, (now - 60 * (_N_STREAM_FILES - i),) * 2)
         done.touch()
     return str(d)
 
@@ -1222,7 +1223,7 @@ def stream_audio_vad(spark, sf_dir):
 
     from hdfs_mr_spark.functions.udfs import repo_kernel, vad_rollup
 
-    src = _audio_stream_src()
+    src = _media_stream_src("media_audio")
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("payload", T.BinaryType()),
@@ -1256,38 +1257,6 @@ def stream_audio_vad(spark, sf_dir):
     shutil.rmtree(ckpt, ignore_errors=True)
     fe = spark.read.parquet(out)
     return vad_rollup(fe).localCheckpoint()
-
-
-def _image_stream_src() -> str:
-    """Split the PNG pixel-fixture parquet into 4 doc_id-ordered shards
-    (fingerprinted dir) for a multi-micro-batch availableNow drain —
-    the arriving-image-shards ingest shape; blobs are independent rows
-    so batch boundaries never split an image."""
-    import pyarrow.parquet as pq
-
-    from hdfs_mr_spark.sources.media import materialize_media_px
-    from hdfs_mr_spark.sources.scans import ORACLE_SF, _fixture_dir
-
-    src = materialize_media_px()
-    d = _fixture_dir(ORACLE_SF) / "image_stream"
-    done = d / "_SPLIT_DONE"
-    if not done.exists():
-        d.mkdir(parents=True, exist_ok=True)
-        t = pq.read_table(src)
-        step = -(-t.num_rows // _N_STREAM_FILES)
-        import os as _os
-        import time as _time
-
-        now = _time.time()
-        for i in range(_N_STREAM_FILES):
-            pth = d / f"part-{i:02d}.parquet"
-            pq.write_table(t.slice(i * step, step), pth)
-            # pin mtime order (see _docs_stream_src): per-row kernels are
-            # batch-order-invariant, but determinism should not rest on
-            # fs timestamp granularity
-            _os.utime(pth, (now - 60 * (_N_STREAM_FILES - i),) * 2)
-        done.touch()
-    return str(d)
 
 
 @query(
@@ -1331,7 +1300,7 @@ def stream_image_decode(spark, sf_dir):
 
     from pyspark.sql import types as T
 
-    src = _image_stream_src()
+    src = _media_stream_src("media_px")
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("payload", T.BinaryType()),

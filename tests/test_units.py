@@ -103,12 +103,14 @@ def test_oracle_strings_are_ansi_parseable():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '/root/testdata/sf0.001/{t}.parquet'"
         )
-    for name, spec in all_specs().items():
-        if spec.oracle is None:
-            continue
+    # oracles() is the driver's oracle_sql(): it also writes the media
+    # fixtures the SQL reads, which binding needs
+    from hdfs_mr_spark import oracles
+
+    for name, sql in oracles().items():
         # EXPLAIN parses + binds without executing the (possibly heavy) query
         try:
-            con.execute(f"EXPLAIN {spec.oracle}")
+            con.execute(f"EXPLAIN {sql}")
         except Exception as exc:  # noqa: BLE001
             pytest.fail(f"{name}: oracle SQL failed to bind: {exc}")
 
@@ -3982,3 +3984,17 @@ def test_wordpiece_kernel_matches_join_form(spark):
     new = llm_tokenizer_wordpiece(spark, SF_SMOKE).collect()
     assert len(new) > 0
     assert [tuple(r) for r in new] == [tuple(r) for r in old]
+
+
+def test_wordpiece_walk_missing_step_names_word_and_position():
+    """The wordpiece walk kernel fails with a ValueError naming the word
+    and the position whose step row is missing, not a bare KeyError."""
+    import pandas as pd
+
+    from hdfs_mr_spark.operators.llm_text import _wordpiece_walk
+
+    ok = pd.DataFrame({"word": ["abc"] * 3, "p": [1, 2, 3], "blen": [2, 1, 1]})
+    assert _wordpiece_walk(ok).to_dict("records") == [{"word": "abc", "toks": 2}]
+    gap = pd.DataFrame({"word": ["abcd"] * 3, "p": [1, 3, 4], "blen": [1, 1, 1]})
+    with pytest.raises(ValueError, match="'abcd' at position 2"):
+        _wordpiece_walk(gap)
