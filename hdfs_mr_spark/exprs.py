@@ -69,3 +69,26 @@ def sql_dsum(x: str, scale: int = 8) -> str:
 def sql_davg(x: str, scale: int = 8) -> str:
     """DuckDB rendering of :func:`davg` over expression ``x``."""
     return f"CAST({sql_dsum(x, scale)} / COUNT({x}) AS DOUBLE)"
+
+
+def fold_by_key(df, keys, order, fields, zero, step, finish=None):
+    """Per-key sequential fold, run inside the JVM.
+
+    Groups ``df`` by ``keys``, sorts each key's rows by
+    ``(*order, *fields)`` (``array_sort`` of structs compares field by
+    field), then folds them with ``aggregate(rows, zero, step, finish)``.
+    ``step(acc, s)`` sees one row as struct ``s`` whose fields are the
+    ``order`` and ``fields`` columns; ``zero`` and ``finish`` may read
+    the key columns. Returns ``keys`` plus the folded value as ``fold``.
+
+    Memory is one key's rows, and there is no Python worker, bucket
+    count or schema string. The lambda is interpreted per element, so
+    the fold suits recurrences with few steps per key.
+    """
+    cols = [*order, *fields]
+    rows = df.groupBy(*keys).agg(
+        F.array_sort(F.collect_list(F.struct(*cols))).alias("rows")
+    )
+    return rows.select(
+        *keys, F.aggregate("rows", zero, step, finish).alias("fold")
+    )

@@ -14,6 +14,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hdfs_mr_spark import stats as corpus_stats
+from hdfs_mr_spark.exprs import fold_by_key
 from hdfs_mr_spark.io import fan_out, table
 from hdfs_mr_spark.registry import query
 
@@ -2974,6 +2975,40 @@ def llm_keyword_extract(spark, sf_dir):
     )
 
 
+def _viterbi_fold(edges):
+    """Per-doc Viterbi DP over lattice steps (doc_id, lang, L, p, len,
+    cost) -> (doc_id, lang, L, fold = best[L]): the minimum-cost
+    segmentation, folded over the doc's steps sorted by (p, len)."""
+
+    def step(acc, s):
+        # steps arrive sorted by (p, len) and every p has a len=1 step,
+        # so the first step at a new p shifts best[p-1..p-4] down
+        adv = s["p"] > acc["p"]
+        shifted = [acc["cur"], acc["b1"], acc["b2"], acc["b3"]]
+        b = [
+            F.when(adv, x).otherwise(acc[f"b{i}"])
+            for i, x in enumerate(shifted, 1)
+        ]
+        prev = F.element_at(F.array(*b), s["len"])
+        cur = F.when(adv, F.lit(None)).otherwise(acc["cur"])
+        return F.struct(
+            s["p"].cast("bigint").alias("p"),
+            F.least(cur, prev + s["cost"]).alias("cur"),
+            *[x.alias(f"b{i}") for i, x in enumerate(b, 1)],
+        )
+
+    nil = F.lit(None).cast("bigint")
+    zero = F.struct(
+        F.lit(0).cast("bigint").alias("p"),
+        F.lit(0).cast("bigint").alias("cur"),
+        *[nil.alias(f"b{i}") for i in (1, 2, 3, 4)],
+    )
+    return fold_by_key(
+        edges, ["doc_id", "lang", "L"], ["p", "len"], ["cost"],
+        zero, step, lambda acc: acc["cur"],
+    )
+
+
 @query(
     "llm_tokenizer_viterbi",
     oracle="""
@@ -3048,23 +3083,22 @@ def llm_tokenizer_viterbi(spark, sf_dir):
     driver-side model — positions explode per doc, the vocabulary is a
     combiner-shape substring count, edge costs come from joining the
     candidates back against the vocabulary; only the per-doc DP walk
-    (inherently sequential in position) runs in a grouped-map pandas
-    kernel — docs hash-bucketed 256 ways with the walk looped inside
-    the kernel (r15-opt; one group per doc paid the r13 ~40x per-group
-    Arrow overhead n_docs times), emitting per-lang combiner partials
-    (exact int64 sums, so bucketing cannot perturb a bit; parallelism
-    = buckets, memory = one 120-char lattice). The DuckDB oracle
-    replays the identical DP as a lockstep recursive CTE whose working
-    set is the last four positions (age 0..3).
+    (inherently sequential in position) is a per-key fold
+    (exprs.fold_by_key, in the JVM): each doc's (p, len, cost) steps
+    sorted, the accumulator carrying best[p-1..p-4] and the running
+    minimum at p. Per-lang totals are exact int64 sums of the per-doc
+    optimum. The DuckDB oracle replays the identical DP as a lockstep
+    recursive CTE whose working set is the last four positions
+    (age 0..3).
 
     Scale: vocabulary counting and lattice construction are linear
-    scans + one shuffle each; the kernel receives O(len x 4) rows per
-    doc. At 100 TB the same plan segments every shard independently
-    against a shared trained vocabulary (here trained on the sampled
-    corpus itself; counts clamp at 2^20-1 so the cost lattice is
-    sf-stable)."""
-    import pandas as pd
-
+    scans + one shuffle each; the fold holds one doc's O(len x 4)
+    steps (at most 480). At 100 TB the same plan segments every shard
+    independently against a shared trained vocabulary (here trained
+    on the sampled corpus itself; counts clamp at 2^20-1 so the cost
+    lattice is sf-stable). A doc's best cost is at most 120 * 2^40
+    (~1.3e14), so the BIGINT total_cost of one lang holds ~7e4 such
+    docs before ANSI overflow raises."""
     d = (
         table(spark, sf_dir, "documents")
         .filter((F.col("doc_id") % 4 == 0) & (F.length("text") >= 1))
@@ -3100,59 +3134,14 @@ def llm_tokenizer_viterbi(spark, sf_dir):
         ).cast("bigint").alias("cost"),
     )
 
-    schema = (
-        "lang string, n_docs bigint, total_chars bigint, "
-        "total_tokens bigint, total_cost bigint"
-    )
-
-    def viterbi(pdf: pd.DataFrame) -> pd.DataFrame:
-        # r15-opt (the r13 applyInPandas lesson, guide §4.2): one group
-        # per DOC paid the ~40x per-group Arrow overhead ~n_docs times;
-        # the kernel now receives a 256-way HASH BUCKET and loops the
-        # per-doc DP inside, emitting per-lang COMBINER partials (exact
-        # int64 sums of the identical per-doc DP values — addition is
-        # commutative, so bucket boundaries cannot perturb a bit).
-        agg: dict[str, list[int]] = {}
-        for (_doc, lang), g in pdf.groupby(["doc_id", "lang"], sort=False):
-            L = int(g["L"].iloc[0])
-            by_p: dict[int, list[tuple[int, int]]] = {}
-            for p, ln, c in zip(g["p"], g["len"], g["cost"]):
-                by_p.setdefault(int(p), []).append((int(ln), int(c)))
-            best = [0] + [None] * L
-            for p in range(1, L + 1):
-                b = None
-                for ln, c in by_p.get(p, ()):
-                    prev = best[p - ln]
-                    if prev is not None and (b is None or prev + c < b):
-                        b = prev + c
-                best[p] = b
-            a = agg.setdefault(lang, [0, 0, 0, 0])
-            a[0] += 1
-            a[1] += L
-            a[2] += best[L] // 2 ** 40
-            a[3] += best[L]
-        return pd.DataFrame(
-            [
-                {"lang": lang, "n_docs": a[0], "total_chars": a[1],
-                 "total_tokens": a[2], "total_cost": a[3]}
-                for lang, a in agg.items()
-            ],
-            columns=["lang", "n_docs", "total_chars", "total_tokens",
-                     "total_cost"],
-        )
-
-    partials = (
-        edges.withColumn("bkt", F.col("doc_id") % 256)
-        .groupBy("bkt")
-        .applyInPandas(viterbi, schema)
-    )
     return (
-        partials.groupBy("lang")
+        _viterbi_fold(edges).groupBy("lang")
         .agg(
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            F.sum("total_chars").cast("bigint").alias("total_chars"),
-            F.sum("total_tokens").cast("bigint").alias("total_tokens"),
-            F.sum("total_cost").cast("bigint").alias("total_cost"),
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum("L").cast("bigint").alias("total_chars"),
+            F.sum(F.expr("fold DIV 1099511627776")).cast("bigint")
+            .alias("total_tokens"),
+            F.sum("fold").cast("bigint").alias("total_cost"),
         )
         .orderBy("lang")
     )
@@ -3670,31 +3659,33 @@ def llm_rag_fusion_rrf(spark, sf_dir):
     )
 
 
-def _wordpiece_walk(pdf):
-    """Greedy longest-match walk per word over step rows
-    (word, p, blen), ≤16 hops each -> (word, toks). Every position
-    p ≤ wlen should have a step row (single chars are always in
-    vocabulary); a missing one raises ValueError naming the word and
+def _wordpiece_fold(step):
+    """Greedy longest-match walk per word over step rows (word, p, blen):
+    a fold over the word's steps sorted by p, hopping when p is the
+    current position, at most 16 hops -> (word, fold = toks). Every
+    position p <= wlen should have a step row (single chars are always
+    in vocabulary); a missing one raises an error naming the word and
     position."""
-    import pandas as pd
 
-    out_w, out_t = [], []
-    for word, g in pdf.groupby("word", sort=False):
-        blen = dict(zip(g["p"].astype(int), g["blen"].astype(int)))
-        wlen = len(word)
-        pos, toks = 1, 0
-        while pos <= wlen:
-            hop = blen.get(pos)
-            if hop is None:
-                raise ValueError(
-                    f"wordpiece walk: no step row for word {word!r} "
-                    f"at position {pos}"
-                )
-            pos += hop
-            toks += 1
-        out_w.append(word)
-        out_t.append(toks)
-    return pd.DataFrame({"word": out_w, "toks": out_t})
+    def hop(acc, s):
+        at = s["p"] == acc["pos"]
+        return F.struct(
+            F.when(at, acc["pos"] + s["blen"])
+            .otherwise(acc["pos"]).alias("pos"),
+            F.when(at, acc["toks"] + 1).otherwise(acc["toks"]).alias("toks"),
+        )
+
+    def finish(acc):
+        missing = F.concat(
+            F.lit("wordpiece walk: no step row for word '"), F.col("word"),
+            F.lit("' at position "), acc["pos"].cast("string"),
+        )
+        return F.when(
+            acc["pos"] <= F.length("word"), F.raise_error(missing)
+        ).otherwise(acc["toks"])
+
+    zero = F.struct(F.lit(1).alias("pos"), F.lit(0).alias("toks"))
+    return fold_by_key(step, ["word"], ["p"], ["blen"], zero, hop, finish)
 
 
 @query(
@@ -3772,20 +3763,18 @@ def llm_tokenizer_wordpiece(spark, sf_dir):
     (lang, word) occurrence counts at the end. The step function
     best(word, pos) = max matching piece length collapses greedy's
     argmax into ONE combiner aggregate; the data-dependent walk over
-    it is a per-word sequential fold, so it runs as ONE bucketed
-    Arrow kernel pass (r16-opt, guide §4.2/§2.4 — the viterbi/croston
-    discipline): step rows hash-bucket 256 ways and each word's ≤16
-    greedy hops loop inside the kernel, replacing the former 16
-    chained equi-join rounds + 4 localCheckpoint plan-depth barriers
-    (measured 2.7–2.9 → 1.53 s at sf0.1, outputs bit-identical — the
-    kernel replays the identical walk over the identical step rows;
-    pinned by tests/test_units.py::test_wordpiece_kernel_matches_join_form).
+    it is a per-word sequential fold (exprs.fold_by_key, in the JVM):
+    each word's step rows sorted by position, the accumulator
+    (pos, toks) hopping when a row's p is the current position. It
+    replaced 16 chained equi-join rounds + 4 localCheckpoint plan-depth
+    barriers with one groupBy; outputs are bit-identical, pinned by
+    tests/test_units.py::test_wordpiece_kernel_matches_join_form.
     The DuckDB twin replays the walk as a recursive CTE over the same
     step function.
 
     Scale: piece counting and the step function are vocabulary-sized
     (distinct words x <=16 positions x 4 lengths), not corpus-sized;
-    the 16 rounds cost O(|vocab|) each. Fertility ratios are integer
+    the fold holds one word's <=16 step rows. Fertility ratios are integer
     micro-units (DECIMAL(38,0) / HUGEINT twin promotion)."""
     d = table(spark, sf_dir, "documents")
     ws = d.select(
@@ -3835,15 +3824,8 @@ def llm_tokenizer_wordpiece(spark, sf_dir):
         .groupBy("word", "p")
         .agg(F.max("len").alias("blen"))
     )
-    from hdfs_mr_spark.functions.udfs import repo_kernel
-
-    toksw = (
-        step.withColumn("bkt", F.pmod(F.xxhash64("word"), F.lit(256)))
-        .groupBy("bkt")
-        .applyInPandas(
-            repo_kernel("hdfs_mr_spark.operators.llm_text", "_wordpiece_walk"),
-            "word string, toks int",
-        )
+    toksw = _wordpiece_fold(step).select(
+        "word", F.col("fold").alias("toks")
     )
     j = occ.join(toksw, "word").withColumn("wlen", F.length("word"))
     return (

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from hdfs_mr_spark.exprs import DEC
+from hdfs_mr_spark.exprs import DEC, fold_by_key
 from hdfs_mr_spark.io import table
 from hdfs_mr_spark.registry import query
 
@@ -3847,20 +3847,16 @@ def ts_forecast_croston(spark, sf_dir):
     p' = (q*1000 + 4p) div 5 in milli-units (all terms non-negative,
     so floor == trunc in every engine and Python); init z = first
     demand * 1000, p = (first week - corpus min week + 1) * 1000;
-    rates as single 128-bit-safe integer floor-divs, SBA via the
-    equal-rational (z * 900000) div p spelling.
+    rates as single integer floor-divs, SBA via the equal-rational
+    (z * 900000) div p spelling. The weekly quantity sum is <= ~3e3,
+    so z <= 3e6 milli-units and z * 1e6 <= 3e12, far inside BIGINT.
 
-    Spark shape: recurrences are sequential per series, but one part
-    is a TINY group — groups are hash-bucketed (partkey % 256, the r13
-    applyInPandas 40x-overhead lesson) and the kernel walks ALL parts
-    of a bucket in lockstep over the demand index (r15-opt, guide
-    §4.2: one vectorized int64 step per index instead of a Python
-    loop per part); parallelism = buckets, state = two int vectors.
-    The corpus min week rides in as a broadcast 1-row aggregate
-    column. The oracle replays the same walk as a lockstep recursive
-    CTE over (part, demand-index)."""
-    import pandas as pd
-
+    Spark shape: recurrences are sequential per series, so each part's
+    demand weeks are one per-key fold (exprs.fold_by_key, in the JVM):
+    rows sorted by week, accumulator (n, z, p, previous week); memory
+    is one part's ~30-50 demand rows. The corpus min week rides in as
+    a broadcast 1-row aggregate column. The oracle replays the same
+    walk as a lockstep recursive CTE over (part, demand-index)."""
     li = table(spark, sf_dir, "lineitem")
     dem = li.groupBy(
         "l_partkey",
@@ -3870,63 +3866,39 @@ def ts_forecast_croston(spark, sf_dir):
         ).alias("wk"),
     ).agg(F.sum(F.col("l_quantity").cast("bigint")).alias("y"))
     mn = dem.agg(F.min("wk").alias("minwk"))
-    demb = (
-        dem.crossJoin(F.broadcast(mn))
-        .withColumn("bkt", F.col("l_partkey") % 256)
+
+    def div5(x):
+        return F.call_function("div", x, F.lit(5))
+
+    def step(acc, s):
+        first = acc["n"] == 0
+        return F.struct(
+            (acc["n"] + 1).alias("n"),
+            F.when(first, s["y"] * 1000)
+            .otherwise(div5(s["y"] * 1000 + 4 * acc["z"])).alias("z"),
+            F.when(first, (s["wk"] - s["minwk"] + 1) * 1000)
+            .otherwise(div5((s["wk"] - acc["pw"]) * 1000 + 4 * acc["p"]))
+            .alias("p"),
+            s["wk"].alias("pw"),
+        )
+
+    zero = F.struct(
+        *[F.lit(0).cast("bigint").alias(c) for c in ("n", "z", "p", "pw")]
     )
-
-    schema = (
-        "p_partkey bigint, n_demand_weeks bigint, z_milli bigint, "
-        "p_milli_weeks bigint, croston_rate_micro bigint, "
-        "sba_rate_micro bigint"
-    )
-
-    cols = ["p_partkey", "n_demand_weeks", "z_milli", "p_milli_weeks",
-            "croston_rate_micro", "sba_rate_micro"]
-
-    def croston(pdf: pd.DataFrame) -> pd.DataFrame:
-        # r15-opt (guide §4.2): the per-part Python loop (pandas groupby
-        # + int walk per part, ~80 parts/bucket x ~40 steps each) is now
-        # ONE vectorized walk over the demand INDEX: step k updates every
-        # part still longer than k, so the python-level loop runs
-        # max-series-length times per bucket instead of parts x length.
-        # Exactness: the recurrence operands are non-negative int64s
-        # (y <= ~3e3 weekly quantity sum, so z <= 3e6 milli-units and
-        # z * 1e6 <= 3e12 << 2^63), and numpy int64 `//` IS Python's
-        # floor-div — the walk is the bit-for-bit twin of the scalar
-        # loop it replaced (pinned by test_croston_kernel_matches_loop).
-        import numpy as np
-
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        pdf = pdf.sort_values(["l_partkey", "wk"], kind="mergesort")
-        pk = pdf["l_partkey"].to_numpy(np.int64)
-        wk = pdf["wk"].to_numpy(np.int64)
-        y = pdf["y"].to_numpy(np.int64)
-        minwk = np.int64(pdf["minwk"].iloc[0])
-        starts = np.flatnonzero(np.r_[True, pk[1:] != pk[:-1]])
-        lens = np.diff(np.r_[starts, len(pk)])
-        keep = lens >= 2
-        if not keep.any():
-            return pd.DataFrame(columns=cols)
-        s, ln = starts[keep], lens[keep]
-        z = y[s] * 1000
-        p = (wk[s] - minwk + 1) * 1000
-        for k in range(1, int(ln.max())):
-            m = ln > k
-            i = s[m] + k
-            z[m] = (y[i] * 1000 + 4 * z[m]) // 5
-            p[m] = ((wk[i] - wk[i - 1]) * 1000 + 4 * p[m]) // 5
-        return pd.DataFrame({
-            "p_partkey": pk[s], "n_demand_weeks": ln.astype(np.int64),
-            "z_milli": z, "p_milli_weeks": p,
-            "croston_rate_micro": (z * 1000000) // p,
-            "sba_rate_micro": (z * 900000) // p,
-        })
-
+    walk = fold_by_key(
+        dem.crossJoin(F.broadcast(mn)), ["l_partkey"], ["wk"],
+        ["y", "minwk"], zero, step,
+    ).select("l_partkey", "fold.*")
     return (
-        demb.groupBy("bkt")
-        .applyInPandas(croston, schema)
+        walk.filter(F.col("n") >= 2)
+        .select(
+            F.col("l_partkey").cast("bigint").alias("p_partkey"),
+            F.col("n").alias("n_demand_weeks"),
+            F.col("z").alias("z_milli"),
+            F.col("p").alias("p_milli_weeks"),
+            F.expr("z * 1000000 DIV p").alias("croston_rate_micro"),
+            F.expr("z * 900000 DIV p").alias("sba_rate_micro"),
+        )
         .orderBy("p_partkey")
     )
 

@@ -1496,3 +1496,54 @@ def test_headline_exchange_counts_pinned(spark):
         "plan fingerprints drifted (deliberate? regenerate via "
         f"tools/exchange_counts.py and review): {drifted}"
     )
+
+
+def _single_partition_exchanges_outside_broadcast(plan: str) -> list[str]:
+    """Ids of `Exchange SinglePartition` nodes with no BroadcastExchange
+    above them in the plan tree. A 1-row scalar aggregate that is
+    broadcast into a join is fine; anything else puts a whole stage on
+    one task."""
+    import re
+
+    ids = re.findall(
+        r"^\((\d+)\) Exchange\n(?:.+\n)*?Arguments: SinglePartition", plan, re.M
+    )
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    bad = []
+    for i in ids:
+        row = next(k for k, ln in enumerate(tree) if ln.endswith(f" Exchange ({i})"))
+        col = re.search(r"[A-Za-z]", tree[row]).start()
+        for ln in reversed(tree[:row]):
+            m = re.search(r"[A-Za-z]\w*", ln)
+            if m and m.start() < col:
+                col = m.start()
+                if m.group() == "BroadcastExchange":
+                    break
+        else:
+            bad.append(i)
+    return bad
+
+
+def test_sequential_folds_run_in_jvm(spark):
+    """The per-key sequential folds (Viterbi DP, WordPiece walk,
+    Croston recurrence) run through exprs.fold_by_key: no pandas
+    grouped-map kernel, no stage on a single partition, and no fixed
+    hash-bucket constant left at those sites."""
+    import inspect
+    import re
+
+    from hdfs_mr_spark.operators import llm_text
+
+    names = ("llm_tokenizer_viterbi", "llm_tokenizer_wordpiece",
+             "ts_forecast_croston")
+    specs = all_specs()
+    for name in names:
+        plan = _plan(spark, name)
+        assert "FlatMapGroupsInPandas" not in plan, name
+        assert _single_partition_exchanges_outside_broadcast(plan) == [], name
+    sources = [inspect.getsource(specs[n].fn) for n in names] + [
+        inspect.getsource(llm_text._viterbi_fold),
+        inspect.getsource(llm_text._wordpiece_fold),
+    ]
+    for src in sources:
+        assert not re.search(r"%\s*256\b|pmod\([^)]*\b256\b", src)

@@ -3785,6 +3785,102 @@ def test_croston_kernel_matches_loop(spark):
     assert new == out
 
 
+def _viterbi_kernel_replica(pdf):
+    """Literal replica of the replaced per-bucket pandas Viterbi DP:
+    per-doc best[L] over (p, len, cost) steps, summed per lang."""
+    agg = {}
+    for (_doc, lang), g in pdf.groupby(["doc_id", "lang"], sort=False):
+        L = int(g["L"].iloc[0])
+        by_p = {}
+        for p, ln, c in zip(g["p"], g["len"], g["cost"]):
+            by_p.setdefault(int(p), []).append((int(ln), int(c)))
+        best = [0] + [None] * L
+        for p in range(1, L + 1):
+            b = None
+            for ln, c in by_p.get(p, ()):
+                prev = best[p - ln]
+                if prev is not None and (b is None or prev + c < b):
+                    b = prev + c
+            best[p] = b
+        a = agg.setdefault(lang, [0, 0, 0, 0])
+        a[0] += 1
+        a[1] += L
+        a[2] += best[L] // 2 ** 40
+        a[3] += best[L]
+    return sorted((lang, *a) for lang, a in agg.items())
+
+
+def test_viterbi_fold_matches_kernel(spark):
+    """llm_tokenizer_viterbi's JVM fold reproduces the replaced pandas
+    DP bit-for-bit on the smoke fixture (full returned frame), and on a
+    hand-built lattice where several 2-token segmentations tie on the
+    2^40 rung, so only the frequency rung picks the winner, with steps
+    of every length 1..4 ending at the same positions."""
+    from hdfs_mr_spark.io import table
+    from hdfs_mr_spark.operators.llm_text import _viterbi_fold
+    from tests.conftest import SF_SMOKE
+
+    # the query's lattice, built the same way
+    d = (
+        table(spark, SF_SMOKE, "documents")
+        .filter((F.col("doc_id") % 4 == 0) & (F.length("text") >= 1))
+        .select("doc_id", "lang", F.substring("text", 1, 120).alias("t"))
+        .withColumn("L", F.length("t"))
+    )
+    pieces = (
+        d.select(
+            "doc_id", "lang", "t", "L",
+            F.explode(F.sequence(F.lit(1), F.col("L"))).alias("p"),
+        )
+        .select(
+            "doc_id", "lang", "t", "L", "p",
+            F.explode(F.array(*[F.lit(i) for i in (1, 2, 3, 4)]))
+            .alias("len"),
+        )
+        .filter(F.col("len") <= F.col("p"))
+        .withColumn("piece", F.expr("substring(t, p - len + 1, len)"))
+    )
+    vocab = (
+        pieces.groupBy("len", "piece")
+        .agg(F.count("*").alias("c"))
+        .filter((F.col("len") == 1) | (F.col("c") >= 64))
+    )
+    edges = pieces.join(vocab, ["len", "piece"]).select(
+        "doc_id", "lang", "L", "p", "len",
+        (
+            F.lit(2 ** 40)
+            + (F.lit(2 ** 20) - F.least(F.col("c"), F.lit(2 ** 20 - 1)))
+        ).cast("bigint").alias("cost"),
+    )
+    old = _viterbi_kernel_replica(edges.toPandas())
+    new = [tuple(r) for r in
+           all_specs()["llm_tokenizer_viterbi"].fn(spark, SF_SMOKE).collect()]
+    assert len(new) > 0
+    assert new == old
+
+    # "abcde": a|bcde, ab|cde, abc|de and abcd|e all take 2 tokens;
+    # ab|cde has the highest summed count (70 + 99), so it must win
+    word = "abcde"
+    counts = {"a": 100, "b": 100, "c": 100, "d": 100, "e": 100,
+              "ab": 70, "bc": 64, "cd": 64, "de": 80,
+              "abc": 65, "bcd": 64, "cde": 99, "abcd": 60, "bcde": 64}
+    rows = [
+        (7, "xx", len(word), p, ln, 2 ** 40 + 2 ** 20 - counts[piece])
+        for p in range(1, len(word) + 1)
+        for ln in (1, 2, 3, 4)
+        if ln <= p and (piece := word[p - ln:p]) in counts
+    ]
+    assert sorted(r[4] for r in rows if r[3] == 5) == [1, 2, 3, 4]
+    lattice = spark.createDataFrame(
+        rows, "doc_id bigint, lang string, L int, p int, len int, cost bigint"
+    )
+    got = _viterbi_fold(lattice).collect()
+    expect = 2 * 2 ** 40 + 2 * 2 ** 20 - (70 + 99)
+    assert [(r.doc_id, r.fold) for r in got] == [(7, expect)]
+    replica = _viterbi_kernel_replica(lattice.toPandas())
+    assert replica == [("xx", 1, 5, 2, expect)]
+
+
 def test_hnsw_driver_search_matches_spark_form(spark):
     """r15-opt pin: the driver-coordinated HNSW beam search reproduces
     the replaced Spark pipeline (per-round rank windows + shuffled
@@ -3986,15 +4082,42 @@ def test_wordpiece_kernel_matches_join_form(spark):
     assert [tuple(r) for r in new] == [tuple(r) for r in old]
 
 
-def test_wordpiece_walk_missing_step_names_word_and_position():
-    """The wordpiece walk kernel fails with a ValueError naming the word
-    and the position whose step row is missing, not a bare KeyError."""
-    import pandas as pd
+def test_wordpiece_walk_missing_step_names_word_and_position(spark):
+    """The wordpiece walk fails with an error naming the word and the
+    position whose step row is missing, not a wrong token count."""
+    from pyspark.errors import SparkRuntimeException
 
-    from hdfs_mr_spark.operators.llm_text import _wordpiece_walk
+    from hdfs_mr_spark.operators.llm_text import _wordpiece_fold
 
-    ok = pd.DataFrame({"word": ["abc"] * 3, "p": [1, 2, 3], "blen": [2, 1, 1]})
-    assert _wordpiece_walk(ok).to_dict("records") == [{"word": "abc", "toks": 2}]
-    gap = pd.DataFrame({"word": ["abcd"] * 3, "p": [1, 3, 4], "blen": [1, 1, 1]})
-    with pytest.raises(ValueError, match="'abcd' at position 2"):
-        _wordpiece_walk(gap)
+    schema = "word string, p int, blen int"
+    ok = spark.createDataFrame([("abc", 1, 2), ("abc", 2, 1), ("abc", 3, 1)], schema)
+    assert [tuple(r) for r in _wordpiece_fold(ok).collect()] == [("abc", 2)]
+    gap = spark.createDataFrame([("abcd", 1, 1), ("abcd", 3, 1), ("abcd", 4, 1)], schema)
+    with pytest.raises(SparkRuntimeException, match="'abcd' at position 2"):
+        _wordpiece_fold(gap).collect()
+
+
+@pytest.mark.parametrize("n_rows", [0, 1])
+def test_sequential_folds_on_degenerate_inputs(spark, tmp_path, n_rows):
+    """The three per-key folds return their oracle's answer on zero-row
+    and one-row copies of documents and lineitem."""
+    import pyarrow.parquet as pq
+
+    from hdfs_mr_spark.check import check_query, oracle_connection
+    from hdfs_mr_spark.io import TABLES
+    from tests.conftest import SF_SMOKE
+
+    for t in TABLES:
+        src = f"{SF_SMOKE}/{t}.parquet"
+        dst = tmp_path / f"{t}.parquet"
+        if t in ("documents", "lineitem"):
+            pq.write_table(pq.read_table(src).slice(0, n_rows), str(dst))
+        else:
+            dst.symlink_to(src)
+    sf = str(tmp_path)
+    con = oracle_connection(sf)
+    specs = all_specs()
+    for name in ("llm_tokenizer_viterbi", "llm_tokenizer_wordpiece",
+                 "ts_forecast_croston"):
+        res = check_query(specs[name], spark, con, sf)
+        assert res.ok, (name, res.detail)
