@@ -2593,6 +2593,61 @@ def ts_mann_kendall(spark, sf_dir):
     )
 
 
+def _fd10(e):
+    """True floor division by 10, spelled (e - pmod(e, 10)) div 10:
+    trends go negative, and Spark's div truncates toward zero."""
+    return F.call_function("div", e - F.pmod(e, F.lit(10)), F.lit(10))
+
+
+def _smoothed_status_forecast(spark, sf_dir, damp):
+    """The damped-trend recurrence shared by ts_holt_winters (``damp``
+    the identity) and ts_forecast_ets_damped (``damp`` = fd(9·, 10)),
+    over each order status's weekly integer-cents revenue y: start at
+    lev = first y, tr = 0, then per week pb = damp(tr),
+    lev' = fd(2y + 8(lev + pb), 10), tr' = fd((lev' - lev) + 9·pb, 10).
+    Forecasts are fc_h = lev + d_1 + ... + d_h with d_k = damp^k(tr).
+
+    One exprs.fold_by_key per status, rows in week order: ~360 weekly
+    steps per series, fixed by the calendar rather than by data size,
+    so the interpreted JVM fold stays cheap at any scale."""
+    o = table(spark, sf_dir, "orders")
+    weekly = o.groupBy(
+        "o_orderstatus",
+        F.to_date(F.date_trunc("week", "o_orderdate")).alias("d"),
+    ).agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+        .cast("bigint").alias("y")
+    )
+
+    def step(acc, s):
+        first = acc["n"] == 0
+        pb = damp(acc["tr"])
+        lev = _fd10(2 * s["y"] + 8 * (acc["lev"] + pb))
+        return F.struct(
+            (acc["n"] + 1).alias("n"),
+            F.when(first, s["y"]).otherwise(lev).alias("lev"),
+            F.when(first, 0)
+            .otherwise(_fd10((lev - acc["lev"]) + 9 * pb)).alias("tr"),
+        )
+
+    zero = F.struct(
+        *[F.lit(0).cast("bigint").alias(c) for c in ("n", "lev", "tr")]
+    )
+    fit = fold_by_key(
+        weekly, ["o_orderstatus"], ["d"], ["y"], zero, step
+    ).select("o_orderstatus", "fold.*")
+    d, fc, fcs = F.col("tr"), F.col("lev"), []
+    for h in (1, 2, 3):
+        d = damp(d)
+        fc = fc + d
+        fcs.append(fc.alias(f"fc_{h}"))
+    return fit.select(
+        "o_orderstatus", F.col("n").alias("n_weeks"),
+        F.col("lev").alias("level_final"), F.col("tr").alias("trend_final"),
+        *fcs,
+    ).orderBy("o_orderstatus")
+
+
 @query(
     "ts_holt_winters",
     oracle="""
@@ -2630,57 +2685,19 @@ def ts_holt_winters(spark, sf_dir):
     """Holt's linear-trend double exponential smoothing (the two-
     parameter member of the Holt-Winters family) over each order
     status's weekly-revenue series, with 3-step-ahead forecasts
-    level + h*trend. A recurrence is inherently sequential per series,
-    so the Spark side is applyInPandas per series key — the idiomatic
-    shape for per-series state (parallelism = number of series, which
-    is what a 100 TB deployment has thousands of, while each series
-    stays memory-bounded); the DuckDB oracle replays the SAME
-    recurrence as a recursive CTE advancing all series in lockstep
-    (weekly buckets keep the oracle's recursion ~350 steps).
+    level + h*trend. The recurrence is sequential per series, so each
+    status is one per-key fold in the JVM (_smoothed_status_forecast
+    with no damping, ~360 weekly steps per status, a bound fixed by the
+    calendar rather than by data size); the DuckDB oracle replays the
+    SAME recurrence as a recursive CTE advancing all series in lockstep.
 
     Determinism across engines: floats drift over a multi-hundred-step
     recurrence, so the state is INTEGER cents with alpha=0.2 / beta=0.1
     as exact rational updates — level' = fd(2y + 8(level+trend), 10),
     trend' = fd((level'-level) + 9*trend, 10) — where fd is FLOOR
-    division spelled (e - posmod(e,10))/10 in SQL (exact for negative
-    trends, where DuckDB's // and Python's // could otherwise be
-    conflated with truncation) and Python's native // in the kernel."""
-    import pandas as pd
-
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        "o_orderstatus",
-        F.to_date(F.date_trunc("week", "o_orderdate")).alias("d"),
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint").alias("y")
-    )
-
-    schema = (
-        "o_orderstatus string, n_weeks bigint, level_final bigint, "
-        "trend_final bigint, fc_1 bigint, fc_2 bigint, fc_3 bigint"
-    )
-
-    def holt(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("d")
-        ys = [int(v) for v in pdf["y"]]
-        lev, tr = ys[0], 0
-        for y in ys[1:]:
-            nl = (2 * y + 8 * (lev + tr)) // 10
-            tr = ((nl - lev) + 9 * tr) // 10
-            lev = nl
-        return pd.DataFrame([{
-            "o_orderstatus": pdf["o_orderstatus"].iloc[0],
-            "n_weeks": len(ys),
-            "level_final": lev, "trend_final": tr,
-            "fc_1": lev + tr, "fc_2": lev + 2 * tr, "fc_3": lev + 3 * tr,
-        }])
-
-    return (
-        daily.groupBy("o_orderstatus")
-        .applyInPandas(holt, schema)
-        .orderBy("o_orderstatus")
-    )
+    division spelled (e - posmod(e,10))/10 in both engines (exact for
+    negative trends, where truncating division would differ)."""
+    return _smoothed_status_forecast(spark, sf_dir, lambda tr: tr)
 
 
 def _ets_damped_oracle() -> str:
@@ -2744,58 +2761,19 @@ def ts_forecast_ets_damped(spark, sf_dir):
     in integer cents (the ts_holt_winters discipline: floats drift
     over a multi-hundred-step recurrence; here every step is
     fd(2y + 8(l + fd(9b,10)), 10) with fd = true floor division —
-    Python's native // in the kernel, the (e - posmod(e,10))//10
-    spelling in SQL, exact for negative trends). The damped forecast
+    the (e - posmod(e,10)) div 10 spelling in both engines, exact for
+    negative trends). The damped forecast
     sum is the iterated fd(9·,10) chain, so fc_3's trend contribution
     is visibly ≈ 2.44 b vs Holt's 3 b — the damping IS the output
     difference.
 
-    Spark shape: recurrences are inherently sequential per series —
-    applyInPandas per series key (parallelism = number of series; each
-    series memory-bounded), the idiomatic per-series-state layout at
-    100 TB. The oracle replays the same recurrence as a lockstep
-    recursive CTE (~350 weekly steps)."""
-    import pandas as pd
-
-    o = table(spark, sf_dir, "orders")
-    weekly = o.groupBy(
-        "o_orderstatus",
-        F.to_date(F.date_trunc("week", "o_orderdate")).alias("d"),
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint").alias("y")
-    )
-
-    schema = (
-        "o_orderstatus string, n_weeks bigint, level_final bigint, "
-        "trend_final bigint, fc_1 bigint, fc_2 bigint, fc_3 bigint"
-    )
-
-    def ets(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("d")
-        ys = [int(v) for v in pdf["y"]]
-        lev, tr = ys[0], 0
-        for y in ys[1:]:
-            pb = (9 * tr) // 10
-            nl = (2 * y + 8 * (lev + pb)) // 10
-            tr = ((nl - lev) + 9 * pb) // 10
-            lev = nl
-        db1 = (9 * tr) // 10
-        db2 = (9 * db1) // 10
-        db3 = (9 * db2) // 10
-        return pd.DataFrame([{
-            "o_orderstatus": pdf["o_orderstatus"].iloc[0],
-            "n_weeks": len(ys),
-            "level_final": lev, "trend_final": tr,
-            "fc_1": lev + db1, "fc_2": lev + db1 + db2,
-            "fc_3": lev + db1 + db2 + db3,
-        }])
-
-    return (
-        weekly.groupBy("o_orderstatus")
-        .applyInPandas(ets, schema)
-        .orderBy("o_orderstatus")
-    )
+    Spark shape: the recurrence is sequential per series, so each
+    status is one per-key fold in the JVM — ts_holt_winters' fold
+    (_smoothed_status_forecast) with damping fd(9·,10); ~360 weekly
+    steps per status, a bound fixed by the calendar rather than by data
+    size. The oracle replays the same recurrence as a lockstep
+    recursive CTE."""
+    return _smoothed_status_forecast(spark, sf_dir, lambda tr: _fd10(9 * tr))
 
 
 @query(
@@ -2870,21 +2848,20 @@ def ts_dtw(spark, sf_dir):
     monthly-revenue series (integer cents, |.| local cost, the classic
     (i-1,j)/(i,j-1)/(i-1,j-1) recurrence) — the alignment-invariant
     series distance exact SQL windows cannot express. The Spark side is
-    the idiomatic per-pair grouped-map: both series of a pair are
-    tagged and co-grouped, the O(n*m) DP runs in one pandas kernel
-    (parallelism = number of pairs — a production deployment aligns
-    thousands of series pairs, each memory-bounded at months-
-    granularity); the DuckDB oracle replays the SAME DP as an
-    ANTI-DIAGONAL recursive CTE: the working set is the last two
-    diagonals (age 0/1), each iteration derives diagonal d's cells from
-    its up/left (age 0) and diagonal (age 1) predecessors — integer
-    costs, so both engines agree exactly.
+    one per-pair fold in the JVM (exprs.fold_by_key over the g1 series
+    in month order): each g2 series is collected once as a sorted
+    array b and broadcast to the g1 rows, and each fold step builds the
+    next DP row from the previous one with an inner aggregate over b.
+    At most ~84x84 monthly cells per pair, a bound fixed by the
+    calendar rather than by data size. The DuckDB oracle replays the
+    SAME DP as an ANTI-DIAGONAL recursive CTE: the working set is the
+    last two diagonals (age 0/1), each iteration derives diagonal d's
+    cells from its up/left (age 0) and diagonal (age 1) predecessors —
+    integer costs, so both engines agree exactly.
 
-    Scale: all pair-expansion is an equi-join of the tiny pair spine
-    against the monthly aggregate (the month-level combiner collapses the
-    raw table first); nothing quadratic ever touches row-level data."""
-    import pandas as pd
-
+    Scale: the month-level combiner collapses the raw table first, and
+    the pair expansion joins the tiny per-status arrays to the monthly
+    aggregate; nothing quadratic ever touches row-level data."""
     o = table(spark, sf_dir, "orders")
     monthly = o.groupBy(
         F.col("o_orderstatus").alias("g"),
@@ -2894,53 +2871,44 @@ def ts_dtw(spark, sf_dir):
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
         .cast("bigint").alias("y")
     )
-    gs = monthly.select("g").distinct()
-    pairs = (
-        gs.select(F.col("g").alias("g1"))
-        .join(F.broadcast(gs.select(F.col("g").alias("g2"))),
-              F.col("g1") < F.col("g2"))
+    bs = monthly.groupBy(F.col("g").alias("g2")).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("t", "y"))), lambda r: r["y"]
+        ).alias("b")
     )
-    expand = (
-        pairs.join(monthly, monthly.g == pairs.g1)
-        .select("g1", "g2", F.lit("a").alias("side"), "t", "y")
-        .unionByName(
-            pairs.join(monthly, monthly.g == pairs.g2)
-            .select("g1", "g2", F.lit("b").alias("side"), "t", "y")
+    av = monthly.select(F.col("g").alias("g1"), "t", "y").join(
+        F.broadcast(bs), F.col("g1") < F.col("g2")
+    )
+
+    def step(acc, s):
+        b, prev, later = s["b"], acc["row"], acc["n"] > 0
+
+        def cell(row, j):
+            best = F.least(  # least skips NULLs; cell (0, 0) has none
+                F.when(later, F.element_at(prev, j + 1)),
+                F.when(j > 0, F.element_at(row, j)),
+                F.when(later & (j > 0), F.element_at(prev, j)),
+            )
+            c = F.abs(s["y"] - F.element_at(b, j + 1))
+            return F.concat(row, F.array(c + F.coalesce(best, F.lit(0))))
+
+        row = F.aggregate(
+            F.sequence(F.lit(0), F.size(b) - 1),
+            F.array().cast("array<bigint>"), cell,
         )
+        return F.struct((acc["n"] + 1).alias("n"), row.alias("row"))
+
+    zero = F.struct(
+        F.lit(0).cast("bigint").alias("n"),
+        F.array().cast("array<bigint>").alias("row"),
     )
-
-    schema = "g1 string, g2 string, n bigint, m bigint, dtw_cost bigint"
-
-    def dtw(pdf: pd.DataFrame) -> pd.DataFrame:
-        a = pdf[pdf["side"] == "a"].sort_values("t")["y"].tolist()
-        b = pdf[pdf["side"] == "b"].sort_values("t")["y"].tolist()
-        n, m = len(a), len(b)
-        prev = None
-        for i in range(n):
-            cur = [0] * m
-            for j in range(m):
-                c = abs(int(a[i]) - int(b[j]))
-                if i == 0 and j == 0:
-                    cur[j] = c
-                else:
-                    best = None
-                    for cand in (
-                        prev[j] if i > 0 else None,
-                        cur[j - 1] if j > 0 else None,
-                        prev[j - 1] if i > 0 and j > 0 else None,
-                    ):
-                        if cand is not None and (best is None or cand < best):
-                            best = cand
-                    cur[j] = c + best
-            prev = cur
-        return pd.DataFrame([{
-            "g1": pdf["g1"].iloc[0], "g2": pdf["g2"].iloc[0],
-            "n": n, "m": m, "dtw_cost": prev[m - 1],
-        }])
-
     return (
-        expand.groupBy("g1", "g2")
-        .applyInPandas(dtw, schema)
+        fold_by_key(av, ["g1", "g2"], ["t"], ["y", "b"], zero, step)
+        .select(
+            "g1", "g2", F.col("fold.n").alias("n"),
+            F.size("fold.row").cast("bigint").alias("m"),
+            F.element_at("fold.row", -1).alias("dtw_cost"),
+        )
         .orderBy("g1", "g2")
     )
 

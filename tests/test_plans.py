@@ -1526,16 +1526,22 @@ def _single_partition_exchanges_outside_broadcast(plan: str) -> list[str]:
 
 def test_sequential_folds_run_in_jvm(spark):
     """The per-key sequential folds (Viterbi DP, WordPiece walk,
-    Croston recurrence) run through exprs.fold_by_key: no pandas
-    grouped-map kernel, no stage on a single partition, and no fixed
-    hash-bucket constant left at those sites."""
+    Croston, Holt and damped-ETS recurrences, DTW) run through
+    exprs.fold_by_key: no pandas grouped-map kernel, no stage on a
+    single partition, and no fixed hash-bucket constant left at those
+    sites. No operator module calls applyInPandas at all; the grouped-
+    map API is exercised on purpose only outside operators/ (the
+    udf_grouped_map query and the streaming applyInPandasWithState
+    operators)."""
     import inspect
     import re
+    from pathlib import Path
 
-    from hdfs_mr_spark.operators import llm_text
+    from hdfs_mr_spark.operators import llm_text, windows
 
     names = ("llm_tokenizer_viterbi", "llm_tokenizer_wordpiece",
-             "ts_forecast_croston")
+             "ts_forecast_croston", "ts_holt_winters",
+             "ts_forecast_ets_damped", "ts_dtw")
     specs = all_specs()
     for name in names:
         plan = _plan(spark, name)
@@ -1544,6 +1550,11 @@ def test_sequential_folds_run_in_jvm(spark):
     sources = [inspect.getsource(specs[n].fn) for n in names] + [
         inspect.getsource(llm_text._viterbi_fold),
         inspect.getsource(llm_text._wordpiece_fold),
+        inspect.getsource(windows._smoothed_status_forecast),
     ]
     for src in sources:
         assert not re.search(r"%\s*256\b|pmod\([^)]*\b256\b", src)
+    ops = Path(windows.__file__).parent
+    calls = [str(f.relative_to(ops)) for f in sorted(ops.rglob("*.py"))
+             if ".applyInPandas(" in f.read_text()]
+    assert calls == [], calls

@@ -3881,6 +3881,182 @@ def test_viterbi_fold_matches_kernel(spark):
     assert replica == [("xx", 1, 5, 2, expect)]
 
 
+def _write_orders(path, rows):
+    """A minimal orders parquet (status, date, price) for hand-built
+    series; the fold queries read only these three columns."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.mkdir(exist_ok=True)
+    pq.write_table(pa.table({
+        "o_orderstatus": [r[0] for r in rows],
+        "o_totalprice": [float(r[2]) for r in rows],
+        "o_orderdate": pa.array(
+            [dt.datetime.fromisoformat(r[1]) for r in rows], pa.timestamp("us")
+        ),
+    }), str(path / "orders.parquet"))
+    return str(path)
+
+
+def _holt_kernel_replica(pdf):
+    """Literal replica of the replaced ts_holt_winters pandas kernel."""
+    import pandas as pd
+
+    pdf = pdf.sort_values("d")
+    ys = [int(v) for v in pdf["y"]]
+    lev, tr = ys[0], 0
+    for y in ys[1:]:
+        nl = (2 * y + 8 * (lev + tr)) // 10
+        tr = ((nl - lev) + 9 * tr) // 10
+        lev = nl
+    return pd.DataFrame([{
+        "o_orderstatus": pdf["o_orderstatus"].iloc[0],
+        "n_weeks": len(ys),
+        "level_final": lev, "trend_final": tr,
+        "fc_1": lev + tr, "fc_2": lev + 2 * tr, "fc_3": lev + 3 * tr,
+    }])
+
+
+def _ets_kernel_replica(pdf):
+    """Literal replica of the replaced ts_forecast_ets_damped kernel."""
+    import pandas as pd
+
+    pdf = pdf.sort_values("d")
+    ys = [int(v) for v in pdf["y"]]
+    lev, tr = ys[0], 0
+    for y in ys[1:]:
+        pb = (9 * tr) // 10
+        nl = (2 * y + 8 * (lev + pb)) // 10
+        tr = ((nl - lev) + 9 * pb) // 10
+        lev = nl
+    db1 = (9 * tr) // 10
+    db2 = (9 * db1) // 10
+    db3 = (9 * db2) // 10
+    return pd.DataFrame([{
+        "o_orderstatus": pdf["o_orderstatus"].iloc[0],
+        "n_weeks": len(ys),
+        "level_final": lev, "trend_final": tr,
+        "fc_1": lev + db1, "fc_2": lev + db1 + db2,
+        "fc_3": lev + db1 + db2 + db3,
+    }])
+
+
+def test_status_smoothing_fold_matches_kernel(spark, tmp_path):
+    """ts_holt_winters and ts_forecast_ets_damped (one shared JVM fold)
+    reproduce the replaced pandas kernels bit-for-bit: on the smoke
+    fixture's orders, on a falling series whose negative trends make
+    floor and truncating division differ, and on a one-week series."""
+    import datetime as dt
+
+    from hdfs_mr_spark.io import table
+    from tests.conftest import SF_SMOKE
+
+    # 'F' falls 1000000 -> 100093 cents over six weeks; 'O' is one week
+    falling = [1000000, 900013, 700029, 500047, 300071, 100093]
+    rows = [("F", str(dt.date(1995, 1, 2) + dt.timedelta(weeks=k)), y / 100)
+            for k, y in enumerate(falling)]
+    hand = _write_orders(tmp_path / "hand", rows + [("O", "1996-03-05", 12.34)])
+    specs = all_specs()
+    for sf in (SF_SMOKE, hand):
+        weekly = table(spark, sf, "orders").groupBy(
+            "o_orderstatus",
+            F.to_date(F.date_trunc("week", "o_orderdate")).alias("d"),
+        ).agg(
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            .cast("bigint").alias("y")
+        ).toPandas()
+        for name, kernel in (("ts_holt_winters", _holt_kernel_replica),
+                             ("ts_forecast_ets_damped", _ets_kernel_replica)):
+            old = sorted(
+                tuple(r) for _, g in weekly.groupby("o_orderstatus")
+                for r in kernel(g).itertuples(index=False)
+            )
+            new = [tuple(r) for r in specs[name].fn(spark, sf).collect()]
+            assert len(new) > 0, (name, sf)
+            assert new == old, (name, sf)
+    assert [r[1] for r in new] == [6, 1]  # n_weeks of the hand series
+
+
+def _dtw_kernel_replica(pdf):
+    """Literal replica of the replaced ts_dtw pandas kernel."""
+    import pandas as pd
+
+    a = pdf[pdf["side"] == "a"].sort_values("t")["y"].tolist()
+    b = pdf[pdf["side"] == "b"].sort_values("t")["y"].tolist()
+    n, m = len(a), len(b)
+    prev = None
+    for i in range(n):
+        cur = [0] * m
+        for j in range(m):
+            c = abs(int(a[i]) - int(b[j]))
+            if i == 0 and j == 0:
+                cur[j] = c
+            else:
+                best = None
+                for cand in (
+                    prev[j] if i > 0 else None,
+                    cur[j - 1] if j > 0 else None,
+                    prev[j - 1] if i > 0 and j > 0 else None,
+                ):
+                    if cand is not None and (best is None or cand < best):
+                        best = cand
+                cur[j] = c + best
+        prev = cur
+    return pd.DataFrame([{
+        "g1": pdf["g1"].iloc[0], "g2": pdf["g2"].iloc[0],
+        "n": n, "m": m, "dtw_cost": prev[m - 1],
+    }])
+
+
+def test_dtw_fold_matches_kernel(spark, tmp_path):
+    """ts_dtw's JVM fold reproduces the replaced pandas DP bit-for-bit,
+    fed by a literal replica of the replaced tagged pair expansion: on
+    the smoke fixture's orders, and on hand-built series of 1, 4, 2 and
+    1 months, so the pairs cover n != m, n = 1 and m = 1."""
+    from hdfs_mr_spark.io import table
+    from tests.conftest import SF_SMOKE
+
+    months = {"A": [50], "B": [10, 70, 20, 90], "C": [60, 15], "D": [35]}
+    rows = [(g, f"1994-{k + 1:02d}-15", y)
+            for g, ys in months.items() for k, y in enumerate(ys)]
+    hand = _write_orders(tmp_path / "hand", rows)
+    for sf in (SF_SMOKE, hand):
+        o = table(spark, sf, "orders")
+        monthly = o.groupBy(
+            F.col("o_orderstatus").alias("g"),
+            (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
+            .cast("bigint").alias("t"),
+        ).agg(
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            .cast("bigint").alias("y")
+        )
+        gs = monthly.select("g").distinct()
+        pairs = (
+            gs.select(F.col("g").alias("g1"))
+            .join(F.broadcast(gs.select(F.col("g").alias("g2"))),
+                  F.col("g1") < F.col("g2"))
+        )
+        expand = (
+            pairs.join(monthly, monthly.g == pairs.g1)
+            .select("g1", "g2", F.lit("a").alias("side"), "t", "y")
+            .unionByName(
+                pairs.join(monthly, monthly.g == pairs.g2)
+                .select("g1", "g2", F.lit("b").alias("side"), "t", "y")
+            )
+        ).toPandas()
+        old = sorted(
+            tuple(r) for _, g in expand.groupby(["g1", "g2"])
+            for r in _dtw_kernel_replica(g).itertuples(index=False)
+        )
+        new = [tuple(r) for r in all_specs()["ts_dtw"].fn(spark, sf).collect()]
+        assert len(new) > 0, sf
+        assert new == old, sf
+    assert [r[2:4] for r in new] == [
+        (1, 4), (1, 2), (1, 1), (4, 2), (4, 1), (2, 1)]  # (n, m) per pair
+
+
 def test_hnsw_driver_search_matches_spark_form(spark):
     """r15-opt pin: the driver-coordinated HNSW beam search reproduces
     the replaced Spark pipeline (per-round rank windows + shuffled
@@ -4099,8 +4275,8 @@ def test_wordpiece_walk_missing_step_names_word_and_position(spark):
 
 @pytest.mark.parametrize("n_rows", [0, 1])
 def test_sequential_folds_on_degenerate_inputs(spark, tmp_path, n_rows):
-    """The three per-key folds return their oracle's answer on zero-row
-    and one-row copies of documents and lineitem."""
+    """The per-key folds return their oracle's answer on zero-row and
+    one-row copies of documents, lineitem and orders."""
     import pyarrow.parquet as pq
 
     from hdfs_mr_spark.check import check_query, oracle_connection
@@ -4110,7 +4286,7 @@ def test_sequential_folds_on_degenerate_inputs(spark, tmp_path, n_rows):
     for t in TABLES:
         src = f"{SF_SMOKE}/{t}.parquet"
         dst = tmp_path / f"{t}.parquet"
-        if t in ("documents", "lineitem"):
+        if t in ("documents", "lineitem", "orders"):
             pq.write_table(pq.read_table(src).slice(0, n_rows), str(dst))
         else:
             dst.symlink_to(src)
@@ -4118,6 +4294,7 @@ def test_sequential_folds_on_degenerate_inputs(spark, tmp_path, n_rows):
     con = oracle_connection(sf)
     specs = all_specs()
     for name in ("llm_tokenizer_viterbi", "llm_tokenizer_wordpiece",
-                 "ts_forecast_croston"):
+                 "ts_forecast_croston", "ts_holt_winters",
+                 "ts_forecast_ets_damped", "ts_dtw"):
         res = check_query(specs[name], spark, con, sf)
         assert res.ok, (name, res.detail)
