@@ -1476,8 +1476,8 @@ def llm_dedup_lsh_stored(spark, sf_dir):
     verifies candidates, and each batch doc gets a replayable verdict
     (dup_base / dup_batch / keep, with the lowest matching doc id).
 
-    Index lifecycle: the base postings publish atomically (temp dir +
-    rename, same discipline as the IVF stores), the batch's postings
+    Index lifecycle: the base postings publish atomically
+    (_publish_store, like the IVF stores), the batch's postings
     APPEND (partitioned by band — append-only, base files never
     rewritten), and because banding membership depends only on the
     row's own signature, base+batch appends are bit-identical to a
@@ -1489,10 +1489,7 @@ def llm_dedup_lsh_stored(spark, sf_dir):
     honestly). At 100 TB the postings partition by (band, bucket
     prefix) and the probe stays one shuffle-equi-join against an
     append-only table; the shingle side is never broadcast."""
-    import os
-    import shutil
-
-    from hdfs_mr_spark.sources.scans import _fixture_dir
+    from hdfs_mr_spark.sources.scans import _fixture_dir, _publish_store
 
     sh = _shingle_frame(spark, sf_dir)
     sig = _minhash_sig(spark, sf_dir)
@@ -1511,22 +1508,13 @@ def llm_dedup_lsh_stored(spark, sf_dir):
         F.col("bk.band").alias("band"), F.col("bk.h1").alias("h1"),
         F.col("bk.h2").alias("h2"),
     )
-    store = _fixture_dir(sf_dir) / "lsh_store"
-    post_path = str(store / "postings")
-    if not (store / "_built_base").exists():
-        if store.exists():
-            shutil.rmtree(store, ignore_errors=True)
-        tmp = store.parent / f"{store.name}.tmp.{os.getpid()}"
-        keyed.filter(F.col("doc_id") % 3 != 0).write.mode(
+    store = _publish_store(
+        lambda tmp: keyed.filter(F.col("doc_id") % 3 != 0).write.mode(
             "overwrite"
-        ).partitionBy("band").parquet(str(tmp / "postings"))
-        (tmp / "_built_base").touch()
-        try:
-            os.rename(tmp, store)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (store / "_built_base").exists():
-                raise
+        ).partitionBy("band").parquet(str(tmp / "postings")),
+        _fixture_dir(sf_dir) / "lsh_store",
+    )
+    post_path = str(store / "postings")
     if not (store / "_batch_done").exists():
         # incremental absorb: append-only, base files never rewritten
         keyed.filter(F.col("doc_id") % 3 == 0).write.mode(

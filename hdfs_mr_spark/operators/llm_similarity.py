@@ -21,6 +21,7 @@ cache-sized block-pair units with no broadcast of the big side.
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 from pathlib import Path
@@ -142,14 +143,7 @@ def llm_sim_knn(spark, sf_dir):
     # fan_out: the fixture file is one row group; the fold-heavy probe side
     # must not run on a single task (see io.fan_out)
     n = fan_out(e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")))
-    q = (
-        n.filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qn"),
-        )
-    )
+    q = _query_batch(n)
     scored = (
         n.join(F.broadcast(q), n.vec_id != q.qid)
         .select(
@@ -157,12 +151,7 @@ def llm_sim_knn(spark, sf_dir):
             (_dot(F.col("qe"), F.col("embedding")) / (F.col("qn") * F.col("nrm"))).alias("cosine"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .orderBy("qid", "rank")
-    )
+    return _cosine_top5(scored)
 
 
 _TARGET_BLOCK_ROWS = 512  # fixed block SIZE; block COUNT scales with n
@@ -310,9 +299,97 @@ def llm_sim_pairs(spark, sf_dir):
     return blocked_cosine_pairs(spark, sf_dir, threshold=0.35).orderBy("v1", "v2")
 
 
-# Shared by llm_sim_knn_ivf (in-flight index) and llm_sim_knn_ivf_stored
-# (persisted, partition-pruned index): identical results by design.
-_IVF_ORACLE = f"""
+# ---- the ANN index layer: IVF coarse quantizer, query batch, top-5 ----
+# Every helper takes the caller's already-built vector frame n (vec_id,
+# embedding, nrm), so callers that fan_out and callers that do not keep
+# their own plans.
+
+
+def _ivf_centroids(n, cells):
+    """The deterministic coarse quantizer: the first ``cells`` vectors of
+    ``n`` as centroids (cid, ce, cn)."""
+    return n.filter(F.col("vec_id") < cells).select(
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("ce"),
+        F.col("nrm").alias("cn"),
+    )
+
+
+def _query_batch(n):
+    """The fixed query batch (vec_id < 10) as (qid, qe, qn)."""
+    return n.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qe"),
+        F.col("nrm").alias("qn"),
+    )
+
+
+def _cell_ranks(side, c, id_col="vec_id", emb="embedding", nrm="nrm",
+                carry=()):
+    """Every row of ``side`` scored against the broadcast centroids ``c``
+    and ranked per row by (cosine desc, cid asc): id_col, *carry, cid,
+    ccos, rk."""
+    w = Window.partitionBy(id_col).orderBy(
+        F.col("ccos").desc(), F.col("cid").asc()
+    )
+    return side.join(F.broadcast(c)).select(
+        id_col, *carry, "cid",
+        (_dot(F.col(emb), F.col("ce")) / (F.col(nrm) * F.col("cn")))
+        .alias("ccos"),
+    ).withColumn("rk", F.row_number().over(w))
+
+
+def _nearest_cells(side, c, keep, id_col="vec_id", emb="embedding",
+                   nrm="nrm", carry=()):
+    """The ``keep`` nearest cells of each row: id_col, *carry, cell.
+    keep=1 is the cell assignment, keep=nprobe a query's probe list."""
+    return (
+        _cell_ranks(side, c, id_col, emb, nrm, carry)
+        .filter(F.col("rk") <= keep)
+        .select(id_col, *carry, F.col("cid").alias("cell"))
+    )
+
+
+def _cosine_top5(scored):
+    """Top-5 (qid, vec_id, cosine) rows per query by cosine desc, vec_id
+    asc, with a BIGINT rank, ordered by (qid, rank)."""
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= 5)
+        .orderBy("qid", "rank")
+    )
+
+
+def _ivf_serve(spark, n, store, nprobe):
+    """Exact cosine top-5 of the query batch against a persisted IVF store
+    (``corpus`` partitioned by cell + ``centroids``). The broadcast probe
+    frame joins the corpus ON the cell partition column, so Catalyst
+    injects a dynamicpruning# subquery into the scan's PartitionFilters:
+    non-probed cell directories are never opened and nothing is collected
+    to the driver (plan-gated in tests/test_plans.py)."""
+    probes = _nearest_cells(
+        _query_batch(n), spark.read.parquet(str(store / "centroids")), nprobe,
+        "qid", "qe", "qn", carry=("qe", "qn"),
+    )
+    scored = (
+        spark.read.parquet(str(store / "corpus"))
+        .join(F.broadcast(probes), "cell")
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select(
+            "qid", "vec_id",
+            (_dot(F.col("qe"), F.col("embedding"))
+             / (F.col("qn") * F.col("nrm"))).alias("cosine"),
+        )
+    )
+    return _cosine_top5(scored)
+
+
+# The IVF cell restriction shared by _IVF_ORACLE (top-5) and the
+# llm_sim_range_search oracle (cosine >= tau): quantizer, assignment,
+# probes and the scored candidates, ending in `scored(qid, vec_id,
+# cosine)`.
+_IVF_SCORED_CTES = f"""
 WITH {_SQL_ANN_PARAMS},
 n AS (
   SELECT vec_id, embedding, {_SQL_NORM.format(a='embedding')} AS nrm FROM embeddings
@@ -347,7 +424,11 @@ scored AS (
   JOIN n ON n.vec_id = a.vec_id
   WHERE a.vec_id <> p.qid
 )
-SELECT qid, vec_id, cosine,
+"""
+
+# Shared by llm_sim_knn_ivf (in-flight index) and its stored and delta
+# twins (persisted, partition-pruned index): identical results by design.
+_IVF_ORACLE = _IVF_SCORED_CTES + """SELECT qid, vec_id, cosine,
        CAST(row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id ASC)
             AS BIGINT) AS rank
 FROM scored
@@ -377,38 +458,10 @@ def llm_sim_knn_ivf(spark, sf_dir):
     e = table(spark, sf_dir, "embeddings")
     cells, nprobe, _ = _ann_params(_n_embeddings(spark, sf_dir))
     n = fan_out(e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")))
-    c = (
-        n.filter(F.col("vec_id") < cells)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("ce"),
-            F.col("nrm").alias("cn"),
-        )
-    )
-
-    def _nearest_cells(side, id_col, emb, nrm, keep):
-        scored = side.join(F.broadcast(c)).select(
-            id_col,
-            F.col("cid"),
-            (_dot(F.col(emb), F.col("ce")) / (F.col(nrm) * F.col("cn"))).alias("ccos"),
-        )
-        w = Window.partitionBy(id_col).orderBy(F.col("ccos").desc(), F.col("cid").asc())
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= keep)
-            .select(id_col, F.col("cid").alias("cell"))
-        )
-
-    assign = _nearest_cells(n, "vec_id", "embedding", "nrm", 1)
-    q = (
-        n.filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qn"),
-        )
-    )
-    probes = _nearest_cells(q, "qid", "qe", "qn", nprobe)
+    c = _ivf_centroids(n, cells)
+    assign = _nearest_cells(n, c, 1)
+    q = _query_batch(n)
+    probes = _nearest_cells(q, c, nprobe, "qid", "qe", "qn")
     # candidates: vectors whose cell is probed by the query; ids only until
     # after the equi-join, then the embeddings re-attach (narrow shuffles)
     cand = (
@@ -424,12 +477,7 @@ def llm_sim_knn_ivf(spark, sf_dir):
             (_dot(F.col("qe"), F.col("embedding")) / (F.col("qn") * F.col("nrm"))).alias("cosine"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .orderBy("qid", "rank")
-    )
+    return _cosine_top5(scored)
 
 
 @query("llm_sim_knn_ivf_stored", oracle=_IVF_ORACLE, family=_FAM)
@@ -454,105 +502,28 @@ def llm_sim_knn_ivf_stored(spark, sf_dir):
     exact cosine top-5 then touches only O(nprobe * n/cells) rows per
     query straight off disk, never scanning the other cells' files.
 
-    The build is ATOMIC (ADVICE r5): corpus + centroids are written
-    into a pid-suffixed temp dir and os.rename'd into place as one
-    unit, so concurrent sessions sharing the fingerprinted fixture
-    dir (parallel pytest workers) either see the complete store or no
-    store — never a half-overwritten corpus under a reader."""
-    import os
-
-    from hdfs_mr_spark.sources.scans import _fixture_dir
+    The build is ATOMIC (ADVICE r5): corpus + centroids are published
+    as one unit by _publish_store, so concurrent sessions sharing the
+    fingerprinted fixture dir (parallel pytest workers) either see the
+    complete store or no store — never a half-overwritten corpus under
+    a reader."""
+    from hdfs_mr_spark.sources.scans import _fixture_dir, _publish_store
 
     e = table(spark, sf_dir, "embeddings")
     cells, nprobe, _ = _ann_params(_n_embeddings(spark, sf_dir))
-    store = _fixture_dir(sf_dir) / "ivf_store"
-    corpus_path, cent_path = str(store / "corpus"), str(store / "centroids")
     n = e.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
-    c = n.filter(F.col("vec_id") < cells).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    if not (store / "_built").exists():
-        ccos = (
-            n.join(F.broadcast(c))
-            .select(
-                "vec_id", "embedding", "nrm", "cid",
-                (_dot(F.col("embedding"), F.col("ce"))
-                 / (F.col("nrm") * F.col("cn"))).alias("ccos"),
-            )
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("ccos").desc(), F.col("cid").asc()
-        )
-        assigned = (
-            ccos.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("vec_id", "embedding", "nrm", F.col("cid").alias("cell"))
-        )
-        import shutil
 
-        if store.exists():  # torn remains of a pre-atomic build
-            shutil.rmtree(store, ignore_errors=True)
-        tmp = store.parent / f"{store.name}.tmp.{os.getpid()}"
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(
-            str(tmp / "corpus")
-        )
+    def build(tmp):
+        c = _ivf_centroids(n, cells)
+        _nearest_cells(n, c, 1, carry=("embedding", "nrm")).write.mode(
+            "overwrite"
+        ).partitionBy("cell").parquet(str(tmp / "corpus"))
         c.write.mode("overwrite").parquet(str(tmp / "centroids"))
-        (tmp / "_built").touch()
-        try:
-            os.rename(tmp, store)  # atomic publish: all-or-nothing
-        except OSError:
-            # another session won the race; ours is redundant — discard
-            # it and read theirs (which carries its own _built marker)
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (store / "_built").exists():
-                raise
-    cent = F.broadcast(spark.read.parquet(cent_path))
-    q = n.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("qcos").desc(), F.col("cid").asc()
-    )
-    probes = (
-        q.join(cent)
-        .select(
-            "qid", "qe", "qn", "cid",
-            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("qcos"),
-        )
-        .withColumn("rk", F.row_number().over(wq))
-        .filter(F.col("rk") <= nprobe)
-        .select("qid", "qe", "qn", F.col("cid").alias("cell"))
-    )
-    # the probe list reaches the scan LAZILY: joining the broadcast
-    # probe frame on the partition column lets Catalyst inject a
-    # dynamicpruning# subquery into the scan's PartitionFilters (the
-    # join_dpp_partition_pruned formulation) — non-probed cell
-    # directories are never opened and NO driver round-trip exists
-    # (VERDICT r6 item 4: the old literal-IN collect() is gone)
-    corpus = spark.read.parquet(corpus_path)
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id",
-            (_dot(F.col("qe"), F.col("embedding"))
-             / (F.col("qn") * F.col("nrm"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .orderBy("qid", "rank")
-    )
+
+    store = _publish_store(build, _fixture_dir(sf_dir) / "ivf_store")
+    return _ivf_serve(spark, n, store, nprobe)
 
 
 @query("llm_sim_knn_ivf_delta", oracle=_IVF_ORACLE, family=_FAM)
@@ -575,102 +546,37 @@ def llm_sim_knn_ivf_delta(spark, sf_dir):
     as the stored twin — hash-matches the full-corpus _IVF_ORACLE,
     which IS the self-audit vs the full rebuild. A cell-set audit in
     tests/ verifies the absorb touched only the delta's partitions."""
-    import os
-    import shutil
-
-    from hdfs_mr_spark.sources.scans import _fixture_dir
+    from hdfs_mr_spark.sources.scans import _fixture_dir, _publish_store
 
     e = table(spark, sf_dir, "embeddings")
     n_total = _n_embeddings(spark, sf_dir)
     cells, nprobe, _ = _ann_params(n_total)
     n_base = max(cells, n_total - n_total // 8)
-    store = _fixture_dir(sf_dir) / "ivf_store_delta"
-    corpus_path, cent_path = str(store / "corpus"), str(store / "centroids")
     n = e.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
-    c = n.filter(F.col("vec_id") < cells).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
+    c = _ivf_centroids(n, cells)
+    carry = ("embedding", "nrm")
 
-    def _assign(vectors):
-        ccos = vectors.join(F.broadcast(c)).select(
-            "vec_id", "embedding", "nrm", "cid",
-            (_dot(F.col("embedding"), F.col("ce"))
-             / (F.col("nrm") * F.col("cn"))).alias("ccos"),
+    def build(tmp):
+        _nearest_cells(
+            n.filter(F.col("vec_id") < n_base), c, 1, carry=carry
+        ).write.mode("overwrite").partitionBy("cell").parquet(
+            str(tmp / "corpus")
         )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("ccos").desc(), F.col("cid").asc()
-        )
-        return (
-            ccos.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("vec_id", "embedding", "nrm", F.col("cid").alias("cell"))
-        )
-
-    if not (store / "_built_base").exists():
-        if store.exists():
-            shutil.rmtree(store, ignore_errors=True)
-        tmp = store.parent / f"{store.name}.tmp.{os.getpid()}"
-        _assign(n.filter(F.col("vec_id") < n_base)).write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(str(tmp / "corpus"))
         c.write.mode("overwrite").parquet(str(tmp / "centroids"))
-        (tmp / "_built_base").touch()
-        try:
-            os.rename(tmp, store)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (store / "_built_base").exists():
-                raise
+
+    store = _publish_store(build, _fixture_dir(sf_dir) / "ivf_store_delta")
     if not (store / "_delta_done").exists():
         # the incremental path: append-only, touches ONLY the cell
         # partitions present in the delta's assignment
-        _assign(n.filter(F.col("vec_id") >= n_base)).write.mode(
-            "append"
-        ).partitionBy("cell").parquet(corpus_path)
+        _nearest_cells(
+            n.filter(F.col("vec_id") >= n_base), c, 1, carry=carry
+        ).write.mode("append").partitionBy("cell").parquet(
+            str(store / "corpus")
+        )
         (store / "_delta_done").touch()
-    cent = F.broadcast(spark.read.parquet(cent_path))
-    q = n.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("qcos").desc(), F.col("cid").asc()
-    )
-    probes = (
-        q.join(cent)
-        .select(
-            "qid", "qe", "qn", "cid",
-            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("qcos"),
-        )
-        .withColumn("rk", F.row_number().over(wq))
-        .filter(F.col("rk") <= nprobe)
-        .select("qid", "qe", "qn", F.col("cid").alias("cell"))
-    )
-    # lazy DPP probe, same as the stored twin: no collect(), the
-    # broadcast probe join prunes the partitioned corpus at runtime
-    corpus = spark.read.parquet(corpus_path)
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id",
-            (_dot(F.col("qe"), F.col("embedding"))
-             / (F.col("qn") * F.col("nrm"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .orderBy("qid", "rank")
-    )
+    return _ivf_serve(spark, n, store, nprobe)
 
 
 @query(
@@ -748,12 +654,7 @@ def llm_sim_knn_lsh(spark, sf_dir):
             (_dot(F.col("qe"), F.col("embedding")) / (F.col("qn") * F.col("nrm"))).alias("cosine"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .orderBy("qid", "rank")
-    )
+    return _cosine_top5(scored)
 
 
 @query(
@@ -1274,26 +1175,7 @@ def llm_dedup_semdedup(spark, sf_dir):
     n = fan_out(
         e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
     ).localCheckpoint()
-    c = n.filter(F.col("vec_id") < cells).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    scored = n.crossJoin(F.broadcast(c)).select(
-        "vec_id",
-        "cid",
-        (_dot(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cn"))
-         ).alias("cos"),
-    )
-    wcell = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("cid").asc()
-    )
-    assign = (
-        scored.withColumn("rk", F.row_number().over(wcell))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", F.col("cid").alias("cell"))
-        .join(n, "vec_id")
-    )
+    assign = _nearest_cells(n, _ivf_centroids(n, cells), 1).join(n, "vec_id")
     a1 = assign.select(
         F.col("vec_id").alias("v1"), F.col("cell").alias("cell1"),
         F.col("embedding").alias("e1"), F.col("nrm").alias("nrm1"),
@@ -1641,12 +1523,7 @@ def llm_sim_knn_lsh_multiprobe(spark, sf_dir):
             (_dot(F.col("qe"), F.col("embedding")) / (F.col("qn") * F.col("nrm"))).alias("cosine"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .orderBy("qid", "rank")
-    )
+    return _cosine_top5(scored)
 
 
 _LSH_TABLES = 8  # OR-amplification width; disjoint sign-bit sets per table
@@ -1768,12 +1645,7 @@ def llm_sim_knn_lsh_multitable(spark, sf_dir):
         "qid", "vec_id",
         (_dot(F.col("qe"), F.col("embedding")) / (F.col("qn") * F.col("nrm"))).alias("cosine"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .orderBy("qid", "rank")
-    )
+    return _cosine_top5(scored)
 
 
 # --- shared PQ kernel (llm_embed_pq + llm_sim_knn_pq_adc) ------------------
@@ -2146,13 +2018,24 @@ def llm_sim_knn_pq_adc(spark, sf_dir):
         .agg(F.sum("qd").alias("dist_adc"))
         .filter(F.col("vec_id") != F.col("qid"))
     )
+    return _adc_top5(adc)
+
+
+def _adc_top5(adc, *extra):
+    """Top-5 (qid, vec_id, dist_adc) rows per query by ADC distance asc,
+    vec_id asc, with BIGINT dist_adc and rank and any ``extra`` columns,
+    ordered by (qid, rank)."""
     w = Window.partitionBy("qid").orderBy(
         F.col("dist_adc").asc(), F.col("vec_id").asc()
     )
     return (
         adc.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= 5)
-        .select("qid", "vec_id", F.col("dist_adc").cast("bigint").alias("dist_adc"), "rank")
+        .select(
+            "qid", "vec_id",
+            F.col("dist_adc").cast("bigint").alias("dist_adc"), "rank",
+            *extra,
+        )
         .orderBy("qid", "rank")
     )
 
@@ -2336,19 +2219,7 @@ def llm_sim_knn_ivf_pq(spark, sf_dir):
     the final top-5 is one windowed rank over O(sqrt(n)) rows per
     query. At cluster scale the cell id becomes a partition column and
     the probe a partition-pruned scan."""
-    adc = _ivf_pq_adc_frame(spark, sf_dir)
-    wr = Window.partitionBy("qid").orderBy(
-        F.col("dist_adc").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "qid", "vec_id",
-            F.col("dist_adc").cast("bigint").alias("dist_adc"), "rank",
-        )
-        .orderBy("qid", "rank")
-    )
+    return _adc_top5(_ivf_pq_adc_frame(spark, sf_dir))
 
 
 def _ivf_pq_adc_frame(spark, sf_dir):
@@ -2607,6 +2478,100 @@ def _ivf_pq_query_tables(spark, subs, coarse, probes, cb1):
     )
 
 
+def _pq_packed(codes, assign):
+    """One row per vector: its fine codes PACKED into an array in sub
+    order (the 8x-compressed representation a serving tier holds),
+    joined to its cell."""
+    return (
+        codes.groupBy("vec_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("sub", "code"))),
+                lambda s: s["code"],
+            ).alias("codes")
+        )
+        .join(assign, "vec_id")
+    )
+
+
+def _ivf_pq_store_build(spark, sf_dir, tmp, train_below=None):
+    """Write a servable IVF-PQ store into ``tmp``: the packed code table
+    PARTITIONED BY cell (``codes``), the O(sqrt(n)) coarse-centroid
+    subspace table (``centroids``) and the mf*kf fine codebook
+    (``codebook``), all from the shared _ivf_pq_index_frames. With
+    ``train_below`` the codebooks train on, and codes are written for,
+    the vec_id < train_below base split only (the frozen-codebook delta
+    lifecycle)."""
+    _, coarse, _, assign, codes, cb1, _, _, _ = _ivf_pq_index_frames(
+        spark, sf_dir, train_below=train_below
+    )
+    if train_below is not None:
+        codes = codes.filter(F.col("vec_id") < train_below)
+    _pq_packed(codes, assign).write.mode("overwrite").partitionBy(
+        "cell"
+    ).parquet(str(tmp / "codes"))
+    coarse.write.mode("overwrite").parquet(str(tmp / "centroids"))
+    cb1.write.mode("overwrite").parquet(str(tmp / "codebook"))
+
+
+def _ivf_pq_serve(spark, sf_dir, store, parts=("codes",), extra=()):
+    """ADC top-5 of the query batch against a stored IVF-PQ index: probe
+    ranking and per-(qid, cell) ADC tables come from the broadcast
+    stored centroid/codebook tables, then each cell-partitioned code
+    directory in ``parts`` is scanned, its packed codes posexploded back
+    to (sub, code) for the ADC table-lookup sum. ``extra`` columns ride
+    on every output row.
+
+    Lazy DPP: the broadcast probe frame joins each code scan ON the cell
+    partition column, so Catalyst injects a dynamicpruning# subquery
+    into that scan's PartitionFilters and non-probed cell directories
+    are never opened. The probe join sits BELOW the union of the scans
+    — DPP does not inject through a Union above them (gated by
+    test_ivf_pq_delta_probe_is_partition_pruned)."""
+    _, nprobe, _ = _ann_params(_n_embeddings(spark, sf_dir))
+    subs = _pq_subs(spark, sf_dir)
+    coarse_st = F.broadcast(spark.read.parquet(str(store / "centroids")))
+    cb_st = spark.read.parquet(str(store / "codebook"))
+    # probe ranking: each query's nprobe nearest STORED coarse centroids
+    # by exact BIGINT L2, ccode tiebreak (the index build's assignment
+    # math)
+    qdistc = (
+        subs.filter(F.col("vec_id") < 10)
+        .join(coarse_st, F.col("sub") == F.col("c_sub"))
+        .select(
+            F.col("vec_id").alias("qid"), "ccode", _pq_dist(_PQ_DSUB).alias("d")
+        )
+        .groupBy("qid", "ccode")
+        .agg(F.sum("d").alias("cd"))
+    )
+    wq = Window.partitionBy("qid").orderBy(
+        F.col("cd").asc(), F.col("ccode").asc()
+    )
+    probes = (
+        qdistc.withColumn("rn", F.row_number().over(wq))
+        .filter(F.col("rn") <= nprobe)
+        .select("qid", F.col("ccode").alias("cell"))
+    )
+    qdist = _ivf_pq_query_tables(spark, subs, coarse_st, probes, cb_st)
+    scans = [
+        spark.read.parquet(str(store / part))
+        .join(F.broadcast(probes), "cell")
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select(
+            "qid", "cell", "vec_id",
+            F.posexplode("codes").alias("sub", "code"),
+        )
+        for part in parts
+    ]
+    un = functools.reduce(lambda a, b: a.unionByName(b), scans)
+    adc = (
+        un.join(F.broadcast(qdist), ["qid", "cell", "sub", "code"])
+        .groupBy("qid", "vec_id")
+        .agg(F.sum("qd").alias("dist_adc"))
+    )
+    return _adc_top5(adc, *extra)
+
+
 def _ivf_pq_adc_frame_build(spark, sf_dir):
     subs, coarse, ranked, assign, codes, cb1, cells, nprobe, kf = (
         _ivf_pq_index_frames(spark, sf_dir)
@@ -2697,11 +2662,7 @@ def llm_sim_knn_ivf_pq_rerank(spark, sf_dir):
     n = fan_out(
         e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
     )
-    q = n.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
+    q = _query_batch(n)
     scored = (
         short.join(F.broadcast(q), "qid")
         .join(n, "vec_id")
@@ -2713,14 +2674,7 @@ def llm_sim_knn_ivf_pq_rerank(spark, sf_dir):
             ).alias("cosine"),
         )
     )
-    wr = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .orderBy("qid", "rank")
-    )
+    return _cosine_top5(scored)
 
 
 @query(
@@ -2741,7 +2695,7 @@ def llm_sim_knn_ivf_pq_stored(spark, sf_dir):
     codes are a PRE-BUILT stored index'), now implemented and
     hash-checked against the identical oracle as llm_sim_knn_ivf_pq:
 
-    Build (once per sf fingerprint, atomic rename like the IVF store):
+    Build (once per sf fingerprint, published by _publish_store):
     the shared _ivf_pq_index_frames artifacts persist as (1) the code
     table — ONE row per vector, its mf residual codes PACKED into an
     array (the 8x-compressed representation a serving tier holds),
@@ -2760,103 +2714,20 @@ def llm_sim_knn_ivf_pq_stored(spark, sf_dir):
     Steady-state probe cost at sf0.1 is ~0.1-0.4 s vs the in-flight
     op's 9 s cold build — the build-offline / probe-cheap split the r8
     Zipf stress measured as the deployment answer (PERF.md r8)."""
-    import os
-    import shutil
+    from hdfs_mr_spark.sources.scans import _fixture_dir, _publish_store
 
-    from hdfs_mr_spark.sources.scans import _fixture_dir
-
-    # probe-path parameters WITHOUT declaring the index frames: the
-    # fine-codebook trainer inside _ivf_pq_index_frames materializes
-    # eagerly (localCheckpoint), so invoking it when the store already
-    # exists would re-run the whole Lloyd pass just to discard it
-    # (measured: 7.8 s/probe instead of 0.5 s at sf0.1)
-    _, nprobe, _ = _ann_params(_n_embeddings(spark, sf_dir))
-    subs = _pq_subs(spark, sf_dir)
+    # the index frames are declared only inside the build: the
+    # fine-codebook trainer in _ivf_pq_index_frames materializes eagerly
+    # (localCheckpoint), so declaring it when the store already exists
+    # would re-run the whole Lloyd pass just to discard it (measured:
+    # 7.8 s/probe instead of 0.5 s at sf0.1)
     # _cl1: Lloyd-refined coarse-centroid layout (r10) — the name
     # bump invalidates pre-refine persisted stores
-    store = _fixture_dir(sf_dir) / "ivf_pq_store_cl1"
-    codes_path = str(store / "codes")
-    cent_path = str(store / "centroids")
-    cb_path = str(store / "codebook")
-    if not (store / "_built").exists():
-        _, coarse, _, assign, codes, cb1, _, _, _ = _ivf_pq_index_frames(
-            spark, sf_dir
-        )
-        packed = (
-            codes.groupBy("vec_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub", "code"))),
-                    lambda s: s["code"],
-                ).alias("codes")
-            )
-            .join(assign, "vec_id")
-        )
-        if store.exists():  # torn remains of a failed build
-            shutil.rmtree(store, ignore_errors=True)
-        tmp = store.parent / f"{store.name}.tmp.{os.getpid()}"
-        packed.write.mode("overwrite").partitionBy("cell").parquet(
-            str(tmp / "codes")
-        )
-        coarse.write.mode("overwrite").parquet(str(tmp / "centroids"))
-        cb1.write.mode("overwrite").parquet(str(tmp / "codebook"))
-        (tmp / "_built").touch()
-        try:
-            os.rename(tmp, store)  # atomic publish: all-or-nothing
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (store / "_built").exists():
-                raise
-    coarse_st = F.broadcast(spark.read.parquet(cent_path))
-    cb_st = spark.read.parquet(cb_path)
-    # probe ranking from the STORED centroids (exact BIGINT L2, same
-    # math as the index build's assignment ranking)
-    qdistc = (
-        subs.filter(F.col("vec_id") < 10)
-        .join(coarse_st, F.col("sub") == F.col("c_sub"))
-        .select(
-            F.col("vec_id").alias("qid"), "ccode", _pq_dist(_PQ_DSUB).alias("d")
-        )
-        .groupBy("qid", "ccode")
-        .agg(F.sum("d").alias("cd"))
+    store = _publish_store(
+        lambda tmp: _ivf_pq_store_build(spark, sf_dir, tmp),
+        _fixture_dir(sf_dir) / "ivf_pq_store_cl1",
     )
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("cd").asc(), F.col("ccode").asc()
-    )
-    probes = (
-        qdistc.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("qid", F.col("ccode").alias("cell"))
-    )
-    qdist = _ivf_pq_query_tables(spark, subs, coarse_st, probes, cb_st)
-    # lazy DPP probe: broadcast probes join the cell partition column —
-    # non-probed cell directories are never opened (plan-gated)
-    code_store = spark.read.parquet(codes_path)
-    un = (
-        code_store.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "cell", "vec_id",
-            F.posexplode("codes").alias("sub", "code"),
-        )
-    )
-    adc = (
-        un.join(F.broadcast(qdist), ["qid", "cell", "sub", "code"])
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("qd").alias("dist_adc"))
-    )
-    wr = Window.partitionBy("qid").orderBy(
-        F.col("dist_adc").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "qid", "vec_id",
-            F.col("dist_adc").cast("bigint").alias("dist_adc"), "rank",
-        )
-        .orderBy("qid", "rank")
-    )
+    return _ivf_pq_serve(spark, sf_dir, store)
 
 
 # Delta-absorb oracle: the IVFADC CTEs with the fine codebook TRAINED
@@ -2917,71 +2788,29 @@ _IVF_PQ_ADC_DELTA_CTES = _IVF_PQ_ADC_CTES.replace(
 
 def _ivf_pq_delta_store(spark, sf_dir):
     """Build-once the frozen-codebook delta store (base build trained
-    below n_base + staged-rename delta absorb) shared by
+    below n_base + staged delta absorb) shared by
     llm_sim_knn_ivf_pq_delta (probe path) and
-    llm_sim_knn_ivf_pq_compact (fold path). Returns
-    (codes_path, cent_path, cb_path, delta_path, n_base)."""
-    import os
-    import shutil
-
-    from hdfs_mr_spark.sources.scans import _fixture_dir
+    llm_sim_knn_ivf_pq_compact (fold path). Returns (store, n_base);
+    the base codes are ``store/codes``, the absorbed delta's
+    ``store/codes_delta``."""
+    from hdfs_mr_spark.sources.scans import _fixture_dir, _publish_store
 
     n_total = _n_embeddings(spark, sf_dir)
     cells, _, _ = _ann_params(n_total)
     n_base = max(cells, n_total - n_total // 8)
-    subs = _pq_subs(spark, sf_dir)
-    store = _fixture_dir(sf_dir) / "ivf_pq_store_delta_cl1"
-    codes_path = str(store / "codes")
-    cent_path = str(store / "centroids")
-    cb_path = str(store / "codebook")
-    if (store / "_absorbed").exists():
-        # pre-atomic-publish layout (delta appended into the base code
-        # dir + separate marker) — rebuild under the staged-delta layout
-        shutil.rmtree(store, ignore_errors=True)
-    if not (store / "_built").exists():
-        # base build: frozen codebook trains on base residuals only;
-        # only base vectors' codes are written
-        _, coarse, _, assign, codes, cb1, _, _, _ = _ivf_pq_index_frames(
-            spark, sf_dir, train_below=n_base
-        )
-        packed = (
-            codes.filter(F.col("vec_id") < n_base)
-            .groupBy("vec_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub", "code"))),
-                    lambda s: s["code"],
-                ).alias("codes")
-            )
-            .join(assign, "vec_id")
-        )
-        if store.exists():
-            shutil.rmtree(store, ignore_errors=True)
-        tmp = store.parent / f"{store.name}.tmp.{os.getpid()}"
-        packed.write.mode("overwrite").partitionBy("cell").parquet(
-            str(tmp / "codes")
-        )
-        coarse.write.mode("overwrite").parquet(str(tmp / "centroids"))
-        cb1.write.mode("overwrite").parquet(str(tmp / "codebook"))
-        (tmp / "_built").touch()
-        try:
-            os.rename(tmp, store)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (store / "_built").exists():
-                raise
-    coarse_st = F.broadcast(spark.read.parquet(cent_path))
-    cb_st = spark.read.parquet(cb_path)
-    # The delta lives in its OWN staged-then-renamed directory: the
-    # rename IS the absorbed marker, so a crash between the append
-    # job committing and a separate marker touch can never leave a
-    # half-published state that a retry would double-append (the base
-    # build's atomic-publish discipline, applied to the absorb too).
-    delta_path = store / "codes_delta"
-    if not delta_path.exists():
-        # ABSORB: assign + residual-encode the delta with the STORED
-        # frozen artifacts, append to the cell partitions it lands in
-        dsubs = subs.filter(F.col("vec_id") >= n_base)
+    # base build: frozen codebook trains on base residuals only; only
+    # base vectors' codes are written
+    store = _publish_store(
+        lambda tmp: _ivf_pq_store_build(spark, sf_dir, tmp, train_below=n_base),
+        _fixture_dir(sf_dir) / "ivf_pq_store_delta_cl1",
+    )
+
+    def absorb(tmp):
+        # assign + residual-encode the delta with the STORED frozen
+        # artifacts, partitioned by the cells it lands in
+        coarse_st = F.broadcast(spark.read.parquet(str(store / "centroids")))
+        cb_st = spark.read.parquet(str(store / "codebook"))
+        dsubs = _pq_subs(spark, sf_dir).filter(F.col("vec_id") >= n_base)
         ddist = (
             dsubs.join(coarse_st, F.col("sub") == F.col("c_sub"))
             .select("vec_id", "ccode", _pq_dist(_PQ_DSUB).alias("d"))
@@ -3012,25 +2841,16 @@ def _ivf_pq_delta_store(spark, sf_dir):
         dcodes = _pq_assign(drsubs, cb_st, dims=_PQ_DSUBF).select(
             "vec_id", "sub", "code"
         )
-        dpacked = (
-            dcodes.groupBy("vec_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub", "code"))),
-                    lambda s: s["code"],
-                ).alias("codes")
-            )
-            .join(dassign, "vec_id")
-        )
-        dtmp = store / f"codes_delta.tmp.{os.getpid()}"
-        dpacked.write.mode("overwrite").partitionBy("cell").parquet(str(dtmp))
-        try:
-            os.rename(dtmp, delta_path)
-        except OSError:
-            shutil.rmtree(dtmp, ignore_errors=True)
-            if not delta_path.exists():
-                raise
-    return codes_path, cent_path, cb_path, str(delta_path), n_base
+        _pq_packed(dcodes, dassign).write.mode("overwrite").partitionBy(
+            "cell"
+        ).parquet(str(tmp))
+
+    # The delta lives in its OWN published directory: its publish IS the
+    # absorbed marker, so a crash between the write and a separate
+    # marker touch can never leave a half-published state that a retry
+    # would double-append.
+    _publish_store(absorb, store / "codes_delta")
+    return store, n_base
 
 
 @query(
@@ -3069,67 +2889,8 @@ def llm_sim_knn_ivf_pq_delta(spark, sf_dir):
     folding the absorbed delta into a RE-TRAINED base — is
     llm_sim_knn_ivf_pq_compact (r11), which shares this op's store via
     _ivf_pq_delta_store."""
-    n_total = _n_embeddings(spark, sf_dir)
-    _, nprobe, _ = _ann_params(n_total)
-    subs = _pq_subs(spark, sf_dir)
-    codes_path, cent_path, cb_path, delta_path, _ = _ivf_pq_delta_store(
-        spark, sf_dir
-    )
-    coarse_st = F.broadcast(spark.read.parquet(cent_path))
-    cb_st = spark.read.parquet(cb_path)
-    # probe: identical DPP discipline to llm_sim_knn_ivf_pq_stored
-    qdistc = (
-        subs.filter(F.col("vec_id") < 10)
-        .join(coarse_st, F.col("sub") == F.col("c_sub"))
-        .select(
-            F.col("vec_id").alias("qid"), "ccode", _pq_dist(_PQ_DSUB).alias("d")
-        )
-        .groupBy("qid", "ccode")
-        .agg(F.sum("d").alias("cd"))
-    )
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("cd").asc(), F.col("ccode").asc()
-    )
-    probes = (
-        qdistc.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("qid", F.col("ccode").alias("cell"))
-    )
-    qdist = _ivf_pq_query_tables(spark, subs, coarse_st, probes, cb_st)
-
-    # probe join BELOW the base|delta union: each partitioned scan gets
-    # its own dynamicpruning PartitionFilter on cell (DPP does not
-    # inject through a Union above the scans — gated by
-    # test_ivf_pq_delta_probe_is_partition_pruned)
-    def _probe_scan(path):
-        return (
-            spark.read.parquet(path)
-            .join(F.broadcast(probes), "cell")
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid", "cell", "vec_id",
-                F.posexplode("codes").alias("sub", "code"),
-            )
-        )
-
-    un = _probe_scan(codes_path).unionByName(_probe_scan(str(delta_path)))
-    adc = (
-        un.join(F.broadcast(qdist), ["qid", "cell", "sub", "code"])
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("qd").alias("dist_adc"))
-    )
-    wr = Window.partitionBy("qid").orderBy(
-        F.col("dist_adc").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "qid", "vec_id",
-            F.col("dist_adc").cast("bigint").alias("dist_adc"), "rank",
-        )
-        .orderBy("qid", "rank")
-    )
+    store, _ = _ivf_pq_delta_store(spark, sf_dir)
+    return _ivf_pq_serve(spark, sf_dir, store, ("codes", "codes_delta"))
 
 
 @query(
@@ -3166,7 +2927,7 @@ def llm_sim_knn_ivf_pq_compact(spark, sf_dir):
     store), re-trains coarse centroids and fine codebook over the FULL
     corpus (Faiss's periodic retrain; the cached one-shot frames, so
     compaction shares work with llm_sim_knn_ivf_pq_stored), and
-    publishes a fresh cell-partitioned store by atomic rename — serving
+    publishes a fresh cell-partitioned store by _publish_store — serving
     flips from base+delta union scan to ONE partition-pruned scan.
 
     The oracle replays the one-shot full-corpus IVFADC (the stored
@@ -3179,65 +2940,36 @@ def llm_sim_knn_ivf_pq_compact(spark, sf_dir):
     absorb window (Delta OPTIMIZE's economics applied to an ANN
     index); the serving flip is a directory rename, readers never see
     a half-compacted index."""
-    import os
-    import shutil
+    import pyarrow.parquet as pq
 
-    from hdfs_mr_spark.sources.scans import _fixture_dir
+    from hdfs_mr_spark.sources.scans import _fixture_dir, _publish_store
 
     n_total = _n_embeddings(spark, sf_dir)
-    _, nprobe, _ = _ann_params(n_total)
-    subs = _pq_subs(spark, sf_dir)
-    codes_path, _, _, delta_path, n_base = _ivf_pq_delta_store(
-        spark, sf_dir
-    )
+    store, n_base = _ivf_pq_delta_store(spark, sf_dir)
     # live store state: what the fold consumes (provenance pins) —
     # parquet FOOTER row counts, a pure metadata read (no Spark job
     # mid-plan; the no-mid-plan-action gate enforces this)
-    import pyarrow.parquet as pq
 
     def _store_rows(path):
         return sum(pq.read_metadata(p).num_rows
                    for p in sorted(Path(path).rglob("*.parquet")))
 
-    n_base_live = _store_rows(codes_path)
-    n_delta_live = _store_rows(delta_path)
-    cstore = _fixture_dir(sf_dir) / "ivf_pq_store_compact_cl1"
-    if not (cstore / "_built").exists():
+    n_base_live = _store_rows(store / "codes")
+    n_delta_live = _store_rows(store / "codes_delta")
+
+    def build(tmp):
         # RE-TRAIN over the full corpus: coarse Lloyd + fine codebook
         # see every vector, including the previously-frozen delta
-        _, coarse, _, assign, codes, cb1, _, _, _ = _ivf_pq_index_frames(
-            spark, sf_dir
-        )
-        packed = (
-            codes.groupBy("vec_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub", "code"))),
-                    lambda s: s["code"],
-                ).alias("codes")
-            )
-            .join(assign, "vec_id")
-        )
-        if cstore.exists():
-            shutil.rmtree(cstore, ignore_errors=True)
-        tmp = cstore.parent / f"{cstore.name}.tmp.{os.getpid()}"
-        packed.write.mode("overwrite").partitionBy("cell").parquet(
-            str(tmp / "codes")
-        )
-        coarse.write.mode("overwrite").parquet(str(tmp / "centroids"))
-        cb1.write.mode("overwrite").parquet(str(tmp / "codebook"))
+        _ivf_pq_store_build(spark, sf_dir, tmp)
         (tmp / "_meta.json").write_text(json.dumps({
-            "folded_from": str(Path(codes_path).parent),
+            "folded_from": str(store),
             "n_base_folded": int(n_base_live),
             "n_delta_folded": int(n_delta_live),
         }))
-        (tmp / "_built").touch()
-        try:
-            os.rename(tmp, cstore)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (cstore / "_built").exists():
-                raise
+
+    cstore = _publish_store(
+        build, _fixture_dir(sf_dir) / "ivf_pq_store_compact_cl1"
+    )
     meta = json.loads((cstore / "_meta.json").read_text())
     # provenance: the published fold counts must equal the live delta
     # store AND the declared base/delta split — a partial fold (lost
@@ -3245,57 +2977,11 @@ def llm_sim_knn_ivf_pq_compact(spark, sf_dir):
     # the oracle pins
     assert meta["n_base_folded"] == n_base_live == n_base
     assert meta["n_delta_folded"] == n_delta_live == n_total - n_base
-    coarse_st = F.broadcast(spark.read.parquet(str(cstore / "centroids")))
-    cb_st = spark.read.parquet(str(cstore / "codebook"))
-    qdistc = (
-        subs.filter(F.col("vec_id") < 10)
-        .join(coarse_st, F.col("sub") == F.col("c_sub"))
-        .select(
-            F.col("vec_id").alias("qid"), "ccode", _pq_dist(_PQ_DSUB).alias("d")
-        )
-        .groupBy("qid", "ccode")
-        .agg(F.sum("d").alias("cd"))
-    )
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("cd").asc(), F.col("ccode").asc()
-    )
-    probes = (
-        qdistc.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("qid", F.col("ccode").alias("cell"))
-    )
-    qdist = _ivf_pq_query_tables(spark, subs, coarse_st, probes, cb_st)
     # ONE partition-pruned scan — the union is gone, that's the point
-    un = (
-        spark.read.parquet(str(cstore / "codes"))
-        .join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "cell", "vec_id",
-            F.posexplode("codes").alias("sub", "code"),
-        )
-    )
-    adc = (
-        un.join(F.broadcast(qdist), ["qid", "cell", "sub", "code"])
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("qd").alias("dist_adc"))
-    )
-    wr = Window.partitionBy("qid").orderBy(
-        F.col("dist_adc").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "qid", "vec_id",
-            F.col("dist_adc").cast("bigint").alias("dist_adc"), "rank",
-            F.lit(meta["n_base_folded"]).cast("bigint")
-            .alias("n_base_folded"),
-            F.lit(meta["n_delta_folded"]).cast("bigint")
-            .alias("n_delta_folded"),
-        )
-        .orderBy("qid", "rank")
-    )
+    return _ivf_pq_serve(spark, sf_dir, cstore, extra=(
+        F.lit(meta["n_base_folded"]).cast("bigint").alias("n_base_folded"),
+        F.lit(meta["n_delta_folded"]).cast("bigint").alias("n_delta_folded"),
+    ))
 
 
 @query(
@@ -3391,42 +3077,7 @@ def llm_embed_matryoshka(spark, sf_dir):
 
 @query(
     "llm_sim_range_search",
-    oracle=f"""
-WITH {_SQL_ANN_PARAMS},
-n AS (
-  SELECT vec_id, embedding, {_SQL_NORM.format(a='embedding')} AS nrm FROM embeddings
-),
-c AS (SELECT vec_id AS cid, embedding AS ce, nrm AS cn FROM n
-      WHERE vec_id < (SELECT cells FROM p)),
-assign AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT n.vec_id, c.cid,
-           row_number() OVER (PARTITION BY n.vec_id ORDER BY
-             {_SQL_DOT.format(a='n.embedding', b='c.ce')} / (n.nrm * c.cn) DESC,
-             c.cid ASC) AS rk
-    FROM n CROSS JOIN c
-  ) WHERE rk = 1
-),
-q AS (SELECT vec_id AS qid, embedding AS qe, nrm AS qn FROM n WHERE vec_id < 10),
-probes AS (
-  SELECT qid, cid AS cell FROM (
-    SELECT q.qid, c.cid,
-           row_number() OVER (PARTITION BY q.qid ORDER BY
-             {_SQL_DOT.format(a='q.qe', b='c.ce')} / (q.qn * c.cn) DESC,
-             c.cid ASC) AS rk
-    FROM q CROSS JOIN c
-  ) WHERE rk <= (SELECT nprobe FROM p)
-),
-scored AS (
-  SELECT p.qid, a.vec_id,
-         {_SQL_DOT.format(a='q.qe', b='n.embedding')} / (q.qn * n.nrm) AS cosine
-  FROM probes p
-  JOIN assign a ON a.cell = p.cell
-  JOIN q ON q.qid = p.qid
-  JOIN n ON n.vec_id = a.vec_id
-  WHERE a.vec_id <> p.qid
-)
-SELECT qid, vec_id, cosine
+    oracle=_IVF_SCORED_CTES + """SELECT qid, vec_id, cosine
 FROM scored WHERE cosine >= 0.3
 ORDER BY qid, vec_id
 """,
@@ -3451,34 +3102,10 @@ def llm_sim_range_search(spark, sf_dir):
     n = fan_out(
         e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
     )
-    c = n.filter(F.col("vec_id") < cells).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-
-    def _nearest_cells(side, id_col, emb, nrm, keep):
-        scored = side.join(F.broadcast(c)).select(
-            id_col, F.col("cid"),
-            (_dot(F.col(emb), F.col("ce")) / (F.col(nrm) * F.col("cn")))
-            .alias("ccos"),
-        )
-        w = Window.partitionBy(id_col).orderBy(
-            F.col("ccos").desc(), F.col("cid").asc()
-        )
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= keep)
-            .select(id_col, F.col("cid").alias("cell"))
-        )
-
-    assign = _nearest_cells(n, "vec_id", "embedding", "nrm", 1)
-    q = n.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    probes = _nearest_cells(q, "qid", "qe", "qn", nprobe)
+    c = _ivf_centroids(n, cells)
+    assign = _nearest_cells(n, c, 1)
+    q = _query_batch(n)
+    probes = _nearest_cells(q, c, nprobe, "qid", "qe", "qn")
     cand = (
         probes.join(assign, "cell")
         .filter(F.col("vec_id") != F.col("qid"))
@@ -3925,8 +3552,8 @@ def llm_sim_knn_hnsw(spark, sf_dir):
     the missing regime). Batch formulation with the engine's
     deterministic-oracle discipline:
 
-    BUILD (stored table, once per fixture fingerprint, atomic publish
-    like ivf_store): each node's candidates come from the IVF coarse
+    BUILD (stored table, once per fixture fingerprint, published by
+    _publish_store): each node's candidates come from the IVF coarse
     quantizer — members of the node's top-2 cells (never all-pairs; the
     same bounded candidate generation every other index here uses) —
     and the top-8 by exact cosine (vec_id tiebreak) form a kNN
@@ -3966,102 +3593,98 @@ def llm_sim_knn_hnsw(spark, sf_dir):
     lookup = e.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
-    c_serve = lookup.filter(F.col("vec_id") < cells).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
+    return _hnsw_beam_search(
+        lookup, _ivf_centroids(lookup, cells), edges
+    ).orderBy("qid", "rank")
+
+
+def _hnsw_cap(nodes, pairs, limit):
+    """Re-rank a (src, dst) adjacency candidate frame by exact cosine
+    (dst tiebreak) and keep the top ``limit`` per src — the build's
+    degree-cap step. ``nodes`` supplies (vec_id, embedding, nrm)."""
+    u_emb = nodes.select(
+        F.col("vec_id").alias("src"),
+        F.col("embedding").alias("ue"), F.col("nrm").alias("un"),
     )
-    return _hnsw_beam_search(lookup, c_serve, edges).orderBy("qid", "rank")
+    v_emb = nodes.select(
+        F.col("vec_id").alias("dst"),
+        F.col("embedding").alias("ve"), F.col("nrm").alias("vn"),
+    )
+    wsrc = Window.partitionBy("src").orderBy(
+        F.col("ecos").desc(), F.col("dst").asc()
+    )
+    return (
+        pairs.join(u_emb, "src").join(v_emb, "dst")
+        .select(
+            "src", "dst",
+            (_dot(F.col("ue"), F.col("ve"))
+             / (F.col("un") * F.col("vn"))).alias("ecos"),
+        )
+        .withColumn("rk", F.row_number().over(wsrc))
+        .filter(F.col("rk") <= limit)
+        .select("src", "dst")
+    )
+
+
+def _hnsw_cells(vectors, c):
+    """Each vector's candidate cells — its top-2 coarse cells, (src,
+    cell) — and its own cell, (dst, cell), from one ranking against the
+    broadcast centroids ``c``."""
+    ranked = _cell_ranks(vectors, c)
+    nodecells = ranked.filter(F.col("rk") <= 2).select(
+        F.col("vec_id").alias("src"), F.col("cid").alias("cell")
+    )
+    assign = ranked.filter(F.col("rk") == 1).select(
+        F.col("vec_id").alias("dst"), F.col("cid").alias("cell")
+    )
+    return nodecells, assign
+
+
+def _hnsw_knn(nodes, nodecells, assign):
+    """The kNN digraph: each src linked to its top-_HNSW_M members (by
+    exact cosine) of its candidate cells."""
+    return _hnsw_cap(
+        nodes,
+        nodecells.join(assign, "cell")
+        .filter(F.col("src") != F.col("dst"))
+        .select("src", "dst"),
+        _HNSW_M,
+    )
+
+
+def _hnsw_graph(nodes, vectors, c):
+    """The HNSW graph build over ``vectors``: top-2 cells -> kNN digraph
+    -> symmetrise (reverse edges unioned in) -> degree cap at
+    _HNSW_CAP. Returns (edges, assign) — the per-vector cell assignment
+    (dst, cell) is what a later delta links against."""
+    nodecells, assign = _hnsw_cells(vectors, c)
+    digraph = _hnsw_knn(nodes, nodecells, assign)
+    sym = digraph.unionByName(
+        digraph.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+    return _hnsw_cap(nodes, sym, _HNSW_CAP), assign
 
 
 def _hnsw_ensure_store(spark, sf_dir):
-    """Build-if-missing of the full-corpus hnsw edge store (atomic
-    publish, ivf_store pattern) — shared by llm_sim_knn_hnsw (its
-    BUILD phase) and llm_sim_knn_hnsw_compact (the fold target).
+    """Build-if-missing of the full-corpus hnsw edge store (published by
+    _publish_store) — shared by llm_sim_knn_hnsw (its BUILD phase) and
+    llm_sim_knn_hnsw_compact (the fold target).
     Returns (embeddings frame, cells, store path)."""
-    import os
-    import shutil
-
-    from hdfs_mr_spark.sources.scans import _fixture_dir
+    from hdfs_mr_spark.sources.scans import _fixture_dir, _publish_store
 
     e = table(spark, sf_dir, "embeddings")
     cells, _np_, _b = _ann_params(_n_embeddings(spark, sf_dir))
-    store = _fixture_dir(sf_dir) / "hnsw_store"
-    n = fan_out(
-        e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
-    )
-    c = n.filter(F.col("vec_id") < cells).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    if not (store / "_built").exists():
-        # cell ranks per node against the broadcast centroid set
-        ccos = n.join(F.broadcast(c)).select(
-            "vec_id", "cid",
-            (_dot(F.col("embedding"), F.col("ce"))
-             / (F.col("nrm") * F.col("cn"))).alias("ccos"),
+
+    def build(tmp):
+        n = fan_out(
+            e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
         )
-        wv = Window.partitionBy("vec_id").orderBy(
-            F.col("ccos").desc(), F.col("cid").asc()
-        )
-        ranked = ccos.withColumn("rk", F.row_number().over(wv))
-        nodecells = ranked.filter(F.col("rk") <= 2).select(
-            F.col("vec_id").alias("src"), F.col("cid").alias("cell")
-        )
-        assign = ranked.filter(F.col("rk") == 1).select(
-            F.col("vec_id").alias("dst"), F.col("cid").alias("cell")
-        )
-        u_emb = n.select(
-            F.col("vec_id").alias("src"),
-            F.col("embedding").alias("ue"), F.col("nrm").alias("un"),
-        )
-        v_emb = n.select(
-            F.col("vec_id").alias("dst"),
-            F.col("embedding").alias("ve"), F.col("nrm").alias("vn"),
-        )
-        pair_cos = (_dot(F.col("ue"), F.col("ve"))
-                    / (F.col("un") * F.col("vn"))).alias("ecos")
-        wsrc = Window.partitionBy("src").orderBy(
-            F.col("ecos").desc(), F.col("dst").asc()
-        )
-        digraph = (
-            nodecells.join(assign, "cell")
-            .filter(F.col("src") != F.col("dst"))
-            .join(u_emb, "src").join(v_emb, "dst")
-            .select("src", "dst", pair_cos)
-            .withColumn("rk", F.row_number().over(wsrc))
-            .filter(F.col("rk") <= _HNSW_M)
-            .select("src", "dst")
-        )
-        sym = (
-            digraph.unionByName(
-                digraph.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            )
-            .distinct()
-        )
-        capped = (
-            sym.join(u_emb, "src").join(v_emb, "dst")
-            .select("src", "dst", pair_cos)
-            .withColumn("rk", F.row_number().over(wsrc))
-            .filter(F.col("rk") <= _HNSW_CAP)
-            .select("src", "dst")
-        )
-        if store.exists():
-            shutil.rmtree(store, ignore_errors=True)
-        tmp = store.parent / f"{store.name}.tmp.{os.getpid()}"
-        capped.repartition(8, "src").write.mode("overwrite").parquet(
+        edges, _ = _hnsw_graph(n, n, _ivf_centroids(n, cells))
+        edges.repartition(8, "src").write.mode("overwrite").parquet(
             str(tmp / "edges")
         )
-        (tmp / "_built").touch()
-        try:
-            os.rename(tmp, store)  # atomic publish (ivf_store pattern)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (store / "_built").exists():
-                raise
+
+    store = _publish_store(build, _fixture_dir(sf_dir) / "hnsw_store")
     return e, cells, store
 
 
@@ -4262,17 +3885,12 @@ def llm_sim_knn_hnsw_compact(spark, sf_dir):
     table instead of base ∪ delta ∖ affected."""
     import pyarrow.parquet as pq
 
-    from hdfs_mr_spark.sources.scans import _fixture_dir
-
     # the fold target is the full-corpus store — ensure it through the
     # shared build helper so all three lifecycle ops share one set of
     # published artifacts (r15-opt: calling the owning op's QUERY here
     # would now run its driver-coordinated search eagerly — a whole
     # wasted search per compact invocation)
-    _hnsw_ensure_store(spark, sf_dir)
-    e = table(spark, sf_dir, "embeddings")
-    cells, _np_, _b = _ann_params(_n_embeddings(spark, sf_dir))
-    store = _fixture_dir(sf_dir) / "hnsw_store"
+    e, cells, store = _hnsw_ensure_store(spark, sf_dir)
     n_edges = sum(
         pq.read_metadata(str(f)).num_rows
         for f in (store / "edges").glob("*.parquet")
@@ -4281,14 +3899,9 @@ def llm_sim_knn_hnsw_compact(spark, sf_dir):
     nodes = e.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )  # r15-opt: point-lookup frame, no fan_out (see llm_sim_knn_hnsw)
-    c = nodes.filter(F.col("vec_id") < cells).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
     edges = spark.read.parquet(str(store / "edges"))
     return (
-        _hnsw_beam_search(nodes, c, edges)
+        _hnsw_beam_search(nodes, _ivf_centroids(nodes, cells), edges)
         .select(
             "qid", "vec_id", "cosine", "rank",
             F.lit(n_total).cast("bigint").alias("n_folded"),
@@ -4461,7 +4074,7 @@ def llm_sim_knn_hnsw_delta(spark, sf_dir):
     llm_sim_knn_ivf_pq_delta — build -> store -> ABSORB, maintaining
     the stored navigable graph without a full rebuild):
 
-    BASE BUILD (stored once, atomic publish): llm_sim_knn_hnsw's graph
+    BASE BUILD (stored once, _publish_store): llm_sim_knn_hnsw's graph
     restricted to the base split (vec_id < n - n//8 — the same
     base/delta split as the IVF delta ops); edges stored under
     `hnsw_delta_store/edges_base`.
@@ -4492,107 +4105,30 @@ def llm_sim_knn_hnsw_delta(spark, sf_dir):
     Determinism: every step is (cosine desc, id asc) tie-broken exact
     arithmetic; the DuckDB oracle replays base build, batch link,
     re-cap, and all beam rounds bit-for-bit."""
-    import os
-    import shutil
-
     import pyarrow.parquet as pq
 
-    from hdfs_mr_spark.sources.scans import _fixture_dir
+    from hdfs_mr_spark.sources.scans import _fixture_dir, _publish_store
 
     e = table(spark, sf_dir, "embeddings")
     n_total = _n_embeddings(spark, sf_dir)
     n_base = n_total - n_total // 8
     cells, _np_, _b = _ann_params(n_total)
-    store = _fixture_dir(sf_dir) / "hnsw_delta_store"
-    nodes = fan_out(
-        e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
-    )
-    base = nodes.filter(F.col("vec_id") < n_base)
-    delta = nodes.filter(F.col("vec_id") >= n_base)
-    c = base.filter(F.col("vec_id") < cells).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    u_emb = nodes.select(
-        F.col("vec_id").alias("src"),
-        F.col("embedding").alias("ue"), F.col("nrm").alias("un"),
-    )
-    v_emb = nodes.select(
-        F.col("vec_id").alias("dst"),
-        F.col("embedding").alias("ve"), F.col("nrm").alias("vn"),
-    )
-    pair_cos = (_dot(F.col("ue"), F.col("ve"))
-                / (F.col("un") * F.col("vn"))).alias("ecos")
-    wsrc = Window.partitionBy("src").orderBy(
-        F.col("ecos").desc(), F.col("dst").asc()
-    )
 
-    def _cap(edge_frame, limit):
-        """Re-rank an adjacency candidate frame by exact cosine and keep
-        the top `limit` per src (the build's degree-cap step)."""
-        return (
-            edge_frame.join(u_emb, "src").join(v_emb, "dst")
-            .select("src", "dst", pair_cos)
-            .withColumn("rk", F.row_number().over(wsrc))
-            .filter(F.col("rk") <= limit)
-            .select("src", "dst")
+    def build(tmp):
+        nodes = fan_out(
+            e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
         )
-
-    def _cell_ranks(frame):
-        """Per-node centroid ranking against the broadcast base coarse
-        quantizer: (vec_id, cid, rk)."""
-        wv = Window.partitionBy("vec_id").orderBy(
-            F.col("ccos").desc(), F.col("cid").asc()
-        )
-        return (
-            frame.join(F.broadcast(c))
-            .select(
-                "vec_id", "cid",
-                (_dot(F.col("embedding"), F.col("ce"))
-                 / (F.col("nrm") * F.col("cn"))).alias("ccos"),
-            )
-            .withColumn("rk", F.row_number().over(wv))
-        )
-
-    if not (store / "_built").exists():
+        base = nodes.filter(F.col("vec_id") < n_base)
+        c = _ivf_centroids(base, cells)
         # ---- base build (hnsw build over the base split only) ----
-        ranked_b = _cell_ranks(base)
-        nodecells_b = ranked_b.filter(F.col("rk") <= 2).select(
-            F.col("vec_id").alias("src"), F.col("cid").alias("cell")
-        )
-        assign_b = ranked_b.filter(F.col("rk") == 1).select(
-            F.col("vec_id").alias("dst"), F.col("cid").alias("cell")
-        )
-        digraph = _cap(
-            nodecells_b.join(assign_b, "cell")
-            .filter(F.col("src") != F.col("dst"))
-            .select("src", "dst"),
-            _HNSW_M,
-        )
-        sym = (
-            digraph.unionByName(
-                digraph.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            )
-            .distinct()
-        )
-        edges_b = _cap(sym, _HNSW_CAP).localCheckpoint()
+        edges_b, assign_b = _hnsw_graph(nodes, base, c)
+        edges_b = edges_b.localCheckpoint()
         # ---- absorb the delta batch against the FROZEN quantizer ----
-        ranked_d = _cell_ranks(delta)
-        nodecells_d = ranked_d.filter(F.col("rk") <= 2).select(
-            F.col("vec_id").alias("src"), F.col("cid").alias("cell")
+        nodecells_d, assign_d = _hnsw_cells(
+            nodes.filter(F.col("vec_id") >= n_base), c
         )
-        assign_d = ranked_d.filter(F.col("rk") == 1).select(
-            F.col("vec_id").alias("dst"), F.col("cid").alias("cell")
-        )
-        assign_all = assign_b.unionByName(assign_d)
-        fwd = _cap(
-            nodecells_d.join(assign_all, "cell")
-            .filter(F.col("src") != F.col("dst"))
-            .select("src", "dst"),
-            _HNSW_M,
+        fwd = _hnsw_knn(
+            nodes, nodecells_d, assign_b.unionByName(assign_d)
         ).localCheckpoint()
         rev = fwd.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -4600,18 +4136,17 @@ def llm_sim_knn_hnsw_delta(spark, sf_dir):
         aff = (
             rev.filter(F.col("src") < n_base).select("src").distinct()
         ).localCheckpoint()
-        relink = _cap(
+        relink = _hnsw_cap(
+            nodes,
             edges_b.join(F.broadcast(aff), "src")
             .unionByName(rev.join(F.broadcast(aff), "src")),
             _HNSW_CAP,
         )
-        adj_d = _cap(
+        adj_d = _hnsw_cap(
+            nodes,
             fwd.unionByName(rev.filter(F.col("src") >= n_base)).distinct(),
             _HNSW_CAP,
         )
-        if store.exists():
-            shutil.rmtree(store, ignore_errors=True)
-        tmp = store.parent / f"{store.name}.tmp.{os.getpid()}"
         edges_b.repartition(8, "src").write.mode("overwrite").parquet(
             str(tmp / "edges_base")
         )
@@ -4621,13 +4156,8 @@ def llm_sim_knn_hnsw_delta(spark, sf_dir):
         aff.coalesce(1).write.mode("overwrite").parquet(
             str(tmp / "affected")
         )
-        (tmp / "_built").touch()
-        try:
-            os.rename(tmp, store)  # atomic publish (ivf_store pattern)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (store / "_built").exists():
-                raise
+
+    store = _publish_store(build, _fixture_dir(sf_dir) / "hnsw_delta_store")
     # r15-opt: the serving edge set is base ANTI-JOIN affected UNION
     # delta; the affected list is O(batch x M) by the absorb's own
     # bound, so it is collected ONCE into a driver set and the merge
@@ -4653,13 +4183,11 @@ def llm_sim_knn_hnsw_delta(spark, sf_dir):
     lookup = e.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )  # point-lookup frame, no fan_out (see llm_sim_knn_hnsw)
-    c_serve = lookup.filter(F.col("vec_id") < min(cells, n_base)).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
     return (
-        _hnsw_beam_search(lookup, c_serve, edges, banned_base=banned)
+        _hnsw_beam_search(
+            lookup, _ivf_centroids(lookup, min(cells, n_base)), edges,
+            banned_base=banned,
+        )
         .select(
             "qid", "vec_id", "cosine", "rank",
             F.lit(n_total // 8).cast("bigint").alias("n_delta_absorbed"),

@@ -27,6 +27,9 @@ def get_spark(app_name: str = "hdfs-mr-spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # pyspark-shell turns the console progress bar on; its \r-drawn
+        # text would land inside captured PASS/FAIL log lines
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # events.ts is parquet TIMESTAMP(NANOS) which Spark's reader rejects;
         # read as long and convert in io.table (FIXTURES.md events notes).

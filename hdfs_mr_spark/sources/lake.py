@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from hdfs_mr_spark.io import table
 from hdfs_mr_spark.registry import query
-from hdfs_mr_spark.sources.scans import _fixture_dir
+from hdfs_mr_spark.sources.scans import _fixture_dir, _publish_store
 
 _FAM = "2.14 lakehouse txn"
 
@@ -227,24 +227,6 @@ def _write_files(df, data_dir: Path, n_files: int = 2) -> list[str]:
 def _read_snapshot(spark, root: Path, as_of: int | None = None):
     files = _snapshot_files(root, as_of)
     return spark.read.parquet(*[str(root / f) for f in files])
-
-
-def _publish_store(build_fn, store: Path) -> Path:
-    """Idempotent atomic store build: construct in a tmp sibling, then
-    one os.rename (the PQ-store discipline)."""
-    if (store / "_built").exists():
-        return store
-    tmp = store.parent / f"{store.name}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    build_fn(tmp)
-    (tmp / "_built").touch()
-    try:
-        os.rename(tmp, store)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not (store / "_built").exists():
-            raise
-    return store
 
 
 def _base_commits(spark, sf_dir, root: Path) -> None:

@@ -17,6 +17,7 @@ from __future__ import annotations
 import csv
 import json
 import os
+import shutil
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -32,19 +33,16 @@ ORACLE_SF = "/root/testdata/sf0.01"  # t2 correctness scale (TESTDATA.md)
 
 
 def _sf_fingerprint(sf_dir: str) -> str:
-    """Content key for the fixture cache: size+mtime of the source parquet
-    files. Regenerated testdata under the same path gets a fresh fixture
-    dir instead of silently reusing stale artifacts (ADVICE r1)."""
+    """Content key for the fixture cache: name, size and mtime of every
+    source parquet table, in sorted order. Regenerated testdata under the
+    same path (any table, embeddings included) gets a fresh fixture dir
+    instead of silently reusing stale derived stores (ADVICE r1)."""
     import hashlib
 
     h = hashlib.sha256()
-    for t in ("customer", "documents", "events", "orders"):
-        p = Path(sf_dir) / f"{t}.parquet"
-        try:
-            st = p.stat()
-            h.update(f"{t}:{st.st_size}:{st.st_mtime_ns};".encode())
-        except OSError:
-            h.update(f"{t}:missing;".encode())
+    for p in sorted(Path(sf_dir).glob("*.parquet")):
+        st = p.stat()
+        h.update(f"{p.name}:{st.st_size}:{st.st_mtime_ns};".encode())
     return h.hexdigest()[:12]
 
 
@@ -52,6 +50,31 @@ def _fixture_dir(sf_dir: str) -> Path:
     d = FIXTURE_ROOT / f"{Path(sf_dir).name}-{_sf_fingerprint(sf_dir)}"
     d.mkdir(parents=True, exist_ok=True)
     return d
+
+
+def _publish_store(build_fn, store: Path) -> Path:
+    """Build-once atomic store publish: ``build_fn(tmp)`` writes the store
+    into a pid-suffixed tmp sibling, a ``_built`` marker is touched, and one
+    os.rename moves it into place, so readers see the whole store or none.
+    If another session published first, its store is kept and ours is
+    discarded; ``store`` itself is never deleted. The tmp dir never
+    outlives the call, whether the build succeeds, loses the race or
+    raises."""
+    if (store / "_built").exists():
+        return store
+    tmp = store.parent / f"{store.name}.tmp.{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        build_fn(tmp)
+        (tmp / "_built").touch()
+        try:
+            os.rename(tmp, store)
+        except OSError:
+            if not (store / "_built").exists():
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return store
 
 
 def materialize_fixtures(sf_dir: str) -> dict[str, str]:

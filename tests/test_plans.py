@@ -1177,7 +1177,7 @@ def test_lsh_stored_absorb_is_append_only(spark):
 
     fn = all_specs()["llm_dedup_lsh_stored"].fn
     rows = fn(spark, SF_SMOKE).collect()
-    assert (store / "_built_base").exists() and (store / "_batch_done").exists()
+    assert (store / "_built").exists() and (store / "_batch_done").exists()
     bands = sorted((store / "postings").glob("band=*"))
     assert len(bands) == 12
     for d in bands:
@@ -1558,3 +1558,35 @@ def test_sequential_folds_run_in_jvm(spark):
     calls = [str(f.relative_to(ops)) for f in sorted(ops.rglob("*.py"))
              if ".applyInPandas(" in f.read_text()]
     assert calls == [], calls
+
+
+def test_ann_index_layer_written_once():
+    """Every operator store publishes through scans._publish_store (no
+    hand-rolled os.rename outside llm_dedup_lsh_compact, whose CAS
+    pointer store recovers from a crash on its own), and the IVF
+    quantizer lives at module level in llm_similarity: no operator
+    re-declares a nested _nearest_cells / _assign / _cell_ranks."""
+    import ast
+    from pathlib import Path
+
+    import hdfs_mr_spark.operators as ops
+
+    closures = {"_nearest_cells", "_assign", "_cell_ranks"}
+    offenders = []
+    for path in sorted(Path(ops.__file__).parent.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "rename"
+                        and isinstance(node.func.value, ast.Name)
+                        and node.func.value.id in ("os", "_os")
+                        and owner != "llm_dedup_lsh_compact"):
+                    offenders.append(f"{path.name}:{node.lineno} os.rename in {owner}")
+                if (node is not top
+                        and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                        and node.name in closures):
+                    offenders.append(f"{path.name}:{node.lineno} nested {node.name} in {owner}")
+    assert offenders == []

@@ -707,6 +707,75 @@ def test_cas_publish_refuses_stale_pointer(tmp_path):
         cas_publish_current(store, "v1", None)
 
 
+def test_publish_store_keeps_a_concurrent_winner(tmp_path):
+    """_publish_store: when another session publishes the store while
+    this one builds, the published store is returned intact, our build
+    is discarded and no tmp dir is left; a published store is never
+    rebuilt."""
+    from hdfs_mr_spark.sources.scans import _publish_store
+
+    store = tmp_path / "store"
+
+    def build(tmp):
+        (tmp / "mine").mkdir(parents=True)
+        store.mkdir()  # the other session's complete publish
+        (store / "theirs").write_text("x")
+        (store / "_built").touch()
+
+    assert _publish_store(build, store) == store
+    assert sorted(p.name for p in store.iterdir()) == ["_built", "theirs"]
+    assert list(tmp_path.glob("*.tmp.*")) == []
+
+    def must_not_run(tmp):
+        raise AssertionError("rebuilt a published store")
+
+    assert _publish_store(must_not_run, store) == store
+
+
+def test_publish_store_failed_build_leaves_nothing(tmp_path):
+    """A build_fn that raises propagates, and neither the store nor the
+    pid-suffixed tmp dir remains."""
+    from hdfs_mr_spark.sources.scans import _publish_store
+
+    store = tmp_path / "store"
+
+    def build(tmp):
+        (tmp / "part").mkdir(parents=True)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        _publish_store(build, store)
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_fixture_dir_tracks_every_table(tmp_path):
+    """Rewriting ONLY embeddings.parquet (the source of every IVF / HNSW
+    / PQ store) must move the fixture dir, or a stale index is served."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from hdfs_mr_spark.sources.scans import _fixture_dir
+    from tests.conftest import SF_SMOKE
+
+    sf = tmp_path / "sfcopy"
+    shutil.copytree(SF_SMOKE, sf)
+    before = _fixture_dir(str(sf))
+    emb = pq.read_table(sf / "embeddings.parquet")
+    pq.write_table(emb.slice(0, emb.num_rows - 1), sf / "embeddings.parquet")
+    after = _fixture_dir(str(sf))
+    try:
+        assert after != before
+        assert after.name.startswith("sfcopy-") and len(after.name) == 19
+    finally:
+        shutil.rmtree(before, ignore_errors=True)
+        shutil.rmtree(after, ignore_errors=True)
+
+
+def test_session_hides_console_progress(spark):
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
+
+
 def test_ann_params_match_oracle_formulas():
     """_ann_params (Python) and _SQL_ANN_PARAMS (DuckDB) must agree for
     any corpus size — the contract that keeps scaled ANN queries
