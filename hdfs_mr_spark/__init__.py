@@ -51,13 +51,28 @@ def queries():
 def oracles():
     """name -> DuckDB oracle SQL (only for oracle-checkable queries).
 
-    Writes every media fixture the SQL reads first, so a caller that
-    runs an oracle before its Spark query still finds the file."""
+    Writes every fixture the SQL reads first (the media fixtures, and
+    the csv/jsonl/txt scans derived from the sf0.01 testdata when it is
+    mounted), so a caller that runs an oracle before its Spark query
+    still finds the file. Incomplete testdata only warns; the scans
+    that need it then fail on their own."""
+    import os
+    import warnings
+
     from hdfs_mr_spark.registry import all_specs
+    from hdfs_mr_spark.sources import scans
     from hdfs_mr_spark.sources.media import FIXTURES, fixture
 
     for name in FIXTURES:
         fixture(name)
+    if os.path.isdir(scans.ORACLE_SF):
+        try:
+            scans.materialize_fixtures(scans.ORACLE_SF)
+        except FileNotFoundError as exc:
+            warnings.warn(
+                f"testdata at {scans.ORACLE_SF} is incomplete; scan "
+                f"fixtures not written: {exc}", RuntimeWarning, stacklevel=2,
+            )
     return {
         name: spec.oracle
         for name, spec in all_specs().items()

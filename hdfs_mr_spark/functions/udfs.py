@@ -11,36 +11,62 @@ are bit-identical to the SQL engines, and *sums* are made exact by
 integer-cents arithmetic (inputs are 2-dp), so group-level statistics
 match the oracle's decimal-sum formulas bit-for-bit regardless of
 pandas' summation order.
+
+Worker imports: a kernel that uses anything from this package (the
+media codecs in :mod:`hdfs_mr_spark.sources.media`, a helper here) is a
+module-level function of this module, handed to mapInPandas as
+``repo_kernel(__name__, "<kernel name>")``. Python workers inherit
+neither the driver's sys.path nor its cwd, and cloudpickle pickles a
+module-level function by reference, so the bare function fails to
+unpickle under a driver started from another directory.
+:func:`repo_kernel` wraps it in a closure (pickled by value) that puts
+the repo root on the worker's sys.path and imports the module there;
+on a real cluster the same role is played by shipping the package with
+--py-files or pip. Kernels that use nothing from the package (the
+fake-payload decoders) stay nested closures.
 """
 
 from __future__ import annotations
 
+import struct
+from pathlib import Path as _Path
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from hdfs_mr_spark.io import table
+from hdfs_mr_spark.io import fan_out, table
 from hdfs_mr_spark.registry import query
 
 # Media fixtures (sources/media.py FIXTURES): oracle SQL is a static
 # string (driver contract) that embeds fixture_path(name) at import;
 # query bodies call fixture(name), which writes the parquet on first use.
-from hdfs_mr_spark.sources.media import fixture, fixture_path
-
-# Worker-side module resolution (driver-contract hardening): kernels
-# that call the tested MODULE codecs must import hdfs_mr_spark ON THE
-# WORKER, but Python workers inherit neither the driver's sys.path nor
-# its cwd — a driver running from an arbitrary directory (the driver
-# contract) would hit ModuleNotFoundError mid-task. Every such kernel
-# therefore injects the repo root (captured here as a plain string at
-# import time, pickled by value inside the closure) into the worker's
-# sys.path before importing. On a real cluster the equivalent is
-# shipping the package via --py-files / pip — the injection is a no-op
-# when the module already resolves.
-from pathlib import Path as _Path
+from hdfs_mr_spark.sources.media import (
+    avi_decode_frames,
+    bmp_decode_pixels,
+    box_downsample,
+    fixture,
+    fixture_path,
+    gif_decode_frames,
+    gif_decode_pixels,
+    jpeg_decode_baseline,
+    jpeg_decode_gray,
+    jpeg_decode_progressive,
+    jpeg_encode_gray,
+    media_px_dims,
+    media_px_value,
+    parse_jpeg_dims,
+    parse_png_dims,
+    parse_wav,
+    parse_wav_ex,
+    parse_wav_multi,
+    png_decode_palette,
+    png_decode_palette_rgba,
+    png_decode_pixels,
+)
 
 REPO_ROOT = str(_Path(__file__).resolve().parents[2])
 
@@ -65,6 +91,16 @@ def repo_kernel(module: str, name: str):
         return fn(batches)
 
     return kernel
+
+
+def _int_frame(rows, cols, int32=()):
+    """Kernel output rows as a frame: ``int32`` columns int32, the rest
+    int64 (explicit dtypes, so an empty batch still maps onto the
+    declared schema)."""
+    return pd.DataFrame(rows, columns=cols).astype(
+        {c: ("int32" if c in int32 else "int64") for c in cols}
+    )
+
 
 _FAM = "2.12 udf surface"
 
@@ -292,8 +328,6 @@ def mm_decode(payload: bytes, mime: str, backend: str = "auto") -> dict:
     codecs (PIL/ffmpeg/librosa) are not in this container; wiring one in
     means adding the matching branch here — call sites do not change.
     """
-    from hdfs_mr_spark.sources.media import parse_jpeg_dims, parse_png_dims
-
     if backend == "auto":
         if payload[:8] == b"\x89PNG\r\n\x1a\n":
             backend = "png"
@@ -317,6 +351,21 @@ def mm_decode(payload: bytes, mime: str, backend: str = "auto") -> dict:
         "n_frames": (b[4] % 30) + 1 if mime.startswith("video/") else 1,
         "byte_sum": sum(b),
     }
+
+
+def fake_decode_batches(batches):
+    """mapInPandas kernel of llm_multimodal_decode: mm_decode(backend=
+    "fake") per payload."""
+    cols = ["width", "height", "n_frames", "byte_sum"]
+    for pdf in batches:
+        out = pdf[["doc_id", "mime"]].copy()
+        feats = [
+            mm_decode(p, m, backend="fake")
+            for p, m in zip(pdf["payload"], pdf["mime"])
+        ]
+        for c in cols:
+            out[c] = [f[c] for f in feats]
+        yield out
 
 
 @query(
@@ -353,32 +402,6 @@ def llm_multimodal_decode(spark, sf_dir):
     partition-parallel decode, typed output — is the production path.
     At 100 TB this is the canonical shape: opaque bytes stay columnar,
     Python touches each batch once, no shuffle anywhere."""
-
-    def decode_batches(batches):
-        # NB: self-contained closure — no module-level references. The
-        # driver contract runs this from an arbitrary cwd, and executor
-        # Python workers can't import hdfs_mr_spark there; cloudpickle
-        # serializes nested functions by value, module functions by
-        # reference. Logic mirrors mm_decode(backend="fake") exactly.
-        def fake_decode(b: bytes, mime: str) -> tuple:
-            return (
-                (b[0] << 8) | b[1],
-                (b[2] << 8) | b[3],
-                (b[4] % 30) + 1 if mime.startswith("video/") else 1,
-                sum(b),
-            )
-
-        for pdf in batches:
-            out = pdf[["doc_id", "mime"]].copy()
-            feats = [
-                fake_decode(p, m) for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            out["width"] = [f[0] for f in feats]
-            out["height"] = [f[1] for f in feats]
-            out["n_frames"] = [f[2] for f in feats]
-            out["byte_sum"] = [f[3] for f in feats]
-            yield out
-
     d = table(spark, sf_dir, "documents")
     mime = (
         F.when(F.col("lang") == "en", "image/png")
@@ -389,8 +412,6 @@ def llm_multimodal_decode(spark, sf_dir):
     )
     # fan_out: single-row-group input would serialize the python decode
     # onto one Arrow worker (io.fan_out; measured 4.1 s -> ~1 s at sf0.1)
-    from hdfs_mr_spark.io import fan_out
-
     payloads = fan_out(
         d.select(
             "doc_id",
@@ -399,7 +420,7 @@ def llm_multimodal_decode(spark, sf_dir):
         )
     )
     return payloads.mapInPandas(
-        decode_batches,
+        repo_kernel(__name__, "fake_decode_batches"),
         "doc_id long, mime string, width int, height int, n_frames int, byte_sum int",
     ).orderBy("doc_id")
 
@@ -456,6 +477,40 @@ ORDER BY doc_id
 """
 
 
+def png_px_batches(batches):
+    """mapInPandas kernel of llm_multimodal_pixels: png_decode_pixels,
+    then box_downsample (2x), per-channel sums of both."""
+    cols = [
+        "doc_id", "width", "height", "ds_width", "ds_height",
+        "sum_r", "sum_g", "sum_b", "ds_sum_r", "ds_sum_g", "ds_sum_b",
+    ]
+    for pdf in batches:
+        rows = []
+        for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+            w, h, px = png_decode_pixels(bytes(payload))
+            ow, oh, ds = box_downsample(px, w, h)
+            rows.append((
+                int(did), w, h, ow, oh,
+                *(sum(px[c::3]) for c in range(3)),
+                *(sum(ds[c::3]) for c in range(3)),
+            ))
+        yield _int_frame(
+            rows, cols, ("width", "height", "ds_width", "ds_height")
+        )
+
+
+def png_total_batches(batches):
+    """mapInPandas kernel of stream_image_decode: png_decode_pixels,
+    then the sum of every sample."""
+    cols = ["doc_id", "width", "height", "sum_px"]
+    for pdf in batches:
+        rows = []
+        for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+            w, h, px = png_decode_pixels(bytes(payload))
+            rows.append((int(did), w, h, sum(px)))
+        yield _int_frame(rows, cols, ("width", "height"))
+
+
 @query(
     "llm_multimodal_pixels",
     oracle=_px_oracle_sql(),
@@ -465,7 +520,8 @@ def llm_multimodal_pixels(spark, sf_dir):
     """Pixel-TRUE image path (VERDICT r3 missing item 1): full PNG
     decode — chunk walk, multi-IDAT concat, stdlib zlib inflate,
     per-scanline unfilter covering ALL five PNG filter types — followed
-    by an integer 2x box-filter downsample, inside mapInPandas over the
+    by an integer 2x box-filter downsample (the module codecs
+    png_decode_pixels and box_downsample), inside mapInPandas over the
     binary column. Emits per-image, per-channel pixel sums at full
     resolution and after downsampling, so one transposed byte anywhere
     in inflate/unfilter/resample hash-mismatches. The fixture PNGs
@@ -482,94 +538,9 @@ def llm_multimodal_pixels(spark, sf_dir):
     is small; a production kernel swaps the inner loops for numpy on
     the decoded buffer — same plan shape."""
 
-    def pixel_batches(batches):
-        # self-contained closure (workers can't import hdfs_mr_spark);
-        # mirrors sources/media.py png_decode_pixels/box_downsample,
-        # which unit tests roundtrip against the generator.
-        import struct
-        import zlib
-
-        import pandas as pd
-
-        def paeth(a, b, c):
-            p = a + b - c
-            pa_, pb_, pc_ = abs(p - a), abs(p - b), abs(p - c)
-            if pa_ <= pb_ and pa_ <= pc_:
-                return a
-            return b if pb_ <= pc_ else c
-
-        def decode(b):
-            if b[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError("bad PNG signature")
-            pos, w, h, idat = 8, None, None, b""
-            while pos + 8 <= len(b):
-                (length,) = struct.unpack_from(">I", b, pos)
-                ctype = b[pos + 4 : pos + 8]
-                if ctype == b"IHDR":
-                    w, h = struct.unpack_from(">II", b, pos + 8)
-                elif ctype == b"IDAT":
-                    idat += b[pos + 8 : pos + 8 + length]
-                elif ctype == b"IEND":
-                    break
-                pos += 12 + length
-            raw = zlib.decompress(idat)
-            bpp, stride = 3, 3 * w
-            out = bytearray(stride * h)
-            prior = bytes(stride)
-            for y in range(h):
-                ft = raw[y * (stride + 1)]
-                row = bytearray(raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)])
-                for i in range(stride):
-                    left = row[i - bpp] if i >= bpp else 0
-                    up = prior[i]
-                    upleft = prior[i - bpp] if i >= bpp else 0
-                    if ft == 1:
-                        row[i] = (row[i] + left) & 0xFF
-                    elif ft == 2:
-                        row[i] = (row[i] + up) & 0xFF
-                    elif ft == 3:
-                        row[i] = (row[i] + (left + up) // 2) & 0xFF
-                    elif ft == 4:
-                        row[i] = (row[i] + paeth(left, up, upleft)) & 0xFF
-                out[y * stride : (y + 1) * stride] = row
-                prior = bytes(row)
-            return w, h, bytes(out)
-
-        cols = [
-            "doc_id", "width", "height", "ds_width", "ds_height",
-            "sum_r", "sum_g", "sum_b", "ds_sum_r", "ds_sum_g", "ds_sum_b",
-        ]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = decode(bytes(payload))
-                sums = [sum(px[c::3]) for c in range(3)]
-                ow, oh = (w + 1) // 2, (h + 1) // 2
-                dss = [0, 0, 0]
-                for oy in range(oh):
-                    ys = range(2 * oy, min(2 * oy + 2, h))
-                    for ox in range(ow):
-                        xs = range(2 * ox, min(2 * ox + 2, w))
-                        cnt = len(xs) * len(ys)
-                        for c in range(3):
-                            s = 0
-                            for y in ys:
-                                base = (y * w) * 3 + c
-                                for x in xs:
-                                    s += px[base + x * 3]
-                            dss[c] += s // cnt
-                rows.append((int(did), w, h, ow, oh, *sums, *dss))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {c: ("int64" if c.startswith(("doc", "sum", "ds_sum")) else "int32")
-                 for c in cols}
-            )
-
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_px"))
     return fan_out(df).mapInPandas(
-        pixel_batches,
+        repo_kernel(__name__, "png_px_batches"),
         "doc_id long, width int, height int, ds_width int, ds_height int, "
         "sum_r long, sum_g long, sum_b long, "
         "ds_sum_r long, ds_sum_g long, ds_sum_b long",
@@ -613,6 +584,43 @@ ORDER BY doc_id
 """
 
 
+def _weighted_sums(w, h, nc, px):
+    """Per-channel sums of an interleaved ``nc``-channel pixel buffer,
+    plus the all-channel sums weighted by x + 1 and by y + 1 (a
+    misplaced pixel moves those even when the plain sums survive).
+    Returns ``(sums, wsum_x, wsum_y)``."""
+    sums, wx, wy = [0] * nc, 0, 0
+    for y in range(h):
+        for x in range(w):
+            base = (y * w + x) * nc
+            tot = 0
+            for c in range(nc):
+                v = px[base + c]
+                sums[c] += v
+                tot += v
+            wx += tot * (x + 1)
+            wy += tot * (y + 1)
+    return sums, wx, wy
+
+
+def jpeg_gray_px_batches(batches):
+    """mapInPandas kernel of llm_multimodal_pixels_jpeg:
+    jpeg_decode_gray, then pixel and position-weighted sums."""
+    cols = [
+        "doc_id", "width", "height", "n_blocks",
+        "sum_px", "wsum_x", "wsum_y",
+    ]
+    for pdf in batches:
+        rows = []
+        for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+            w, h, px = jpeg_decode_gray(bytes(payload))
+            (sp,), wx, wy = _weighted_sums(w, h, 1, px)
+            rows.append((
+                int(did), w, h, ((w + 7) // 8) * ((h + 7) // 8), sp, wx, wy,
+            ))
+        yield _int_frame(rows, cols, ("width", "height", "n_blocks"))
+
+
 @query(
     "llm_multimodal_pixels_jpeg",
     oracle=_jpeg_px_oracle_sql(),
@@ -631,199 +639,43 @@ def llm_multimodal_pixels_jpeg(spark, sf_dir):
     lossy pipeline is bit-exact — so the DuckDB oracle can recompute
     the same sums from the generative block formula: formula-vs-decode
     agreement IS the end-to-end proof, same discipline as the PNG
-    pixels query. The decoder itself is general baseline code
-    (hypothesis round-trips random AC coefficient blocks).
+    pixels query. The decoder is the module codec jpeg_decode_gray,
+    general baseline code (hypothesis round-trips random AC
+    coefficient blocks).
 
     Scale: identical shape to llm_multimodal_pixels — one Arrow batch
     per task, per-row decode, no shuffle before the final sort;
     parallelism is the file count."""
 
-    def jpeg_batches(batches):
-        # self-contained closure (workers can't import hdfs_mr_spark);
-        # mirrors sources/media.py jpeg_decode_gray, which unit tests
-        # roundtrip against the generator and random coefficients.
-        import math
-        import struct
-
-        import pandas as pd
-
-        ZIG = [
-            0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-            12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-            35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-            58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-        ]
-        COS = [
-            [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-            for x in range(8)
-        ]
-        CN = [1 / math.sqrt(2)] + [1.0] * 7
-
-        def huff_map(bits, vals):
-            m, code, k = {}, 0, 0
-            for ln in range(1, 17):
-                for _ in range(bits[ln - 1]):
-                    m[(ln, code)] = vals[k]
-                    code += 1
-                    k += 1
-                code <<= 1
-            return m
-
-        def idct(coefs):
-            if not any(coefs[1:]):
-                v = round(coefs[0] / 8) + 128
-                return [min(255, max(0, v))] * 64
-            tmp = [0.0] * 64
-            for r in range(8):
-                for x in range(8):
-                    s = 0.0
-                    for u in range(8):
-                        s += CN[u] * coefs[r * 8 + u] * COS[x][u]
-                    tmp[r * 8 + x] = s / 2
-            out = [0] * 64
-            for c in range(8):
-                for y in range(8):
-                    s = 0.0
-                    for v in range(8):
-                        s += CN[v] * tmp[v * 8 + c] * COS[y][v]
-                    val = round(s / 2) + 128
-                    out[y * 8 + c] = min(255, max(0, val))
-            return out
-
-        def decode(b):
-            if b[:2] != b"\xff\xd8":
-                raise ValueError("no SOI")
-            pos, w, h, tq, td, ta, scan_pos = 2, None, None, 0, 0, 0, None
-            qtabs, htabs = {}, {}
-            while pos + 4 <= len(b):
-                marker = b[pos + 1]
-                if marker == 0xD9:
-                    break
-                (seglen,) = struct.unpack_from(">H", b, pos + 2)
-                seg = b[pos + 4 : pos + 2 + seglen]
-                if marker == 0xDB:
-                    i = 0
-                    while i < len(seg):
-                        tab = [0] * 64
-                        for k in range(64):
-                            tab[ZIG[k]] = seg[i + 1 + k]
-                        qtabs[seg[i] & 15] = tab
-                        i += 65
-                elif marker == 0xC4:
-                    i = 0
-                    while i < len(seg):
-                        tc_th = seg[i]
-                        bits = list(seg[i + 1 : i + 17])
-                        n = sum(bits)
-                        htabs[(tc_th >> 4, tc_th & 15)] = huff_map(
-                            bits, list(seg[i + 17 : i + 17 + n])
-                        )
-                        i += 17 + n
-                elif marker == 0xC0:
-                    h, w = struct.unpack_from(">HH", seg, 1)
-                    tq = seg[8]
-                elif marker == 0xDA:
-                    td, ta = seg[2] >> 4, seg[2] & 15
-                    scan_pos = pos + 2 + seglen
-                    break
-                pos += 2 + seglen
-            q, dc_tab, ac_tab = qtabs[tq], htabs[(0, td)], htabs[(1, ta)]
-            state = {"pos": scan_pos, "acc": 0, "n": 0}
-
-            def read(n):
-                # mirrors media._JpegBitReader: bounds + stuffing checks
-                # so corrupt payloads fail loudly, not decode garbage
-                while state["n"] < n:
-                    if state["pos"] >= len(b):
-                        raise ValueError("unexpected EOF inside scan")
-                    byte = b[state["pos"]]
-                    if byte == 0xFF:
-                        if state["pos"] + 1 >= len(b):
-                            raise ValueError("unexpected EOF after FF")
-                        if b[state["pos"] + 1] != 0x00:
-                            raise ValueError("marker inside scan")
-                        state["pos"] += 2  # FF00 stuffing
-                    else:
-                        state["pos"] += 1
-                    state["acc"] = (state["acc"] << 8) | byte
-                    state["n"] += 8
-                state["n"] -= n
-                return (state["acc"] >> state["n"]) & ((1 << n) - 1)
-
-            def huff_read(table):
-                code = 0
-                for ln in range(1, 17):
-                    code = (code << 1) | read(1)
-                    if (ln, code) in table:
-                        return table[(ln, code)]
-                raise ValueError("bad huffman code")
-
-            def extend(v, sz):
-                return v if v >= (1 << (sz - 1)) else v - (1 << sz) + 1
-
-            mcux, mcuy = (w + 7) // 8, (h + 7) // 8
-            out = bytearray(w * h)
-            prev_dc = 0
-            for by in range(mcuy):
-                for bx in range(mcux):
-                    sz = huff_read(dc_tab)
-                    prev_dc += extend(read(sz), sz) if sz else 0
-                    coefs = [0] * 64
-                    coefs[0] = prev_dc * q[0]
-                    k = 0
-                    while k < 63:
-                        rs = huff_read(ac_tab)
-                        if rs == 0x00:
-                            break
-                        run, sz = rs >> 4, rs & 15
-                        if sz == 0:
-                            k += 16
-                            continue
-                        k += run + 1
-                        nat = ZIG[k]
-                        coefs[nat] = extend(read(sz), sz) * q[nat]
-                    px = idct(coefs)
-                    for yy in range(min(8, h - by * 8)):
-                        row_base = (by * 8 + yy) * w + bx * 8
-                        for xx in range(min(8, w - bx * 8)):
-                            out[row_base + xx] = px[yy * 8 + xx]
-            return w, h, bytes(out)
-
-        cols = [
-            "doc_id", "width", "height", "n_blocks",
-            "sum_px", "wsum_x", "wsum_y",
-        ]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = decode(bytes(payload))
-                sp = wx = wy = 0
-                for y in range(h):
-                    base = y * w
-                    for x in range(w):
-                        v = px[base + x]
-                        sp += v
-                        wx += v * (x + 1)
-                        wy += v * (y + 1)
-                rows.append((
-                    int(did), w, h, ((w + 7) // 8) * ((h + 7) // 8),
-                    sp, wx, wy,
-                ))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {c: ("int64" if c in ("doc_id", "sum_px", "wsum_x", "wsum_y")
-                     else "int32")
-                 for c in cols}
-            )
-
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_jpeg"))
     return fan_out(df).mapInPandas(
-        jpeg_batches,
+        repo_kernel(__name__, "jpeg_gray_px_batches"),
         "doc_id long, width int, height int, n_blocks int, "
         "sum_px long, wsum_x long, wsum_y long",
     ).orderBy("doc_id")
+
+
+def _media_dims(pdf):
+    """(width, height) per row of a real-media batch: parse_png_dims
+    for image/png, parse_jpeg_dims otherwise."""
+    return [
+        (parse_png_dims if m == "image/png" else parse_jpeg_dims)(bytes(p))
+        for p, m in zip(pdf["payload"], pdf["mime"])
+    ]
+
+
+def media_dims_batches(batches):
+    """mapInPandas kernel of llm_multimodal_decode_real."""
+    for pdf in batches:
+        out = pdf[["doc_id", "mime"]].copy()
+        dims = _media_dims(pdf)
+        out["width"] = [d[0] for d in dims]
+        out["height"] = [d[1] for d in dims]
+        out["n_bytes"] = [len(p) for p in pdf["payload"]]
+        yield out.astype(
+            {"doc_id": "int64", "width": "int32",
+             "height": "int32", "n_bytes": "int64"}
+        )
 
 
 @query(
@@ -852,59 +704,13 @@ def llm_multimodal_decode_real(spark, sf_dir):
     the binary column. The DuckDB oracle extracts the same dimensions
     from the same bytes via hex-offset arithmetic (PNG IHDR at the fixed
     post-signature offset; SOF0 at the generator's fixed segment layout),
-    so a parser that misreads a single byte hash-mismatches. Fixture is
-    static (oracle SQL can't parameterize paths), bounded to 64 blobs."""
-
-    def decode_batches(batches):
-        # self-contained closure (cloudpickle by value; executor workers
-        # can't import hdfs_mr_spark from the driver's arbitrary cwd) —
-        # logic mirrors sources/media.py parse_png_dims/parse_jpeg_dims,
-        # which unit tests exercise against mangled inputs.
-        import struct
-
-        def png_dims(b):
-            if b[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError("bad PNG signature")
-            pos = 8
-            while pos + 8 <= len(b):
-                (length,) = struct.unpack_from(">I", b, pos)
-                if b[pos + 4 : pos + 8] == b"IHDR":
-                    return struct.unpack_from(">II", b, pos + 8)
-                pos += 12 + length
-            raise ValueError("no IHDR")
-
-        def jpeg_dims(b):
-            if b[:2] != b"\xff\xd8":
-                raise ValueError("no SOI")
-            pos = 2
-            while pos + 4 <= len(b):
-                marker = b[pos + 1]
-                if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                    h, w = struct.unpack_from(">HH", b, pos + 5)
-                    return w, h
-                if marker == 0xD9:
-                    break
-                (seglen,) = struct.unpack_from(">H", b, pos + 2)
-                pos += 2 + seglen
-            raise ValueError("no SOFn")
-
-        for pdf in batches:
-            out = pdf[["doc_id", "mime"]].copy()
-            dims = [
-                png_dims(p) if m == "image/png" else jpeg_dims(p)
-                for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            out["width"] = [d[0] for d in dims]
-            out["height"] = [d[1] for d in dims]
-            out["n_bytes"] = [len(p) for p in pdf["payload"]]
-            yield out.astype(
-                {"doc_id": "int64", "width": "int32",
-                 "height": "int32", "n_bytes": "int64"}
-            )
-
+    so a parser that misreads a single byte hash-mismatches. The
+    parsers are the module's parse_png_dims / parse_jpeg_dims, which
+    unit tests feed mangled inputs. Fixture is static (oracle SQL can't
+    parameterize paths), bounded to 64 blobs."""
     df = spark.read.parquet(fixture("media"))
     return df.mapInPandas(
-        decode_batches,
+        repo_kernel(__name__, "media_dims_batches"),
         "doc_id long, mime string, width int, height int, n_bytes long",
     ).orderBy("doc_id")
 
@@ -969,8 +775,7 @@ def llm_multimodal_framesample(spark, sf_dir):
     caption stages)."""
 
     def sample_batches(batches):
-        # self-contained closure (cloudpickle by value; workers can't
-        # import hdfs_mr_spark from the driver's arbitrary cwd)
+        # uses nothing from the package, so a plain closure will do
         import pandas as pd
 
         for pdf in batches:
@@ -1034,8 +839,7 @@ def llm_multimodal_resize(spark, sf_dir):
     production resize stage of an image training pipeline."""
 
     def resize_batches(batches):
-        # self-contained closure (cloudpickle by value; workers can't
-        # import hdfs_mr_spark from the driver's arbitrary cwd)
+        # uses nothing from the package, so a plain closure will do
         TARGET = 224
 
         for pdf in batches:
@@ -1236,6 +1040,22 @@ LATERAL hmr_letter_counts(d.doc_id, d.text, 'a,e,s') t
     )
 
 
+def media_resize_batches(batches):
+    """mapInPandas kernel of llm_multimodal_resize_real: source dims
+    from the real header parse, 224-long-edge target dims."""
+    for pdf in batches:
+        out = pdf[["doc_id", "mime"]].copy()
+        dims = _media_dims(pdf)
+        out["src_w"] = [d[0] for d in dims]
+        out["src_h"] = [d[1] for d in dims]
+        out["dst_w"] = [224 if w >= h else w * 224 // h for w, h in dims]
+        out["dst_h"] = [224 if h >= w else h * 224 // w for w, h in dims]
+        yield out.astype(
+            {"doc_id": "int64", "src_w": "int32", "src_h": "int32",
+             "dst_w": "int32", "dst_h": "int32"}
+        )
+
+
 @query(
     "llm_multimodal_resize_real",
     oracle=f"""
@@ -1270,58 +1090,36 @@ def llm_multimodal_resize_real(spark, sf_dir):
     resampling of decoded buffers — is llm_multimodal_resize_pixels
     (round 5 closed this operator's documented extension point)."""
 
-    def resize_batches(batches):
-        # self-contained closure (cloudpickle by value; executor workers
-        # can't import hdfs_mr_spark from the driver's arbitrary cwd) —
-        # parsers mirror sources/media.py.
-        import struct
-
-        def png_dims(b):
-            pos = 8
-            while pos + 8 <= len(b):
-                (length,) = struct.unpack_from(">I", b, pos)
-                if b[pos + 4 : pos + 8] == b"IHDR":
-                    return struct.unpack_from(">II", b, pos + 8)
-                pos += 12 + length
-            raise ValueError("no IHDR")
-
-        def jpeg_dims(b):
-            pos = 2
-            while pos + 4 <= len(b):
-                marker = b[pos + 1]
-                if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                    h, w = struct.unpack_from(">HH", b, pos + 5)
-                    return w, h
-                if marker == 0xD9:
-                    break
-                (seglen,) = struct.unpack_from(">H", b, pos + 2)
-                pos += 2 + seglen
-            raise ValueError("no SOFn")
-
-        for pdf in batches:
-            out = pdf[["doc_id", "mime"]].copy()
-            dims = [
-                png_dims(p) if m == "image/png" else jpeg_dims(p)
-                for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            out["src_w"] = [d[0] for d in dims]
-            out["src_h"] = [d[1] for d in dims]
-            out["dst_w"] = [
-                224 if w >= h else w * 224 // h for w, h in dims
-            ]
-            out["dst_h"] = [
-                224 if h >= w else h * 224 // w for w, h in dims
-            ]
-            yield out.astype(
-                {"doc_id": "int64", "src_w": "int32", "src_h": "int32",
-                 "dst_w": "int32", "dst_h": "int32"}
-            )
-
     df = spark.read.parquet(fixture("media"))
     return df.mapInPandas(
-        resize_batches,
+        repo_kernel(__name__, "media_resize_batches"),
         "doc_id long, mime string, src_w int, src_h int, dst_w int, dst_h int",
     ).orderBy("doc_id")
+
+
+def audio_frame_batches(batches):
+    """mapInPandas kernel of llm_multimodal_audio_frames: parse_wav,
+    then 20 ms framing and per-clip amplitude / zero-crossing sums."""
+    cols = [
+        "doc_id", "sample_rate", "n_samples", "n_frames",
+        "sum_abs", "peak", "zero_crossings",
+    ]
+    for pdf in batches:
+        out = []
+        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+            rate, data = parse_wav(bytes(payload))
+            samples = np.frombuffer(data, dtype="<i2").astype(np.int64)
+            frame = rate // 50
+            nf = len(samples) // frame
+            full = samples[: nf * frame]
+            prod = full[1:] * full[:-1]
+            idx = np.arange(1, len(full))
+            zc = int(((prod < 0) & (idx % frame != 0)).sum())
+            out.append(
+                (int(doc_id), int(rate), len(samples), nf,
+                 int(np.abs(full).sum()), int(np.abs(full).max()), zc)
+            )
+        yield pd.DataFrame(out, columns=cols)
 
 
 @query(
@@ -1364,7 +1162,8 @@ ORDER BY doc_id
 def llm_multimodal_audio_frames(spark, sf_dir):
     """Audio as a first-class multimodal column: REAL RIFF/WAVE clips
     (PCM16 mono, fmt + LIST filler + data chunks) parsed by a genuine
-    chunk walker inside mapInPandas, then framed into 20 ms windows
+    chunk walker (the module's parse_wav) inside mapInPandas, then
+    framed into 20 ms windows
     (rate // 50 samples — both 160 and 320 occur) for the classic
     speech front-end features: per-clip sum of absolute amplitude,
     peak, and intra-frame zero-crossing count over the full frames.
@@ -1378,58 +1177,8 @@ def llm_multimodal_audio_frames(spark, sf_dir):
     aggregate; at 100 TB parallelism is the clip count and this is the
     feature-extract stage of an audio ingest DAG."""
     df = spark.read.parquet(fixture("media_audio"))
-
-    def frame_batches(batches):
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        def wav_parse(b):
-            # mirrors sources/media.py:parse_wav (self-contained for the
-            # executor; unit-tested against mangled inputs there)
-            if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                raise ValueError("not RIFF/WAVE")
-            pos, rate, data = 12, None, None
-            while pos + 8 <= len(b):
-                cid = b[pos : pos + 4]
-                (size,) = struct.unpack_from("<I", b, pos + 4)
-                body = b[pos + 8 : pos + 8 + size]
-                if cid == b"fmt ":
-                    afmt, ch, rate = struct.unpack_from("<HHI", body, 0)
-                    (bits,) = struct.unpack_from("<H", body, 14)
-                    if (afmt, ch, bits) != (1, 1, 16):
-                        raise ValueError("only PCM16 mono")
-                elif cid == b"data":
-                    data = body
-                pos += 8 + size + (size & 1)
-            if rate is None or data is None:
-                raise ValueError("missing fmt or data")
-            return rate, data
-
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, data = wav_parse(bytes(payload))
-                samples = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                frame = rate // 50
-                nf = len(samples) // frame
-                full = samples[: nf * frame]
-                prod = full[1:] * full[:-1]
-                idx = np.arange(1, len(full))
-                zc = int(((prod < 0) & (idx % frame != 0)).sum())
-                out.append(
-                    (int(doc_id), int(rate), len(samples), nf,
-                     int(np.abs(full).sum()), int(np.abs(full).max()), zc)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "sample_rate", "n_samples", "n_frames",
-                         "sum_abs", "peak", "zero_crossings"],
-            )
-
     return df.mapInPandas(
-        frame_batches,
+        repo_kernel(__name__, "audio_frame_batches"),
         schema=(
             "doc_id bigint, sample_rate int, n_samples bigint, "
             "n_frames bigint, sum_abs bigint, peak int, zero_crossings bigint"
@@ -1479,6 +1228,51 @@ ORDER BY p.doc_id
 """
 
 
+def _dhash(w, h, gray):
+    """63-bit gradient dHash of a ``w`` x ``h`` image whose luma is
+    ``gray(x, y)``: grid-sampled on the 8x9 lattice at ((gx*w)//8,
+    (gy*h)//9), bit gy*7+gx set when luma rises from lattice column gx
+    to gx+1."""
+    hv = 0
+    for k in range(63):
+        gx, gy = k % 7, k // 7
+        yq = (gy * h) // 9
+        if gray(((gx + 1) * w) // 8, yq) > gray((gx * w) // 8, yq):
+            hv |= 1 << k
+    return hv
+
+
+def _image_luma(b):
+    """``(w, h, gray(x, y))`` of a payload sniffed by magic: an RGB PNG
+    (png_decode_pixels, luma (r + 2g + b) // 4) or a grayscale JPEG
+    (jpeg_decode_gray, luma = the decoded sample)."""
+    if b[:8] == b"\x89PNG\r\n\x1a\n":
+        w, h, px = png_decode_pixels(b)
+
+        def gray(x, y):
+            i = (y * w + x) * 3
+            return (px[i] + 2 * px[i + 1] + px[i + 2]) // 4
+    elif b[:2] == b"\xff\xd8":
+        w, h, px = jpeg_decode_gray(b)
+
+        def gray(x, y):
+            return px[y * w + x]
+    else:
+        raise ValueError("unknown image magic")
+    return w, h, gray
+
+
+def phash_batches(batches):
+    """mapInPandas kernel of the image near-dup queries: (doc_id,
+    dHash) per PNG or JPEG payload."""
+    for pdf in batches:
+        rows = [
+            (int(did), _dhash(*_image_luma(bytes(payload))))
+            for did, payload in zip(pdf["doc_id"], pdf["payload"])
+        ]
+        yield pd.DataFrame(rows, columns=["doc_id", "phash"]).astype("int64")
+
+
 @query(
     "llm_multimodal_phash",
     oracle=_phash_oracle_sql(),
@@ -1488,11 +1282,10 @@ def llm_multimodal_phash(spark, sf_dir):
     """Perceptual image hashing + Hamming-radius dedup — the IMAGE
     near-dup primitive of a multimodal training pipeline (text gets
     MinHash/SimHash; images get dHash): each fixture PNG is fully
-    decoded (same chunk-walk/inflate/unfilter kernel as
-    llm_multimodal_pixels), grayscale is grid-sampled on a 8x9 lattice
-    (integer coordinates (gx*w)//8, (gy*h)//9 — sampling, not
-    resampling, keeps the hash integer-exact and engine-replicable),
-    and the 63-bit dHash sets bit gy*7+gx when brightness rises between
+    decoded (png_decode_pixels, as in llm_multimodal_pixels), grayscale
+    is grid-sampled on a 8x9 lattice (integer coordinates (gx*w)//8,
+    (gy*h)//9 — sampling, not resampling, keeps the hash integer-exact
+    and engine-replicable), and the 63-bit dHash sets bit gy*7+gx when brightness rises between
     horizontal neighbors. Images within Hamming distance 8 collapse to
     the lowest doc_id (decision form, O(n) output). The DuckDB oracle
     recomputes the hash from the gradient PNGs' generative formula, so
@@ -1519,80 +1312,9 @@ def llm_multimodal_phash(spark, sf_dir):
     that silently costs recall if ignored. Pair stage stays
     sub-quadratic either way."""
 
-    def phash_batches(batches):
-        import struct
-        import zlib
-
-        import pandas as pd
-
-        def paeth(a, b, c):
-            p = a + b - c
-            pa_, pb_, pc_ = abs(p - a), abs(p - b), abs(p - c)
-            if pa_ <= pb_ and pa_ <= pc_:
-                return a
-            return b if pb_ <= pc_ else c
-
-        def decode(b):
-            if b[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError("bad PNG signature")
-            pos, w, h, idat = 8, None, None, b""
-            while pos + 8 <= len(b):
-                (length,) = struct.unpack_from(">I", b, pos)
-                ctype = b[pos + 4 : pos + 8]
-                if ctype == b"IHDR":
-                    w, h = struct.unpack_from(">II", b, pos + 8)
-                elif ctype == b"IDAT":
-                    idat += b[pos + 8 : pos + 8 + length]
-                elif ctype == b"IEND":
-                    break
-                pos += 12 + length
-            raw = zlib.decompress(idat)
-            bpp, stride = 3, 3 * w
-            out = bytearray(stride * h)
-            prior = bytes(stride)
-            for y in range(h):
-                ft = raw[y * (stride + 1)]
-                row = bytearray(raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)])
-                for i in range(stride):
-                    left = row[i - bpp] if i >= bpp else 0
-                    up = prior[i]
-                    upleft = prior[i - bpp] if i >= bpp else 0
-                    if ft == 1:
-                        row[i] = (row[i] + left) & 0xFF
-                    elif ft == 2:
-                        row[i] = (row[i] + up) & 0xFF
-                    elif ft == 3:
-                        row[i] = (row[i] + (left + up) // 2) & 0xFF
-                    elif ft == 4:
-                        row[i] = (row[i] + paeth(left, up, upleft)) & 0xFF
-                out[y * stride : (y + 1) * stride] = row
-                prior = bytes(row)
-            return w, h, bytes(out)
-
-        def gray_at(px, w, x, y):
-            base = (y * w + x) * 3
-            return (px[base] + 2 * px[base + 1] + px[base + 2]) // 4
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = decode(bytes(payload))
-                hv = 0
-                for k in range(63):
-                    gx, gy = k % 7, k // 7
-                    yq = (gy * h) // 9
-                    g1 = gray_at(px, w, (gx * w) // 8, yq)
-                    g2 = gray_at(px, w, ((gx + 1) * w) // 8, yq)
-                    if g2 > g1:
-                        hv |= 1 << k
-                rows.append((int(did), hv))
-            yield pd.DataFrame(rows, columns=["doc_id", "phash"]).astype("int64")
-
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_px"))
     hashes = fan_out(df).mapInPandas(
-        phash_batches, "doc_id long, phash long"
+        repo_kernel(__name__, "phash_batches"), "doc_id long, phash long"
     ).localCheckpoint()
     a = hashes.select(F.col("doc_id").alias("da"), F.col("phash").alias("ha"))
     b = hashes.select(F.col("doc_id").alias("db"), F.col("phash").alias("hb"))
@@ -1648,6 +1370,36 @@ ORDER BY doc_id
 """
 
 
+_RGB_SUM_COLS = [
+    "doc_id", "width", "height",
+    "sum_c0", "sum_c1", "sum_c2", "wsum_x", "wsum_y",
+]
+_RGB_SUM_SCHEMA = (
+    "doc_id long, width int, height int, "
+    "sum_c0 long, sum_c1 long, sum_c2 long, wsum_x long, wsum_y long"
+)
+
+
+def _rgb_sum_batches(batches, decode):
+    """Body of the kernels whose rows are _RGB_SUM_COLS: ``decode``
+    returns ``(w, h, px)`` or ``(w, h, ncomp, px)`` with ``px``
+    interleaved; channels past ncomp sum to 0."""
+    for pdf in batches:
+        rows = []
+        for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+            w, h, *_, px = decode(bytes(payload))
+            nc = len(px) // (w * h)
+            sums, wx, wy = _weighted_sums(w, h, nc, px)
+            rows.append((int(did), w, h, *sums, *[0] * (3 - nc), wx, wy))
+        yield _int_frame(rows, _RGB_SUM_COLS, ("width", "height"))
+
+
+def jpeg_color_batches(batches):
+    """mapInPandas kernel of llm_multimodal_pixels_jpeg_color and
+    _jpeg_420: jpeg_decode_baseline (chroma upsampled by replication)."""
+    return _rgb_sum_batches(batches, jpeg_decode_baseline)
+
+
 @query(
     "llm_multimodal_pixels_jpeg_color",
     oracle=_jpeg_color_oracle_sql(),
@@ -1662,195 +1414,12 @@ def llm_multimodal_pixels_jpeg_color(spark, sf_dir):
     output, which keeps the constant-block/DC-step-8 exactness
     argument per channel, so the DuckDB oracle recomputes per-channel
     sums and position-weighted sums from the generative formula
-    jpeg_block_value_c. Unit tests round-trip the module twin codec
-    (sources/media.py jpeg_encode_baseline/jpeg_decode_baseline)."""
-
-    def color_batches(batches):
-        import math
-        import struct
-
-        import pandas as pd
-
-        ZIG = [
-            0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-            12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-            35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-            58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-        ]
-        COS = [
-            [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-            for x in range(8)
-        ]
-        CN = [1 / math.sqrt(2)] + [1.0] * 7
-
-        def huff_map(bits, vals):
-            m, code, k = {}, 0, 0
-            for ln in range(1, 17):
-                for _ in range(bits[ln - 1]):
-                    m[(ln, code)] = vals[k]
-                    code += 1
-                    k += 1
-                code <<= 1
-            return m
-
-        def idct(coefs):
-            if not any(coefs[1:]):
-                v = round(coefs[0] / 8) + 128
-                return [min(255, max(0, v))] * 64
-            tmp = [0.0] * 64
-            for r in range(8):
-                for x in range(8):
-                    s = 0.0
-                    for u in range(8):
-                        s += CN[u] * coefs[r * 8 + u] * COS[x][u]
-                    tmp[r * 8 + x] = s / 2
-            out = [0] * 64
-            for c in range(8):
-                for yy in range(8):
-                    s = 0.0
-                    for v in range(8):
-                        s += CN[v] * tmp[v * 8 + c] * COS[yy][v]
-                    val = round(s / 2) + 128
-                    out[yy * 8 + c] = min(255, max(0, val))
-            return out
-
-        def decode(b):
-            pos, w, h, scan_pos = 2, None, None, None
-            qtabs, htabs, comp_tq, scan_tabs = {}, {}, [], []
-            while pos + 4 <= len(b):
-                marker = b[pos + 1]
-                if marker == 0xD9:
-                    break
-                (seglen,) = struct.unpack_from(">H", b, pos + 2)
-                seg = b[pos + 4 : pos + 2 + seglen]
-                if marker == 0xDB:
-                    i = 0
-                    while i < len(seg):
-                        tab = [0] * 64
-                        for k in range(64):
-                            tab[ZIG[k]] = seg[i + 1 + k]
-                        qtabs[seg[i] & 15] = tab
-                        i += 65
-                elif marker == 0xC4:
-                    i = 0
-                    while i < len(seg):
-                        tc_th = seg[i]
-                        bits = list(seg[i + 1 : i + 17])
-                        n = sum(bits)
-                        htabs[(tc_th >> 4, tc_th & 15)] = huff_map(
-                            bits, list(seg[i + 17 : i + 17 + n])
-                        )
-                        i += 17 + n
-                elif marker == 0xC0:
-                    h, w = struct.unpack_from(">HH", seg, 1)
-                    for ci in range(seg[5]):
-                        comp_tq.append(seg[6 + 3 * ci + 2])
-                elif marker == 0xDA:
-                    for ci in range(seg[0]):
-                        tt = seg[2 + 2 * ci]
-                        scan_tabs.append((tt >> 4, tt & 15))
-                    scan_pos = pos + 2 + seglen
-                    break
-                pos += 2 + seglen
-            ncomp = len(comp_tq)
-            state = {"pos": scan_pos, "acc": 0, "n": 0}
-
-            def read(n):
-                # mirrors media._JpegBitReader: bounds + stuffing checks
-                # so corrupt payloads fail loudly, not decode garbage
-                while state["n"] < n:
-                    if state["pos"] >= len(b):
-                        raise ValueError("unexpected EOF inside scan")
-                    byte = b[state["pos"]]
-                    if byte == 0xFF:
-                        if state["pos"] + 1 >= len(b):
-                            raise ValueError("unexpected EOF after FF")
-                        if b[state["pos"] + 1] != 0x00:
-                            raise ValueError("marker inside scan")
-                        state["pos"] += 2  # FF00 stuffing
-                    else:
-                        state["pos"] += 1
-                    state["acc"] = (state["acc"] << 8) | byte
-                    state["n"] += 8
-                state["n"] -= n
-                return (state["acc"] >> state["n"]) & ((1 << n) - 1)
-
-            def huff_read(table):
-                code = 0
-                for ln in range(1, 17):
-                    code = (code << 1) | read(1)
-                    if (ln, code) in table:
-                        return table[(ln, code)]
-                raise ValueError("bad huffman code")
-
-            def extend(v, sz):
-                return v if v >= (1 << (sz - 1)) else v - (1 << sz) + 1
-
-            mcux, mcuy = (w + 7) // 8, (h + 7) // 8
-            out = bytearray(w * h * ncomp)
-            prev = [0] * ncomp
-            for by in range(mcuy):
-                for bx in range(mcux):
-                    for ci in range(ncomp):
-                        q = qtabs[comp_tq[ci]]
-                        dc_tab = htabs[(0, scan_tabs[ci][0])]
-                        ac_tab = htabs[(1, scan_tabs[ci][1])]
-                        sz = huff_read(dc_tab)
-                        prev[ci] += extend(read(sz), sz) if sz else 0
-                        coefs = [0] * 64
-                        coefs[0] = prev[ci] * q[0]
-                        k = 0
-                        while k < 63:
-                            rs = huff_read(ac_tab)
-                            if rs == 0x00:
-                                break
-                            run, sz = rs >> 4, rs & 15
-                            if sz == 0:
-                                k += 16
-                                continue
-                            k += run + 1
-                            nat = ZIG[k]
-                            coefs[nat] = extend(read(sz), sz) * q[nat]
-                        px = idct(coefs)
-                        for yy in range(min(8, h - by * 8)):
-                            row_base = ((by * 8 + yy) * w + bx * 8) * ncomp + ci
-                            for xx in range(min(8, w - bx * 8)):
-                                out[row_base + xx * ncomp] = px[yy * 8 + xx]
-            return w, h, ncomp, out
-
-        cols = [
-            "doc_id", "width", "height",
-            "sum_c0", "sum_c1", "sum_c2", "wsum_x", "wsum_y",
-        ]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, nc, px = decode(bytes(payload))
-                sums, wx, wy = [0, 0, 0], 0, 0
-                for y in range(h):
-                    for x in range(w):
-                        base = (y * w + x) * nc
-                        tot = 0
-                        for c in range(nc):
-                            v = px[base + c]
-                            sums[c] += v
-                            tot += v
-                        wx += tot * (x + 1)
-                        wy += tot * (y + 1)
-                rows.append((int(did), w, h, *sums, wx, wy))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {c: ("int32" if c in ("width", "height") else "int64")
-                 for c in cols}
-            )
-
-    from hdfs_mr_spark.io import fan_out
-
+    jpeg_block_value_c. The kernel decodes through the module codec
+    jpeg_decode_baseline, which unit tests round-trip against
+    jpeg_encode_baseline."""
     df = spark.read.parquet(fixture("media_jpeg_color"))
     return fan_out(df).mapInPandas(
-        color_batches,
-        "doc_id long, width int, height int, "
-        "sum_c0 long, sum_c1 long, sum_c2 long, wsum_x long, wsum_y long",
+        repo_kernel(__name__, "jpeg_color_batches"), _RGB_SUM_SCHEMA,
     ).orderBy("doc_id")
 
 
@@ -1906,222 +1475,19 @@ def llm_multimodal_pixels_jpeg_420(spark, sf_dir):
     1x1 sampling): luma at 2x2 per MCU, chroma at 1x1, so each 16x16
     MCU carries 4 Y blocks + Cb + Cr in interleaved scan order with
     per-component differential DC. The mapInPandas kernel decodes
-    each component plane AT ITS OWN resolution and upsamples chroma
-    by sample replication (the canonical box upsample) before the
+    through the module codec jpeg_decode_baseline, which decodes each
+    component plane AT ITS OWN resolution and upsamples chroma by
+    sample replication (the canonical box upsample) before the
     per-channel sums. The fixture family keeps bit-exactness through
     BOTH lossy stages — constant 8x8 blocks per component at that
     component's resolution (DC quant step 8), and replication of a
     constant is exact — so the DuckDB oracle recomputes the sums from
     the generative formulas (luma block (x//8, y//8), chroma block
-    (x//16, y//16)). Unit + hypothesis tests round-trip the module
-    twin codec (sources/media.py jpeg_encode_420 /
-    jpeg_decode_baseline)."""
-
-    def batches_420(batches):
-        import math
-        import struct
-
-        import pandas as pd
-
-        ZIG = [
-            0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-            12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-            35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-            58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-        ]
-        COS = [
-            [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-            for x in range(8)
-        ]
-        CN = [1 / math.sqrt(2)] + [1.0] * 7
-
-        def huff_map(bits, vals):
-            m, code, k = {}, 0, 0
-            for ln in range(1, 17):
-                for _ in range(bits[ln - 1]):
-                    m[(ln, code)] = vals[k]
-                    code += 1
-                    k += 1
-                code <<= 1
-            return m
-
-        def idct(coefs):
-            if not any(coefs[1:]):
-                v = round(coefs[0] / 8) + 128
-                return [min(255, max(0, v))] * 64
-            tmp = [0.0] * 64
-            for r in range(8):
-                for x in range(8):
-                    s = 0.0
-                    for u in range(8):
-                        s += CN[u] * coefs[r * 8 + u] * COS[x][u]
-                    tmp[r * 8 + x] = s / 2
-            out = [0] * 64
-            for c in range(8):
-                for yy in range(8):
-                    s = 0.0
-                    for v in range(8):
-                        s += CN[v] * tmp[v * 8 + c] * COS[yy][v]
-                    val = round(s / 2) + 128
-                    out[yy * 8 + c] = min(255, max(0, val))
-            return out
-
-        def decode(b):
-            pos, w, h, scan_pos = 2, None, None, None
-            qtabs, htabs, comp_tq, comp_hv, scan_tabs = {}, {}, [], [], []
-            while pos + 4 <= len(b):
-                marker = b[pos + 1]
-                if marker == 0xD9:
-                    break
-                (seglen,) = struct.unpack_from(">H", b, pos + 2)
-                seg = b[pos + 4 : pos + 2 + seglen]
-                if marker == 0xDB:
-                    i = 0
-                    while i < len(seg):
-                        tab = [0] * 64
-                        for k in range(64):
-                            tab[ZIG[k]] = seg[i + 1 + k]
-                        qtabs[seg[i] & 15] = tab
-                        i += 65
-                elif marker == 0xC4:
-                    i = 0
-                    while i < len(seg):
-                        tc_th = seg[i]
-                        bits = list(seg[i + 1 : i + 17])
-                        n = sum(bits)
-                        htabs[(tc_th >> 4, tc_th & 15)] = huff_map(
-                            bits, list(seg[i + 17 : i + 17 + n])
-                        )
-                        i += 17 + n
-                elif marker == 0xC0:
-                    h, w = struct.unpack_from(">HH", seg, 1)
-                    for ci in range(seg[5]):
-                        hv = seg[6 + 3 * ci + 1]
-                        comp_hv.append((hv >> 4, hv & 15))
-                        comp_tq.append(seg[6 + 3 * ci + 2])
-                elif marker == 0xDA:
-                    for ci in range(seg[0]):
-                        tt = seg[2 + 2 * ci]
-                        scan_tabs.append((tt >> 4, tt & 15))
-                    scan_pos = pos + 2 + seglen
-                    break
-                pos += 2 + seglen
-            ncomp = len(comp_tq)
-            state = {"pos": scan_pos, "acc": 0, "n": 0}
-
-            def read(n):
-                # mirrors media._JpegBitReader: bounds + stuffing checks
-                # so corrupt payloads fail loudly, not decode garbage
-                while state["n"] < n:
-                    if state["pos"] >= len(b):
-                        raise ValueError("unexpected EOF inside scan")
-                    byte = b[state["pos"]]
-                    if byte == 0xFF:
-                        if state["pos"] + 1 >= len(b):
-                            raise ValueError("unexpected EOF after FF")
-                        if b[state["pos"] + 1] != 0x00:
-                            raise ValueError("marker inside scan")
-                        state["pos"] += 2  # FF00 stuffing
-                    else:
-                        state["pos"] += 1
-                    state["acc"] = (state["acc"] << 8) | byte
-                    state["n"] += 8
-                state["n"] -= n
-                return (state["acc"] >> state["n"]) & ((1 << n) - 1)
-
-            def huff_read(table):
-                code = 0
-                for ln in range(1, 17):
-                    code = (code << 1) | read(1)
-                    if (ln, code) in table:
-                        return table[(ln, code)]
-                raise ValueError("bad huffman code")
-
-            def extend(v, sz):
-                return v if v >= (1 << (sz - 1)) else v - (1 << sz) + 1
-
-            hmax = max(hi for hi, _ in comp_hv)
-            vmax = max(vi for _, vi in comp_hv)
-            mcux = (w + 8 * hmax - 1) // (8 * hmax)
-            mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-            planes = [
-                bytearray(8 * hi * mcux * 8 * vi * mcuy)
-                for hi, vi in comp_hv
-            ]
-            prev = [0] * ncomp
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    for ci in range(ncomp):
-                        hi, vi = comp_hv[ci]
-                        q = qtabs[comp_tq[ci]]
-                        dc_tab = htabs[(0, scan_tabs[ci][0])]
-                        ac_tab = htabs[(1, scan_tabs[ci][1])]
-                        pw = 8 * hi * mcux
-                        for v in range(vi):
-                            for u in range(hi):
-                                sz = huff_read(dc_tab)
-                                prev[ci] += extend(read(sz), sz) if sz else 0
-                                coefs = [0] * 64
-                                coefs[0] = prev[ci] * q[0]
-                                k = 0
-                                while k < 63:
-                                    rs = huff_read(ac_tab)
-                                    if rs == 0x00:
-                                        break
-                                    run, sz = rs >> 4, rs & 15
-                                    if sz == 0:
-                                        k += 16
-                                        continue
-                                    k += run + 1
-                                    nat = ZIG[k]
-                                    coefs[nat] = extend(read(sz), sz) * q[nat]
-                                px = idct(coefs)
-                                bx0, by0 = 8 * (hi * mx + u), 8 * (vi * my + v)
-                                for yy in range(8):
-                                    row = (by0 + yy) * pw + bx0
-                                    planes[ci][row : row + 8] = bytes(
-                                        px[yy * 8 : yy * 8 + 8]
-                                    )
-            return w, h, ncomp, comp_hv, hmax, vmax, mcux, planes
-
-        cols = [
-            "doc_id", "width", "height",
-            "sum_c0", "sum_c1", "sum_c2", "wsum_x", "wsum_y",
-        ]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, nc, comp_hv, hmax, vmax, mcux, planes = decode(
-                    bytes(payload)
-                )
-                sums, wx, wy = [0, 0, 0], 0, 0
-                for y in range(h):
-                    for x in range(w):
-                        tot = 0
-                        for ci in range(nc):
-                            hi, vi = comp_hv[ci]
-                            pw = 8 * hi * mcux
-                            v = planes[ci][
-                                ((y * vi) // vmax) * pw + (x * hi) // hmax
-                            ]
-                            sums[ci] += v
-                            tot += v
-                        wx += tot * (x + 1)
-                        wy += tot * (y + 1)
-                rows.append((int(did), w, h, *sums, wx, wy))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {c: ("int32" if c in ("width", "height") else "int64")
-                 for c in cols}
-            )
-
-    from hdfs_mr_spark.io import fan_out
-
+    (x//16, y//16)). Unit + hypothesis tests round-trip the codec
+    against sources/media.py jpeg_encode_420."""
     df = spark.read.parquet(fixture("media_jpeg_420"))
     return fan_out(df).mapInPandas(
-        batches_420,
-        "doc_id long, width int, height int, "
-        "sum_c0 long, sum_c1 long, sum_c2 long, wsum_x long, wsum_y long",
+        repo_kernel(__name__, "jpeg_color_batches"), _RGB_SUM_SCHEMA,
     ).orderBy("doc_id")
 
 
@@ -2159,6 +1525,38 @@ ORDER BY doc_id
 """
 
 
+def _jpeg_restart_interval(b):
+    """The DRI segment's restart interval (0 when the stream has
+    none), read from the marker walk before the first SOS."""
+    pos = 2
+    while pos + 4 <= len(b):
+        marker = b[pos + 1]
+        if marker in (0xD9, 0xDA):
+            break
+        (seglen,) = struct.unpack_from(">H", b, pos + 2)
+        if marker == 0xDD:
+            (ri,) = struct.unpack_from(">H", b, pos + 4)
+            return ri
+        pos += 2 + seglen
+    return 0
+
+
+def jpeg_rst_batches(batches):
+    """mapInPandas kernel of llm_multimodal_pixels_jpeg_rst."""
+    cols = [
+        "doc_id", "width", "height", "restart_interval",
+        "sum_px", "wsum_x", "wsum_y",
+    ]
+    for pdf in batches:
+        rows = []
+        for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+            b = bytes(payload)
+            w, h, px = jpeg_decode_gray(b)
+            (s,), wx, wy = _weighted_sums(w, h, 1, px)
+            rows.append((int(did), w, h, _jpeg_restart_interval(b), s, wx, wy))
+        yield _int_frame(rows, cols, ("width", "height", "restart_interval"))
+
+
 @query(
     "llm_multimodal_pixels_jpeg_rst",
     oracle=_jpeg_rst_oracle_sql(),
@@ -2175,63 +1573,13 @@ def llm_multimodal_pixels_jpeg_rst(spark, sf_dir):
     unchanged and the same generative-formula oracle applies — the
     output additionally carries the parsed restart_interval so the DRI
     segment itself is hash-checked. The kernel decodes via the MODULE
-    codec (sources/media.py jpeg_decode_gray, pickled by reference
-    into the Arrow workers): the restart logic lives in ONE tested
-    implementation instead of a third inline twin, and the hypothesis
-    suite (random blocks x random DRI) covers it directly."""
-
-    def rst_batches(batches):
-        import struct
-
-        import pandas as pd
-
-        import sys as _sys
-        if REPO_ROOT not in _sys.path:  # worker: see repo_kernel
-            _sys.path.insert(0, REPO_ROOT)
-        from hdfs_mr_spark.sources.media import jpeg_decode_gray
-
-        def parse_dri(b):
-            pos = 2
-            while pos + 4 <= len(b):
-                marker = b[pos + 1]
-                if marker in (0xD9, 0xDA):
-                    break
-                (seglen,) = struct.unpack_from(">H", b, pos + 2)
-                if marker == 0xDD:
-                    (ri,) = struct.unpack_from(">H", b, pos + 4)
-                    return ri
-                pos += 2 + seglen
-            return 0
-
-        cols = [
-            "doc_id", "width", "height", "restart_interval",
-            "sum_px", "wsum_x", "wsum_y",
-        ]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                w, h, px = jpeg_decode_gray(b)
-                s = wx = wy = 0
-                for y in range(h):
-                    row = y * w
-                    for x in range(w):
-                        v = px[row + x]
-                        s += v
-                        wx += v * (x + 1)
-                        wy += v * (y + 1)
-                rows.append((int(did), w, h, parse_dri(b), s, wx, wy))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {c: ("int32" if c in ("width", "height", "restart_interval")
-                     else "int64") for c in cols}
-            )
-
-    from hdfs_mr_spark.io import fan_out
-
+    codec (sources/media.py jpeg_decode_gray, served through
+    repo_kernel): the restart logic lives in ONE tested
+    implementation, and the hypothesis suite (random blocks x random
+    DRI) covers it directly."""
     df = spark.read.parquet(fixture("media_jpeg_rst"))
     return fan_out(df).mapInPandas(
-        rst_batches,
+        repo_kernel(__name__, "jpeg_rst_batches"),
         "doc_id long, width int, height int, restart_interval int, "
         "sum_px long, wsum_x long, wsum_y long",
     ).orderBy("doc_id")
@@ -2272,6 +1620,12 @@ ORDER BY doc_id
 """
 
 
+def png_rgb_sum_batches(batches):
+    """mapInPandas kernel of llm_multimodal_pixels_interlaced:
+    png_decode_pixels (plain or Adam7)."""
+    return _rgb_sum_batches(batches, png_decode_pixels)
+
+
 @query(
     "llm_multimodal_pixels_interlaced",
     oracle=_png_adam7_oracle_sql(),
@@ -2293,48 +1647,36 @@ def llm_multimodal_pixels_interlaced(spark, sf_dir):
     by tiny-image pass-dropping unit tests and the filter-cycling
     fixture."""
 
-    def adam7_batches(batches):
-        import pandas as pd
-
-        import sys as _sys
-        if REPO_ROOT not in _sys.path:  # worker: see repo_kernel
-            _sys.path.insert(0, REPO_ROOT)
-        from hdfs_mr_spark.sources.media import png_decode_pixels
-
-        cols = [
-            "doc_id", "width", "height",
-            "sum_c0", "sum_c1", "sum_c2", "wsum_x", "wsum_y",
-        ]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = png_decode_pixels(bytes(payload))
-                sums, wx, wy = [0, 0, 0], 0, 0
-                for y in range(h):
-                    for x in range(w):
-                        base = (y * w + x) * 3
-                        tot = 0
-                        for c in range(3):
-                            v = px[base + c]
-                            sums[c] += v
-                            tot += v
-                        wx += tot * (x + 1)
-                        wy += tot * (y + 1)
-                rows.append((int(did), w, h, *sums, wx, wy))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {c: ("int32" if c in ("width", "height") else "int64")
-                 for c in cols}
-            )
-
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_px_adam7"))
     return fan_out(df).mapInPandas(
-        adam7_batches,
-        "doc_id long, width int, height int, "
-        "sum_c0 long, sum_c1 long, sum_c2 long, wsum_x long, wsum_y long",
+        repo_kernel(__name__, "png_rgb_sum_batches"), _RGB_SUM_SCHEMA,
     ).orderBy("doc_id")
+
+
+def audio_stereo_batches(batches):
+    """mapInPandas kernel of llm_multimodal_audio_stereo:
+    parse_wav_multi, then per-channel exact-integer features."""
+    cols = [
+        "doc_id", "rate", "n_samples",
+        "sum_abs_l", "sum_abs_r", "peak_l", "peak_r",
+        "energy_l", "energy_r", "cross_lr",
+    ]
+    for pdf in batches:
+        rows = []
+        for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+            rate, nch, data = parse_wav_multi(bytes(payload))
+            if nch != 2:
+                raise ValueError(f"expected stereo, got {nch} channel(s)")
+            pcm = np.frombuffer(data, dtype="<i2").astype(np.int64)
+            left, right = pcm[0::2], pcm[1::2]
+            rows.append((
+                int(did), rate, len(left),
+                int(np.abs(left).sum()), int(np.abs(right).sum()),
+                int(np.abs(left).max()), int(np.abs(right).max()),
+                int((left * left).sum()), int((right * right).sum()),
+                int((left * right).sum()),
+            ))
+        yield _int_frame(rows, cols, ("rate",))
 
 
 @query(
@@ -2383,47 +1725,9 @@ def llm_multimodal_audio_stereo(spark, sf_dir):
     channel sample hash-mismatches. Kernel parses via the MODULE
     parser (parse_wav_multi) — one tested chunk walker, no inline
     twin."""
-    import pandas as pd  # noqa: F401 — worker-side dependency
-
-    def stereo_batches(batches):
-        import numpy as np
-        import pandas as pd
-
-        import sys as _sys
-        if REPO_ROOT not in _sys.path:  # worker: see repo_kernel
-            _sys.path.insert(0, REPO_ROOT)
-        from hdfs_mr_spark.sources.media import parse_wav_multi
-
-        cols = [
-            "doc_id", "rate", "n_samples",
-            "sum_abs_l", "sum_abs_r", "peak_l", "peak_r",
-            "energy_l", "energy_r", "cross_lr",
-        ]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, nch, data = parse_wav_multi(bytes(payload))
-                if nch != 2:
-                    raise ValueError(f"expected stereo, got {nch} channel(s)")
-                pcm = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                left, right = pcm[0::2], pcm[1::2]
-                rows.append((
-                    int(did), rate, len(left),
-                    int(np.abs(left).sum()), int(np.abs(right).sum()),
-                    int(np.abs(left).max()), int(np.abs(right).max()),
-                    int((left * left).sum()), int((right * right).sum()),
-                    int((left * right).sum()),
-                ))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {c: ("int32" if c == "rate" else "int64") for c in cols}
-            )
-
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_audio_stereo"))
     return fan_out(df).mapInPandas(
-        stereo_batches,
+        repo_kernel(__name__, "audio_stereo_batches"),
         "doc_id long, rate int, n_samples long, "
         "sum_abs_l long, sum_abs_r long, peak_l long, peak_r long, "
         "energy_l long, energy_r long, cross_lr long",
@@ -2466,6 +1770,12 @@ ORDER BY doc_id
 """
 
 
+def jpeg_prog_batches(batches):
+    """mapInPandas kernel of llm_multimodal_pixels_jpeg_progressive:
+    jpeg_decode_progressive."""
+    return _rgb_sum_batches(batches, jpeg_decode_progressive)
+
+
 @query(
     "llm_multimodal_pixels_jpeg_progressive",
     oracle=_jpeg_prog_oracle_sql(),
@@ -2489,47 +1799,9 @@ def llm_multimodal_pixels_jpeg_progressive(spark, sf_dir):
     tested implementation, hypothesis-round-tripped over random
     coefficient blocks at both 1 and 3 components."""
 
-    def prog_batches(batches):
-        import pandas as pd
-
-        import sys as _sys
-        if REPO_ROOT not in _sys.path:  # worker: see repo_kernel
-            _sys.path.insert(0, REPO_ROOT)
-        from hdfs_mr_spark.sources.media import jpeg_decode_progressive
-
-        cols = [
-            "doc_id", "width", "height",
-            "sum_c0", "sum_c1", "sum_c2", "wsum_x", "wsum_y",
-        ]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, nc, px = jpeg_decode_progressive(bytes(payload))
-                sums, wx, wy = [0, 0, 0], 0, 0
-                for y in range(h):
-                    for x in range(w):
-                        base = (y * w + x) * nc
-                        tot = 0
-                        for c in range(nc):
-                            v = px[base + c]
-                            sums[c] += v
-                            tot += v
-                        wx += tot * (x + 1)
-                        wy += tot * (y + 1)
-                rows.append((int(did), w, h, *sums, wx, wy))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {c: ("int32" if c in ("width", "height") else "int64")
-                 for c in cols}
-            )
-
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_jpeg_prog"))
     return fan_out(df).mapInPandas(
-        prog_batches,
-        "doc_id long, width int, height int, "
-        "sum_c0 long, sum_c1 long, sum_c2 long, wsum_x long, wsum_y long",
+        repo_kernel(__name__, "jpeg_prog_batches"), _RGB_SUM_SCHEMA,
     ).orderBy("doc_id")
 
 
@@ -2567,6 +1839,38 @@ ORDER BY doc_id
 """
 
 
+def _jpeg_first_dc_al(b):
+    """Al of the first DC scan (SOS with Ss=0): the top of the
+    successive-approximation ladder (0 when there is none)."""
+    pos = 2
+    while pos + 4 <= len(b):
+        marker = b[pos + 1]
+        if marker == 0xD9:
+            break
+        (seglen,) = struct.unpack_from(">H", b, pos + 2)
+        if marker == 0xDA:
+            ns = b[pos + 4]
+            if b[pos + 5 + 2 * ns] == 0:  # Ss
+                return b[pos + 7 + 2 * ns] & 15
+        pos += 2 + seglen
+    return 0
+
+
+def jpeg_prog_sa_batches(batches):
+    """mapInPandas kernel of llm_multimodal_pixels_jpeg_prog_sa:
+    jpeg_decode_progressive, the first DC scan's Al, channel sums."""
+    cols = ["doc_id", "width", "height", "al",
+            "sum_c0", "sum_c1", "sum_c2"]
+    for pdf in batches:
+        rows = []
+        for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+            b = bytes(payload)
+            w, h, nc, px = jpeg_decode_progressive(b)
+            sums = [sum(px[c::nc]) for c in range(nc)] + [0] * (3 - nc)
+            rows.append((int(did), w, h, _jpeg_first_dc_al(b), *sums))
+        yield _int_frame(rows, cols, ("width", "height", "al"))
+
+
 @query(
     "llm_multimodal_pixels_jpeg_prog_sa",
     oracle=_jpeg_prog_sa_oracle_sql(),
@@ -2589,61 +1893,9 @@ def llm_multimodal_pixels_jpeg_prog_sa(spark, sf_dir):
     (jpeg_decode_progressive — one implementation for both
     progressive profiles)."""
 
-    def sa_batches(batches):
-        import struct
-
-        import pandas as pd
-
-        import sys as _sys
-        if REPO_ROOT not in _sys.path:  # worker: see repo_kernel
-            _sys.path.insert(0, REPO_ROOT)
-        from hdfs_mr_spark.sources.media import jpeg_decode_progressive
-
-        def first_dc_al(b):
-            """Al of the first DC scan (SOS with Ss=0): the top of the
-            successive-approximation ladder."""
-            pos = 2
-            while pos + 4 <= len(b):
-                marker = b[pos + 1]
-                if marker == 0xD9:
-                    break
-                (seglen,) = struct.unpack_from(">H", b, pos + 2)
-                if marker == 0xDA:
-                    ns = b[pos + 4]
-                    ss = b[pos + 5 + 2 * ns]
-                    ahal = b[pos + 7 + 2 * ns]
-                    if ss == 0:
-                        return ahal & 15
-                    pos += 2 + seglen
-                    continue
-                pos += 2 + seglen
-            return 0
-
-        cols = ["doc_id", "width", "height", "al",
-                "sum_c0", "sum_c1", "sum_c2"]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                blob = bytes(payload)
-                w, h, nc, px = jpeg_decode_progressive(blob)
-                sums = [0, 0, 0]
-                for y in range(h):
-                    for x in range(w):
-                        base = (y * w + x) * nc
-                        for c in range(nc):
-                            sums[c] += px[base + c]
-                rows.append((int(did), w, h, first_dc_al(blob), *sums))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {c: ("int32" if c in ("width", "height", "al") else "int64")
-                 for c in cols}
-            )
-
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_jpeg_prog_sa"))
     return fan_out(df).mapInPandas(
-        sa_batches,
+        repo_kernel(__name__, "jpeg_prog_sa_batches"),
         "doc_id long, width int, height int, al int, "
         "sum_c0 long, sum_c1 long, sum_c2 long",
     ).orderBy("doc_id")
@@ -2688,6 +1940,12 @@ ORDER BY doc_id
 """
 
 
+def gif_px_batches(batches):
+    """mapInPandas kernel of llm_multimodal_pixels_gif:
+    gif_decode_pixels."""
+    return _rgb_sum_batches(batches, gif_decode_pixels)
+
+
 @query(
     "llm_multimodal_pixels_gif",
     oracle=_gif_oracle_sql(),
@@ -2708,47 +1966,9 @@ def llm_multimodal_pixels_gif(spark, sf_dir):
     through the LZW pair, including dictionary-reset and low-entropy
     (deep dictionary) regimes."""
 
-    def gif_batches(batches):
-        import pandas as pd
-
-        import sys as _sys
-        if REPO_ROOT not in _sys.path:  # worker: see repo_kernel
-            _sys.path.insert(0, REPO_ROOT)
-        from hdfs_mr_spark.sources.media import gif_decode_pixels
-
-        cols = [
-            "doc_id", "width", "height",
-            "sum_c0", "sum_c1", "sum_c2", "wsum_x", "wsum_y",
-        ]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = gif_decode_pixels(bytes(payload))
-                sums, wx, wy = [0, 0, 0], 0, 0
-                for y in range(h):
-                    for x in range(w):
-                        base = (y * w + x) * 3
-                        tot = 0
-                        for c in range(3):
-                            v = px[base + c]
-                            sums[c] += v
-                            tot += v
-                        wx += tot * (x + 1)
-                        wy += tot * (y + 1)
-                rows.append((int(did), w, h, *sums, wx, wy))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {c: ("int32" if c in ("width", "height") else "int64")
-                 for c in cols}
-            )
-
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_gif"))
     return fan_out(df).mapInPandas(
-        gif_batches,
-        "doc_id long, width int, height int, "
-        "sum_c0 long, sum_c1 long, sum_c2 long, wsum_x long, wsum_y long",
+        repo_kernel(__name__, "gif_px_batches"), _RGB_SUM_SCHEMA,
     ).orderBy("doc_id")
 
 
@@ -2795,6 +2015,24 @@ ORDER BY doc_id, frame_idx
 """
 
 
+def gif_frame_batches(batches):
+    """mapInPandas kernel of llm_multimodal_framesample_gif:
+    gif_decode_frames, channel sums of every 3rd frame."""
+    cols = ["doc_id", "n_frames", "frame_idx",
+            "sum_c0", "sum_c1", "sum_c2"]
+    for pdf in batches:
+        rows = []
+        for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+            *_, frames = gif_decode_frames(bytes(payload))
+            for f in range(0, len(frames), 3):
+                px = frames[f]
+                rows.append((
+                    int(did), len(frames), f,
+                    *(sum(px[c::3]) for c in range(3)),
+                ))
+        yield _int_frame(rows, cols, ("n_frames", "frame_idx"))
+
+
 @query(
     "llm_multimodal_framesample_gif",
     oracle=_gif_anim_oracle_sql(),
@@ -2814,40 +2052,9 @@ def llm_multimodal_framesample_gif(spark, sf_dir):
     wrong frame boundary, palette entry, or LZW reset flips a sum.
     Kernel decodes via the MODULE codec (gif_decode_frames)."""
 
-    def frame_batches(batches):
-        import pandas as pd
-
-        import sys as _sys
-        if REPO_ROOT not in _sys.path:  # worker: see repo_kernel
-            _sys.path.insert(0, REPO_ROOT)
-        from hdfs_mr_spark.sources.media import gif_decode_frames
-
-        cols = ["doc_id", "n_frames", "frame_idx",
-                "sum_c0", "sum_c1", "sum_c2"]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, frames = gif_decode_frames(bytes(payload))
-                for f in range(0, len(frames), 3):
-                    px = frames[f]
-                    sums = [0, 0, 0]
-                    for i in range(w * h):
-                        base = 3 * i
-                        sums[0] += px[base]
-                        sums[1] += px[base + 1]
-                        sums[2] += px[base + 2]
-                    rows.append((int(did), len(frames), f, *sums))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {c: ("int32" if c in ("n_frames", "frame_idx") else "int64")
-                 for c in cols}
-            )
-
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_gif_anim"))
     return fan_out(df).mapInPandas(
-        frame_batches,
+        repo_kernel(__name__, "gif_frame_batches"),
         "doc_id long, n_frames int, frame_idx int, "
         "sum_c0 long, sum_c1 long, sum_c2 long",
     ).orderBy("doc_id", "frame_idx")
@@ -2904,6 +2111,45 @@ ORDER BY m.doc_id
 """
 
 
+def png_resize_batches(batches):
+    """mapInPandas kernel of llm_multimodal_resize_pixels:
+    png_decode_pixels, then the exact-integer box resample to a
+    16-long-edge thumbnail."""
+    cols = [
+        "doc_id", "src_w", "src_h", "dst_w", "dst_h",
+        "rs_sum_r", "rs_sum_g", "rs_sum_b", "rs_wsum",
+    ]
+    for pdf in batches:
+        rows = []
+        for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+            w, h, px = png_decode_pixels(bytes(payload))
+            mx = max(w, h)
+            dw = w if mx <= 16 else max(1, w * 16 // mx)
+            dh = h if mx <= 16 else max(1, h * 16 // mx)
+            acc = [[0, 0] for _ in range(dw * dh * 3)]  # [sum, count]
+            for y in range(h):
+                oy = (y * dh) // h
+                for x in range(w):
+                    ox = (x * dw) // w
+                    base = (y * w + x) * 3
+                    obase = (oy * dw + ox) * 3
+                    for c in range(3):
+                        a = acc[obase + c]
+                        a[0] += px[base + c]
+                        a[1] += 1
+            sums, wsum = [0, 0, 0], 0
+            for oy in range(dh):
+                for ox in range(dw):
+                    obase = (oy * dw + ox) * 3
+                    for c in range(3):
+                        s, cnt = acc[obase + c]
+                        pv = s // cnt
+                        sums[c] += pv
+                        wsum += pv * (oy * dw + ox + 1)
+            rows.append((int(did), w, h, dw, dh, *sums, wsum))
+        yield _int_frame(rows, cols, ("src_w", "src_h", "dst_w", "dst_h"))
+
+
 @query(
     "llm_multimodal_resize_pixels",
     oracle=_resize_pixels_oracle_sql(),
@@ -2928,98 +2174,9 @@ def llm_multimodal_resize_pixels(spark, sf_dir):
     ViT/CLIP preprocess stage (decode -> resize -> tensorize) with the
     tensorize step being the resized buffer itself."""
 
-    def resize_batches(batches):
-        import struct
-        import zlib
-
-        import pandas as pd
-
-        def paeth(a, b, c):
-            p = a + b - c
-            pa_, pb_, pc_ = abs(p - a), abs(p - b), abs(p - c)
-            if pa_ <= pb_ and pa_ <= pc_:
-                return a
-            return b if pb_ <= pc_ else c
-
-        def decode(b):
-            pos, w, h, idat = 8, None, None, b""
-            while pos + 8 <= len(b):
-                (length,) = struct.unpack_from(">I", b, pos)
-                ctype = b[pos + 4 : pos + 8]
-                if ctype == b"IHDR":
-                    w, h = struct.unpack_from(">II", b, pos + 8)
-                elif ctype == b"IDAT":
-                    idat += b[pos + 8 : pos + 8 + length]
-                elif ctype == b"IEND":
-                    break
-                pos += 12 + length
-            raw = zlib.decompress(idat)
-            bpp, stride = 3, 3 * w
-            out = bytearray(stride * h)
-            prior = bytes(stride)
-            for y in range(h):
-                ft = raw[y * (stride + 1)]
-                row = bytearray(raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)])
-                for i in range(stride):
-                    left = row[i - bpp] if i >= bpp else 0
-                    up = prior[i]
-                    upleft = prior[i - bpp] if i >= bpp else 0
-                    if ft == 1:
-                        row[i] = (row[i] + left) & 0xFF
-                    elif ft == 2:
-                        row[i] = (row[i] + up) & 0xFF
-                    elif ft == 3:
-                        row[i] = (row[i] + (left + up) // 2) & 0xFF
-                    elif ft == 4:
-                        row[i] = (row[i] + paeth(left, up, upleft)) & 0xFF
-                out[y * stride : (y + 1) * stride] = row
-                prior = bytes(row)
-            return w, h, out
-
-        cols = [
-            "doc_id", "src_w", "src_h", "dst_w", "dst_h",
-            "rs_sum_r", "rs_sum_g", "rs_sum_b", "rs_wsum",
-        ]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = decode(bytes(payload))
-                mx = max(w, h)
-                dw = w if mx <= 16 else max(1, w * 16 // mx)
-                dh = h if mx <= 16 else max(1, h * 16 // mx)
-                acc = [[0, 0] for _ in range(dw * dh * 3)]  # [sum, count]
-                for y in range(h):
-                    oy = (y * dh) // h
-                    for x in range(w):
-                        ox = (x * dw) // w
-                        base = (y * w + x) * 3
-                        obase = (oy * dw + ox) * 3
-                        for c in range(3):
-                            a = acc[obase + c]
-                            a[0] += px[base + c]
-                            a[1] += 1
-                sums, wsum = [0, 0, 0], 0
-                for oy in range(dh):
-                    for ox in range(dw):
-                        obase = (oy * dw + ox) * 3
-                        for c in range(3):
-                            s, cnt = acc[obase + c]
-                            pv = s // cnt
-                            sums[c] += pv
-                            wsum += pv * (oy * dw + ox + 1)
-                rows.append((int(did), w, h, dw, dh, *sums, wsum))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {c: ("int64" if c in ("doc_id", "rs_sum_r", "rs_sum_g",
-                                      "rs_sum_b", "rs_wsum") else "int32")
-                 for c in cols}
-            )
-
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_px"))
     return fan_out(df).mapInPandas(
-        resize_batches,
+        repo_kernel(__name__, "png_resize_batches"),
         "doc_id long, src_w int, src_h int, dst_w int, dst_h int, "
         "rs_sum_r long, rs_sum_g long, rs_sum_b long, rs_wsum long",
     ).orderBy("doc_id")
@@ -3090,235 +2247,10 @@ def _mixed_phash_frame(spark):
     """Shared hash table of the cross-format image corpus: (doc_id,
     phash) for PNG fixtures (ids 0..), JPEG fixtures (ids 1000+), and
     the crafted cross-format twin (id 2007) — ONE magic-sniffing
-    mapInPandas kernel over the union, localCheckpoint'd because both
-    the broadcast decision (llm_multimodal_phash_mixed) and the MIH
-    banded index (llm_multimodal_phash_banded) consume it twice."""
-    def mixed_batches(batches):
-        import math
-        import struct
-        import zlib
-
-        import pandas as pd
-
-        # --- PNG: chunk walk + inflate + unfilter (all five filters) --
-        def paeth(a, b, c):
-            p = a + b - c
-            pa_, pb_, pc_ = abs(p - a), abs(p - b), abs(p - c)
-            if pa_ <= pb_ and pa_ <= pc_:
-                return a
-            return b if pb_ <= pc_ else c
-
-        def decode_png(b):
-            pos, w, h, idat = 8, None, None, b""
-            while pos + 8 <= len(b):
-                (length,) = struct.unpack_from(">I", b, pos)
-                ctype = b[pos + 4 : pos + 8]
-                if ctype == b"IHDR":
-                    w, h = struct.unpack_from(">II", b, pos + 8)
-                elif ctype == b"IDAT":
-                    idat += b[pos + 8 : pos + 8 + length]
-                elif ctype == b"IEND":
-                    break
-                pos += 12 + length
-            raw = zlib.decompress(idat)
-            bpp, stride = 3, 3 * w
-            out = bytearray(stride * h)
-            prior = bytes(stride)
-            for yy in range(h):
-                ft = raw[yy * (stride + 1)]
-                row = bytearray(raw[yy * (stride + 1) + 1 : (yy + 1) * (stride + 1)])
-                for i in range(stride):
-                    left = row[i - bpp] if i >= bpp else 0
-                    up = prior[i]
-                    upleft = prior[i - bpp] if i >= bpp else 0
-                    if ft == 1:
-                        row[i] = (row[i] + left) & 0xFF
-                    elif ft == 2:
-                        row[i] = (row[i] + up) & 0xFF
-                    elif ft == 3:
-                        row[i] = (row[i] + (left + up) // 2) & 0xFF
-                    elif ft == 4:
-                        row[i] = (row[i] + paeth(left, up, upleft)) & 0xFF
-                out[yy * stride : (yy + 1) * stride] = row
-                prior = bytes(row)
-
-            def gray(x, yq):
-                base = (yq * w + x) * 3
-                return (out[base] + 2 * out[base + 1] + out[base + 2]) // 4
-
-            return w, h, gray
-
-        # --- JPEG: baseline grayscale (mirrors media.jpeg_decode_gray) -
-        ZIG = [
-            0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-            12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-            35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-            58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-        ]
-        COS = [
-            [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-            for x in range(8)
-        ]
-        CN = [1 / math.sqrt(2)] + [1.0] * 7
-
-        def huff_map(bits, vals):
-            m, code, k = {}, 0, 0
-            for ln in range(1, 17):
-                for _ in range(bits[ln - 1]):
-                    m[(ln, code)] = vals[k]
-                    code += 1
-                    k += 1
-                code <<= 1
-            return m
-
-        def idct(coefs):
-            if not any(coefs[1:]):
-                v = round(coefs[0] / 8) + 128
-                return [min(255, max(0, v))] * 64
-            tmp = [0.0] * 64
-            for r in range(8):
-                for x in range(8):
-                    s = 0.0
-                    for u in range(8):
-                        s += CN[u] * coefs[r * 8 + u] * COS[x][u]
-                    tmp[r * 8 + x] = s / 2
-            out = [0] * 64
-            for c in range(8):
-                for yy in range(8):
-                    s = 0.0
-                    for v in range(8):
-                        s += CN[v] * tmp[v * 8 + c] * COS[yy][v]
-                    val = round(s / 2) + 128
-                    out[yy * 8 + c] = min(255, max(0, val))
-            return out
-
-        def decode_jpeg(b):
-            pos, w, h, tq, td, ta, scan_pos = 2, None, None, 0, 0, 0, None
-            qtabs, htabs = {}, {}
-            while pos + 4 <= len(b):
-                marker = b[pos + 1]
-                if marker == 0xD9:
-                    break
-                (seglen,) = struct.unpack_from(">H", b, pos + 2)
-                seg = b[pos + 4 : pos + 2 + seglen]
-                if marker == 0xDB:
-                    i = 0
-                    while i < len(seg):
-                        tab = [0] * 64
-                        for k in range(64):
-                            tab[ZIG[k]] = seg[i + 1 + k]
-                        qtabs[seg[i] & 15] = tab
-                        i += 65
-                elif marker == 0xC4:
-                    i = 0
-                    while i < len(seg):
-                        tc_th = seg[i]
-                        bits = list(seg[i + 1 : i + 17])
-                        n = sum(bits)
-                        htabs[(tc_th >> 4, tc_th & 15)] = huff_map(
-                            bits, list(seg[i + 17 : i + 17 + n])
-                        )
-                        i += 17 + n
-                elif marker == 0xC0:
-                    h, w = struct.unpack_from(">HH", seg, 1)
-                    tq = seg[8]
-                elif marker == 0xDA:
-                    td, ta = seg[2] >> 4, seg[2] & 15
-                    scan_pos = pos + 2 + seglen
-                    break
-                pos += 2 + seglen
-            q, dc_tab, ac_tab = qtabs[tq], htabs[(0, td)], htabs[(1, ta)]
-            state = {"pos": scan_pos, "acc": 0, "n": 0}
-
-            def read(n):
-                # mirrors media._JpegBitReader: bounds + stuffing checks
-                # so corrupt payloads fail loudly, not decode garbage
-                while state["n"] < n:
-                    if state["pos"] >= len(b):
-                        raise ValueError("unexpected EOF inside scan")
-                    byte = b[state["pos"]]
-                    if byte == 0xFF:
-                        if state["pos"] + 1 >= len(b):
-                            raise ValueError("unexpected EOF after FF")
-                        if b[state["pos"] + 1] != 0x00:
-                            raise ValueError("marker inside scan")
-                        state["pos"] += 2  # FF00 stuffing
-                    else:
-                        state["pos"] += 1
-                    state["acc"] = (state["acc"] << 8) | byte
-                    state["n"] += 8
-                state["n"] -= n
-                return (state["acc"] >> state["n"]) & ((1 << n) - 1)
-
-            def huff_read(table):
-                code = 0
-                for ln in range(1, 17):
-                    code = (code << 1) | read(1)
-                    if (ln, code) in table:
-                        return table[(ln, code)]
-                raise ValueError("bad huffman code")
-
-            def extend(v, sz):
-                return v if v >= (1 << (sz - 1)) else v - (1 << sz) + 1
-
-            mcux, mcuy = (w + 7) // 8, (h + 7) // 8
-            out = bytearray(w * h)
-            prev_dc = 0
-            for by in range(mcuy):
-                for bx in range(mcux):
-                    sz = huff_read(dc_tab)
-                    prev_dc += extend(read(sz), sz) if sz else 0
-                    coefs = [0] * 64
-                    coefs[0] = prev_dc * q[0]
-                    k = 0
-                    while k < 63:
-                        rs = huff_read(ac_tab)
-                        if rs == 0x00:
-                            break
-                        run, sz = rs >> 4, rs & 15
-                        if sz == 0:
-                            k += 16
-                            continue
-                        k += run + 1
-                        nat = ZIG[k]
-                        coefs[nat] = extend(read(sz), sz) * q[nat]
-                    px = idct(coefs)
-                    for yy in range(min(8, h - by * 8)):
-                        row_base = (by * 8 + yy) * w + bx * 8
-                        for xx in range(min(8, w - bx * 8)):
-                            out[row_base + xx] = px[yy * 8 + xx]
-
-            def gray(x, yq):
-                return out[yq * w + x]
-
-            return w, h, gray
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                if b[:8] == b"\x89PNG\r\n\x1a\n":
-                    w, h, gray = decode_png(b)
-                elif b[:2] == b"\xff\xd8":
-                    w, h, gray = decode_jpeg(b)
-                else:
-                    raise ValueError("unknown image magic")
-                hv = 0
-                for k in range(63):
-                    gx, gy = k % 7, k // 7
-                    yq = (gy * h) // 9
-                    if gray(((gx + 1) * w) // 8, yq) > gray((gx * w) // 8, yq):
-                        hv |= 1 << k
-                rows.append((int(did), hv))
-            yield pd.DataFrame(rows, columns=["doc_id", "phash"]).astype("int64")
-
-    from hdfs_mr_spark.io import fan_out
-    from hdfs_mr_spark.sources.media import (
-        jpeg_encode_gray,
-        media_px_dims,
-        media_px_value,
-    )
-
+    mapInPandas kernel (phash_batches) over the union,
+    localCheckpoint'd because both the broadcast decision
+    (llm_multimodal_phash_mixed) and the MIH banded index
+    (llm_multimodal_phash_banded) consume it twice."""
     png = spark.read.parquet(fixture("media_px"))
     jpg = spark.read.parquet(fixture("media_jpeg")).select(
         (F.col("doc_id") + 1000).alias("doc_id"), "payload"
@@ -3328,18 +2260,16 @@ def _mixed_phash_frame(spark):
     # (8gy)//8=gy), so bit k of its hash is exactly [f(gx+1,gy) >
     # f(gx,gy)] — walk the PNG doc's bits to build f, DC-only encode
     P = 7
-    w0, h0 = media_px_dims(P)
 
     def png_gray(x, y):
         v = [media_px_value(x, y, c, P) for c in range(3)]
         return (v[0] + 2 * v[1] + v[2]) // 4
 
+    bits = _dhash(*media_px_dims(P), png_gray)
     f = [[128] * 8 for _ in range(9)]
     for k in range(63):
         gx, gy = k % 7, k // 7
-        yq = (gy * h0) // 9
-        rise = png_gray(((gx + 1) * w0) // 8, yq) > png_gray((gx * w0) // 8, yq)
-        f[gy][gx + 1] = f[gy][gx] + (1 if rise else -1)
+        f[gy][gx + 1] = f[gy][gx] + (1 if bits >> k & 1 else -1)
     qblocks = []
     for gy in range(9):
         for gx in range(8):
@@ -3351,7 +2281,7 @@ def _mixed_phash_frame(spark):
         [(2000 + P, bytearray(twin))], "doc_id long, payload binary"
     )
     return fan_out(png.unionByName(jpg).unionByName(extra)).mapInPandas(
-        mixed_batches, "doc_id long, phash long"
+        repo_kernel(__name__, "phash_batches"), "doc_id long, phash long"
     ).localCheckpoint()
 
 
@@ -3396,8 +2326,8 @@ def llm_multimodal_phash_mixed(spark, sf_dir):
     into one corpus (JPEG ids offset by 1000), ONE mapInPandas kernel
     sniffs the magic bytes per row (PNG signature vs JPEG SOI — the
     mm_decode dispatch pattern) and runs the matching pixel-true
-    decoder (chunk-walk/inflate/unfilter for PNG; Huffman/IDCT/MCU-crop
-    for JPEG), grayscale is grid-sampled on the same 8x9 lattice (PNG
+    module codec (png_decode_pixels for PNG; jpeg_decode_gray for
+    JPEG), grayscale is grid-sampled on the same 8x9 lattice (PNG
     gray = (r + 2g + b) // 4, JPEG gray = the decoded luma), and the
     63-bit dHashes feed one Hamming<=8 lowest-id decision across both
     formats. Closes the round-4 gap 'image dedup only covers PNG
@@ -3487,36 +2417,12 @@ def llm_multimodal_phash_banded(spark, sf_dir):
 def vad_energy_batches(batches):
     """mapInPandas kernel shared by the batch VAD op and its streaming
     twin (stream_audio_vad): REAL RIFF/WAVE chunk walk -> 20 ms frame
-    energies as exact integers. One frame row per (clip, frame)."""
-    import struct
-
-    import numpy as np
-    import pandas as pd
-
-    def wav_parse(b):
-        if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-            raise ValueError("not RIFF/WAVE")
-        pos, rate, data = 12, None, None
-        while pos + 8 <= len(b):
-            cid = b[pos : pos + 4]
-            (size,) = struct.unpack_from("<I", b, pos + 4)
-            body = b[pos + 8 : pos + 8 + size]
-            if cid == b"fmt ":
-                afmt, ch, rate = struct.unpack_from("<HHI", body, 0)
-                (bits,) = struct.unpack_from("<H", body, 14)
-                if (afmt, ch, bits) != (1, 1, 16):
-                    raise ValueError("only PCM16 mono")
-            elif cid == b"data":
-                data = body
-            pos += 8 + size + (size & 1)
-        if rate is None or data is None:
-            raise ValueError("missing fmt or data")
-        return rate, data
-
+    energies as exact integers (parse_wav). One frame row per (clip,
+    frame)."""
     for pdf in batches:
         out = []
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            rate, data = wav_parse(bytes(payload))
+            rate, data = parse_wav(bytes(payload))
             samples = np.frombuffer(data, dtype="<i2").astype(np.int64)
             frame = rate // 50
             nf = len(samples) // frame
@@ -3663,7 +2569,7 @@ def llm_multimodal_audio_vad(spark, sf_dir):
     with the streaming twin stream_audio_vad."""
     df = spark.read.parquet(fixture("media_audio"))
     fe = df.mapInPandas(
-        repo_kernel("hdfs_mr_spark.functions.udfs", "vad_energy_batches"),
+        repo_kernel(__name__, "vad_energy_batches"),
         schema="doc_id bigint, f bigint, energy bigint",
     )
     return vad_rollup(fe)
@@ -3680,10 +2586,6 @@ def palette_px_batches(batches):
     expansion) -> per-image channel sums + position-weighted sums.
     One wrong palette byte, filter step, or nibble order anywhere
     flips a sum and hash-mismatches against the closed-form oracle."""
-    import pandas as pd
-
-    from hdfs_mr_spark.sources.media import png_decode_palette
-
     cols = [
         "doc_id", "width", "height", "n_palette",
         "sum_c0", "sum_c1", "sum_c2", "wsum_x", "wsum_y",
@@ -3692,23 +2594,9 @@ def palette_px_batches(batches):
         rows = []
         for did, payload in zip(pdf["doc_id"], pdf["payload"]):
             w, h, npal, px = png_decode_palette(bytes(payload))
-            sums, wx, wy = [0, 0, 0], 0, 0
-            for y in range(h):
-                for x in range(w):
-                    base = (y * w + x) * 3
-                    tot = 0
-                    for c in range(3):
-                        v = px[base + c]
-                        sums[c] += v
-                        tot += v
-                    wx += tot * (x + 1)
-                    wy += tot * (y + 1)
+            sums, wx, wy = _weighted_sums(w, h, 3, px)
             rows.append((int(did), w, h, npal, *sums, wx, wy))
-        out = pd.DataFrame(rows, columns=cols)
-        yield out.astype(
-            {c: ("int32" if c in ("width", "height", "n_palette") else "int64")
-             for c in cols}
-        )
+        yield _int_frame(rows, cols, ("width", "height", "n_palette"))
 
 
 def _palette_oracle_sql() -> str:
@@ -3776,11 +2664,9 @@ def llm_multimodal_pixels_palette(spark, sf_dir):
     parallelism = image count, memory = one decoded image per row at
     a time. Kernel is the module-level palette_px_batches via
     repo_kernel (worker-side repo-root injection)."""
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_px_palette"))
     return fan_out(df).mapInPandas(
-        repo_kernel("hdfs_mr_spark.functions.udfs", "palette_px_batches"),
+        repo_kernel(__name__, "palette_px_batches"),
         "doc_id long, width int, height int, n_palette int, "
         "sum_c0 long, sum_c1 long, sum_c2 long, wsum_x long, wsum_y long",
     ).orderBy("doc_id")
@@ -3798,12 +2684,6 @@ def audio_multi_batches(batches):
     value*1024 — exactly representable in binary32 — so both formats
     reduce to the same integer formula and one misparsed byte, channel
     deinterleave slip, or float rounding bug hash-mismatches."""
-    import struct
-
-    import pandas as pd
-
-    from hdfs_mr_spark.sources.media import parse_wav_ex
-
     cols = [
         "doc_id", "fmt_code", "n_channels", "rate", "ch",
         "n_samples", "sum_amp", "energy",
@@ -3825,11 +2705,8 @@ def audio_multi_batches(batches):
                     s += v
                     e += v * v
                 rows.append((int(did), fmt_code, nch, rate, c, n, s, e))
-        out = pd.DataFrame(rows, columns=cols)
-        yield out.astype(
-            {c: ("int64" if c in ("doc_id", "n_samples", "sum_amp", "energy")
-                 else "int32")
-             for c in cols}
+        yield _int_frame(
+            rows, cols, ("fmt_code", "n_channels", "rate", "ch")
         )
 
 
@@ -3895,11 +2772,9 @@ def llm_multimodal_audio_multichannel(spark, sf_dir):
     fanned out, one Arrow-batched parse pass emitting (clip, channel)
     rows, no shuffle before the presentation sort; parallelism = clip
     count."""
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_audio_multi"))
     return fan_out(df).mapInPandas(
-        repo_kernel("hdfs_mr_spark.functions.udfs", "audio_multi_batches"),
+        repo_kernel(__name__, "audio_multi_batches"),
         "doc_id long, fmt_code int, n_channels int, rate int, ch int, "
         "n_samples long, sum_amp long, energy long",
     ).orderBy("doc_id", "ch")
@@ -3914,10 +2789,6 @@ def palette_rgba_batches(batches):
     per-image channel/alpha sums plus the alpha-weighted RGB sum
     (premul), which flips if alphas attach to the wrong palette
     entries even when the plain sums survive."""
-    import pandas as pd
-
-    from hdfs_mr_spark.sources.media import png_decode_palette_rgba
-
     cols = [
         "doc_id", "width", "height", "n_palette", "n_trns",
         "sum_c0", "sum_c1", "sum_c2", "sum_alpha", "premul",
@@ -3938,11 +2809,8 @@ def palette_rgba_batches(batches):
                     tot += v
                 pm += a * tot
             rows.append((int(did), w, h, npal, ntrns, *sums, sa, pm))
-        out = pd.DataFrame(rows, columns=cols)
-        yield out.astype(
-            {c: ("int32" if c in ("width", "height", "n_palette", "n_trns")
-                 else "int64")
-             for c in cols}
+        yield _int_frame(
+            rows, cols, ("width", "height", "n_palette", "n_trns")
         )
 
 
@@ -4011,11 +2879,9 @@ def llm_multimodal_pixels_palette_alpha(spark, sf_dir):
     Scale: same single-pass Arrow-batched decode DAG as the other
     image ops — no shuffle before the presentation sort, parallelism =
     image count."""
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_px_palette_trns"))
     return fan_out(df).mapInPandas(
-        repo_kernel("hdfs_mr_spark.functions.udfs", "palette_rgba_batches"),
+        repo_kernel(__name__, "palette_rgba_batches"),
         "doc_id long, width int, height int, n_palette int, n_trns int, "
         "sum_c0 long, sum_c1 long, sum_c2 long, sum_alpha long, premul long",
     ).orderBy("doc_id")
@@ -4051,6 +2917,18 @@ ORDER BY doc_id
 """
 
 
+def bmp_px_batches(batches):
+    """mapInPandas kernel of llm_multimodal_pixels_bmp:
+    bmp_decode_pixels, then per-channel sums."""
+    cols = ["doc_id", "width", "height", "sum_r", "sum_g", "sum_b"]
+    for pdf in batches:
+        rows = []
+        for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+            w, h, px = bmp_decode_pixels(bytes(payload))
+            rows.append((int(did), w, h, *(sum(px[c::3]) for c in range(3))))
+        yield _int_frame(rows, cols, ("width", "height"))
+
+
 @query(
     "llm_multimodal_pixels_bmp",
     oracle=_bmp_px_oracle_sql(),
@@ -4062,8 +2940,8 @@ def llm_multimodal_pixels_bmp(spark, sf_dir):
     compression: 24bpp BI_RGB stores BGR byte order, BOTTOM-UP rows,
     and 4-byte row padding, so a decoder that ignores any of the three
     produces plausible-looking but wrong sums. Decode runs inside
-    mapInPandas over the binary column (self-contained closure —
-    workers can't import the repo package); per-image, per-channel
+    mapInPandas over the binary column (the module codec
+    bmp_decode_pixels via repo_kernel); per-image, per-channel
     pixel sums hash against the DuckDB oracle's generative-formula
     recomputation (sources/media.py:media_px_value — the same ground
     truth the PNG path uses). Unsupported BMP variants (compressed,
@@ -4072,56 +2950,12 @@ def llm_multimodal_pixels_bmp(spark, sf_dir):
     Scale: one Arrow batch per task, pure per-row work, no shuffle
     before the final passthrough — the decode stage of a multimodal
     ingest DAG; parallelism is the file count."""
-    from pyspark.sql import types as T
-
-    def bmp_batches(batches):
-        import struct as _struct
-
-        import pandas as pd
-
-        def decode(blob):
-            if blob[:2] != b"BM":
-                raise ValueError("bad BMP signature")
-            (data_off,) = _struct.unpack_from("<I", blob, 10)
-            size, w, h, planes, bpp, comp = _struct.unpack_from(
-                "<IiiHHI", blob, 14
-            )
-            if size < 40 or comp != 0 or bpp != 24 or h <= 0:
-                raise ValueError(
-                    f"unsupported BMP (dib={size} comp={comp} bpp={bpp} "
-                    f"h={h}): only bottom-up 24bpp BI_RGB is implemented"
-                )
-            stride = (3 * w + 3) & ~3
-            sums = [0, 0, 0]
-            for y in range(h):
-                src = data_off + (h - 1 - y) * stride
-                row = blob[src : src + 3 * w]
-                sums[2] += sum(row[0::3])  # B
-                sums[1] += sum(row[1::3])  # G
-                sums[0] += sum(row[2::3])  # R
-            return w, h, sums
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, s = decode(bytes(payload))
-                rows.append((int(did), w, h, s[0], s[1], s[2]))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height",
-                         "sum_r", "sum_g", "sum_b"],
-            )
-
     src = spark.read.parquet(fixture("media_bmp"))
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("sum_r", T.LongType()),
-        T.StructField("sum_g", T.LongType()),
-        T.StructField("sum_b", T.LongType()),
-    ])
-    return src.mapInPandas(bmp_batches, schema).orderBy("doc_id")
+    return src.mapInPandas(
+        repo_kernel(__name__, "bmp_px_batches"),
+        "doc_id long, width int, height int, "
+        "sum_r long, sum_g long, sum_b long",
+    ).orderBy("doc_id")
 
 
 def _avi_framesample_oracle_sql() -> str:
@@ -4156,6 +2990,34 @@ ORDER BY doc_id, frame_idx
 """
 
 
+def _avi_gray_frames(b):
+    """``(w, h, nf, frame(f))`` of an MJPEG AVI: avi_decode_frames, and
+    frame f's luma via jpeg_decode_gray, checked against the container
+    header's dimensions."""
+    w, h, nf, frames = avi_decode_frames(b)
+
+    def frame(f):
+        dw, dh, px = jpeg_decode_gray(frames[f])
+        if (dw, dh) != (w, h):
+            raise ValueError("frame dims disagree with container header")
+        return px
+
+    return w, h, nf, frame
+
+
+def avi_frame_batches(batches):
+    """mapInPandas kernel of llm_multimodal_framesample_avi: luma sum
+    of every 3rd frame."""
+    cols = ["doc_id", "n_frames", "frame_idx", "luma_sum"]
+    for pdf in batches:
+        rows = []
+        for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+            w, h, nf, frame = _avi_gray_frames(bytes(payload))
+            for f in range(0, nf, 3):
+                rows.append((int(did), nf, f, sum(frame(f))))
+        yield _int_frame(rows, cols, ("n_frames", "frame_idx"))
+
+
 @query(
     "llm_multimodal_framesample_avi",
     oracle=_avi_framesample_oracle_sql(),
@@ -4176,41 +3038,9 @@ def llm_multimodal_framesample_avi(spark, sf_dir):
     work, no shuffle until the orderBy — scales with executor count
     exactly like the image decoders."""
 
-    def frame_batches(batches):
-        import sys as _sys
-
-        import pandas as pd
-
-        if REPO_ROOT not in _sys.path:  # worker: see repo_kernel
-            _sys.path.insert(0, REPO_ROOT)
-        from hdfs_mr_spark.sources.media import (
-            avi_decode_frames,
-            jpeg_decode_gray,
-        )
-
-        cols = ["doc_id", "n_frames", "frame_idx", "luma_sum"]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, nf, frames = avi_decode_frames(bytes(payload))
-                for f in range(0, nf, 3):
-                    dw, dh, px = jpeg_decode_gray(frames[f])
-                    if (dw, dh) != (w, h):
-                        raise ValueError(
-                            "frame dims disagree with container header"
-                        )
-                    rows.append((int(did), nf, f, sum(px)))
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype({
-                "doc_id": "int64", "n_frames": "int32",
-                "frame_idx": "int32", "luma_sum": "int64",
-            })
-
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_avi"))
     return fan_out(df).mapInPandas(
-        frame_batches,
+        repo_kernel(__name__, "avi_frame_batches"),
         "doc_id long, n_frames int, frame_idx int, luma_sum long",
     ).orderBy("doc_id", "frame_idx")
 
@@ -4256,6 +3086,29 @@ ORDER BY doc_id, frame_idx
 """
 
 
+def avi_scene_batches(batches):
+    """mapInPandas kernel of llm_multimodal_scene_detect: mean
+    absolute luma delta of each consecutive frame pair, in integer
+    milli-units, and the cut verdict."""
+    cols = ["doc_id", "frame_idx", "mean_delta_milli", "is_cut"]
+    for pdf in batches:
+        rows = []
+        for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+            w, h, nf, frame = _avi_gray_frames(bytes(payload))
+            prev = None
+            for f in range(nf):
+                px = frame(f)
+                if prev is not None:
+                    sad = sum(abs(a - b) for a, b in zip(px, prev))
+                    milli = 1000 * sad // (w * h)
+                    rows.append((int(did), f, milli, milli > 8000))
+                prev = px
+        yield pd.DataFrame(rows, columns=cols).astype({
+            "doc_id": "int64", "frame_idx": "int32",
+            "mean_delta_milli": "int64", "is_cut": "bool",
+        })
+
+
 @query(
     "llm_multimodal_scene_detect",
     oracle=_scene_detect_oracle_sql(),
@@ -4284,52 +3137,43 @@ def llm_multimodal_scene_detect(spark, sf_dir):
     and the cut rows are O(frames), a ~1000x reduction before any
     downstream frame sampling."""
 
-    def scene_batches(batches):
-        import sys as _sys
-
-        import pandas as pd
-
-        if REPO_ROOT not in _sys.path:  # worker: see repo_kernel
-            _sys.path.insert(0, REPO_ROOT)
-        from hdfs_mr_spark.sources.media import (
-            avi_decode_frames,
-            jpeg_decode_gray,
-        )
-
-        cols = ["doc_id", "frame_idx", "mean_delta_milli", "is_cut"]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, nf, frames = avi_decode_frames(bytes(payload))
-                prev = None
-                for f in range(nf):
-                    dw, dh, px = jpeg_decode_gray(frames[f])
-                    if (dw, dh) != (w, h):
-                        raise ValueError(
-                            "frame dims disagree with container header"
-                        )
-                    if prev is not None:
-                        sad = sum(
-                            abs(a - b) for a, b in zip(px, prev)
-                        )
-                        milli = 1000 * sad // (w * h)
-                        rows.append(
-                            (int(did), f, milli, milli > 8000)
-                        )
-                    prev = px
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype({
-                "doc_id": "int64", "frame_idx": "int32",
-                "mean_delta_milli": "int64", "is_cut": "bool",
-            })
-
-    from hdfs_mr_spark.io import fan_out
-
     df = spark.read.parquet(fixture("media_scene_avi"))
     return fan_out(df).mapInPandas(
-        scene_batches,
+        repo_kernel(__name__, "avi_scene_batches"),
         "doc_id long, frame_idx int, mean_delta_milli long, is_cut boolean",
     ).orderBy("doc_id", "frame_idx")
+
+
+def audio_spectral_batches(batches):
+    """mapInPandas kernel of llm_multimodal_audio_spectral: parse_wav,
+    then the exact DC / quarter-band / Nyquist bins per 20 ms frame."""
+    cols = ["doc_id", "n_frames", "dc_abs_sum",
+            "nyquist_abs_sum", "quarter_energy_sum"]
+    for pdf in batches:
+        out = []
+        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+            rate, data = parse_wav(bytes(payload))
+            samples = np.frombuffer(data, dtype="<i2").astype(np.int64)
+            frame = rate // 50
+            if frame % 4:
+                raise ValueError("frame length not divisible by 4")
+            nf = len(samples) // frame
+            fx = samples[: nf * frame].reshape(nf, frame)
+            j = np.arange(frame)
+            nyq_sign = np.where(j % 2 == 0, 1, -1)
+            qre_sign = np.select([j % 4 == 0, j % 4 == 2], [1, -1], 0)
+            qim_sign = np.select([j % 4 == 1, j % 4 == 3], [-1, 1], 0)
+            dc = fx.sum(axis=1)
+            nyq = (fx * nyq_sign).sum(axis=1)
+            qre = (fx * qre_sign).sum(axis=1)
+            qim = (fx * qim_sign).sum(axis=1)
+            out.append((
+                int(doc_id), nf,
+                int(np.abs(dc).sum()),
+                int(np.abs(nyq).sum()),
+                int((qre * qre + qim * qim).sum()),
+            ))
+        yield pd.DataFrame(out, columns=cols)
 
 
 @query(
@@ -4392,67 +3236,8 @@ def llm_multimodal_audio_spectral(spark, sf_dir):
     sign-mask dot products, vectorized), no shuffle before the tiny
     per-clip aggregate."""
     df = spark.read.parquet(fixture("media_audio"))
-
-    def spectral_batches(batches):
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        def wav_parse(b):
-            # mirrors sources/media.py:parse_wav (self-contained for
-            # the executor; mangled-input refusals unit-tested there)
-            if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                raise ValueError("not RIFF/WAVE")
-            pos, rate, data = 12, None, None
-            while pos + 8 <= len(b):
-                cid = b[pos : pos + 4]
-                (size,) = struct.unpack_from("<I", b, pos + 4)
-                body = b[pos + 8 : pos + 8 + size]
-                if cid == b"fmt ":
-                    afmt, ch, rate = struct.unpack_from("<HHI", body, 0)
-                    (bits,) = struct.unpack_from("<H", body, 14)
-                    if (afmt, ch, bits) != (1, 1, 16):
-                        raise ValueError("only PCM16 mono")
-                elif cid == b"data":
-                    data = body
-                pos += 8 + size + (size & 1)
-            if rate is None or data is None:
-                raise ValueError("missing fmt or data")
-            return rate, data
-
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, data = wav_parse(bytes(payload))
-                samples = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                frame = rate // 50
-                if frame % 4:
-                    raise ValueError("frame length not divisible by 4")
-                nf = len(samples) // frame
-                fx = samples[: nf * frame].reshape(nf, frame)
-                j = np.arange(frame)
-                nyq_sign = np.where(j % 2 == 0, 1, -1)
-                qre_sign = np.select([j % 4 == 0, j % 4 == 2], [1, -1], 0)
-                qim_sign = np.select([j % 4 == 1, j % 4 == 3], [-1, 1], 0)
-                dc = fx.sum(axis=1)
-                nyq = (fx * nyq_sign).sum(axis=1)
-                qre = (fx * qre_sign).sum(axis=1)
-                qim = (fx * qim_sign).sum(axis=1)
-                out.append((
-                    int(doc_id), nf,
-                    int(np.abs(dc).sum()),
-                    int(np.abs(nyq).sum()),
-                    int((qre * qre + qim * qim).sum()),
-                ))
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "n_frames", "dc_abs_sum",
-                         "nyquist_abs_sum", "quarter_energy_sum"],
-            )
-
     return df.mapInPandas(
-        spectral_batches,
+        repo_kernel(__name__, "audio_spectral_batches"),
         schema=(
             "doc_id bigint, n_frames bigint, dc_abs_sum bigint, "
             "nyquist_abs_sum bigint, quarter_energy_sum bigint"
@@ -4621,8 +3406,6 @@ def llm_multimodal_exif(spark, sf_dir):
                     "jpeg_len": len(blob),
                 })
             yield pd.DataFrame(rows)
-
-    from hdfs_mr_spark.io import fan_out
 
     d = fan_out(
         table(spark, sf_dir, "documents").select(

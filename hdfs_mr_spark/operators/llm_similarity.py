@@ -1016,8 +1016,8 @@ def llm_embed_gram(spark, sf_dir):
     e = fan_out(table(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
 
     def gram_batches(batches):
-        # self-contained closure (cloudpickle by value; executor workers
-        # can't import hdfs_mr_spark from the driver's arbitrary cwd)
+        # uses nothing from the package, so a plain closure will do
+        # (see the functions/udfs.py docstring on worker imports)
         import numpy as np
         import pandas as pd
 

@@ -120,23 +120,9 @@ def materialize_fixtures(sf_dir: str) -> dict[str, str]:
     return {k: str(v) for k, v in paths.items()}
 
 
-# Oracle strings reference the sf0.01 fixtures; make sure they exist even if
-# the driver runs the oracle before our spark callable. Only an ABSENT
-# testdata mount is tolerated (the driver may import this module on a box
-# without fixtures); any other failure here used to be swallowed (VERDICT
-# r12 residual nit) and resurfaced as a confusing downstream
-# AnalysisException — now it propagates with the root cause.
-if os.path.isdir(ORACLE_SF):  # pragma: no cover - import-time side effect
-    try:
-        materialize_fixtures(ORACLE_SF)
-    except FileNotFoundError as exc:
-        import warnings
-
-        warnings.warn(
-            f"testdata at {ORACLE_SF} is incomplete; oracle fixtures not "
-            f"materialized: {exc}", RuntimeWarning, stacklevel=1,
-        )
-
+# Oracle strings reference the sf0.01 fixtures by static path; the
+# query bodies and hdfs_mr_spark.oracles() write them (importing this
+# module writes nothing).
 _ORACLE_FIX = {k: str((_fixture_dir(ORACLE_SF) / p)) for k, p in
                {"csv": "customer.csv", "json": "events.jsonl", "text": "documents.txt"}.items()}
 
@@ -984,21 +970,6 @@ def materialize_xml(sf_dir: str) -> str:
             f.write("</suppliers>\n")
     return str(path)
 
-
-# Same import-time contract as materialize_fixtures above: tolerate ONLY
-# incomplete testdata (FileNotFoundError → warn); anything else propagates
-# with its root cause instead of resurfacing as a downstream
-# AnalysisException.
-if os.path.isdir(ORACLE_SF):  # pragma: no cover - import-time side effect
-    try:
-        materialize_xml(ORACLE_SF)
-    except FileNotFoundError as exc:
-        import warnings
-
-        warnings.warn(
-            f"testdata at {ORACLE_SF} is incomplete; xml fixture not "
-            f"materialized: {exc}", RuntimeWarning, stacklevel=1,
-        )
 
 
 @query(

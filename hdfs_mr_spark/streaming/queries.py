@@ -1308,30 +1308,12 @@ def stream_image_decode(spark, sf_dir):
     out = tempfile.mkdtemp(prefix="hmr_img_out_")
     os.rmdir(out)  # foreachBatch append recreates it
 
-    from hdfs_mr_spark.functions.udfs import REPO_ROOT as _root
+    from hdfs_mr_spark.functions.udfs import repo_kernel
 
     def decode_batch(batch_df, batch_id):
-        def batches(it):
-            import sys as _sys
-
-            import pandas as pd
-
-            if _root not in _sys.path:  # worker: see udfs.repo_kernel
-                _sys.path.insert(0, _root)
-            from hdfs_mr_spark.sources.media import png_decode_pixels
-
-            for pdf in it:
-                rows = []
-                for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                    w, h, px = png_decode_pixels(bytes(payload))
-                    rows.append((int(did), w, h, sum(px)))
-                yield pd.DataFrame(
-                    rows, columns=["doc_id", "width", "height", "sum_px"]
-                ).astype({"doc_id": "int64", "width": "int32",
-                          "height": "int32", "sum_px": "int64"})
-
         batch_df.mapInPandas(
-            batches, "doc_id long, width int, height int, sum_px long"
+            repo_kernel("hdfs_mr_spark.functions.udfs", "png_total_batches"),
+            "doc_id long, width int, height int, sum_px long",
         ).write.mode("append").parquet(out)
 
     s = (

@@ -45,12 +45,30 @@ def test_oracles_write_every_fixture(tmp_path, monkeypatch):
     import hdfs_mr_spark
     from hdfs_mr_spark.registry import all_specs
 
-    all_specs()  # import-time fixtures of other families stay in the real root
+    all_specs()  # import every family before the root moves
     monkeypatch.setattr(scans, "FIXTURE_ROOT", tmp_path)
     assert not any(os.path.exists(media.fixture_path(n)) for n in media.FIXTURES)
+    scan_dir = scans._fixture_dir(scans.ORACLE_SF)
+    names = ("customer.csv", "events.jsonl", "documents.txt")
+    assert not any((scan_dir / n).exists() for n in names)
     hdfs_mr_spark.oracles()
     missing = [n for n in media.FIXTURES if not os.path.exists(media.fixture_path(n))]
     assert missing == []
+    assert all((scan_dir / n).exists() for n in names)
+
+
+def test_oracles_without_testdata_return_every_string(tmp_path, monkeypatch):
+    """On a host without the sf0.01 mount, oracles() still returns every
+    oracle string (the scan fixtures are simply not written)."""
+    import hdfs_mr_spark
+    from hdfs_mr_spark.registry import all_specs
+
+    specs = all_specs()
+    monkeypatch.setattr(scans, "FIXTURE_ROOT", tmp_path)
+    monkeypatch.setattr(scans, "ORACLE_SF", str(tmp_path / "no_testdata"))
+    got = hdfs_mr_spark.oracles()
+    assert set(got) == {n for n, s in specs.items() if s.oracle is not None}
+    assert not list(tmp_path.glob("no_testdata-*"))
 
 
 def _import_time_calls(tree: ast.Module) -> set[str]:

@@ -1590,3 +1590,38 @@ def test_ann_index_layer_written_once():
                         and node.name in closures):
                     offenders.append(f"{path.name}:{node.lineno} nested {node.name} in {owner}")
     assert offenders == []
+
+
+def test_udfs_decode_through_media_codecs():
+    """functions/udfs.py decodes every payload through the tested codecs
+    in sources/media.py: no kernel re-declares a codec piece as a
+    nested function (paeth, idct, Huffman reads, WAV/PNG/JPEG header
+    walks, decode*) or a zigzag / IDCT table, and the only worker
+    sys.path injection is the one inside repo_kernel."""
+    import ast
+    from pathlib import Path
+
+    from hdfs_mr_spark.functions import udfs
+
+    twins = {"paeth", "idct", "huff_map", "huff_read", "extend",
+             "wav_parse", "png_dims", "jpeg_dims", "fake_decode"}
+    tree = ast.parse(Path(udfs.__file__).read_text())
+    offenders = []
+    for top in tree.body:
+        owner = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            where = f"udfs.py:{getattr(node, 'lineno', 0)} in {owner}"
+            if (node is not top
+                    and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and (node.name in twins or node.name.startswith("decode"))):
+                offenders.append(f"{where}: nested {node.name}")
+            if (isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store)
+                    and node.id in ("ZIG", "COS")):
+                offenders.append(f"{where}: {node.id} table")
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "insert"
+                    and ast.unparse(node.func.value).endswith("sys.path")
+                    and owner != "repo_kernel"):
+                offenders.append(f"{where}: sys.path.insert")
+    assert offenders == []
