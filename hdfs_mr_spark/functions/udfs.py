@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from hdfs_mr_spark.io import fan_out, table
+from hdfs_mr_spark.io import fan_out, read_parquet, table
 from hdfs_mr_spark.registry import query
 
 # Media fixtures (sources/media.py FIXTURES): oracle SQL is a static
@@ -538,7 +538,7 @@ def llm_multimodal_pixels(spark, sf_dir):
     is small; a production kernel swaps the inner loops for numpy on
     the decoded buffer — same plan shape."""
 
-    df = spark.read.parquet(fixture("media_px"))
+    df = read_parquet(spark, fixture("media_px"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "png_px_batches"),
         "doc_id long, width int, height int, ds_width int, ds_height int, "
@@ -647,7 +647,7 @@ def llm_multimodal_pixels_jpeg(spark, sf_dir):
     per task, per-row decode, no shuffle before the final sort;
     parallelism is the file count."""
 
-    df = spark.read.parquet(fixture("media_jpeg"))
+    df = read_parquet(spark, fixture("media_jpeg"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "jpeg_gray_px_batches"),
         "doc_id long, width int, height int, n_blocks int, "
@@ -708,7 +708,7 @@ def llm_multimodal_decode_real(spark, sf_dir):
     parsers are the module's parse_png_dims / parse_jpeg_dims, which
     unit tests feed mangled inputs. Fixture is static (oracle SQL can't
     parameterize paths), bounded to 64 blobs."""
-    df = spark.read.parquet(fixture("media"))
+    df = read_parquet(spark, fixture("media"))
     return df.mapInPandas(
         repo_kernel(__name__, "media_dims_batches"),
         "doc_id long, mime string, width int, height int, n_bytes long",
@@ -1090,7 +1090,7 @@ def llm_multimodal_resize_real(spark, sf_dir):
     resampling of decoded buffers — is llm_multimodal_resize_pixels
     (round 5 closed this operator's documented extension point)."""
 
-    df = spark.read.parquet(fixture("media"))
+    df = read_parquet(spark, fixture("media"))
     return df.mapInPandas(
         repo_kernel(__name__, "media_resize_batches"),
         "doc_id long, mime string, src_w int, src_h int, dst_w int, dst_h int",
@@ -1176,7 +1176,7 @@ def llm_multimodal_audio_frames(spark, sf_dir):
     task, per-row numpy work, no shuffle before the tiny per-clip
     aggregate; at 100 TB parallelism is the clip count and this is the
     feature-extract stage of an audio ingest DAG."""
-    df = spark.read.parquet(fixture("media_audio"))
+    df = read_parquet(spark, fixture("media_audio"))
     return df.mapInPandas(
         repo_kernel(__name__, "audio_frame_batches"),
         schema=(
@@ -1312,7 +1312,7 @@ def llm_multimodal_phash(spark, sf_dir):
     that silently costs recall if ignored. Pair stage stays
     sub-quadratic either way."""
 
-    df = spark.read.parquet(fixture("media_px"))
+    df = read_parquet(spark, fixture("media_px"))
     hashes = fan_out(df).mapInPandas(
         repo_kernel(__name__, "phash_batches"), "doc_id long, phash long"
     ).localCheckpoint()
@@ -1417,7 +1417,7 @@ def llm_multimodal_pixels_jpeg_color(spark, sf_dir):
     jpeg_block_value_c. The kernel decodes through the module codec
     jpeg_decode_baseline, which unit tests round-trip against
     jpeg_encode_baseline."""
-    df = spark.read.parquet(fixture("media_jpeg_color"))
+    df = read_parquet(spark, fixture("media_jpeg_color"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "jpeg_color_batches"), _RGB_SUM_SCHEMA,
     ).orderBy("doc_id")
@@ -1485,7 +1485,7 @@ def llm_multimodal_pixels_jpeg_420(spark, sf_dir):
     the generative formulas (luma block (x//8, y//8), chroma block
     (x//16, y//16)). Unit + hypothesis tests round-trip the codec
     against sources/media.py jpeg_encode_420."""
-    df = spark.read.parquet(fixture("media_jpeg_420"))
+    df = read_parquet(spark, fixture("media_jpeg_420"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "jpeg_color_batches"), _RGB_SUM_SCHEMA,
     ).orderBy("doc_id")
@@ -1577,7 +1577,7 @@ def llm_multimodal_pixels_jpeg_rst(spark, sf_dir):
     repo_kernel): the restart logic lives in ONE tested
     implementation, and the hypothesis suite (random blocks x random
     DRI) covers it directly."""
-    df = spark.read.parquet(fixture("media_jpeg_rst"))
+    df = read_parquet(spark, fixture("media_jpeg_rst"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "jpeg_rst_batches"),
         "doc_id long, width int, height int, restart_interval int, "
@@ -1647,7 +1647,7 @@ def llm_multimodal_pixels_interlaced(spark, sf_dir):
     by tiny-image pass-dropping unit tests and the filter-cycling
     fixture."""
 
-    df = spark.read.parquet(fixture("media_px_adam7"))
+    df = read_parquet(spark, fixture("media_px_adam7"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "png_rgb_sum_batches"), _RGB_SUM_SCHEMA,
     ).orderBy("doc_id")
@@ -1725,7 +1725,7 @@ def llm_multimodal_audio_stereo(spark, sf_dir):
     channel sample hash-mismatches. Kernel parses via the MODULE
     parser (parse_wav_multi) — one tested chunk walker, no inline
     twin."""
-    df = spark.read.parquet(fixture("media_audio_stereo"))
+    df = read_parquet(spark, fixture("media_audio_stereo"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "audio_stereo_batches"),
         "doc_id long, rate int, n_samples long, "
@@ -1799,7 +1799,7 @@ def llm_multimodal_pixels_jpeg_progressive(spark, sf_dir):
     tested implementation, hypothesis-round-tripped over random
     coefficient blocks at both 1 and 3 components."""
 
-    df = spark.read.parquet(fixture("media_jpeg_prog"))
+    df = read_parquet(spark, fixture("media_jpeg_prog"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "jpeg_prog_batches"), _RGB_SUM_SCHEMA,
     ).orderBy("doc_id")
@@ -1893,7 +1893,7 @@ def llm_multimodal_pixels_jpeg_prog_sa(spark, sf_dir):
     (jpeg_decode_progressive — one implementation for both
     progressive profiles)."""
 
-    df = spark.read.parquet(fixture("media_jpeg_prog_sa"))
+    df = read_parquet(spark, fixture("media_jpeg_prog_sa"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "jpeg_prog_sa_batches"),
         "doc_id long, width int, height int, al int, "
@@ -1966,7 +1966,7 @@ def llm_multimodal_pixels_gif(spark, sf_dir):
     through the LZW pair, including dictionary-reset and low-entropy
     (deep dictionary) regimes."""
 
-    df = spark.read.parquet(fixture("media_gif"))
+    df = read_parquet(spark, fixture("media_gif"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "gif_px_batches"), _RGB_SUM_SCHEMA,
     ).orderBy("doc_id")
@@ -2052,7 +2052,7 @@ def llm_multimodal_framesample_gif(spark, sf_dir):
     wrong frame boundary, palette entry, or LZW reset flips a sum.
     Kernel decodes via the MODULE codec (gif_decode_frames)."""
 
-    df = spark.read.parquet(fixture("media_gif_anim"))
+    df = read_parquet(spark, fixture("media_gif_anim"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "gif_frame_batches"),
         "doc_id long, n_frames int, frame_idx int, "
@@ -2174,7 +2174,7 @@ def llm_multimodal_resize_pixels(spark, sf_dir):
     ViT/CLIP preprocess stage (decode -> resize -> tensorize) with the
     tensorize step being the resized buffer itself."""
 
-    df = spark.read.parquet(fixture("media_px"))
+    df = read_parquet(spark, fixture("media_px"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "png_resize_batches"),
         "doc_id long, src_w int, src_h int, dst_w int, dst_h int, "
@@ -2251,8 +2251,8 @@ def _mixed_phash_frame(spark):
     localCheckpoint'd because both the broadcast decision
     (llm_multimodal_phash_mixed) and the MIH banded index
     (llm_multimodal_phash_banded) consume it twice."""
-    png = spark.read.parquet(fixture("media_px"))
-    jpg = spark.read.parquet(fixture("media_jpeg")).select(
+    png = read_parquet(spark, fixture("media_px"))
+    jpg = read_parquet(spark, fixture("media_jpeg")).select(
         (F.col("doc_id") + 1000).alias("doc_id"), "payload"
     )
     # the cross-format duplicate: a real JPEG on a 64x72 canvas whose
@@ -2437,6 +2437,10 @@ def vad_energy_batches(batches):
         yield pd.DataFrame(out, columns=["doc_id", "f", "energy"])
 
 
+# vad_energy_batches' output: the frame-energy frame vad_rollup reads.
+VAD_FRAME_SCHEMA = "doc_id bigint, f bigint, energy bigint"
+
+
 def vad_rollup(fe):
     """Segmentation + per-clip rollup over the frame-energy frame —
     shared by llm_multimodal_audio_vad and stream_audio_vad so the
@@ -2567,10 +2571,10 @@ def llm_multimodal_audio_vad(spark, sf_dir):
     frames op, parallelism = clip count. Kernel and rollup are the
     module-level vad_energy_batches / vad_rollup, shared verbatim
     with the streaming twin stream_audio_vad."""
-    df = spark.read.parquet(fixture("media_audio"))
+    df = read_parquet(spark, fixture("media_audio"))
     fe = df.mapInPandas(
         repo_kernel(__name__, "vad_energy_batches"),
-        schema="doc_id bigint, f bigint, energy bigint",
+        schema=VAD_FRAME_SCHEMA,
     )
     return vad_rollup(fe)
 
@@ -2664,7 +2668,7 @@ def llm_multimodal_pixels_palette(spark, sf_dir):
     parallelism = image count, memory = one decoded image per row at
     a time. Kernel is the module-level palette_px_batches via
     repo_kernel (worker-side repo-root injection)."""
-    df = spark.read.parquet(fixture("media_px_palette"))
+    df = read_parquet(spark, fixture("media_px_palette"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "palette_px_batches"),
         "doc_id long, width int, height int, n_palette int, "
@@ -2772,7 +2776,7 @@ def llm_multimodal_audio_multichannel(spark, sf_dir):
     fanned out, one Arrow-batched parse pass emitting (clip, channel)
     rows, no shuffle before the presentation sort; parallelism = clip
     count."""
-    df = spark.read.parquet(fixture("media_audio_multi"))
+    df = read_parquet(spark, fixture("media_audio_multi"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "audio_multi_batches"),
         "doc_id long, fmt_code int, n_channels int, rate int, ch int, "
@@ -2879,7 +2883,7 @@ def llm_multimodal_pixels_palette_alpha(spark, sf_dir):
     Scale: same single-pass Arrow-batched decode DAG as the other
     image ops — no shuffle before the presentation sort, parallelism =
     image count."""
-    df = spark.read.parquet(fixture("media_px_palette_trns"))
+    df = read_parquet(spark, fixture("media_px_palette_trns"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "palette_rgba_batches"),
         "doc_id long, width int, height int, n_palette int, n_trns int, "
@@ -2950,7 +2954,7 @@ def llm_multimodal_pixels_bmp(spark, sf_dir):
     Scale: one Arrow batch per task, pure per-row work, no shuffle
     before the final passthrough — the decode stage of a multimodal
     ingest DAG; parallelism is the file count."""
-    src = spark.read.parquet(fixture("media_bmp"))
+    src = read_parquet(spark, fixture("media_bmp"))
     return src.mapInPandas(
         repo_kernel(__name__, "bmp_px_batches"),
         "doc_id long, width int, height int, "
@@ -3038,7 +3042,7 @@ def llm_multimodal_framesample_avi(spark, sf_dir):
     work, no shuffle until the orderBy — scales with executor count
     exactly like the image decoders."""
 
-    df = spark.read.parquet(fixture("media_avi"))
+    df = read_parquet(spark, fixture("media_avi"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "avi_frame_batches"),
         "doc_id long, n_frames int, frame_idx int, luma_sum long",
@@ -3137,7 +3141,7 @@ def llm_multimodal_scene_detect(spark, sf_dir):
     and the cut rows are O(frames), a ~1000x reduction before any
     downstream frame sampling."""
 
-    df = spark.read.parquet(fixture("media_scene_avi"))
+    df = read_parquet(spark, fixture("media_scene_avi"))
     return fan_out(df).mapInPandas(
         repo_kernel(__name__, "avi_scene_batches"),
         "doc_id long, frame_idx int, mean_delta_milli long, is_cut boolean",
@@ -3235,7 +3239,7 @@ def llm_multimodal_audio_spectral(spark, sf_dir):
     mapInPandas, numpy strided reshape per clip (the three bins are
     sign-mask dot products, vectorized), no shuffle before the tiny
     per-clip aggregate."""
-    df = spark.read.parquet(fixture("media_audio"))
+    df = read_parquet(spark, fixture("media_audio"))
     return df.mapInPandas(
         repo_kernel(__name__, "audio_spectral_batches"),
         schema=(

@@ -155,14 +155,13 @@ def llm_sim_knn(spark, sf_dir):
 
 
 _TARGET_BLOCK_ROWS = 512  # fixed block SIZE; block COUNT scales with n
-_NROWS_CACHE: dict[str, int] = {}  # sf_dir -> embeddings row count (immutable testdata)
 
 
 def _n_embeddings(spark, sf_dir) -> int:
     """Cached embeddings row count (stats.embed_stats) — the corpus
     statistic every ANN parameter derivation keys on. One tiny
-    aggregate per (session, sf_dir) instead of a count job at every
-    query construction (r8: the real no-mid-plan-action gate)."""
+    aggregate per embeddings file version instead of a count job at
+    every query construction (r8: the real no-mid-plan-action gate)."""
     from hdfs_mr_spark import stats as corpus_stats
 
     return corpus_stats.embed_stats(spark, sf_dir)[0]
@@ -198,11 +197,9 @@ def blocked_cosine_pairs(spark, sf_dir, threshold=0.35, nblocks=None):
     if nblocks is None:
         import math
 
-        n = _NROWS_CACHE.get(sf_dir)
-        if n is None:
-            # cached corpus stat (stats.embed_stats) — both kernel
-            # consumers (llm_sim_pairs, llm_dedup_embed) share it
-            n = _NROWS_CACHE[sf_dir] = _n_embeddings(spark, sf_dir)
+        # cached corpus stat (stats.embed_stats) — both kernel
+        # consumers (llm_sim_pairs, llm_dedup_embed) share it
+        n = _n_embeddings(spark, sf_dir)
         # size ceiling: blocks never exceed _TARGET_BLOCK_ROWS rows;
         # parallelism floor: enough triangular units (~nblocks^2/2) to
         # feed every core twice even when n is small — shrinking blocks

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from hdfs_mr_spark import stats as corpus_stats
 from hdfs_mr_spark.exprs import fold_by_key
-from hdfs_mr_spark.io import fan_out, table
+from hdfs_mr_spark.io import fan_out, file_key, table
 from hdfs_mr_spark.registry import query
 
 _FAM = "2.11 llm text analysis"
@@ -2456,10 +2456,11 @@ def llm_bpe_train_rounds(spark, sf_dir):
 def _bpe_train(spark, sf_dir, k: int):
     """Shared BPE trainer (llm_bpe_train_rounds' driver loop, factored
     so llm_bpe_apply can load the same merge table): returns the list
-    of (round, left, right, merged, n) rows. Cached per (session,
-    sf_dir) — in production the merge table is a stored model file,
-    not something every encode job retrains."""
-    key = (spark.sparkContext.applicationId, str(sf_dir), k)
+    of (round, left, right, merged, n) rows. Cached per (documents
+    file version, k), keyed like the corpus stats — in production the
+    merge table is a stored model file, not something every encode job
+    retrains."""
+    key = (file_key(f"{sf_dir}/documents.parquet"), k)
     if key in _BPE_CACHE:
         return _BPE_CACHE[key]
     a_m, b_m = chr(1), chr(2)

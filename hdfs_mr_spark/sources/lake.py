@@ -49,7 +49,7 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from hdfs_mr_spark.io import table
+from hdfs_mr_spark.io import read_parquet, table
 from hdfs_mr_spark.registry import query
 from hdfs_mr_spark.sources.scans import _fixture_dir, _publish_store
 
@@ -226,7 +226,7 @@ def _write_files(df, data_dir: Path, n_files: int = 2) -> list[str]:
 
 def _read_snapshot(spark, root: Path, as_of: int | None = None):
     files = _snapshot_files(root, as_of)
-    return spark.read.parquet(*[str(root / f) for f in files])
+    return read_parquet(spark, *[str(root / f) for f in files])
 
 
 def _base_commits(spark, sf_dir, root: Path) -> None:

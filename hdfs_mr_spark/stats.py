@@ -5,11 +5,18 @@ count N, whitespace-token total, distinct-token vocabulary size — and
 each used to run its own ad-hoc ``.count()`` job at DataFrame
 construction time. The numbers are properties of the CORPUS, not of the
 query: at 100 TB every one of those jobs is a redundant full scan. This
-module computes each statistic ONCE per (session, sf_dir) and serves
-every caller from the cache — the query-at-a-time analogue of reading
-persisted table statistics (``dq_profile_columns`` is the operator that
-would maintain them as a stats table; threading is the same pattern as
-``_ann_params``).
+module computes each statistic ONCE per version of its source table and
+serves every caller from the cache — the query-at-a-time analogue of
+reading persisted table statistics (``dq_profile_columns`` is the
+operator that would maintain them as a stats table; threading is the
+same pattern as ``_ann_params``).
+
+A version is the table catalog's file identity
+(:func:`hdfs_mr_spark.io.file_key`: realpath, size, mtime_ns of
+``documents.parquet`` or ``embeddings.parquet``), so a rewritten corpus
+is counted afresh and an unchanged one keeps its statistics across
+SparkContext restarts. Like the catalog, the key needs a file table; a
+directory table raises ``ValueError``.
 
 Values are exact (no sampling) so oracle parity is unaffected: the
 literals that reach the plan are identical to what the per-query counts
@@ -20,13 +27,23 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hdfs_mr_spark.io import table
+from hdfs_mr_spark.io import file_key, table
 
 _CACHE: dict[tuple, int] = {}
 
+# The table each statistic is computed from.
+_SOURCE = {
+    "n_docs": "documents",
+    "n_tokens": "documents",
+    "max_shingle_df": "documents",
+    "vocab_size": "documents",
+    "n_embeddings": "embeddings",
+    "embed_dim": "embeddings",
+}
+
 
 def _key(spark, sf_dir: str, stat: str) -> tuple:
-    return (spark.sparkContext.applicationId, str(sf_dir), stat)
+    return (file_key(f"{sf_dir}/{_SOURCE[stat]}.parquet"), stat)
 
 
 def _doc_counts(spark, sf_dir: str) -> None:
@@ -63,11 +80,12 @@ def n_tokens(spark, sf_dir: str) -> int:
 
 def embed_stats(spark, sf_dir: str) -> tuple[int, int]:
     """(row count, embedding dimension) of the embeddings table,
-    cached once per (session, sf_dir) — every ANN operator derives its
-    parameters (cells/nprobe/bits via _ann_params, LSH table count,
-    PQ fine-codebook size) from these two corpus properties, and each
-    used to run its own count/agg job at construction time. At 100 TB
-    they are persisted table statistics; one tiny aggregate fills both."""
+    cached once per embeddings file version — every ANN operator
+    derives its parameters (cells/nprobe/bits via _ann_params, LSH
+    table count, PQ fine-codebook size) from these two corpus
+    properties, and each used to run its own count/agg job at
+    construction time. At 100 TB they are persisted table statistics;
+    one tiny aggregate fills both."""
     kn = _key(spark, sf_dir, "n_embeddings")
     kd = _key(spark, sf_dir, "embed_dim")
     if kn not in _CACHE:

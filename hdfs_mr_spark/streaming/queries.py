@@ -1221,7 +1221,11 @@ def stream_audio_vad(spark, sf_dir):
 
     from pyspark.sql import types as T
 
-    from hdfs_mr_spark.functions.udfs import repo_kernel, vad_rollup
+    from hdfs_mr_spark.functions.udfs import (
+        VAD_FRAME_SCHEMA,
+        repo_kernel,
+        vad_rollup,
+    )
 
     src = _media_stream_src("media_audio")
     schema = T.StructType([
@@ -1236,7 +1240,7 @@ def stream_audio_vad(spark, sf_dir):
         # (driver may run from any cwd — see udfs.repo_kernel)
         batch_df.mapInPandas(
             repo_kernel("hdfs_mr_spark.functions.udfs", "vad_energy_batches"),
-            schema="doc_id bigint, f bigint, energy bigint",
+            schema=VAD_FRAME_SCHEMA,
         ).write.mode("append").parquet(out)
 
     s = (
@@ -1255,8 +1259,11 @@ def stream_audio_vad(spark, sf_dir):
     )
     q.awaitTermination(300)
     shutil.rmtree(ckpt, ignore_errors=True)
-    fe = spark.read.parquet(out)
-    return vad_rollup(fe).localCheckpoint()
+    try:
+        fe = spark.read.schema(VAD_FRAME_SCHEMA).parquet(out)
+        return vad_rollup(fe).localCheckpoint()
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -1307,13 +1314,14 @@ def stream_image_decode(spark, sf_dir):
     ])
     out = tempfile.mkdtemp(prefix="hmr_img_out_")
     os.rmdir(out)  # foreachBatch append recreates it
+    out_schema = "doc_id long, width int, height int, sum_px long"
 
     from hdfs_mr_spark.functions.udfs import repo_kernel
 
     def decode_batch(batch_df, batch_id):
         batch_df.mapInPandas(
             repo_kernel("hdfs_mr_spark.functions.udfs", "png_total_batches"),
-            "doc_id long, width int, height int, sum_px long",
+            out_schema,
         ).write.mode("append").parquet(out)
 
     s = (
@@ -1332,7 +1340,13 @@ def stream_image_decode(spark, sf_dir):
     )
     q.awaitTermination(300)
     shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out).orderBy("doc_id").localCheckpoint()
+    try:
+        return (
+            spark.read.schema(out_schema).parquet(out)
+            .orderBy("doc_id").localCheckpoint()
+        )
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 def _docs_stream_src(sf_dir: str) -> str:

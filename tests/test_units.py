@@ -2400,6 +2400,142 @@ def _write_docs(tmp_path, docs):
     )
 
 
+def test_table_catalog_warm_reads_start_no_job(spark):
+    """io.table's catalog: once every table's schema is cached, a second
+    round of table() calls (including the events ts dispatch, which
+    reads the schema) starts no Spark job — no `parquet at` inference."""
+    import uuid
+
+    from hdfs_mr_spark.io import TABLES, table
+    from tests.conftest import SF_SMOKE
+
+    for name in TABLES:
+        table(spark, SF_SMOKE, name)
+    sc = spark.sparkContext
+    group = f"catalog_warm_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "second table() round")
+    try:
+        for name in TABLES:
+            assert table(spark, SF_SMOKE, name).schema.fields
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def _same_size_writers(path, tables):
+    """One writer per pyarrow table; each writes its table to ``path``,
+    padded with schema metadata so that every version has the same
+    byte size, and sets an mtime one second past the file's last one.
+    Only the mtime then tells the versions apart."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    def size(t, pad):
+        pq.write_table(t.replace_schema_metadata({"pad": "x" * pad}), path)
+        return os.path.getsize(path)
+
+    by_size = [{size(t, n): n for n in range(300)} for t in tables]
+    common = min(set.intersection(*(set(m) for m in by_size)))
+    last = [os.stat(path).st_mtime_ns]
+
+    def writer(t, pad):
+        def write():
+            assert size(t, pad) == common
+            last[0] += 1_000_000_000
+            os.utime(path, ns=(last[0], last[0]))
+        return write
+
+    return [writer(t, m[common]) for t, m in zip(tables, by_size)]
+
+
+def test_table_catalog_and_corpus_stats_follow_file_identity(
+    spark, tmp_path, monkeypatch
+):
+    """A documents.parquet rewritten in place (more rows, an extra
+    column, the same byte size, a later mtime) within one application:
+    table() shows the new column, and n_docs, vocab_size and the BPE
+    merge table are recomputed rather than served from the first
+    version's cache entries."""
+    import pyarrow as pa
+
+    from hdfs_mr_spark import stats
+    from hdfs_mr_spark.io import table
+    from hdfs_mr_spark.operators import llm_text
+    from hdfs_mr_spark.sources import scans
+
+    monkeypatch.setattr(scans, "FIXTURE_ROOT", tmp_path / "fixtures")
+    v1 = [(i, "aa bb aa") for i in range(6)]
+    v2 = v1 + [(100 + i, f"cd cd cd e{i}") for i in range(12)]
+    t1 = pa.table({
+        "doc_id": pa.array([d for d, _ in v1], pa.int64()),
+        "text": pa.array([t for _, t in v1], pa.string()),
+    })
+    t2 = pa.table({
+        "doc_id": pa.array([d for d, _ in v2], pa.int64()),
+        "text": pa.array([t for _, t in v2], pa.string()),
+        "lang": pa.array(["en"] * len(v2), pa.string()),
+    })
+    path = str(tmp_path / "documents.parquet")
+    sf = str(tmp_path)
+
+    def snapshot():
+        return (
+            table(spark, sf, "documents").columns,
+            stats.n_docs(spark, sf),
+            stats.vocab_size(spark, sf),
+            llm_text._bpe_train(spark, sf, 2),
+        )
+
+    write1, write2 = _same_size_writers(path, [t1, t2])
+    write1()
+    cols1, nd1, vs1, bpe1 = snapshot()
+    assert (cols1, nd1, vs1) == (["doc_id", "text"], 6, 2)
+    write2()
+    cols2, nd2, vs2, bpe2 = snapshot()
+    assert cols2 == ["doc_id", "text", "lang"]
+    assert (nd2, vs2) == (18, 2 + 1 + 12)
+    # the BPE rows are the second version's: a cold trainer agrees
+    monkeypatch.setattr(llm_text, "_BPE_CACHE", {})
+    assert bpe2 == llm_text._bpe_train(spark, sf, 2) != bpe1
+
+
+def test_table_catalog_keys_on_reader_confs(spark):
+    """The two nanosAsLong values are two catalog entries for the same
+    file: the conf changes the inferred type of a TIMESTAMP(NANOS)
+    column (events.ts), so one schema must never serve the other."""
+    from hdfs_mr_spark import io
+    from tests.conftest import SF_SMOKE
+
+    path = f"{SF_SMOKE}/events.parquet"
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(conf)
+    try:
+        for v in ("true", "false"):
+            spark.conf.set(conf, v)
+            io.read_parquet(spark, path)
+    finally:
+        spark.conf.set(conf, prev)
+    at = io._SCHEMA_CONFS.index(conf)
+    values = {
+        confs[at] for confs, files in io._SCHEMAS
+        if files == (io.file_key(path),)
+    }
+    assert {"true", "false"} <= values
+
+
+def test_table_catalog_refuses_directories(spark, tmp_path):
+    """A directory's mtime does not move when a file inside it is
+    rewritten, so the catalog keys files only."""
+    from hdfs_mr_spark import io
+    from tests.conftest import SF_SMOKE
+
+    with pytest.raises(ValueError, match="not directories"):
+        io.read_parquet(spark, SF_SMOKE)
+    with pytest.raises(ValueError, match="not directories"):
+        io.file_key(str(tmp_path))
+
+
 def test_near_ngram_dispatch_fires_naturally(spark, tmp_path):
     """llm_dedup_near_ngram's df-cap regime switch (VERDICT r8 item 1)
     must fire on the CORPUS STATS alone (no conf, no monkeypatch): a

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Run the local parity gate: every registered query vs its DuckDB oracle.
 
-Usage: python tools/check.py [--sf DIR] [name ...]
+Usage: python tools/check.py [--sf DIR] [--family F] [name ...]
 Mirrors the driver's t2 check (row count + columns + exact values).
 """
 
@@ -18,7 +18,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--family", default=None, help="substring filter on family")
+    ap.add_argument(
+        "--family", default=None,
+        help='one family, named in full ("2.11 llm dedup") or by its '
+             'section number ("2.1"; "2.11" selects all four 2.11 families)',
+    )
     ap.add_argument(
         "--json", default=None, metavar="PATH",
         help="write per-query results as JSON (the CHECK_rN.json artifact)",
@@ -39,7 +43,10 @@ def main() -> int:
     if args.names:
         specs = {k: v for k, v in specs.items() if k in args.names}
     if args.family:
-        specs = {k: v for k, v in specs.items() if args.family in v.family}
+        specs = {
+            k: v for k, v in specs.items()
+            if args.family in (v.family, v.family.split()[0])
+        }
 
     spark = get_spark("parity-check")
     con = oracle_connection(args.sf)
