@@ -241,16 +241,6 @@ def main() -> int:
         # the next query is timed (outside any timed region)
         gc.collect()
         spark.sparkContext._jvm.System.gc()
-        # r14: streaming queries drain into MEMORY-sink temp views
-        # (hmr_stream_*) that pin their full result in the JVM for the
-        # rest of the session — ~35 of them (some 1M rows at sf0.1) had
-        # the full sweep's alphabetic tail (ts_*/win_*) running under
-        # GC pressure, measured 2-6x drift that vanished in isolation
-        # (BENCH_r14_full note). Drop each sink as soon as its query is
-        # timed so late queries run in the same heap as early ones.
-        for tv in spark.catalog.listTables():
-            if tv.name.startswith("hmr_stream_") and tv.isTemporary:
-                spark.catalog.dropTempView(tv.name)
 
     # Cold (reuseIndex off) twins for the PQ family (VERDICT r5 item 9 /
     # ADVICE r5): with reuse on, per-query PQ numbers are execution-order

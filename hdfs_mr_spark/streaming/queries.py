@@ -16,6 +16,17 @@ emissions equals the sealed-window set the oracle replays. Checked sums
 route through the single-rounding decimal kernel (exprs.dsum) like the
 batch aggregates.
 
+Every bounded drain runs through one harness, ``_drain``: it names the
+query from one counter, pins the session conf the site asks for
+(``_SHUFFLE8``, ``_ROCKS_CONF``) and restores it, starts the query and
+waits for it, stops it in every case, and for a memory sink resolves
+the result table and drops its temp view. A drain that does not finish
+within its timeout raises ``StreamDrainTimeout`` (query name and
+micro-batches completed) instead of returning a partial sink. Temp
+space comes from ``_drain_root``: one ``hmr_*`` dir under the system
+temp dir, with checkpoints and sinks as subpaths, removed when the
+``with`` exits — so a sink read back from it is materialized inside.
+
 State at scale: windows/dedup keys live in the executor StateStore;
 watermarks bound that state. Session windows use the native
 session_window operator (no custom state handler needed).
@@ -26,6 +37,8 @@ from __future__ import annotations
 import itertools
 import shutil
 import tempfile
+from contextlib import contextmanager
+from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import Window
@@ -207,35 +220,102 @@ def _event_stream(spark, sf_dir, multi: bool = True):
     return raw
 
 
-def _run_to_memory(df, mode: str):
-    """Drain the bounded stream into a memory sink; return the result table.
+# state-store partition count is pinned to the shuffle-partition conf at
+# a stream's FIRST run; per-partition store open/commit dominates these
+# bounded drains (fixture state is tiny), so they run with 8 shuffle
+# partitions — measured ~2x on the stream-stream join. On a real cluster
+# this knob is sized to state volume, not overhead.
+_SHUFFLE8 = {"spark.sql.shuffle.partitions": "8"}
+_ROCKS_CONF = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb."
+    "changelogCheckpointing.enabled": "true",
+    **_SHUFFLE8,
+}
 
-    State-store partition count is pinned to the shuffle-partition conf at
-    the stream's FIRST run; per-partition store open/commit dominates these
-    bounded drains (fixture state is tiny), so the drain runs with 8
-    shuffle partitions and the session conf is restored afterwards —
-    measured ~2x on the stream-stream join. On a real cluster this knob is
-    sized to state volume, not overhead."""
-    spark = df.sparkSession
-    name = f"hmr_stream_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+
+class StreamDrainTimeout(RuntimeError):
+    """A bounded drain did not finish within its timeout; the query was
+    stopped."""
+
+    def __init__(self, query: str, batches: int, timeout: float):
+        super().__init__(
+            f"stream drain {query} did not finish within {timeout} s "
+            f"({batches} micro-batches completed)"
         )
-        q.awaitTermination(300)
+        self.query = query
+
+
+@dataclass(frozen=True)
+class Drain:
+    name: str
+    progress: list  # q.recentProgress
+    table: object = None  # memory sink only: the resolved DataFrame
+
+
+@contextmanager
+def _drain_root(prefix: str = "hmr_drain_"):
+    """One temp dir for a drain's checkpoint and sink subpaths, removed
+    when the ``with`` exits (also on error)."""
+    root = Path(tempfile.mkdtemp(prefix=prefix))
+    try:
+        yield root
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = spark.table(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _drain(writer, ckpt=None, *, conf=None, timeout=300,
+           all_available=False) -> Drain:
+    """Run the bounded stream behind ``writer`` (a DataStreamWriter with
+    its sink set) to completion.
+
+    ``ckpt`` is the checkpoint path, a subpath of a ``_drain_root`` the
+    caller holds when a sink or a restart outlives this drain; by
+    default the checkpoint lives in a private root removed on return.
+    ``conf`` is applied for the drain and restored after it. The drain
+    triggers availableNow and waits ``timeout`` seconds; on timeout it
+    stops the query and raises StreamDrainTimeout. ``all_available``
+    keeps the default trigger and waits with processAllAvailable()
+    instead — a SimpleDataSourceStreamReader drains only its first
+    micro-batch under availableNow. A memory sink's view is resolved
+    into ``Drain.table`` and dropped, so no drain leaves a view behind."""
+    if ckpt is None:
+        with _drain_root() as root:
+            return _drain(writer, root / "ckpt", conf=conf, timeout=timeout,
+                          all_available=all_available)
+    spark = writer._spark
+    name = f"hmr_stream_{next(_COUNTER)}"
+    conf = conf or {}
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        writer = writer.queryName(name).option("checkpointLocation", str(ckpt))
+        if not all_available:
+            writer = writer.trigger(availableNow=True)
+        q = writer.start()
+        try:
+            if all_available:
+                q.processAllAvailable()
+            elif not q.awaitTermination(timeout):
+                batches = len({p["batchId"] for p in q.recentProgress})
+                raise StreamDrainTimeout(name, batches, timeout)
+            progress = list(q.recentProgress)
+        finally:
+            q.stop()
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    table = None
+    if spark.catalog.tableExists(name):
+        table = spark.table(name)
+        spark.catalog.dropTempView(name)
+    return Drain(name, progress, table)
 
 
 @query(
@@ -253,7 +333,10 @@ def scan_stream(spark, sf_dir):
     s = _event_stream(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    return _run_to_memory(s, "append")
+    return _drain(
+        s.writeStream.format("memory").outputMode("append"),
+        conf=_SHUFFLE8,
+    ).table
 
 
 @query(
@@ -284,7 +367,10 @@ def stream_tumbling(spark, sf_dir):
             F.col("window.start").alias("window_start"), "event_type", "n", "total_value"
         )
     )
-    return _run_to_memory(agg, "complete").orderBy("window_start", "event_type")
+    return _drain(
+        agg.writeStream.format("memory").outputMode("complete"),
+        conf=_SHUFFLE8,
+    ).table.orderBy("window_start", "event_type")
 
 
 @query(
@@ -312,7 +398,10 @@ def stream_sliding(spark, sf_dir):
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("window_start"), "event_type", "n")
     )
-    return _run_to_memory(agg, "complete").orderBy("window_start", "event_type")
+    return _drain(
+        agg.writeStream.format("memory").outputMode("complete"),
+        conf=_SHUFFLE8,
+    ).table.orderBy("window_start", "event_type")
 
 
 @query(
@@ -363,7 +452,10 @@ def stream_session(spark, sf_dir):
             "total_value",
         )
     )
-    return _run_to_memory(agg, "complete").orderBy("user_id", "session_start")
+    return _drain(
+        agg.writeStream.format("memory").outputMode("complete"),
+        conf=_SHUFFLE8,
+    ).table.orderBy("user_id", "session_start")
 
 
 @query(
@@ -399,7 +491,10 @@ def stream_watermark_late(spark, sf_dir):
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("window_start"), "event_type", "n")
     )
-    return _run_to_memory(agg, "append").orderBy("window_start", "event_type")
+    return _drain(
+        agg.writeStream.format("memory").outputMode("append"),
+        conf=_SHUFFLE8,
+    ).table.orderBy("window_start", "event_type")
 
 
 @query(
@@ -420,7 +515,10 @@ def stream_dedup(spark, sf_dir):
         .dropDuplicates(["event_id"])
         .select("event_id", "event_type", "user_id")
     )
-    return _run_to_memory(deduped, "append")
+    return _drain(
+        deduped.writeStream.format("memory").outputMode("append"),
+        conf=_SHUFFLE8,
+    ).table
 
 
 @query(
@@ -441,7 +539,10 @@ def stream_static_join(spark, sf_dir):
     joined = s.join(
         F.broadcast(c), s.user_id == c.c_custkey
     ).select("event_id", "user_id", "event_type", "c_name", "c_mktsegment")
-    return _run_to_memory(joined, "append")
+    return _drain(
+        joined.writeStream.format("memory").outputMode("append"),
+        conf=_SHUFFLE8,
+    ).table
 
 
 @query(
@@ -458,36 +559,28 @@ ORDER BY event_type
 def stream_foreachbatch(spark, sf_dir):
     """Micro-batch sink via foreachBatch -> parquet, then re-read and
     aggregate: proves the custom-sink path loses nothing (the re-read
-    aggregate hash-matches the batch oracle)."""
-    import os
-
-    out = tempfile.mkdtemp(prefix="hmr_fb_out_")
-    os.rmdir(out)  # foreachBatch append recreates it
-
-    def sink(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(out)
-
+    aggregate hash-matches the batch oracle). The sink dir exists up
+    front and is read back with the stream's schema, so a drain of zero
+    micro-batches reads as an empty table."""
     s = _event_stream(spark, sf_dir).select("event_id", "event_type", "value")
-    name = f"hmr_fb_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_")
-    q = (
-        s.writeStream.foreachBatch(sink)
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out)
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            dsum(F.col("value")).alias("total_value"),
+    with _drain_root("hmr_fb_") as root:
+        out = root / "out"
+        out.mkdir()
+
+        def sink(batch_df, batch_id):
+            batch_df.write.mode("append").parquet(str(out))
+
+        _drain(s.writeStream.foreachBatch(sink), root / "ckpt")
+        return (
+            spark.read.schema(s.schema).parquet(str(out))
+            .groupBy("event_type")
+            .agg(
+                F.count("*").alias("n"),
+                dsum(F.col("value")).alias("total_value"),
+            )
+            .orderBy("event_type")
+            .localCheckpoint()  # materialize before the sink dir is removed
         )
-        .orderBy("event_type")
-    )
 
 
 @query(
@@ -552,7 +645,10 @@ def stream_stateful_custom(spark, sf_dir):
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    return _run_to_memory(out, "append").orderBy("user_id")
+    return _drain(
+        out.writeStream.format("memory").outputMode("append"),
+        conf=_SHUFFLE8,
+    ).table.orderBy("user_id")
 
 
 @query(
@@ -605,7 +701,10 @@ def stream_stream_join(spark, sf_dir):
         & (F.col("view_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
         & (F.col("view_ts") <= F.col("purchase_ts")),
     ).select("purchase_id", "view_id", "user_id", "purchase_ts", "view_ts")
-    return _run_to_memory(joined, "append").orderBy("purchase_id", "view_id")
+    return _drain(
+        joined.writeStream.format("memory").outputMode("append"),
+        conf=_SHUFFLE8,
+    ).table.orderBy("purchase_id", "view_id")
 
 
 @query(
@@ -633,7 +732,10 @@ def stream_update_mode(spark, sf_dir):
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("window_start"), "event_type", "n")
     )
-    return _run_to_memory(agg, "update").orderBy("window_start", "event_type")
+    return _drain(
+        agg.writeStream.format("memory").outputMode("update"),
+        conf=_SHUFFLE8,
+    ).table.orderBy("window_start", "event_type")
 
 
 def _event_halves(sf_dir: str):
@@ -673,42 +775,29 @@ def stream_incremental_restart(spark, sf_dir):
     covers ALL data (aggregate state comes from the state store) — which
     is exactly what the all-events batch oracle asserts. At 100 TB this
     is the daily-ingest shape: each run pays only for new partitions."""
-    import os
-    import shutil as sh
-
     h1, h2 = _event_halves(sf_dir)
-    src = tempfile.mkdtemp(prefix="hmr_incr_src_")
-    ckpt = tempfile.mkdtemp(prefix="hmr_incr_ckpt_")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     kind = _events_ts_kind(sf_dir)
     if kind == "nanos":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-    def drain():
-        raw = spark.readStream.schema(_events_schema(kind)).parquet(src)
-        agg = raw.groupBy("event_type").agg(F.count("*").alias("n"))
-        name = f"hmr_incr_{next(_COUNTER)}"
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        return name
+    with _drain_root("hmr_incr_") as root:
+        src = root / "src"
+        src.mkdir()
 
-    sh.copy(h1, os.path.join(src, "h1.parquet"))
-    drain()  # first run: half the data, state persisted to the checkpoint
-    sh.copy(h2, os.path.join(src, "h2.parquet"))
-    name = drain()  # restart: reads ONLY h2, emits state over h1+h2
-    return spark.table(name).orderBy("event_type")
+        def drain():
+            raw = spark.readStream.schema(_events_schema(kind)).parquet(str(src))
+            agg = raw.groupBy("event_type").agg(F.count("*").alias("n"))
+            return _drain(
+                agg.writeStream.format("memory").outputMode("complete"),
+                root / "ckpt", conf=_SHUFFLE8,
+            ).table
+
+        shutil.copy(h1, src / "h1.parquet")
+        drain()  # first run: half the data, state persisted to the checkpoint
+        shutil.copy(h2, src / "h2.parquet")
+        # restart: reads ONLY h2, emits state over h1+h2
+        return drain().orderBy("event_type")
 
 
 @query(
@@ -766,7 +855,10 @@ def stream_chained_agg(spark, sf_dir):
             "n_events", "n_active_quarters", "peak_quarter_events",
         )
     )
-    return _run_to_memory(hourly, "append").orderBy("hour_start")
+    return _drain(
+        hourly.writeStream.format("memory").outputMode("append"),
+        conf=_SHUFFLE8,
+    ).table.orderBy("hour_start")
 
 
 @query(
@@ -791,40 +883,26 @@ def stream_exactly_once_sink(spark, sf_dir):
     to retry at 100 TB: a failed orchestrator can always just run the
     job again. (foreachBatch, by contrast, is at-least-once unless the
     user dedupes — covered by stream_foreachbatch.)"""
-    import os
+    with _drain_root("hmr_eo_") as root:
+        out = str(root / "out")
 
-    # one temp root, sink/checkpoint as subpaths (no mkdtemp+rmdir TOCTOU),
-    # removed wholesale after the result is materialized — sweeps no
-    # longer leak /tmp/hmr_eo_* dirs (ADVICE r3)
-    root = tempfile.mkdtemp(prefix="hmr_eo_")
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
+        def drain():
+            s = _event_stream(spark, sf_dir).select("event_id", "event_type", "value")
+            _drain(s.writeStream.format("parquet").option("path", out),
+                   root / "ckpt")
 
-    def drain():
-        s = _event_stream(spark, sf_dir).select("event_id", "event_type", "value")
-        q = (
-            s.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        drain()
+        drain()  # rerun with the same checkpoint: must commit zero new rows
+        return (
+            spark.read.parquet(out)
+            .groupBy("event_type")
+            .agg(
+                F.count("*").alias("n"),
+                dsum(F.col("value")).alias("total_value"),
+            )
+            .orderBy("event_type")
+            .localCheckpoint()  # materialize before the sink dir is removed
         )
-        q.awaitTermination(300)
-
-    drain()
-    drain()  # rerun with the same checkpoint: must commit zero new rows
-    res = (
-        spark.read.parquet(out)
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            dsum(F.col("value")).alias("total_value"),
-        )
-        .orderBy("event_type")
-        .localCheckpoint()  # materialize before the sink dir is removed
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return res
 
 
 @query(
@@ -891,7 +969,10 @@ def stream_stream_left_outer(spark, sf_dir):
         & (F.col("view_ts") <= F.col("purchase_ts")),
         "left_outer",
     ).select("purchase_id", "view_id", "user_id", "purchase_ts")
-    drained = _run_to_memory(joined, "append")
+    drained = _drain(
+        joined.writeStream.format("memory").outputMode("append"),
+        conf=_SHUFFLE8,
+    ).table
     from hdfs_mr_spark.io import table
 
     seal = (
@@ -942,7 +1023,10 @@ def stream_windowed_topk(spark, sf_dir):
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("window_start"), "user_id", "n")
     )
-    sink = _run_to_memory(counts, "complete")
+    sink = _drain(
+        counts.writeStream.format("memory").outputMode("complete"),
+        conf=_SHUFFLE8,
+    ).table
     w = Window.partitionBy("window_start").orderBy(
         F.col("n").desc(), F.col("user_id").asc()
     )
@@ -985,68 +1069,50 @@ def stream_cdc_upsert(spark, sf_dir):
     state table is partitioned by key-hash and each merge rewrites only
     partitions the batch touches (dynamic partition overwrite —
     sink_dynamic_overwrite demonstrates the primitive)."""
-    import os
-
-    root = tempfile.mkdtemp(prefix="hmr_cdc_state_")
     latest_dir: dict[str, str | None] = {"path": None}
+    s = _event_stream(spark, sf_dir).select("user_id", "ts", "event_id", "value")
+    with _drain_root("hmr_cdc_") as root:
 
-    def merge(batch_df, batch_id):
-        b = batch_df.select("user_id", "ts", "event_id", "value")
-        prev = latest_dir["path"]
-        if prev is not None:
-            b = batch_df.sparkSession.read.parquet(prev).unionByName(b)
-        merged = (
-            b.groupBy("user_id")
-            .agg(F.max(F.struct("ts", "event_id", "value")).alias("m"))
+        def merge(batch_df, batch_id):
+            b = batch_df.select("user_id", "ts", "event_id", "value")
+            prev = latest_dir["path"]
+            if prev is not None:
+                b = batch_df.sparkSession.read.parquet(prev).unionByName(b)
+            merged = (
+                b.groupBy("user_id")
+                .agg(F.max(F.struct("ts", "event_id", "value")).alias("m"))
+                .select(
+                    "user_id",
+                    F.col("m.ts").alias("ts"),
+                    F.col("m.event_id").alias("event_id"),
+                    F.col("m.value").alias("value"),
+                )
+            )
+            new_dir = str(root / f"v{batch_id}")
+            merged.write.mode("overwrite").parquet(new_dir)
+            latest_dir["path"] = new_dir
+
+        _drain(s.writeStream.foreachBatch(merge), root / "ckpt")
+        if latest_dir["path"] is None:
+            # zero micro-batches (empty source slice): the upsert state is
+            # legitimately empty — emit the empty keyed frame, same schema
+            return (
+                s.sparkSession.createDataFrame(
+                    [], "user_id bigint, last_ts timestamp, "
+                        "last_event_id bigint, last_value double"
+                )
+            )
+        return (
+            spark.read.parquet(latest_dir["path"])
             .select(
                 "user_id",
-                F.col("m.ts").alias("ts"),
-                F.col("m.event_id").alias("event_id"),
-                F.col("m.value").alias("value"),
+                F.col("ts").alias("last_ts"),
+                F.col("event_id").alias("last_event_id"),
+                F.col("value").alias("last_value"),
             )
+            .orderBy("user_id")
+            .localCheckpoint()
         )
-        new_dir = os.path.join(root, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(new_dir)
-        latest_dir["path"] = new_dir
-
-    s = _event_stream(spark, sf_dir).select("user_id", "ts", "event_id", "value")
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_")
-    q = (
-        s.writeStream.foreachBatch(merge)
-        .queryName(f"hmr_cdc_{next(_COUNTER)}")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        # timed-out drain: stop before reading state, or the final read
-        # races a version still being written
-        q.stop()
-        q.awaitTermination(60)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    if latest_dir["path"] is None:
-        # zero micro-batches (empty source slice): the upsert state is
-        # legitimately empty — emit the empty keyed frame, same schema
-        shutil.rmtree(root, ignore_errors=True)
-        return (
-            s.sparkSession.createDataFrame(
-                [], "user_id bigint, last_ts timestamp, "
-                    "last_event_id bigint, last_value double"
-            )
-        )
-    final = (
-        spark.read.parquet(latest_dir["path"])
-        .select(
-            "user_id",
-            F.col("ts").alias("last_ts"),
-            F.col("event_id").alias("last_event_id"),
-            F.col("value").alias("last_value"),
-        )
-        .orderBy("user_id")
-        .localCheckpoint()
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return final
 
 
 @query(
@@ -1139,21 +1205,10 @@ def stream_python_datasource(spark, sf_dir):
             F.max("val").cast("bigint").alias("val_max"),
         )
     )
-    name = f"hmr_pyds_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name).orderBy("part").localCheckpoint()
+    return _drain(
+        agg.writeStream.outputMode("complete").format("memory"),
+        all_available=True,
+    ).table.orderBy("part").localCheckpoint()
 
 
 def _media_stream_src(name: str) -> str:
@@ -1217,8 +1272,6 @@ def stream_audio_vad(spark, sf_dir):
     accumulated frame store; state lives in the sink (frames parquet),
     not the StateStore, so the drain is embarrassingly parallel per
     shard."""
-    import os
-
     from pyspark.sql import types as T
 
     from hdfs_mr_spark.functions.udfs import (
@@ -1232,38 +1285,25 @@ def stream_audio_vad(spark, sf_dir):
         T.StructField("doc_id", T.LongType()),
         T.StructField("payload", T.BinaryType()),
     ])
-    out = tempfile.mkdtemp(prefix="hmr_vad_out_")
-    os.rmdir(out)  # foreachBatch append recreates it
-
-    def sink(batch_df, batch_id):
-        # repo_kernel resolves the shared module kernel ON the workers
-        # (driver may run from any cwd — see udfs.repo_kernel)
-        batch_df.mapInPandas(
-            repo_kernel("hdfs_mr_spark.functions.udfs", "vad_energy_batches"),
-            schema=VAD_FRAME_SCHEMA,
-        ).write.mode("append").parquet(out)
-
     s = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    name = f"hmr_vad_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_")
-    q = (
-        s.writeStream.foreachBatch(sink)
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    try:
+    with _drain_root("hmr_vad_") as root:
+        out = str(root / "out")
+
+        def sink(batch_df, batch_id):
+            # repo_kernel resolves the shared module kernel ON the workers
+            # (driver may run from any cwd — see udfs.repo_kernel)
+            batch_df.mapInPandas(
+                repo_kernel("hdfs_mr_spark.functions.udfs", "vad_energy_batches"),
+                schema=VAD_FRAME_SCHEMA,
+            ).write.mode("append").parquet(out)
+
+        _drain(s.writeStream.foreachBatch(sink), root / "ckpt")
         fe = spark.read.schema(VAD_FRAME_SCHEMA).parquet(out)
         return vad_rollup(fe).localCheckpoint()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -1303,8 +1343,6 @@ def stream_image_decode(spark, sf_dir):
     Scale: arriving media shards decode keyed on arrival — the decode
     cost rides the ingest stream instead of a giant backfill; state
     lives in the sink, parallelism = shard count."""
-    import os
-
     from pyspark.sql import types as T
 
     src = _media_stream_src("media_px")
@@ -1312,41 +1350,29 @@ def stream_image_decode(spark, sf_dir):
         T.StructField("doc_id", T.LongType()),
         T.StructField("payload", T.BinaryType()),
     ])
-    out = tempfile.mkdtemp(prefix="hmr_img_out_")
-    os.rmdir(out)  # foreachBatch append recreates it
     out_schema = "doc_id long, width int, height int, sum_px long"
 
     from hdfs_mr_spark.functions.udfs import repo_kernel
-
-    def decode_batch(batch_df, batch_id):
-        batch_df.mapInPandas(
-            repo_kernel("hdfs_mr_spark.functions.udfs", "png_total_batches"),
-            out_schema,
-        ).write.mode("append").parquet(out)
 
     s = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    name = f"hmr_img_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_")
-    q = (
-        s.writeStream.foreachBatch(decode_batch)
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    try:
+    with _drain_root("hmr_img_") as root:
+        out = str(root / "out")
+
+        def decode_batch(batch_df, batch_id):
+            batch_df.mapInPandas(
+                repo_kernel("hdfs_mr_spark.functions.udfs", "png_total_batches"),
+                out_schema,
+            ).write.mode("append").parquet(out)
+
+        _drain(s.writeStream.foreachBatch(decode_batch), root / "ckpt")
         return (
             spark.read.schema(out_schema).parquet(out)
             .orderBy("doc_id").localCheckpoint()
         )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 def _docs_stream_src(sf_dir: str) -> str:
@@ -1457,7 +1483,6 @@ def stream_dedup_lsh_absorb(spark, sf_dir):
     all. Index and sink live in per-run temp dirs (the PERSISTED
     lifecycle is llm_dedup_lsh_stored's claim; this op's claim is the
     incremental absorb under streaming arrival)."""
-    import os
     import time as _time
 
     from pyspark.sql import types as T
@@ -1489,17 +1514,13 @@ def stream_dedup_lsh_absorb(spark, sf_dir):
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
     ])
-    root = tempfile.mkdtemp(prefix="hmr_lshabs_")
-    post_path = os.path.join(root, "postings")
-    out = os.path.join(root, "verdicts")
-
     # base index: postings of the existing corpus, built once up front.
     # The SIGNING (MinHash over 2/3 corpus) is 45% of the drain wall at
     # sf0.1 (r8 profile: 4.6 s of ~10 s) and at 100 TB it is
     # llm_dedup_lsh_stored's PRE-BUILT artifact, so the signed frame
     # joins the opt-in cross-query index cache (same reuse conf as the
-    # PQ frames) — the per-run temp-dir WRITE below stays, because the
-    # drain appends to its own index copy.
+    # PQ frames) — the per-run temp-dir WRITE at the drain stays,
+    # because the drain appends to its own index copy.
     from hdfs_mr_spark.operators.llm_similarity import _pq_cached
 
     base_docs = _table(spark, sf_dir, "documents").filter(
@@ -1509,7 +1530,6 @@ def stream_dedup_lsh_absorb(spark, sf_dir):
         spark, ("lsh_base_sign", sf_dir),
         lambda: band_keys_of(minhash_sig_of(shingle_frame_of(base_docs))),
     )
-    base_keyed.write.mode("overwrite").partitionBy("band").parquet(post_path)
     # band-key BLOOM over the live index (VERDICT r8 item 5): built
     # once from the base postings, then bloom-UNIONed with each
     # absorbed batch's keys (bit_or over unioned word frames) — so
@@ -1662,20 +1682,11 @@ def stream_dedup_lsh_absorb(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    name = f"hmr_lshabs_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_")
-    q = (
-        s.writeStream.foreachBatch(absorb)
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    final = spark.read.parquet(out).orderBy("doc_id").localCheckpoint()
-    shutil.rmtree(root, ignore_errors=True)
-    return final
+    with _drain_root("hmr_lshabs_") as root:
+        post_path, out = str(root / "postings"), str(root / "verdicts")
+        base_keyed.write.mode("overwrite").partitionBy("band").parquet(post_path)
+        _drain(s.writeStream.foreachBatch(absorb), root / "ckpt", timeout=600)
+        return spark.read.parquet(out).orderBy("doc_id").localCheckpoint()
 
 
 @query(
@@ -1713,8 +1724,6 @@ def stream_lake_append(spark, sf_dir):
     At 100 TB this is the canonical streaming ingest shape: object
     store files + a put-if-absent commit per micro-batch; the lake
     log IS the sink's transaction log."""
-    import os
-
     from pyspark.sql import types as T
 
     from hdfs_mr_spark.sources.lake import (
@@ -1729,7 +1738,6 @@ def stream_lake_append(spark, sf_dir):
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
     ])
-    root = Path(tempfile.mkdtemp(prefix="hmr_lake_stream_"))
     replayed = []
 
     def commit_batch(batch_df, batch_id):
@@ -1763,33 +1771,26 @@ def stream_lake_append(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_")
-    q = (
-        s.writeStream.foreachBatch(commit_batch)
-        .queryName(f"hmr_lake_stream_{next(_COUNTER)}")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    assert replayed, "the retry case never exercised"
-    n_versions = len(_log_versions(root))
-    final = (
-        _read_snapshot(spark, root)
-        .groupBy((F.col("doc_id") % 5).alias("bucket"))
-        .agg(
-            F.lit(n_versions).cast("bigint").alias("n_versions"),
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("doc_id").cast("bigint").alias("id_sum"),
-            F.min("doc_id").cast("bigint").alias("min_id"),
-            F.max("doc_id").cast("bigint").alias("max_id"),
+    # the drain root is the lake table's root; the checkpoint sits
+    # beside its _log and data dirs
+    with _drain_root("hmr_lake_stream_") as root:
+        _drain(s.writeStream.foreachBatch(commit_batch), root / "ckpt",
+               timeout=600)
+        assert replayed, "the retry case never exercised"
+        n_versions = len(_log_versions(root))
+        return (
+            _read_snapshot(spark, root)
+            .groupBy((F.col("doc_id") % 5).alias("bucket"))
+            .agg(
+                F.lit(n_versions).cast("bigint").alias("n_versions"),
+                F.count("*").cast("bigint").alias("n_docs"),
+                F.sum("doc_id").cast("bigint").alias("id_sum"),
+                F.min("doc_id").cast("bigint").alias("min_id"),
+                F.max("doc_id").cast("bigint").alias("max_id"),
+            )
+            .orderBy("bucket")
+            .localCheckpoint()
         )
-        .orderBy("bucket")
-        .localCheckpoint()
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return final
 
 
 @query(
@@ -1981,23 +1982,12 @@ def stream_lake_tail(spark, sf_dir):
             F.max("o_orderkey").cast("bigint").alias("max_key"),
         )
     )
-    name = f"hmr_laketail_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        drained = _ckpt_drained_versions(ckpt)
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with _drain_root("hmr_laketail_") as root:
+        d = _drain(agg.writeStream.outputMode("complete").format("memory"),
+                   root / "ckpt")
+        drained = _ckpt_drained_versions(root / "ckpt")
     return (
-        spark.table(name)
+        d.table
         .select(
             "o_orderstatus",
             F.lit(drained).cast("bigint").alias("versions_drained"),
@@ -2189,23 +2179,12 @@ def stream_lake_partition_tail(spark, sf_dir):
             F.max("o_orderkey").cast("bigint").alias("max_key"),
         )
     )
-    name = f"hmr_lakeparttail_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        drained = _ckpt_drained_versions(ckpt)
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with _drain_root("hmr_lakeparttail_") as root:
+        d = _drain(agg.writeStream.outputMode("complete").format("memory"),
+                   root / "ckpt")
+        drained = _ckpt_drained_versions(root / "ckpt")
     return (
-        spark.table(name)
+        d.table
         .select(
             "o_orderstatus",
             F.lit(drained).cast("bigint").alias("versions_drained"),
@@ -2443,23 +2422,12 @@ def stream_lake_cdf(spark, sf_dir):
             F.sum("cents").cast("bigint").alias("cents"),
         )
     )
-    name = f"hmr_lakecdf_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        drained = _ckpt_drained_versions(ckpt)
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with _drain_root("hmr_lakecdf_") as root:
+        d = _drain(agg.writeStream.outputMode("complete").format("memory"),
+                   root / "ckpt")
+        drained = _ckpt_drained_versions(root / "ckpt")
     return (
-        spark.table(name)
+        d.table
         .select(
             "_change_type", "_commit_version",
             F.lit(drained).cast("bigint").alias("versions_drained"),
@@ -2586,7 +2554,10 @@ def stream_pattern_match(spark, sf_dir):
         )
     )
     return (
-        _run_to_memory(out, "append")
+        _drain(
+            out.writeStream.format("memory").outputMode("append"),
+            conf=_SHUFFLE8,
+        ).table
         .groupBy("user_id")
         .agg(
             F.count("*").cast("bigint").alias("n_matches"),
@@ -2649,9 +2620,7 @@ def stream_python_datasource_sink(spark, sf_dir):
     O(#tasks) driver metadata work per epoch (the object-store
     multipart contract); markers make recovery idempotent with no
     sink-side row state."""
-    import json
     import os
-    import uuid as _uuid
 
     from pyspark.sql.datasource import (
         DataSource,
@@ -2660,8 +2629,6 @@ def stream_python_datasource_sink(spark, sf_dir):
     )
 
     src = _docs_stream_src(sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="hmr_pyds_stream_sink_")
-    os.makedirs(os.path.join(out_dir, "_commits"), exist_ok=True)
 
     class EpochMsg(WriterCommitMessage):
         def __init__(self, tmp_name, n_rows, pid):
@@ -2796,54 +2763,48 @@ def stream_python_datasource_sink(spark, sf_dir):
         T.StructField("text", T.StringType()),
     ])
 
-    def drain_once():
-        s = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        proj = s.select(
+    proj = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .select(
             F.col("doc_id"),
             F.length("text").cast("bigint").alias("text_len"),
         )
-        ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_")
-        q = (
-            proj.writeStream.format("hdfs_mr_epoch_sink")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .queryName(f"hmr_pyds_sink_{next(_COUNTER)}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    drain_once()  # first delivery: every epoch seals its marker
-    drain_once()  # FRESH checkpoint: every epoch re-delivered -> refused
-
-    n_epochs = len(os.listdir(os.path.join(out_dir, "_commits")))
-    ref_log = os.path.join(out_dir, "_refusals.log")
-    with open(ref_log) as fh:
-        n_refused = len(fh.read().split())
-    back = spark.read.schema("doc_id bigint, text_len bigint").json(
-        os.path.join(out_dir, "epoch-*.jsonl")
     )
-    res = (
-        back.groupBy((F.col("doc_id") % 5).cast("bigint").alias("bucket"))
-        .agg(
-            F.lit(n_epochs).cast("bigint").alias("n_epochs"),
-            F.lit(n_refused).cast("bigint").alias("n_refused"),
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("doc_id").cast("bigint").alias("id_sum"),
-            F.sum("text_len").cast("bigint").alias("len_sum"),
+    with _drain_root("hmr_pyds_sink_") as root:
+        out = root / "out"
+        (out / "_commits").mkdir(parents=True)
+        # first delivery: every epoch seals its marker; the second runs
+        # from a FRESH checkpoint: every epoch re-delivered -> refused
+        for ckpt in ("ckpt1", "ckpt2"):
+            sink = proj.writeStream.format("hdfs_mr_epoch_sink")
+            _drain(sink.option("path", str(out)), root / ckpt, timeout=600)
+
+        n_epochs = len(os.listdir(out / "_commits"))
+        # no re-delivered epoch (zero micro-batches) leaves no log
+        ref_log = out / "_refusals.log"
+        n_refused = len(ref_log.read_text().split()) if ref_log.exists() else 0
+        back_schema = "doc_id bigint, text_len bigint"
+        back = (
+            spark.read.schema(back_schema).json(str(out / "epoch-*.jsonl"))
+            if any(out.glob("epoch-*.jsonl"))
+            else spark.createDataFrame([], back_schema)
         )
-        .select("bucket", "n_epochs", "n_refused", "n_docs",
-                "id_sum", "len_sum")
-        .orderBy("bucket")
-        .localCheckpoint()
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return res
+        return (
+            back.groupBy((F.col("doc_id") % 5).cast("bigint").alias("bucket"))
+            .agg(
+                F.lit(n_epochs).cast("bigint").alias("n_epochs"),
+                F.lit(n_refused).cast("bigint").alias("n_refused"),
+                F.count("*").cast("bigint").alias("n_docs"),
+                F.sum("doc_id").cast("bigint").alias("id_sum"),
+                F.sum("text_len").cast("bigint").alias("len_sum"),
+            )
+            .select("bucket", "n_epochs", "n_refused", "n_docs",
+                    "id_sum", "len_sum")
+            .orderBy("bucket")
+            .localCheckpoint()
+        )
 
 
 def _hdr_rollup_oracle() -> str:
@@ -2938,7 +2899,10 @@ def stream_hdr_rollup(spark, sf_dir):
     agg = b.groupBy("window_start", "bucket").agg(
         F.count("*").alias("cnt")
     )
-    hist = _run_to_memory(agg, "complete").localCheckpoint()
+    hist = _drain(
+        agg.writeStream.format("memory").outputMode("complete"),
+        conf=_SHUFFLE8,
+    ).table.localCheckpoint()
     wcum = Window.partitionBy("window_start").orderBy("bucket")
     cum = hist.withColumn("cum", F.sum("cnt").over(wcum))
     sz = hist.groupBy("window_start").agg(
@@ -3042,52 +3006,25 @@ def stream_rocksdb_state(spark, sf_dir):
             dsum(F.col("value")).alias("total_value"),
         )
     )
-    name = f"hmr_stream_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_rocks_")
-    conf_prev = {}
-    rocks_conf = {
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled": "true",
-        "spark.sql.shuffle.partitions": "8",
-    }
-    for k, v in rocks_conf.items():
-        conf_prev[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with _drain_root("hmr_rocks_") as root:
+        ckpt = root / "ckpt"
+        d = _drain(agg.writeStream.format("memory").outputMode("complete"),
+                   ckpt, conf=_ROCKS_CONF)
+        changelog = any(
+            fn.endswith(".changelog")
+            for _root, _dirs, files in os.walk(ckpt / "state")
+            for fn in files
         )
-        q.awaitTermination(300)
-        progresses = list(q.recentProgress)
-    finally:
-        for k, v in conf_prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        n_batches = sum(
+            1 for p in (ckpt / "commits").iterdir() if p.name.isdigit()
+        )
     engaged = any(
         any(mk.startswith("rocksdb") for mk in (so.get("customMetrics") or {}))
-        for p in progresses
+        for p in d.progress
         for so in (p.get("stateOperators") or [])
     )
-    changelog = any(
-        fn.endswith(".changelog")
-        for root, _dirs, files in os.walk(Path(ckpt) / "state")
-        for fn in files
-    )
-    n_batches = sum(
-        1 for p in (Path(ckpt) / "commits").iterdir() if p.name.isdigit()
-    )
-    result = (
-        spark.table(name)
+    return (
+        d.table
         .select(
             "event_type",
             F.lit(bool(engaged)).alias("rocksdb_engaged"),
@@ -3097,8 +3034,6 @@ def stream_rocksdb_state(spark, sf_dir):
         )
         .orderBy("event_type")
     )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @query(
@@ -3137,87 +3072,55 @@ def stream_rocksdb_restart(spark, sf_dir):
     not O(state) and never O(raw input) — the property that bounds
     restart time for 100 TB-class streaming state."""
     import os
-    import shutil as sh
 
     h1, h2 = _event_halves(sf_dir)
-    src = tempfile.mkdtemp(prefix="hmr_rocksr_src_")
-    ckpt = tempfile.mkdtemp(prefix="hmr_rocksr_ckpt_")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     kind = _events_ts_kind(sf_dir)
     if kind == "nanos":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-    def n_changelogs() -> int:
-        state = Path(ckpt) / "state"
-        if not state.exists():
-            return 0
-        return sum(
-            1 for _root, _d, files in os.walk(state)
-            for fn in files if fn.endswith(".changelog")
-        )
+    with _drain_root("hmr_rocksr_") as root:
+        src, ckpt = root / "src", root / "ckpt"
+        src.mkdir()
 
-    rocks_conf = {
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled": "true",
-        "spark.sql.shuffle.partitions": "8",
-    }
-
-    def drain() -> tuple[str, bool]:
-        raw = spark.readStream.schema(_events_schema(kind)).parquet(src)
-        agg = raw.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n")
-        )
-        name = f"hmr_stream_{next(_COUNTER)}"
-        prev = {k: spark.conf.get(k, None) for k in rocks_conf}
-        try:
-            for k, v in rocks_conf.items():
-                spark.conf.set(k, v)
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+        def n_changelogs() -> int:
+            return sum(
+                1 for _root, _d, files in os.walk(ckpt / "state")
+                for fn in files if fn.endswith(".changelog")
             )
-            q.awaitTermination(300)
+
+        def drain():
+            raw = spark.readStream.schema(_events_schema(kind)).parquet(str(src))
+            agg = raw.groupBy("event_type").agg(
+                F.count("*").cast("bigint").alias("n")
+            )
+            d = _drain(agg.writeStream.format("memory").outputMode("complete"),
+                       ckpt, conf=_ROCKS_CONF)
             engaged = any(
                 any(mk.startswith("rocksdb")
                     for mk in (so.get("customMetrics") or {}))
-                for p in q.recentProgress
+                for p in d.progress
                 for so in (p.get("stateOperators") or [])
             )
-        finally:
-            for k, v in prev.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-        return name, engaged
+            return d.table, engaged
 
-    sh.copy(h1, os.path.join(src, "h1.parquet"))
-    _, eng1 = drain()          # run 1: half the data, state -> changelog
-    c1 = n_changelogs()
-    sh.copy(h2, os.path.join(src, "h2.parquet"))
-    name, eng2 = drain()       # RESTART: reads only h2, recovers state
-    c2 = n_changelogs()
-    result = (
-        spark.table(name)
-        .select(
-            "event_type",
-            F.lit(bool(eng1 and eng2)).alias("rocksdb_engaged"),
-            F.lit(bool(c1 > 0 and c2 > c1)).alias("changelog_grew"),
-            "n",
+        shutil.copy(h1, src / "h1.parquet")
+        _, eng1 = drain()          # run 1: half the data, state -> changelog
+        c1 = n_changelogs()
+        shutil.copy(h2, src / "h2.parquet")
+        table, eng2 = drain()      # RESTART: reads only h2, recovers state
+        c2 = n_changelogs()
+        return (
+            table
+            .select(
+                "event_type",
+                F.lit(bool(eng1 and eng2)).alias("rocksdb_engaged"),
+                F.lit(bool(c1 > 0 and c2 > c1)).alias("changelog_grew"),
+                "n",
+            )
+            .orderBy("event_type")
+            .localCheckpoint(eager=True)
         )
-        .orderBy("event_type")
-        .localCheckpoint(eager=True)
-    )
-    sh.rmtree(src, ignore_errors=True)
-    sh.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @query(
@@ -3273,8 +3176,6 @@ def stream_state_eviction(spark, sf_dir):
     lifetime) — the property this op certifies — and RocksDB bounds
     the open-window working set by disk, not heap, with changelog
     commits bounding per-batch upload to the delta."""
-    import os
-
     s = _event_stream(spark, sf_dir)
     agg = (
         s.withWatermark("ts", "10 minutes")
@@ -3284,41 +3185,9 @@ def stream_state_eviction(spark, sf_dir):
             F.col("window.start").alias("window_start"), "event_type", "n"
         )
     )
-    name = f"hmr_stream_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_evict_")
-    rocks_conf = {
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled": "true",
-        "spark.sql.shuffle.partitions": "8",
-    }
-    conf_prev = {}
-    for k, v in rocks_conf.items():
-        conf_prev[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        ops = [
-            so
-            for p in q.recentProgress
-            for so in (p.get("stateOperators") or [])
-        ]
-    finally:
-        for k, v in conf_prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    d = _drain(agg.writeStream.format("memory").outputMode("append"),
+               conf=_ROCKS_CONF)
+    ops = [so for p in d.progress for so in (p.get("stateOperators") or [])]
     engaged = any(
         any(mk.startswith("rocksdb") for mk in (so.get("customMetrics") or {}))
         for so in ops
@@ -3329,9 +3198,9 @@ def stream_state_eviction(spark, sf_dir):
     # rows; degrade to 0/0 so the pinned booleans fail the hash check
     # with readable values instead of a bare ValueError/IndexError.
     peak, final = (max(totals), totals[-1]) if totals else (0, 0)
-    emitted = spark.table(name)
+    emitted = d.table
     n_sealed = emitted.count()
-    result = (
+    return (
         emitted.select(
             "window_start", "event_type",
             F.lit(bool(engaged)).alias("rocksdb_engaged"),
@@ -3342,8 +3211,6 @@ def stream_state_eviction(spark, sf_dir):
         )
         .orderBy("window_start", "event_type")
     )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @query(
@@ -3480,32 +3347,15 @@ def stream_session_timeout(spark, sf_dir):
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    name = f"hmr_stream_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="hmr_ckpt_sesstmo_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        ops = [
-            so
-            for p in q.recentProgress
-            for so in (p.get("stateOperators") or [])
-        ]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    d = _drain(out.writeStream.format("memory").outputMode("append"),
+               conf=_SHUFFLE8)
+    ops = [so for p in d.progress for so in (p.get("stateOperators") or [])]
     removed = sum(int(so.get("numRowsRemoved") or 0) for so in ops)
-    peak = max(int(so.get("numRowsTotal") or 0) for so in ops)
-    emitted = spark.table(name)
+    # zero micro-batches report no state operators: nothing was held
+    peak = max((int(so.get("numRowsTotal") or 0) for so in ops), default=0)
+    emitted = d.table
     n_users = emitted.select("user_id").distinct().count()
-    result = (
+    return (
         emitted.select(
             "user_id", "session_start", "session_last",
             F.lit(removed > 0).alias("timeout_fired"),
@@ -3514,5 +3364,3 @@ def stream_session_timeout(spark, sf_dir):
         )
         .orderBy("user_id", "session_start")
     )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return result

@@ -1592,6 +1592,33 @@ def test_ann_index_layer_written_once():
     assert offenders == []
 
 
+def test_stream_drains_written_once():
+    """Every bounded drain in streaming/queries.py runs through the
+    harness: no temp dir is made and no query is named, started or
+    waited for outside _drain_root / _drain."""
+    import ast
+    from pathlib import Path
+
+    from hdfs_mr_spark.streaming import queries
+
+    harness = {"_drain", "_drain_root"}
+    banned = {"mkdtemp", "awaitTermination", "processAllAvailable",
+              "queryName", "start"}
+    tree = ast.parse(Path(queries.__file__).read_text())
+    offenders = []
+    for top in tree.body:
+        owner = getattr(top, "name", "<module>")
+        if owner in harness:
+            continue
+        for node in ast.walk(top):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = getattr(node.func, "attr", getattr(node.func, "id", None))
+            if fn in banned:
+                offenders.append(f"queries.py:{node.lineno} {fn}( in {owner}")
+    assert offenders == []
+
+
 def test_udfs_decode_through_media_codecs():
     """functions/udfs.py decodes every payload through the tested codecs
     in sources/media.py: no kernel re-declares a codec piece as a

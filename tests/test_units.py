@@ -270,28 +270,92 @@ def test_stream_source_drains_multiple_batches(spark):
     """VERDICT r2 item 7 done-criterion: the default stream source must
     drain as MULTIPLE micro-batches (state carry-over is only exercised
     if batch count > 1), and the union of batches must cover every row."""
-    import tempfile
-
     from hdfs_mr_spark.io import table
-    from hdfs_mr_spark.streaming.queries import _event_stream
+    from hdfs_mr_spark.streaming.queries import _drain, _event_stream
     from tests.conftest import SF_SMOKE
 
     s = _event_stream(spark, SF_SMOKE).select("event_id")
-    ckpt = tempfile.mkdtemp(prefix="hmr_mb_ckpt_")
-    q = (
-        s.writeStream.format("memory")
-        .queryName("hmr_multibatch_probe")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    batch_ids = {p["batchId"] for p in q.recentProgress}
+    d = _drain(s.writeStream.format("memory").outputMode("append"), timeout=120)
+    batch_ids = {p["batchId"] for p in d.progress}
     assert len(batch_ids) > 1, f"expected multi-batch drain, got {batch_ids}"
-    got = spark.table("hmr_multibatch_probe").count()
+    got = d.table.count()
     expect = table(spark, SF_SMOKE, "events").count()
     assert got == expect
+
+
+def test_drain_timeout_stops_query_and_removes_root(spark, tmp_path, monkeypatch):
+    """A drain that cannot finish within its timeout raises
+    StreamDrainTimeout naming the query, leaves no query running and
+    removes its temp root, the private one and a caller's alike."""
+    import tempfile
+    import time
+
+    from hdfs_mr_spark.streaming.queries import (StreamDrainTimeout, _drain,
+                                                  _drain_root, _event_stream)
+    from tests.conftest import SF_SMOKE
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    s = _event_stream(spark, SF_SMOKE).select("event_id")
+
+    def slow(batch_df, batch_id):
+        time.sleep(2)
+
+    with pytest.raises(StreamDrainTimeout) as exc:
+        _drain(s.writeStream.foreachBatch(slow), timeout=0.2)
+    assert exc.value.query.startswith("hmr_stream_")
+    assert exc.value.query in str(exc.value)
+    assert spark.streams.active == []
+    with pytest.raises(StreamDrainTimeout):
+        with _drain_root() as root:
+            _drain(s.writeStream.foreachBatch(slow), root / "ckpt", timeout=0.2)
+    assert not root.exists()
+    assert spark.streams.active == []
+    assert list(tmp_path.glob("hmr_*")) == []
+
+
+def test_memory_drain_drops_its_view(spark):
+    """A memory drain leaves no temp view behind, and the DataFrame it
+    returns still reads every row."""
+    from hdfs_mr_spark.io import table
+    from hdfs_mr_spark.streaming.queries import _drain, _event_stream
+    from tests.conftest import SF_SMOKE
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = views()
+    s = _event_stream(spark, SF_SMOKE).select("event_id")
+    d = _drain(s.writeStream.format("memory").outputMode("append"))
+    assert views() == before
+    assert not spark.catalog.tableExists(d.name)
+    assert d.table.count() == table(spark, SF_SMOKE, "events").count()
+
+
+def test_drain_restores_session_conf(spark):
+    """The conf a drain pins is restored after it, also when the drain
+    raises: set keys get their old value back, unset keys are unset."""
+    from pyspark.errors import StreamingQueryException
+
+    from hdfs_mr_spark.streaming.queries import (_ROCKS_CONF, _drain,
+                                                  _event_stream)
+    from tests.conftest import SF_SMOKE
+
+    def snapshot():
+        return {k: spark.conf.get(k, None) for k in _ROCKS_CONF}
+
+    before = snapshot()
+    assert before != _ROCKS_CONF
+    s = _event_stream(spark, SF_SMOKE).select("event_id")
+    _drain(s.writeStream.format("memory").outputMode("append"), conf=_ROCKS_CONF)
+    assert snapshot() == before
+
+    def boom(batch_df, batch_id):
+        raise ValueError("sink failed")
+
+    with pytest.raises(StreamingQueryException):
+        _drain(s.writeStream.foreachBatch(boom), conf=_ROCKS_CONF)
+    assert snapshot() == before
+    assert spark.streams.active == []
 
 
 def test_media_parsers_roundtrip_property():
@@ -4520,6 +4584,36 @@ def test_wordpiece_walk_missing_step_names_word_and_position(spark):
     gap = spark.createDataFrame([("abcd", 1, 1), ("abcd", 3, 1), ("abcd", 4, 1)], schema)
     with pytest.raises(SparkRuntimeException, match="'abcd' at position 2"):
         _wordpiece_fold(gap).collect()
+
+
+def test_stream_drains_of_zero_batches_return_empty_answer(
+        spark, tmp_path, monkeypatch):
+    """Streams over zero-row events and documents drain zero
+    micro-batches; the three drains that read state back (progress
+    metrics, a foreachBatch sink dir, a custom sink's logs) return 0
+    rows with their oracle's columns."""
+    import pyarrow.parquet as pq
+
+    from hdfs_mr_spark.check import oracle_connection
+    from hdfs_mr_spark.io import TABLES
+    from hdfs_mr_spark.sources import scans
+    from tests.conftest import SF_SMOKE
+
+    monkeypatch.setattr(scans, "FIXTURE_ROOT", tmp_path / "fixtures")
+    sf_dir = tmp_path / "sf_empty"
+    sf_dir.mkdir()
+    for t in TABLES:
+        src = f"{SF_SMOKE}/{t}.parquet"
+        pq.write_table(pq.read_table(src).slice(0, 0), str(sf_dir / f"{t}.parquet"))
+    sf = str(sf_dir)
+    con = oracle_connection(sf)
+    specs = all_specs()
+    for name in ("stream_session_timeout", "stream_python_datasource_sink",
+                 "stream_foreachbatch"):
+        got = specs[name].fn(spark, sf).toPandas()
+        want = con.execute(specs[name].oracle).fetchdf()
+        assert len(got) == len(want) == 0, name
+        assert list(got.columns) == list(want.columns), name
 
 
 @pytest.mark.parametrize("n_rows", [0, 1])

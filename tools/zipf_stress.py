@@ -279,7 +279,6 @@ def deep_lake_diagnostics(spark, store_root: Path) -> dict:
     and verifies the drained rows equal the target partition's
     content exactly."""
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
     from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
@@ -288,6 +287,7 @@ def deep_lake_diagnostics(spark, store_root: Path) -> dict:
     from hdfs_mr_spark.functions.udfs import REPO_ROOT
     from hdfs_mr_spark.sources.lake import _commit
     from hdfs_mr_spark.streaming.lake_source import plan_tail_partitions
+    from hdfs_mr_spark.streaming.queries import _drain
 
     n_commits, n_parts, rows_per_file = 50, 10, 5000
     root = store_root / "deep_lake"
@@ -400,21 +400,15 @@ def deep_lake_diagnostics(spark, store_root: Path) -> dict:
                 and "already" not in str(exc).lower()):
             raise
 
-    ckpt = tempfile.mkdtemp(prefix="hmr_deep_ckpt_")
     t0 = time.time()
-    q = (
+    d = _drain(
         spark.readStream.format("hmr_deep_lake_tail").load()
         .groupBy().agg(F.count("*").alias("n"), F.sum("id").alias("s"))
-        .writeStream.format("memory").queryName("hmr_deep_tail")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.format("memory").outputMode("complete"),
+        timeout=600,
     )
-    q.awaitTermination(600)
     t_drain = round(time.time() - t0, 3)
-    got = spark.sql("SELECT n, s FROM hmr_deep_tail").first()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    got = d.table.first()
     # ground truth: partition 3 owns commits {3,13,23,33,43}
     own = [k for k in range(n_commits) if k % n_parts == 3]
     exp_n = len(own) * rows_per_file
