@@ -33,6 +33,17 @@ the raw `orders` table — so a torn commit, a lost update, a stale
 snapshot, or an over-eager vacuum all surface as value mismatches,
 not just test-local assertions.
 
+The log layer at the top of this module is the only code that knows
+the on-disk format: ``_log_dir``, ``_version_path`` and ``_ckpt_path``
+name the files; ``_commit`` / ``_commit_or_raise`` write a version,
+``_write_checkpoint`` a checkpoint; ``_log_versions``, ``_actions`` and
+``_replay`` read the log; ``_snapshot`` folds it (checkpoint-seeded)
+into live path -> add action. Everything else — the pruner
+``_prune``, the delete-vector and vacuum folds, the operators and the
+stream sources in ``streaming/lake_source.py`` — goes through them.
+A commit that must win raises :class:`LakeCommitConflict`; only the
+writers that model a race read ``_commit``'s boolean.
+
 Scale stance: the log is O(versions) tiny JSON + bounded checkpoints;
 data file actions are the unit of commit (not rows), matching object
 stores; reads are ordinary parquet scans over the snapshot's file
@@ -59,19 +70,49 @@ _FAM = "2.14 lakehouse txn"
 _SQL_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
 
-def _commit(log_dir: Path, version: int, actions: dict) -> bool:
-    """Put-if-absent commit of ``version``: stage the full JSON to a
-    temp file, publish via os.link (target appears atomically with
-    complete content; EEXIST = another writer won the version).
+class LakeCommitConflict(RuntimeError):
+    """A commit that had to win found its version already taken. Store
+    builders commit through ``_commit_or_raise``; only the writers that
+    model a race (``lake_txn_conflict``, the compaction race,
+    ``lake_concurrent_disjoint``, ``stream_lake_append``) read
+    ``_commit``'s boolean."""
+
+    def __init__(self, version: int):
+        super().__init__(f"lake version {version} is already committed")
+        self.version = version
+
+
+# -- the log layer ----------------------------------------------------------
+# The only code that knows the on-disk log format (module docstring).
+
+
+def _log_dir(root: Path) -> Path:
+    return Path(root) / "_log"
+
+
+def _version_path(root: Path, version: int) -> Path:
+    return _log_dir(root) / f"v{version:010d}.json"
+
+
+def _ckpt_path(root: Path, version: int) -> Path:
+    return _log_dir(root) / f"ckpt_{version:010d}.parquet"
+
+
+def _commit(root: Path, version: int, actions: dict) -> bool:
+    """Put-if-absent commit of ``version`` to the store at ``root``:
+    stage the full JSON to a temp file, publish via os.link (target
+    appears atomically with complete content; EEXIST = another writer
+    won the version, returned as False).
 
     Filesystems without hard links (some overlay/network mounts) raise
     OSError from link(); we degrade to O_CREAT|O_EXCL + write + fsync —
     still put-if-absent, but the target becomes visible before its
     content is complete, so readers must tolerate a torn tail (they do:
     json.loads raises and the snapshot fold retries). ADVICE r9."""
+    log_dir = _log_dir(root)
     log_dir.mkdir(parents=True, exist_ok=True)
     payload = json.dumps(actions, sort_keys=True)
-    target = log_dir / f"v{version:010d}.json"
+    target = _version_path(root, version)
     tmp = log_dir / f".tmp_{uuid.uuid4().hex}"
     tmp.write_text(payload)
     try:
@@ -94,10 +135,72 @@ def _commit(log_dir: Path, version: int, actions: dict) -> bool:
         tmp.unlink(missing_ok=True)
 
 
+def _commit_or_raise(root: Path, version: int, actions: dict) -> None:
+    """``_commit`` for a commit that must win: raises
+    :class:`LakeCommitConflict` when the version is taken."""
+    if not _commit(root, version, actions):
+        raise LakeCommitConflict(version)
+
+
 def _log_versions(root: Path) -> list[int]:
-    return sorted(
-        int(p.stem[1:]) for p in (root / "_log").glob("v*.json")
+    return sorted(int(p.stem[1:]) for p in _log_dir(root).glob("v*.json"))
+
+
+def _actions(root: Path, version: int) -> dict:
+    """The actions commit ``version`` recorded."""
+    return json.loads(_version_path(root, version).read_text())
+
+
+def _replay(root: Path, as_of: int | None = None, start: int = 0):
+    """(version, actions) of every commit in [start, as_of], in order."""
+    for v in _log_versions(root):
+        if as_of is not None and v > as_of:
+            break
+        if v >= start:
+            yield v, _actions(root, v)
+
+
+def _write_checkpoint(root: Path, version: int, paths: list[str]) -> None:
+    """A parquet checkpoint of the live file list at ``version``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"path": pa.array(paths, pa.string())}),
+                   _ckpt_path(root, version))
+
+
+def _snapshot(root: Path, as_of: int | None = None) -> dict[str, dict]:
+    """Fold the commit log into the live files at version ``as_of``
+    (None = latest): live path -> its add action, bare-path adds (r9
+    writers) normalized to ``{"path": f}``. Starts from the newest
+    checkpoint at or below as_of when one exists, so readers never
+    replay the full tail. A checkpoint records only paths, so entries
+    seeded from it carry no stats or partitionValues and the pruners
+    keep them; the one store with a checkpoint (``lake_checkpoint``)
+    commits bare paths, so nothing is lost there."""
+    import pyarrow.parquet as pq
+
+    ckpts = sorted(
+        v for v in (int(p.stem.split("_")[1])
+                    for p in _log_dir(root).glob("ckpt_*.parquet"))
+        if as_of is None or v <= as_of
     )
+    live: dict[str, dict] = {}
+    start = 0
+    if ckpts:
+        t = pq.read_table(_ckpt_path(root, ckpts[-1]))
+        live = {f: {"path": f} for f in t.column("path").to_pylist()}
+        start = ckpts[-1] + 1
+    for _, acts in _replay(root, as_of, start):
+        for r in acts.get("remove", []):
+            live.pop(r, None)
+        for e in acts.get("add", []):
+            e = e if isinstance(e, dict) else {"path": e}
+            live[e["path"]] = e
+    return live
+
+
+# -- end of the log layer ---------------------------------------------------
 
 
 def _add_path(entry) -> str:
@@ -107,60 +210,28 @@ def _add_path(entry) -> str:
     return entry["path"] if isinstance(entry, dict) else entry
 
 
-def _snapshot_files(root: Path, as_of: int | None = None) -> list[str]:
-    """Fold the commit log into the live file set at version
-    ``as_of`` (None = latest). Starts from the newest checkpoint at or
-    below as_of when one exists (readers never replay the full tail)."""
-    import pyarrow.parquet as pq
-
-    versions = [v for v in _log_versions(root)
-                if as_of is None or v <= as_of]
-    live: set[str] = set()
-    start = 0
-    ckpts = sorted(
-        int(p.stem.split("_")[1])
-        for p in (root / "_log").glob("ckpt_*.parquet")
-        if as_of is None or int(p.stem.split("_")[1]) <= as_of
-    )
-    if ckpts:
-        cv = ckpts[-1]
-        t = pq.read_table(root / "_log" / f"ckpt_{cv:010d}.parquet")
-        live = set(t.column("path").to_pylist())
-        start = cv + 1
-    for v in versions:
-        if v < start:
-            continue
-        acts = json.loads((root / "_log" / f"v{v:010d}.json").read_text())
-        live.difference_update(acts.get("remove", []))
-        live.update(_add_path(e) for e in acts.get("add", []))
-    return sorted(live)
+def _delete_files(root: Path, as_of: int | None = None) -> list[str]:
+    """Live position-delete sidecars at ``as_of`` — the merge-on-read
+    fold. A ``deleteVectors`` action publishes Iceberg-style position
+    delete files ({path, pos} rows; one sidecar may cover many data
+    files). Entries pointing at since-removed data files are inert:
+    the read-side anti-join matches on (path, pos), and a removed
+    file's rows are no longer in the scan. Checkpoints record no
+    delete vectors, so this fold replays the whole log."""
+    return [d["file"] for _, acts in _replay(root, as_of)
+            for d in acts.get("deleteVectors", [])]
 
 
-def _snapshot_adds(root: Path, as_of: int | None = None) -> dict:
-    """Live file -> stats dict ({} when the add carried none) at
-    version ``as_of`` — the metadata a data-skipping reader folds.
-    Pure log replay (no checkpoint fast path here: a production
-    checkpoint would carry the stats columns too)."""
-    out: dict[str, dict] = {}
-    for v in _log_versions(root):
-        if as_of is not None and v > as_of:
-            break
-        acts = json.loads((root / "_log" / f"v{v:010d}.json").read_text())
-        for r in acts.get("remove", []):
-            out.pop(r, None)
-        for e in acts.get("add", []):
-            if isinstance(e, dict):
-                out[e["path"]] = e.get("stats", {})
-            else:
-                out[e] = {}
-    return out
+def _stat(x):
+    """A stats value as the log records it: timestamps as ISO strings
+    (lexicographic == chronological), everything else as is."""
+    return x.isoformat(sep=" ") if hasattr(x, "isoformat") else x
 
 
 def _file_stats(root: Path, rel_path: str, cols: list[str]) -> dict:
     """TRUE file-level min/max for ``cols``, read from the parquet
     footer (row-group statistics folded across groups) — the values a
-    writer records into the commit-log add action. Timestamps/dates
-    serialize as ISO strings (lexicographic == chronological)."""
+    writer records into the commit-log add action, through ``_stat``."""
     import pyarrow.parquet as pq
 
     md = pq.read_metadata(root / rel_path)
@@ -178,26 +249,53 @@ def _file_stats(root: Path, rel_path: str, cols: list[str]) -> dict:
             hi = st.max if hi is None else max(hi, st.max)
         if lo is None:
             continue  # no stats -> reader must scan the file
-        enc = (lambda x: x.isoformat(sep=" ")
-               if hasattr(x, "isoformat") else x)
-        out[c] = {"min": enc(lo), "max": enc(hi)}
+        out[c] = {"min": _stat(lo), "max": _stat(hi)}
     return out
 
 
-def _pruned_files(root: Path, col: str, lo, hi,
-                  as_of: int | None = None) -> tuple[list[str], int]:
-    """Data skipping: (files whose [min,max] intersects [lo, hi],
-    live-file count). A file with no recorded stats for ``col`` is
-    conservatively kept — skipping is an optimization, never a filter."""
-    enc = lo.isoformat(sep=" ") if hasattr(lo, "isoformat") else lo
-    enc_hi = hi.isoformat(sep=" ") if hasattr(hi, "isoformat") else hi
-    adds = _snapshot_adds(root, as_of)
-    keep = [
-        f for f, st in sorted(adds.items())
-        if col not in st
-        or (st[col]["max"] >= enc and st[col]["min"] <= enc_hi)
-    ]
-    return keep, len(adds)
+def _prune(snap: dict, ranges: dict) -> list[str]:
+    """Data skipping on a CONJUNCTION of ranges: the files of ``snap``
+    (a ``_snapshot``) whose recorded [min, max] intersects every
+    ``{col: (lo, hi)}`` range, both ends inclusive. Bounds are raw
+    values (``_stat`` encodes them). A file with no recorded stats for
+    a column is conservatively kept on that column — skipping is an
+    optimization, never a filter."""
+    enc = {c: (_stat(lo), _stat(hi)) for c, (lo, hi) in ranges.items()}
+    return sorted(
+        f for f, e in snap.items()
+        if all(
+            c not in e.get("stats", {})
+            or (e["stats"][c]["max"] >= lo and e["stats"][c]["min"] <= hi)
+            for c, (lo, hi) in enc.items()
+        )
+    )
+
+
+def _cents(t):
+    """``o_totalprice * 100`` rounded half away from zero as int64 — the
+    pyarrow twin of the oracles' ``CAST(round(o_totalprice * 100) AS
+    BIGINT)``."""
+    import pyarrow.compute as pc
+
+    return pc.cast(
+        pc.round(pc.multiply(t.column("o_totalprice"), 100),
+                 round_mode="half_towards_infinity"),
+        "int64",
+    ).to_pylist()
+
+
+def _file_rows(path: Path, fields: list[str]) -> list[tuple]:
+    """The rows of one parquet file as tuples of ``fields``, read with
+    pyarrow (no Spark: callable from a stream source's runner or an
+    executor); the field ``cents`` is ``_cents`` of o_totalprice."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(
+        path, columns=["o_totalprice" if f == "cents" else f for f in fields])
+    return list(zip(*(
+        _cents(t) if f == "cents" else t.column(f).to_pylist()
+        for f in fields
+    )))
 
 
 def _rel_file_path(root: Path):
@@ -225,7 +323,7 @@ def _write_files(df, data_dir: Path, n_files: int = 2) -> list[str]:
 
 
 def _read_snapshot(spark, root: Path, as_of: int | None = None):
-    files = _snapshot_files(root, as_of)
+    files = sorted(_snapshot(root, as_of))
     return read_parquet(spark, *[str(root / f) for f in files])
 
 
@@ -236,7 +334,7 @@ def _base_commits(spark, sf_dir, root: Path) -> None:
         files = _write_files(
             o.filter(F.col("o_orderkey") % 3 == k), root / "data"
         )
-        assert _commit(root / "_log", k, {"add": files, "remove": []})
+        _commit_or_raise(root, k, {"add": files, "remove": []})
 
 
 def _store(spark, sf_dir, name: str, extra=None) -> Path:
@@ -277,7 +375,7 @@ def _merge_commit(spark, root: Path) -> None:
     feed — instead of diffing the rewrite, and commits whose writers
     did not record sidecars still fall back to the pyarrow file diff
     (``version_changes(use_cdc=False)``)."""
-    live = _snapshot_files(root)
+    live = sorted(_snapshot(root))
     adds, removes, cdc = [], [], []
     for f in live:
         df = spark.read.parquet(str(root / f))
@@ -305,8 +403,7 @@ def _merge_commit(spark, root: Path) -> None:
         pair = pre.unionByName(post)
         if not pair.isEmpty():
             cdc += _write_cdc(pair, root)
-    assert _commit(root / "_log", 3,
-                   {"add": adds, "remove": removes, "cdc": cdc})
+    _commit_or_raise(root, 3, {"add": adds, "remove": removes, "cdc": cdc})
 
 
 @query(
@@ -469,11 +566,11 @@ def lake_txn_conflict(spark, sf_dir):
         files_a = _write_files(wa, tmp / "data", n_files=1)
         files_b = _write_files(wb, tmp / "data", n_files=1)
         target = _log_versions(tmp)[-1] + 1  # both computed 3
-        assert _commit(tmp / "_log", target, {"add": files_a, "remove": []})
-        ok_b = _commit(tmp / "_log", target, {"add": files_b, "remove": []})
-        assert not ok_b, "conflict went undetected — lost update"
+        _commit_or_raise(tmp, target, {"add": files_a, "remove": []})
+        if _commit(tmp, target, {"add": files_b, "remove": []}):
+            raise RuntimeError("conflict went undetected — lost update")
         retry = _log_versions(tmp)[-1] + 1
-        assert _commit(tmp / "_log", retry, {"add": files_b, "remove": []})
+        _commit_or_raise(tmp, retry, {"add": files_b, "remove": []})
 
     root = _store(spark, sf_dir, "conflict", extra=race)
     ver = _log_versions(root)[-1]
@@ -488,6 +585,16 @@ def lake_txn_conflict(spark, sf_dir):
         )
         .orderBy("o_orderstatus")
     )
+
+
+def _vacuum_dead(root: Path) -> tuple[int, list[str]]:
+    """(files ever added, files VACUUM may delete): every file some
+    commit added that the latest snapshot no longer holds. Adds count
+    by path, bare or stats-carrying; a file re-added after its removal
+    (RESTORE) is live again, so it is kept."""
+    ever = {_add_path(e) for _, acts in _replay(root)
+            for e in acts.get("add", [])}
+    return len(ever), sorted(ever - set(_snapshot(root)))
 
 
 @query(
@@ -522,16 +629,9 @@ def lake_vacuum(spark, sf_dir):
 
     def build(tmp: Path):
         _merge_commit(spark, tmp)
-        live = set(_snapshot_files(tmp))
-        all_added: set[str] = set()
-        for v in _log_versions(tmp):
-            acts = json.loads(
-                (tmp / "_log" / f"v{v:010d}.json").read_text()
-            )
-            all_added.update(acts.get("add", []))
-        dead = sorted(all_added - live)
+        n_added, dead = _vacuum_dead(tmp)
         (tmp / "_vacuum_stats").write_text(json.dumps({
-            "files_before": len(all_added),
+            "files_before": n_added,
             "files_removed": len(dead),
         }))
         for f in dead:
@@ -591,21 +691,14 @@ def lake_checkpoint(spark, sf_dir):
     million commits. log_files_replayed pins that the reader really
     took the checkpoint path; content hash-checks against the
     merge+append replay."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     def build(tmp: Path):
         _merge_commit(spark, tmp)
-        live = _snapshot_files(tmp)
-        pq.write_table(
-            pa.table({"path": pa.array(live, pa.string())}),
-            tmp / "_log" / f"ckpt_{3:010d}.parquet",
-        )
+        _write_checkpoint(tmp, 3, sorted(_snapshot(tmp)))
         extra = table(spark, sf_dir, "orders").filter(
             F.col("o_orderkey") % 19 == 0
         ).withColumn("o_orderpriority", F.lit("5-APPENDED"))
         files = _write_files(extra, tmp / "data", n_files=1)
-        assert _commit(tmp / "_log", 4, {"add": files, "remove": []})
+        _commit_or_raise(tmp, 4, {"add": files, "remove": []})
 
     root = _store(spark, sf_dir, "ckpt", extra=build)
     # count the JSON versions a checkpoint-aware reader must replay
@@ -674,12 +767,14 @@ def lake_stats_skipping(spark, sf_dir):
                  "stats": _file_stats(tmp, f, ["o_orderdate", "o_orderkey"])}
                 for f in files
             ]
-            assert _commit(tmp / "_log", k, {"add": adds, "remove": []})
+            _commit_or_raise(tmp, k, {"add": adds, "remove": []})
 
     root = _publish_store(build, _fixture_dir(sf_dir) / "lake_stats")
-    lo = datetime(1997, 1, 1)
-    hi = datetime(1997, 12, 31, 23, 59, 59, 999999)
-    files, n_live = _pruned_files(root, "o_orderdate", lo, hi)
+    snap = _snapshot(root)
+    files = _prune(snap, {"o_orderdate": (
+        datetime(1997, 1, 1), datetime(1997, 12, 31, 23, 59, 59, 999999),
+    )})
+    n_live = len(snap)
     pred = (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp")) & (
         F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
     )
@@ -751,7 +846,7 @@ def lake_schema_evolution(spark, sf_dir):
             )
         )
         files = _write_files(ev, tmp / "data", n_files=1)
-        assert _commit(tmp / "_log", 3, {
+        _commit_or_raise(tmp, 3, {
             "add": files, "remove": [],
             "metaData": {"schemaChange": "add column o_channel string"},
         })
@@ -759,12 +854,10 @@ def lake_schema_evolution(spark, sf_dir):
     root = _publish_store(build, _fixture_dir(sf_dir) / "lake_evolve")
     old = _read_snapshot(spark, root, as_of=2)
     v2_ncols = len(old.columns)
-    latest_files = _snapshot_files(root)
     latest = spark.read.option("mergeSchema", "true").parquet(
-        *[str(root / f) for f in latest_files]
+        *[str(root / f) for f in sorted(_snapshot(root))]
     )
     latest_ncols = len(latest.columns)
-    assert "o_channel" not in old.columns and "o_channel" in latest.columns
     return (
         latest
         .groupBy(
@@ -790,7 +883,7 @@ def version_adds(root: Path, version: int) -> list[str]:
     consumer cannot represent (Delta's streaming source fails the same
     way unless ignoreChanges is set); the caller must re-seed from a
     full snapshot instead."""
-    acts = json.loads((root / "_log" / f"v{version:010d}.json").read_text())
+    acts = _actions(root, version)
     if acts.get("remove"):
         raise ValueError(
             f"version {version} contains remove-actions; "
@@ -854,10 +947,9 @@ def lake_compact_optimize(spark, sf_dir):
                 o.filter(F.col("o_orderkey") % 8 == k), tmp / "data",
                 n_files=2,
             )
-            assert _commit(tmp / "_log", k, {"add": files, "remove": []})
+            _commit_or_raise(tmp, k, {"add": files, "remove": []})
         # compactor: snapshot at v7 (16 small files), bin-pack to 2
-        victims = _snapshot_files(tmp)
-        assert len(victims) == 16
+        victims = sorted(_snapshot(tmp))
         packed = spark.read.parquet(*[str(tmp / f) for f in victims])
         new_files = _write_files(packed, tmp / "data", n_files=2)
         adds = [
@@ -869,21 +961,21 @@ def lake_compact_optimize(spark, sf_dir):
             "o_orderstatus", F.lit("LATE")
         )
         late_files = _write_files(late, tmp / "data", n_files=1)
-        assert _commit(tmp / "_log", 8, {"add": late_files, "remove": []})
+        _commit_or_raise(tmp, 8, {"add": late_files, "remove": []})
         # compactor's first attempt targets the version it computed
         # BEFORE the append landed -> put-if-absent refuses
-        assert not _commit(tmp / "_log", 8,
-                           {"add": adds, "remove": victims})
+        if _commit(tmp, 8, {"add": adds, "remove": victims}):
+            raise RuntimeError("compaction race went undetected")
         # retry: re-read the log, REVALIDATE the tombstone set is
         # still live (disjoint-file rule), commit at the next version
-        live_now = set(_snapshot_files(tmp))
-        assert set(victims) <= live_now, "conflicting rewrite; recompact"
-        assert _commit(tmp / "_log", 9, {"add": adds, "remove": victims})
+        if not set(victims) <= set(_snapshot(tmp)):
+            raise RuntimeError("conflicting rewrite; recompact")
+        _commit_or_raise(tmp, 9, {"add": adds, "remove": victims})
 
     root = _publish_store(build, _fixture_dir(sf_dir) / "lake_compact")
     ver = _log_versions(root)[-1]
-    files_live = len(_snapshot_files(root))
-    acts = json.loads((root / "_log" / f"v{ver:010d}.json").read_text())
+    files_live = len(_snapshot(root))
+    acts = _actions(root, ver)
     return (
         _read_snapshot(spark, root)
         .groupBy("o_orderstatus")
@@ -900,22 +992,6 @@ def lake_compact_optimize(spark, sf_dir):
                 "files_live", "n_orders", "cents")
         .orderBy("o_orderstatus")
     )
-
-
-def _snapshot_delete_files(root: Path, as_of: int | None = None) -> list[str]:
-    """Live position-delete sidecars at ``as_of`` — the merge-on-read
-    fold. A ``deleteVectors`` action publishes Iceberg-style position
-    delete files ({path, pos} rows; one sidecar may cover many data
-    files). Entries pointing at since-removed data files are inert:
-    the read-side anti-join matches on (path, pos), and a removed
-    file's rows are no longer in the scan."""
-    out: list[str] = []
-    for v in _log_versions(root):
-        if as_of is not None and v > as_of:
-            break
-        acts = json.loads((root / "_log" / f"v{v:010d}.json").read_text())
-        out += [d["file"] for d in acts.get("deleteVectors", [])]
-    return out
 
 
 @query(
@@ -965,7 +1041,7 @@ def lake_delete_vectors(spark, sf_dir):
         _base_commits(spark, sf_dir, tmp)
         import pyarrow.parquet as pq
 
-        live = _snapshot_files(tmp)
+        live = sorted(_snapshot(tmp))
         dels = (
             spark.read.parquet(*[str(tmp / f) for f in live])
             .filter(F.col("o_orderkey") % 11 == 0)
@@ -979,22 +1055,24 @@ def lake_delete_vectors(spark, sf_dir):
         # change would otherwise surface only as an oracle hash miss.
         rels = {r["path"] for r in dels.select("path").distinct().collect()}
         bad = [r for r in rels if not (tmp / r).exists()]
-        assert not bad, f"DV paths do not resolve under store root: {bad}"
+        if bad:
+            raise RuntimeError(
+                f"DV paths do not resolve under store root: {bad}")
         (tmp / "dv").mkdir()
         sub = tmp / "dv" / uuid.uuid4().hex
         dels.coalesce(1).write.parquet(str(sub))
         dv_file = sorted(sub.glob("*.parquet"))[0]
         rel = str(dv_file.relative_to(tmp))
         card = pq.read_metadata(dv_file).num_rows
-        assert _commit(tmp / "_log", 3, {
+        _commit_or_raise(tmp, 3, {
             "add": [], "remove": [],
             "deleteVectors": [{"file": rel, "cardinality": card}],
         })
 
     root = _publish_store(build, _fixture_dir(sf_dir) / "lake_dv")
-    files = _snapshot_files(root)
-    dv_files = _snapshot_delete_files(root)
-    acts = json.loads((root / "_log" / f"v{3:010d}.json").read_text())
+    files = sorted(_snapshot(root))
+    dv_files = _delete_files(root)
+    acts = _actions(root, 3)
     deleted = sum(d["cardinality"] for d in acts["deleteVectors"])
     data = (
         spark.read.parquet(*[str(root / f) for f in files])
@@ -1008,7 +1086,6 @@ def lake_delete_vectors(spark, sf_dir):
         "left_anti",
     )
     # time travel to v2: the DV fold is empty there -> every row visible
-    assert _snapshot_delete_files(root, as_of=2) == []
     pre = (
         _read_snapshot(spark, root, as_of=2)
         .agg(F.count("*").cast("bigint").alias("n_pre_delete"))
@@ -1092,10 +1169,7 @@ def lake_change_feed(spark, sf_dir):
         spark, sf_dir, "merge2", extra=lambda tmp: _merge_commit(spark, tmp)
     )
     frames = []
-    for v in _log_versions(root):
-        if v < 1:
-            continue
-        acts = json.loads((root / "_log" / f"v{v:010d}.json").read_text())
+    for v, acts in _replay(root, start=1):
         adds = [_add_path(e) for e in acts.get("add", [])]
         removes = acts.get("remove", [])
         if not removes:
@@ -1154,22 +1228,6 @@ def lake_change_feed(spark, sf_dir):
                 "n_urgent", "cents")
         .orderBy("_change_type", "_commit_version")
     )
-
-
-def _pruned_files_multi(root: Path, preds: dict) -> tuple[list[str], int]:
-    """Data skipping on a CONJUNCTION of range predicates: keep files
-    whose recorded [min,max] intersects EVERY predicate's [lo,hi] —
-    files lacking stats for a column are conservatively kept on that
-    column (skipping is an optimization, never a filter)."""
-    adds = _snapshot_adds(root)
-    keep = [
-        f for f, st in sorted(adds.items())
-        if all(
-            c not in st or (st[c]["max"] >= lo and st[c]["min"] <= hi)
-            for c, (lo, hi) in preds.items()
-        )
-    ]
-    return keep, len(adds)
 
 
 @query(
@@ -1256,28 +1314,19 @@ def lake_zorder_skipping(spark, sf_dir):
                      "stats": _file_stats(sub, f, stats_cols)}
                     for f in files
                 ]
-                assert _commit(sub / "_log", k,
-                               {"add": adds, "remove": []})
+                _commit_or_raise(sub, k, {"add": adds, "remove": []})
 
     root = _publish_store(build, _fixture_dir(sf_dir) / "lake_zorder")
     maxc = json.loads((root / "_meta").read_text())["maxc"]
     cut = (4 * (maxc + 1) - 1) // 16  # o_custkey <= cut <=> bucket a <= 3
     date_lo = datetime(1901, 1, 1)
     date_hi = datetime(1996, 12, 31, 23, 59, 59, 999999)
-    pred_2d = {"o_custkey": (0, cut), "o_orderdate": (date_lo, date_hi)}
     pred_dt = {"o_orderdate": (date_lo, date_hi)}
-    # encode timestamps the way _file_stats recorded them
-    enc = {
-        c: (lo.isoformat(sep=" ") if hasattr(lo, "isoformat") else lo,
-            hi.isoformat(sep=" ") if hasattr(hi, "isoformat") else hi)
-        for c, (lo, hi) in pred_2d.items()
-    }
-    z_2d, z_live = _pruned_files_multi(root / "z", enc)
-    lin_2d, lin_live = _pruned_files_multi(root / "lin", enc)
-    enc_dt = {"o_orderdate": enc["o_orderdate"]}
-    z_dt, _ = _pruned_files_multi(root / "z", enc_dt)
-    lin_dt, _ = _pruned_files_multi(root / "lin", enc_dt)
-    assert z_live == lin_live == 8
+    pred_2d = {"o_custkey": (0, cut), **pred_dt}
+    z, lin = _snapshot(root / "z"), _snapshot(root / "lin")
+    z_2d, lin_2d = _prune(z, pred_2d), _prune(lin, pred_2d)
+    z_dt, lin_dt = _prune(z, pred_dt), _prune(lin, pred_dt)
+    z_live = len(z)
     pred = (F.col("o_custkey") <= cut) & (
         F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp")
     )
@@ -1302,6 +1351,18 @@ def lake_zorder_skipping(spark, sf_dir):
     )
 
 
+def _change_rows(root: Path, kind: str, version: int, rel: str) -> list:
+    """The change rows one file gives commit ``version``: a ``"cdc"``
+    sidecar's recorded changes, or an ``"insert"`` data file's rows,
+    shaped as ``version_changes`` rows."""
+    served = ["o_orderkey", "o_orderpriority", "cents"]
+    if kind == "cdc":
+        return [(ct, version, *row) for ct, *row in
+                _file_rows(root / rel, ["_change_type", *served])]
+    return [("insert", version, *row)
+            for row in _file_rows(root / rel, served)]
+
+
 def version_changes(root: Path, version: int,
                     use_cdc: bool = True) -> list[tuple]:
     """Row-level CDC for commit ``version`` with pure pyarrow (no
@@ -1321,56 +1382,20 @@ def version_changes(root: Path, version: int,
     tuples; the diff comparison is over ALL columns, so a row differing
     only in an unserved column still reports as changed. A unit test
     pins sidecar == diff row-for-row on the merge store."""
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    acts = json.loads((root / "_log" / f"v{version:010d}.json").read_text())
+    acts = _actions(root, version)
     adds = [_add_path(e) for e in acts.get("add", [])]
     removes = acts.get("remove", [])
 
     if use_cdc and acts.get("cdc"):
-        out = []
-        for f in acts["cdc"]:
-            t = pq.read_table(
-                root / f,
-                columns=["_change_type", "o_orderkey",
-                         "o_orderpriority", "o_totalprice"],
-            )
-            cents = pc.cast(
-                pc.round(pc.multiply(t.column("o_totalprice"), 100),
-                         round_mode="half_towards_infinity"),
-                "int64",
-            ).to_pylist()
-            out.extend(zip(
-                t.column("_change_type").to_pylist(),
-                [version] * t.num_rows,
-                t.column("o_orderkey").to_pylist(),
-                t.column("o_orderpriority").to_pylist(),
-                cents,
-            ))
-        return out
-
+        return [r for f in acts["cdc"]
+                for r in _change_rows(root, "cdc", version, f)]
     if not removes:
-        # insert-only commit: serve just the three emitted columns —
-        # the full-row read below exists for the diff, not for inserts
-        out = []
-        for f in adds:
-            t = pq.read_table(
-                root / f,
-                columns=["o_orderkey", "o_orderpriority", "o_totalprice"],
-            )
-            cents = pc.cast(
-                pc.round(pc.multiply(t.column("o_totalprice"), 100),
-                         round_mode="half_towards_infinity"),
-                "int64",
-            ).to_pylist()
-            keys = t.column("o_orderkey").to_pylist()
-            prios = t.column("o_orderpriority").to_pylist()
-            out.extend(
-                ("insert", version, k, p, ce)
-                for k, p, ce in zip(keys, prios, cents)
-            )
-        return out
+        # insert-only commit: serve just the emitted columns — the
+        # full-row read below exists for the diff, not for inserts
+        return [r for f in adds
+                for r in _change_rows(root, "insert", version, f)]
 
     def rows(files):
         out = {}
@@ -1379,12 +1404,7 @@ def version_changes(root: Path, version: int,
             names = t.column_names
             ki = names.index("o_orderkey")
             pi = names.index("o_orderpriority")
-            ci = names.index("o_totalprice")
-            cents = pc.cast(
-                pc.round(pc.multiply(t.column("o_totalprice"), 100),
-                         round_mode="half_towards_infinity"),
-                "int64",
-            ).to_pylist()
+            cents = _cents(t)
             cols = [t.column(c).to_pylist() for c in names]
             for j in range(t.num_rows):
                 full = tuple(col[j] for col in cols)
@@ -1448,9 +1468,9 @@ def lake_restore_version(spark, sf_dir):
 
     def build(tmp: Path):
         _merge_commit(spark, tmp)
-        want = set(_snapshot_files(tmp, as_of=1))
-        have = set(_snapshot_files(tmp))
-        assert _commit(tmp / "_log", 4, {
+        want = set(_snapshot(tmp, as_of=1))
+        have = set(_snapshot(tmp))
+        _commit_or_raise(tmp, 4, {
             "add": sorted(want - have),
             "remove": sorted(have - want),
             "restore": {"to_version": 1},
@@ -1458,7 +1478,7 @@ def lake_restore_version(spark, sf_dir):
 
     root = _store(spark, sf_dir, "restore", extra=build)
     ver = _log_versions(root)[-1]
-    acts = json.loads((root / "_log" / f"v{ver:010d}.json").read_text())
+    acts = _actions(root, ver)
     # the rolled-back version must stay a first-class historical read
     v3_urgent = (
         _read_snapshot(spark, root, as_of=3)
@@ -1534,9 +1554,9 @@ def lake_clone_shallow(spark, sf_dir):
         _base_commits(spark, sf_dir, tmp / "src")
         o = table(spark, sf_dir, "orders")
         # clone v0: reference src's live files relatively — zero copy
-        src_live = _snapshot_files(tmp / "src")
+        src_live = sorted(_snapshot(tmp / "src"))
         (tmp / "clone").mkdir(parents=True, exist_ok=True)
-        assert _commit(tmp / "clone" / "_log", 0, {
+        _commit_or_raise(tmp / "clone", 0, {
             "add": [f"../src/{f}" for f in src_live], "remove": [],
             "clone": {"source": "src", "source_version": 2},
         })
@@ -1545,15 +1565,13 @@ def lake_clone_shallow(spark, sf_dir):
             "o_orderstatus", F.lit("CLONE_ONLY")
         )
         files = _write_files(cl_extra, tmp / "clone" / "data", n_files=1)
-        assert _commit(tmp / "clone" / "_log", 1,
-                       {"add": files, "remove": []})
+        _commit_or_raise(tmp / "clone", 1, {"add": files, "remove": []})
         # ... and src v3, invisible to the clone
         src_extra = o.filter(F.col("o_orderkey") % 23 == 0).withColumn(
             "o_orderstatus", F.lit("SRC_ONLY")
         )
         files = _write_files(src_extra, tmp / "src" / "data", n_files=1)
-        assert _commit(tmp / "src" / "_log", 3,
-                       {"add": files, "remove": []})
+        _commit_or_raise(tmp / "src", 3, {"add": files, "remove": []})
 
     root = _publish_store(build, _fixture_dir(sf_dir) / "lake_clone")
     frames = []
@@ -1665,19 +1683,13 @@ def lake_bloom_index(spark, sf_dir):
                 adds.append({"path": f, "bloom": bpath})
                 if yr == 1997:
                     lookup_key = min(keys)
-            assert _commit(tmp / "_log", kk, {"add": adds, "remove": []})
+            _commit_or_raise(tmp, kk, {"add": adds, "remove": []})
         (tmp / "_meta").write_text(json.dumps({"lookup_key": lookup_key}))
 
     root = _publish_store(build, _fixture_dir(sf_dir) / "lake_bloom")
     key = json.loads((root / "_meta").read_text())["lookup_key"]
     # fold the log: live file -> bloom sidecar
-    blooms: dict[str, str] = {}
-    for v in _log_versions(root):
-        acts = json.loads((root / "_log" / f"v{v:010d}.json").read_text())
-        for r in acts.get("remove", []):
-            blooms.pop(r, None)
-        for e in acts.get("add", []):
-            blooms[_add_path(e)] = e["bloom"] if isinstance(e, dict) else None
+    blooms = {f: e.get("bloom") for f, e in _snapshot(root).items()}
     pos = _bloom_positions(int(key), _BLOOM_M)
     keep = []
     for f, bpath in sorted(blooms.items()):
@@ -1713,83 +1725,40 @@ def lake_bloom_index(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-def _snapshot_actions(root: Path, as_of: int | None = None) -> dict:
-    """Live file -> FULL add-action dict (path/stats/partitionValues) at
-    version ``as_of`` — the metadata fold a partition-aware reader
-    walks. O(live files) driver-side JSON, exactly Delta's snapshot
-    state; bare-path adds (old writers) normalize to ``{"path": f}``."""
-    out: dict[str, dict] = {}
-    for v in _log_versions(root):
-        if as_of is not None and v > as_of:
-            break
-        acts = json.loads((root / "_log" / f"v{v:010d}.json").read_text())
-        for r in acts.get("remove", []):
-            out.pop(r, None)
-        for e in acts.get("add", []):
-            if isinstance(e, dict):
-                out[e["path"]] = e
-            else:
-                out[e] = {"path": e}
-    return out
-
-
 def _pruned_files_partition_first(
     root: Path, part_col: str, part_vals: set[str],
-    stats_col: str | None = None, lo=None, hi=None,
-    as_of: int | None = None,
+    ranges: dict | None = None, as_of: int | None = None,
 ) -> dict:
     """Two-level metadata prune, partition pruning FIRST (the cheap
     exact level — a file either belongs to a matching partition or it
-    does not), then min/max stats skipping WITHIN the surviving
+    does not), then ``_prune`` over ``ranges`` WITHIN the surviving
     partitions. Files with no recorded partitionValues or stats are
     conservatively kept at their respective level — pruning is an
     optimization, never a filter. Returns the counts the pinned oracle
     columns check: partitions_live/scanned, files_live, files after
-    each level, and the surviving file list."""
-    acts = _snapshot_actions(root, as_of)
-    # partition-count sets hold REAL partition values only: a file
-    # with no recorded partitionValues (legacy bare-path add on an
-    # evolved table) is "partition unknown", not a partition named
-    # None — counting it would inflate partitions_live/scanned on
-    # mixed stores (r11 ADVICE). Such files are still conservatively
-    # KEPT by the prune below and surfaced via files_unpartitioned.
-    parts_live = {
-        e["partitionValues"][part_col]
-        for e in acts.values()
-        if e.get("partitionValues", {}).get(part_col) is not None
-    }
-    after_part = {
-        f: e for f, e in acts.items()
-        if e.get("partitionValues", {}).get(part_col) is None
-        or e["partitionValues"][part_col] in part_vals
-    }
-    parts_scanned = {
-        e["partitionValues"][part_col]
-        for e in after_part.values()
-        if e.get("partitionValues", {}).get(part_col) is not None
-    }
-    n_unpartitioned = sum(
-        1 for e in acts.values()
-        if e.get("partitionValues", {}).get(part_col) is None
-    )
-    keep = sorted(after_part)
-    if stats_col is not None:
-        enc = lo.isoformat(sep=" ") if hasattr(lo, "isoformat") else lo
-        enc_hi = hi.isoformat(sep=" ") if hasattr(hi, "isoformat") else hi
-        keep = [
-            f for f, e in sorted(after_part.items())
-            if stats_col not in e.get("stats", {})
-            or (e["stats"][stats_col]["max"] >= enc
-                and e["stats"][stats_col]["min"] <= enc_hi)
-        ]
+    each level, and the surviving file list.
+
+    The partition-count sets hold REAL partition values only: a file
+    with no recorded partitionValues (legacy bare-path add on an
+    evolved table) is "partition unknown", not a partition named None
+    — counting it would inflate partitions_live/scanned on mixed
+    stores (r11 ADVICE). Such files are still kept by the prune and
+    surfaced via files_unpartitioned."""
+    snap = _snapshot(root, as_of)
+    pv = {f: e.get("partitionValues", {}).get(part_col)
+          for f, e in snap.items()}
+    after_part = {f: e for f, e in snap.items()
+                  if pv[f] is None or pv[f] in part_vals}
+    keep = _prune(after_part, ranges or {})
     return {
         "files": keep,
-        "partitions_live": len(parts_live),
-        "partitions_scanned": len(parts_scanned),
-        "files_live": len(acts),
+        "partitions_live": len({v for v in pv.values() if v is not None}),
+        "partitions_scanned": len(
+            {pv[f] for f in after_part if pv[f] is not None}),
+        "files_live": len(snap),
         "files_after_partition_prune": len(after_part),
         "files_scanned": len(keep),
-        "files_unpartitioned": n_unpartitioned,
+        "files_unpartitioned": sum(v is None for v in pv.values()),
     }
 
 
@@ -1830,7 +1799,7 @@ def _build_partitioned_store(spark, sf_dir, tmp: Path) -> None:
                           ["o_orderdate", "o_orderkey"])
                 for f in files
             ]
-        assert _commit(tmp / "_log", k, {"add": adds, "remove": []})
+        _commit_or_raise(tmp, k, {"add": adds, "remove": []})
 
 
 @query(
@@ -1879,9 +1848,8 @@ def lake_partition_pruned(spark, sf_dir):
     )
     pr = _pruned_files_partition_first(
         root, "o_year", {"1997"},
-        stats_col="o_orderdate",
-        lo=datetime(1997, 7, 1),
-        hi=datetime(1997, 12, 31, 23, 59, 59, 999999),
+        {"o_orderdate": (datetime(1997, 7, 1),
+                         datetime(1997, 12, 31, 23, 59, 59, 999999))},
     )
     pred = (
         F.col("o_orderdate") >= F.lit("1997-07-01").cast("timestamp")
@@ -1980,7 +1948,7 @@ def lake_partition_overwrite(spark, sf_dir):
             str(r[0]) for r in
             repl.select(F.year("o_orderdate")).distinct().collect()
         }
-        acts = _snapshot_actions(tmp)
+        acts = _snapshot(tmp)
         removes = sorted(
             f for f, e in acts.items()
             if e.get("partitionValues", {}).get("o_year") in touched
@@ -1998,12 +1966,11 @@ def lake_partition_overwrite(spark, sf_dir):
                           ["o_orderdate", "o_orderkey"])
                 for f in files
             ]
-        assert _commit(tmp / "_log", 7,
-                       {"add": adds, "remove": removes,
-                        "overwritePartitions": sorted(touched)})
+        _commit_or_raise(tmp, 7, {"add": adds, "remove": removes,
+                                  "overwritePartitions": sorted(touched)})
 
     root = _publish_store(build, _fixture_dir(sf_dir) / "lake_part_ow")
-    acts7 = json.loads((root / "_log" / f"v{7:010d}.json").read_text())
+    acts7 = _actions(root, 7)
     # time travel to v6: the pre-overwrite 1997 partition, still whole —
     # counted from parquet FOOTERS (every row in a partition file IS
     # 1997, so footer sums are exact; no Spark job mid-plan)
@@ -2088,9 +2055,9 @@ def lake_partition_evolution(spark, sf_dir):
                 o.filter(F.year("o_orderdate") == yr),
                 tmp / "data", n_files=1,
             )
-            assert _commit(tmp / "_log", k, {"add": files, "remove": []})
+            _commit_or_raise(tmp, k, {"add": files, "remove": []})
         # v2: the evolution event — metadata only, no files
-        assert _commit(tmp / "_log", 2, {
+        _commit_or_raise(tmp, 2, {
             "add": [], "remove": [],
             "metaData": {"partitionColumns": ["o_year"]},
         })
@@ -2107,10 +2074,10 @@ def lake_partition_evolution(spark, sf_dir):
                           ["o_orderdate", "o_orderkey"])
                 for f in files
             ]
-            assert _commit(tmp / "_log", k, {"add": adds, "remove": []})
+            _commit_or_raise(tmp, k, {"add": adds, "remove": []})
 
     root = _publish_store(build, _fixture_dir(sf_dir) / "lake_part_evo")
-    acts = _snapshot_actions(root)
+    acts = _snapshot(root)
     legacy = sorted(f for f, e in acts.items()
                     if "partitionValues" not in e)
     new_kept = sorted(
@@ -2201,7 +2168,7 @@ def lake_concurrent_disjoint(spark, sf_dir):
             # each writer folds the log AT ITS SNAPSHOT (stale for all
             # three once A commits) and stages replacement files
             repl = o.filter((F.year("o_orderdate") == year) & pred)
-            acts = _snapshot_actions(tmp, as_of=snap_v)
+            acts = _snapshot(tmp, as_of=snap_v)
             removes = sorted(
                 f for f, e in acts.items()
                 if e.get("partitionValues", {}).get("o_year") == str(year)
@@ -2223,9 +2190,9 @@ def lake_concurrent_disjoint(spark, sf_dir):
         act_b = stage_overwrite(1999, F.col("o_orderkey") % 3 == 0)
         act_c = stage_overwrite(1997, F.col("o_orderkey") % 5 == 0)
 
-        assert _commit(tmp / "_log", snap_v + 1, act_a)  # A wins v7
-        b_first = _commit(tmp / "_log", snap_v + 1, act_b)  # rejected
-        c_first = _commit(tmp / "_log", snap_v + 1, act_c)  # rejected
+        _commit_or_raise(tmp, snap_v + 1, act_a)  # A wins v7
+        b_first = _commit(tmp, snap_v + 1, act_b)  # rejected
+        c_first = _commit(tmp, snap_v + 1, act_c)  # rejected
 
         def touched(acts_dict: dict) -> set[str]:
             t = set(acts_dict.get("overwritePartitions", []))
@@ -2244,15 +2211,12 @@ def lake_concurrent_disjoint(spark, sf_dir):
             staged removes are still live)."""
             head = max(_log_versions(tmp))
             conflicts: set[str] = set()
-            for v in range(snap_v + 1, head + 1):
-                win = json.loads(
-                    (tmp / "_log" / f"v{v:010d}.json").read_text()
-                )
+            for _, win in _replay(tmp, head, snap_v + 1):
                 conflicts |= touched(win) & touched(my_acts)
             if conflicts:
                 return None, sorted(conflicts)
             target = head + 1
-            assert _commit(tmp / "_log", target, my_acts)
+            _commit_or_raise(tmp, target, my_acts)
             return target, []
 
         b_v, b_conf = revalidate_and_retry(act_b)   # disjoint -> v8
@@ -2353,18 +2317,13 @@ def lake_timestamp_travel(spark, sf_dir):
                 o.filter(F.col("o_orderkey") % 3 == k), tmp / "data"
             )
             ts = (base + timedelta(days=10 * (k + 1))).isoformat(sep=" ")
-            assert _commit(tmp / "_log", k, {
+            _commit_or_raise(tmp, k, {
                 "add": files, "remove": [],
                 "commitTimestamp": ts,
             })
 
     root = _publish_store(build, _fixture_dir(sf_dir) / "lake_ict")
-    cts = {
-        v: json.loads(
-            (root / "_log" / f"v{v:010d}.json").read_text()
-        )["commitTimestamp"]
-        for v in _log_versions(root)
-    }
+    cts = {v: acts["commitTimestamp"] for v, acts in _replay(root)}
 
     def resolve(asof: str) -> int:
         vs = [v for v, t in cts.items() if t <= asof]

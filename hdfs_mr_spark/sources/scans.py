@@ -747,12 +747,7 @@ def scan_python_datasource(spark, sf_dir):
         def reader(self, schema):
             return SynthReader()
 
-    try:
-        spark.dataSource.register(SynthSource)
-    except Exception as exc:
-        # idempotent re-run only; real registration failures surface
-        if "exist" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    spark.dataSource.register(SynthSource)
     df = spark.read.format("hdfs_mr_synth").load()
     return (
         df.groupBy((F.col("id") % 4).cast("bigint").alias("part"))
@@ -1212,11 +1207,7 @@ def sink_python_datasource(spark, sf_dir):
         def writer(self, schema, overwrite):
             return JlWriter(self.options["path"])
 
-    try:
-        spark.dataSource.register(JlSink)
-    except Exception as exc:
-        if "exist" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    spark.dataSource.register(JlSink)
     src = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 7 == 0)
@@ -1404,11 +1395,7 @@ def scan_avro(spark, sf_dir):
                 int(self.options.get("nsplits", "4")),
             )
 
-    try:
-        spark.dataSource.register(AvroSource)
-    except Exception as exc:
-        if "exist" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    spark.dataSource.register(AvroSource)
     return (
         spark.read.format("hdfs_mr_avro")
         .option("path", path).option("size", size).option("nsplits", 4)

@@ -1,27 +1,31 @@
-"""Simple-reader twins of the lake streaming sources (offset protocol).
+"""The lake table as a streaming source: one reader and its offset spec.
 
-``stream_lake_tail`` and ``stream_lake_cdf`` (streaming/queries.py) run
-on the full partition-planned :class:`DataSourceStreamReader` — offsets
-handled by the driver-side runner, DATA read by executors, one input
-partition per commit file (VERDICT r10 item 1). These module-level
-twins keep the r10 ``SimpleDataSourceStreamReader`` implementations
-alive as the executable specification of the OFFSET protocol itself —
-initialOffset / one-committed-version-per-read / readBetweenOffsets
-checkpoint replay / remove-action refusal — exercised directly by
-tests/test_units.py without a Spark query in the loop. They are not
-registered as a data source: the registry ops own the scale path; these
-own the protocol contract.
+``lake_stream_source`` builds every partition-planned lake stream source
+(``stream_lake_tail``, ``stream_lake_partition_tail``, ``stream_lake_cdf``
+in streaming/queries.py, and the deep-log tail in tools/zipf_stress.py)
+from one ``DataSourceStreamReader``: offsets are lake versions,
+``latestOffset`` announces the newest committed version, ``partitions``
+plans one InputPartition per unit a planner function returns (commit-log
+metadata only, in the source runner) and ``read`` runs on executors,
+behind the planner-pid guard.
 
-Both readers are pure pyarrow + commit-log folds (no SparkSession), so
-the protocol tests run them in-process.
+The simple-reader twins below (``LakeTailSimpleReader``,
+``LakeCdfSimpleReader``) are the executable specification of the OFFSET
+protocol — initialOffset / one committed version per read /
+readBetweenOffsets checkpoint replay / remove-action refusal — which
+tests/test_lake_stream.py drives in-process, with no Spark query in the
+loop. They are not registered as data sources: the factory owns the
+scale path, the twins own the protocol contract. Both read the log only
+through the log layer in sources/lake.py.
 """
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 from pyspark.sql.datasource import SimpleDataSourceStreamReader
+
+from hdfs_mr_spark.sources import lake
 
 
 def plan_tail_partitions(
@@ -44,28 +48,18 @@ def plan_tail_partitions(
     version_adds' remove refusal: partition skipping is an
     optimization over adds, so it is allowed to drop; remove actions
     change delivered rows, so they must refuse."""
-    import json as _json
-
-    from hdfs_mr_spark.sources import lake
-
+    root = Path(root)
     parts = []
-    for v in lake._log_versions(Path(root)):
+    for v in lake._log_versions(root):
         if not (start_v < v <= end_v):
             continue
-        files = lake.version_adds(Path(root), v)
+        files = lake.version_adds(root, v)
         if part_col is not None:
-            acts = _json.loads(
-                (Path(root) / "_log" / f"v{v:010d}.json").read_text()
-            )
-            pv = {
-                lake._add_path(e): e.get("partitionValues")
-                if isinstance(e, dict) else None
-                for e in acts.get("add", [])
-            }
-            files = [
-                f for f in files
-                if pv.get(f) is None or pv[f].get(part_col) == part_val
-            ]
+            pv = {e["path"]: e.get("partitionValues")
+                  for e in lake._actions(root, v)["add"]
+                  if isinstance(e, dict)}
+            files = [f for f in files
+                     if pv.get(f) is None or pv[f].get(part_col) == part_val]
         parts.extend((v, f) for f in files)
     return parts
 
@@ -80,18 +74,11 @@ def plan_cdf_partitions(root: str, start_v: int,
     sidecars degrades to a single ``("diff", v, None)`` partition whose
     executor-side read replays the pyarrow full-row diff. Metadata-only
     in the runner; all row IO lands on executors."""
-    from hdfs_mr_spark.sources import lake
-
     parts: list[tuple[str, int, str | None]] = []
-    for v in lake._log_versions(Path(root)):
-        if not (start_v < v <= end_v):
-            continue
-        acts = json.loads(
-            (Path(root) / "_log" / f"v{v:010d}.json").read_text()
-        )
-        adds = [lake._add_path(e) for e in acts.get("add", [])]
+    for v, acts in lake._replay(Path(root), end_v, start_v + 1):
         if not acts.get("remove"):
-            parts.extend(("insert", v, f) for f in adds)
+            parts.extend(("insert", v, lake._add_path(e))
+                         for e in acts.get("add", []))
         elif acts.get("cdc"):
             parts.extend(("cdc", v, f) for f in acts["cdc"])
         else:
@@ -99,108 +86,177 @@ def plan_cdf_partitions(root: str, start_v: int,
     return parts
 
 
-class LakeTailSimpleReader(SimpleDataSourceStreamReader):
-    """Append-tail offset protocol: offsets ARE lake versions; each
-    read() advances exactly one committed version and serves the files
-    that version ADDED (micro-batch boundaries == commit boundaries,
+def read_added_file(root: str, unit: tuple, fields: list[str]) -> list:
+    """Executor read of one tail partition ``(version, file)``: the
+    file's rows as ``fields`` (``lake._file_rows``)."""
+    return lake._file_rows(Path(root) / unit[1], fields)
+
+
+def read_change_unit(root: str, unit: tuple, fields: list[str]) -> list:
+    """Executor read of one change-feed partition ``(kind, version,
+    file)`` as ``lake.version_changes`` rows: a sidecar's or an added
+    file's changes, or, for a commit with no sidecars, the replayed
+    full-row diff of the whole version."""
+    kind, v, rel = unit
+    if kind == "diff":
+        return lake.version_changes(Path(root), v, use_cdc=False)
+    return lake._change_rows(Path(root), kind, v, rel)
+
+
+def lake_stream_source(fmt: str, schema: str, plan: str, read: str):
+    """A Python DataSource named ``fmt`` that streams a lake store: the
+    ``path`` option is the store root; ``part_col``/``part_val``
+    options, when set, go to the planner. ``plan`` and ``read`` name
+    functions of this module: ``plan(root, start_v, end_v, **filter)``
+    returns the partition units of a span, ``read(root, unit, fields)``
+    the rows of one unit as the schema's ``fields``.
+
+    The classes are created here, at run time, so cloudpickle ships
+    them BY VALUE: the source runner and the executors cannot import
+    the package by reference (the ``udfs.repo_kernel`` rule). Their
+    methods therefore touch no module global; they import this module
+    by name after putting the repo root on ``sys.path``.
+
+    latestOffset is SOURCE-INTRINSIC (ADVICE r11 medium, restart
+    safety): it announces the NEWEST committed lake version, the
+    Kafka/Delta discipline — monotone because versions only grow, so a
+    fresh reader after a checkpoint restart never announces an offset
+    BEHIND what Spark already committed. partitions() and commit()
+    clamp the cursor to the Spark-supplied end for the same reason:
+    after a restart Spark replans from its own committed offsets before
+    any commit() call. Per-batch admission control (one version per
+    batch) is the simple twins' offset-protocol spec; this reader
+    serves whole pending spans, fanned out per unit. Every partition
+    carries the planner pid and read() RAISES in that process — the
+    per-run pin that rows are not routed through the runner."""
+    from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
+                                        InputPartition)
+
+    from hdfs_mr_spark.functions.udfs import REPO_ROOT
+
+    repo, ddl = REPO_ROOT, schema
+    fields = [c.split()[0] for c in ddl.split(",")]
+
+    def source_module():
+        import importlib
+        import sys
+
+        if repo not in sys.path:
+            sys.path.insert(0, repo)
+        return importlib.import_module("hdfs_mr_spark.streaming.lake_source")
+
+    class LakePartition(InputPartition):
+        def __init__(self, root, unit, planner_pid):
+            self.root = root
+            self.unit = unit
+            self.planner_pid = planner_pid
+
+    class LakeStreamReader(DataSourceStreamReader):
+        def __init__(self, options):
+            self.root = options["path"]
+            self.where = {k: options[k] for k in ("part_col", "part_val")
+                          if k in options}
+            self.cur = -1
+
+        def initialOffset(self):
+            return {"version": -1}
+
+        def latestOffset(self):
+            from pathlib import Path as _Path
+
+            vs = source_module().lake._log_versions(_Path(self.root))
+            if vs:
+                self.cur = max(self.cur, vs[-1])
+            return {"version": self.cur}
+
+        def partitions(self, start, end):
+            import os
+
+            self.cur = max(self.cur, end["version"])
+            units = getattr(source_module(), plan)(
+                self.root, start["version"], end["version"], **self.where)
+            return [LakePartition(self.root, u, os.getpid()) for u in units]
+
+        def read(self, partition):
+            import os
+
+            if os.getpid() == partition.planner_pid:
+                raise RuntimeError(
+                    f"{fmt} rows routed through the planner process"
+                    " — executor-side read contract broken"
+                )
+            yield from getattr(source_module(), read)(
+                partition.root, partition.unit, fields)
+
+        def commit(self, end):
+            self.cur = max(self.cur, end["version"])
+
+    class LakeStreamSource(DataSource):
+        @classmethod
+        def name(cls):
+            return fmt
+
+        def schema(self):
+            return ddl
+
+        def streamReader(self, schema):
+            return LakeStreamReader(self.options)
+
+    return LakeStreamSource
+
+
+class _VersionStepReader(SimpleDataSourceStreamReader):
+    """The offset protocol both twins share: offsets ARE lake versions;
+    each read() advances exactly one committed version and serves
+    ``_rows(version)`` (micro-batch boundaries == commit boundaries,
     Delta's streaming-source contract); readBetweenOffsets replays any
-    (start, end] span for checkpoint recovery; versions carrying
-    remove-actions are REFUSED (an append tail cannot represent data
-    changes — re-seed from a snapshot, Delta without ignoreChanges)."""
+    (start, end] span for checkpoint recovery."""
 
-    def __init__(self, store_root: str, repo_root: str | None = None):
-        self.root = store_root
-        self.repo = repo_root
+    def __init__(self, store_root: str):
+        self.root = Path(store_root)
 
-    def _lake(self):
-        import sys as _sys
-
-        if self.repo and self.repo not in _sys.path:
-            _sys.path.insert(0, self.repo)
-        from hdfs_mr_spark.sources import lake as _lake
-
-        return _lake
-
-    def _rows_for(self, version):
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        rows = []
-        for f in self._lake().version_adds(Path(self.root), version):
-            t = pq.read_table(
-                Path(self.root) / f,
-                columns=["o_orderkey", "o_orderstatus", "o_totalprice"],
-            )
-            cents = pc.cast(
-                pc.round(pc.multiply(t.column("o_totalprice"), 100),
-                         round_mode="half_towards_infinity"),
-                "int64",
-            )
-            rows.extend(zip(
-                t.column("o_orderkey").to_pylist(),
-                t.column("o_orderstatus").to_pylist(),
-                cents.to_pylist(),
-            ))
-        return rows
+    def _rows(self, version: int) -> list:
+        raise NotImplementedError
 
     def initialOffset(self):
         return {"version": -1}
 
     def read(self, start):
         v = start["version"]
-        pending = [x for x in self._lake()._log_versions(Path(self.root))
-                   if x > v]
+        pending = [x for x in lake._log_versions(self.root) if x > v]
         if not pending:
             return iter([]), {"version": v}
         nv = pending[0]  # one committed version per micro-batch
-        return iter(self._rows_for(nv)), {"version": nv}
+        return iter(self._rows(nv)), {"version": nv}
 
     def readBetweenOffsets(self, start, end):
-        rows = []
-        for x in self._lake()._log_versions(Path(self.root)):
-            if start["version"] < x <= end["version"]:
-                rows.extend(self._rows_for(x))
-        return iter(rows)
+        return iter([
+            r for x in lake._log_versions(self.root)
+            if start["version"] < x <= end["version"]
+            for r in self._rows(x)
+        ])
 
 
-class LakeCdfSimpleReader(SimpleDataSourceStreamReader):
-    """Change-feed offset protocol: same version-offsets as the tail
-    twin, but each read serves commit V's row-level CHANGES
-    (lake.version_changes): append commits stream their added rows as
-    inserts; a COW commit serves its recorded change-data sidecars, or
-    is full-row pre-vs-post diffed when the writer recorded none."""
+class LakeTailSimpleReader(_VersionStepReader):
+    """Append-tail twin: serves the rows each version ADDED; versions
+    carrying remove-actions are REFUSED (an append tail cannot
+    represent data changes — re-seed from a snapshot, Delta without
+    ignoreChanges)."""
 
-    def __init__(self, store_root: str, repo_root: str | None = None):
-        self.root = store_root
-        self.repo = repo_root
+    def _rows(self, version):
+        return [
+            r for f in lake.version_adds(self.root, version)
+            for r in lake._file_rows(
+                self.root / f, ["o_orderkey", "o_orderstatus", "cents"])
+        ]
 
-    def _lake(self):
-        import sys as _sys
 
-        if self.repo and self.repo not in _sys.path:
-            _sys.path.insert(0, self.repo)
-        from hdfs_mr_spark.sources import lake as _lake
+class LakeCdfSimpleReader(_VersionStepReader):
+    """Change-feed twin: same version-offsets, but each read serves
+    commit V's row-level CHANGES (lake.version_changes): append commits
+    stream their added rows as inserts; a COW commit serves its
+    recorded change-data sidecars, or is full-row pre-vs-post diffed
+    when the writer recorded none."""
 
-        return _lake
-
-    def _changes(self, version):
-        return self._lake().version_changes(Path(self.root), version)
-
-    def initialOffset(self):
-        return {"version": -1}
-
-    def read(self, start):
-        v = start["version"]
-        pending = [x for x in self._lake()._log_versions(Path(self.root))
-                   if x > v]
-        if not pending:
-            return iter([]), {"version": v}
-        nv = pending[0]
-        return iter(self._changes(nv)), {"version": nv}
-
-    def readBetweenOffsets(self, start, end):
-        rows = []
-        for x in self._lake()._log_versions(Path(self.root)):
-            if start["version"] < x <= end["version"]:
-                rows.extend(self._changes(x))
-        return iter(rows)
+    def _rows(self, version):
+        return lake.version_changes(self.root, version)

@@ -1185,14 +1185,7 @@ def stream_python_datasource(spark, sf_dir):
         def simpleStreamReader(self, schema):
             return SynthStreamReader()
 
-    try:
-        spark.dataSource.register(SynthStreamSource)
-    except Exception as exc:
-        # idempotent re-registration only — a genuine registration
-        # failure (API absent, bad source class) must surface here,
-        # not as an opaque not-found at load()
-        if "exist" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    spark.dataSource.register(SynthStreamSource)
 
     agg = (
         spark.readStream.format("hmr_synth_stream")
@@ -1746,8 +1739,7 @@ def stream_lake_append(spark, sf_dir):
         files = _write_files(
             batch_df.select("doc_id"), root / "data", n_files=1
         )
-        ok = _commit(root / "_log", int(batch_id),
-                     {"add": files, "remove": []})
+        ok = _commit(root, int(batch_id), {"add": files, "remove": []})
         if not ok:
             # retried delivery of an already-committed batch: the
             # orphaned staged files are uncommitted by construction
@@ -1759,9 +1751,8 @@ def stream_lake_append(spark, sf_dir):
             files2 = _write_files(
                 batch_df.select("doc_id"), root / "data", n_files=1
             )
-            again = _commit(root / "_log", int(batch_id),
-                            {"add": files2, "remove": []})
-            assert not again, "retried batch double-committed"
+            if _commit(root, int(batch_id), {"add": files2, "remove": []}):
+                raise RuntimeError("retried batch double-committed")
             for f in files2:
                 (root / f).unlink()
             replayed.append(batch_id)
@@ -1776,7 +1767,8 @@ def stream_lake_append(spark, sf_dir):
     with _drain_root("hmr_lake_stream_") as root:
         _drain(s.writeStream.foreachBatch(commit_batch), root / "ckpt",
                timeout=600)
-        assert replayed, "the retry case never exercised"
+        if not replayed:
+            raise RuntimeError("the retry case never exercised")
         n_versions = len(_log_versions(root))
         return (
             _read_snapshot(spark, root)
@@ -1791,6 +1783,9 @@ def stream_lake_append(spark, sf_dir):
             .orderBy("bucket")
             .localCheckpoint()
         )
+
+
+_LAKE_TAIL_SCHEMA = "o_orderkey bigint, o_orderstatus string, cents bigint"
 
 
 @query(
@@ -1811,19 +1806,21 @@ ORDER BY o_orderstatus
 )
 def stream_lake_tail(spark, sf_dir):
     """The lake table as a STREAMING SOURCE on the full
-    partition-planned DataSourceStreamReader (VERDICT r10 item 1; the
-    r9 simple reader — which served every row through the driver-side
-    runner, the `weak` grade — is retained as
-    streaming/lake_source.LakeTailSimpleReader for the offset-protocol
-    tests). Offsets ARE lake versions: latestOffset announces the
-    NEWEST committed version — source-intrinsic and monotone, the
-    Kafka/Delta discipline, so a checkpoint restart can never observe
-    a backwards announcement (r11 ADVICE; per-batch version pacing is
-    the simple twins' offset-protocol spec); partitions(start,
-    end] plans ONE InputPartition PER FILE the span's commits ADDED
-    (lake_source.plan_tail_partitions — commit-log metadata only, no
-    row IO in the runner); read(partition) executes ON EXECUTORS as a
-    pure-pyarrow read of that single file. Versions carrying
+    partition-planned DataSourceStreamReader that
+    streaming/lake_source.lake_stream_source builds for every lake
+    stream (VERDICT r10 item 1; the r9 simple reader — which served
+    every row through the driver-side runner, the `weak` grade — is
+    retained as lake_source.LakeTailSimpleReader for the
+    offset-protocol tests). Offsets ARE lake versions: latestOffset
+    announces the NEWEST committed version — source-intrinsic and
+    monotone, the Kafka/Delta discipline, so a checkpoint restart can
+    never observe a backwards announcement (r11 ADVICE; per-batch
+    version pacing is the simple twins' offset-protocol spec);
+    partitions(start, end] plans ONE InputPartition PER FILE the
+    span's commits ADDED (lake_source.plan_tail_partitions —
+    commit-log metadata only, no row IO in the runner);
+    read(partition) executes ON EXECUTORS as a pyarrow read of that
+    single file. Versions carrying
     remove-actions are REFUSED at planning time (lake.version_adds —
     an append tail cannot represent data changes; re-seed from a
     snapshot, exactly Delta without ignoreChanges).
@@ -1840,139 +1837,18 @@ def stream_lake_tail(spark, sf_dir):
     Scale: incremental IO is O(new data), never O(table), and a commit
     of N files fans out to N executor tasks — the driver handles only
     version integers and file names."""
-    from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
-                                        InputPartition)
-
-    from hdfs_mr_spark.functions.udfs import REPO_ROOT as _REPO_ROOT
     from hdfs_mr_spark.sources.lake import _store
+    from hdfs_mr_spark.streaming.lake_source import lake_stream_source
 
     root = _store(spark, sf_dir, "append")
-    root_s = str(root)
-
-    class LakeFilePart(InputPartition):
-        def __init__(self, root, rel, version, planner_pid):
-            self.root = root
-            self.rel = rel
-            self.version = version
-            self.planner_pid = planner_pid
-
-    class LakeTailStreamReader(DataSourceStreamReader):
-        """latestOffset/partitions run driver-side in the
-        python_streaming_source_runner process (no inherited
-        sys.path/cwd — inject REPO_ROOT before repo imports, the
-        repo_kernel discipline); read() runs in EXECUTOR workers and
-        is pure pyarrow, no repo import at all."""
-
-        def __init__(self, store_root, repo_root):
-            self.root = store_root
-            self.repo = repo_root
-            self.cur = -1
-
-        def _repo_mod(self, name):
-            import importlib
-            import sys as _sys
-
-            if self.repo not in _sys.path:
-                _sys.path.insert(0, self.repo)
-            return importlib.import_module(name)
-
-        def initialOffset(self):
-            return {"version": -1}
-
-        def latestOffset(self):
-            # SOURCE-INTRINSIC latest (ADVICE r11 medium, restart
-            # safety): announce the NEWEST committed lake version, the
-            # Kafka/Delta discipline — monotone by construction because
-            # lake versions only grow, so a fresh reader after a
-            # checkpoint restart can never announce an offset BEHIND
-            # what Spark already committed (a reader-memory cursor
-            # walk re-announced version 0 after restart, poisoning the
-            # offset log with a backwards entry whose next span would
-            # re-deliver committed versions). Per-batch admission
-            # control (one version per batch) is the simple twins'
-            # offset-protocol spec (lake_source.py); the scale reader
-            # serves whole pending spans, fanned out per file.
-            from pathlib import Path as _P
-
-            lake = self._repo_mod("hdfs_mr_spark.sources.lake")
-            vs = lake._log_versions(_P(self.root))
-            if vs:
-                self.cur = max(self.cur, vs[-1])
-            return {"version": self.cur}
-
-        def partitions(self, start, end):
-            import os as _os
-
-            # recovery path: after a checkpoint restart Spark replans
-            # from its own committed offsets BEFORE any commit() call —
-            # clamp the in-memory cursor to the Spark-supplied end so a
-            # fresh reader never re-announces already-committed versions
-            # from latestOffset() (ADVICE r11, medium)
-            self.cur = max(self.cur, end["version"])
-            src = self._repo_mod("hdfs_mr_spark.streaming.lake_source")
-            return [
-                LakeFilePart(self.root, f, v, _os.getpid())
-                for v, f in src.plan_tail_partitions(
-                    self.root, start["version"], end["version"])
-            ]
-
-        def read(self, partition):
-            import os as _os
-
-            if _os.getpid() == partition.planner_pid:
-                raise RuntimeError(
-                    "lake tail rows routed through the planner process"
-                    " — executor-side read contract broken"
-                )
-            from pathlib import Path as _P
-
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            t = pq.read_table(
-                _P(partition.root) / partition.rel,
-                columns=["o_orderkey", "o_orderstatus", "o_totalprice"],
-            )
-            cents = pc.cast(
-                pc.round(pc.multiply(t.column("o_totalprice"), 100),
-                         round_mode="half_towards_infinity"),
-                "int64",
-            )
-            yield from zip(
-                t.column("o_orderkey").to_pylist(),
-                t.column("o_orderstatus").to_pylist(),
-                cents.to_pylist(),
-            )
-
-        def commit(self, end):
-            # restart path: after a checkpoint recovery Spark replans
-            # from its committed offset — never re-announce versions
-            # at or below it
-            self.cur = max(self.cur, end["version"])
-
-    class LakeTailSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "hmr_lake_tail"
-
-        def schema(self):
-            return "o_orderkey bigint, o_orderstatus string, cents bigint"
-
-        def streamReader(self, schema):
-            return LakeTailStreamReader(
-                self.options["path"], self.options["repo"]
-            )
-
-    try:
-        spark.dataSource.register(LakeTailSource)
-    except Exception as exc:
-        if "exist" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    spark.dataSource.register(lake_stream_source(
+        "hmr_lake_tail", _LAKE_TAIL_SCHEMA,
+        "plan_tail_partitions", "read_added_file",
+    ))
 
     agg = (
         spark.readStream.format("hmr_lake_tail")
-        .option("path", root_s)
-        .option("repo", _REPO_ROOT)
+        .option("path", str(root))
         .load()
         .groupBy("o_orderstatus")
         .agg(
@@ -2035,139 +1911,34 @@ def stream_lake_partition_tail(spark, sf_dir):
     partitionValues are conservatively kept (never-a-filter),
     mirroring the batch prune.
 
-    read() is the same executor-side pure-pyarrow single-file scan as
-    stream_lake_tail, planner-pid-guarded. At 100 TB this is the
+    The reader is stream_lake_tail's (lake_stream_source), with the
+    partition filter passed as the part_col/part_val options; read()
+    is the same executor-side pyarrow single-file scan,
+    planner-pid-guarded. At 100 TB this is the
     tenant-feed shape: a year- (or tenant-) scoped incremental
     consumer pays O(its partition's new files) per commit, not O(table
     churn) — metadata does the filtering, executors do the reading."""
-    from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
-                                        InputPartition)
-
-    from hdfs_mr_spark.functions.udfs import REPO_ROOT as _REPO_ROOT
     from hdfs_mr_spark.sources.lake import (_build_partitioned_store,
                                             _log_versions, _publish_store)
     from hdfs_mr_spark.sources.scans import _fixture_dir
-    from hdfs_mr_spark.streaming.lake_source import plan_tail_partitions
+    from hdfs_mr_spark.streaming.lake_source import (lake_stream_source,
+                                                     plan_tail_partitions)
 
     root = _publish_store(
         lambda tmp: _build_partitioned_store(spark, sf_dir, tmp),
         _fixture_dir(sf_dir) / "lake_part",
     )
-    root_s = str(root)
-    n_versions = len(_log_versions(root))
     n_planned = len(plan_tail_partitions(
-        root_s, -1, n_versions - 1, "o_year", "1997"
+        str(root), -1, _log_versions(root)[-1], "o_year", "1997"
     ))
-
-    class LakeFilePart(InputPartition):
-        def __init__(self, root, rel, version, planner_pid):
-            self.root = root
-            self.rel = rel
-            self.version = version
-            self.planner_pid = planner_pid
-
-    class LakePartTailReader(DataSourceStreamReader):
-        """Runner-process planning (REPO_ROOT injection), executor
-        reads — stream_lake_tail's contract plus the partition
-        filter pushed into partitions()."""
-
-        def __init__(self, store_root, repo_root, part_col, part_val):
-            self.root = store_root
-            self.repo = repo_root
-            self.part_col = part_col
-            self.part_val = part_val
-            self.cur = -1
-
-        def _repo_mod(self, name):
-            import importlib
-            import sys as _sys
-
-            if self.repo not in _sys.path:
-                _sys.path.insert(0, self.repo)
-            return importlib.import_module(name)
-
-        def initialOffset(self):
-            return {"version": -1}
-
-        def latestOffset(self):
-            # source-intrinsic newest committed version — restart-safe
-            # monotone announcement; see LakeTailStreamReader
-            from pathlib import Path as _P
-
-            lake = self._repo_mod("hdfs_mr_spark.sources.lake")
-            vs = lake._log_versions(_P(self.root))
-            if vs:
-                self.cur = max(self.cur, vs[-1])
-            return {"version": self.cur}
-
-        def partitions(self, start, end):
-            import os as _os
-
-            # recovery clamp — see LakeTailStreamReader.partitions()
-            self.cur = max(self.cur, end["version"])
-            src = self._repo_mod("hdfs_mr_spark.streaming.lake_source")
-            return [
-                LakeFilePart(self.root, f, v, _os.getpid())
-                for v, f in src.plan_tail_partitions(
-                    self.root, start["version"], end["version"],
-                    self.part_col, self.part_val)
-            ]
-
-        def read(self, partition):
-            import os as _os
-
-            if _os.getpid() == partition.planner_pid:
-                raise RuntimeError(
-                    "partitioned lake tail rows routed through the "
-                    "planner process — executor-side read contract broken"
-                )
-            from pathlib import Path as _P
-
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            t = pq.read_table(
-                _P(partition.root) / partition.rel,
-                columns=["o_orderkey", "o_orderstatus", "o_totalprice"],
-            )
-            cents = pc.cast(
-                pc.round(pc.multiply(t.column("o_totalprice"), 100),
-                         round_mode="half_towards_infinity"),
-                "int64",
-            )
-            yield from zip(
-                t.column("o_orderkey").to_pylist(),
-                t.column("o_orderstatus").to_pylist(),
-                cents.to_pylist(),
-            )
-
-        def commit(self, end):
-            self.cur = max(self.cur, end["version"])
-
-    class LakePartTailSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "hmr_lake_part_tail"
-
-        def schema(self):
-            return "o_orderkey bigint, o_orderstatus string, cents bigint"
-
-        def streamReader(self, schema):
-            return LakePartTailReader(
-                self.options["path"], self.options["repo"],
-                self.options["part_col"], self.options["part_val"],
-            )
-
-    try:
-        spark.dataSource.register(LakePartTailSource)
-    except Exception as exc:
-        if "exist" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    spark.dataSource.register(lake_stream_source(
+        "hmr_lake_part_tail", _LAKE_TAIL_SCHEMA,
+        "plan_tail_partitions", "read_added_file",
+    ))
 
     agg = (
         spark.readStream.format("hmr_lake_part_tail")
-        .option("path", root_s)
-        .option("repo", _REPO_ROOT)
+        .option("path", str(root))
         .option("part_col", "o_year")
         .option("part_val", "1997")
         .load()
@@ -2266,153 +2037,23 @@ def stream_lake_cdf(spark, sf_dir):
     downstream incremental consumer follows a mutating 100 TB table by
     reading O(changed rows per commit) across executors, never
     re-snapshotting and never serializing through the driver."""
-    from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
-                                        InputPartition)
-
-    from hdfs_mr_spark.functions.udfs import REPO_ROOT as _REPO_ROOT
     from hdfs_mr_spark.sources.lake import _merge_commit, _store
+    from hdfs_mr_spark.streaming.lake_source import lake_stream_source
 
     root = _store(
         spark, sf_dir, "merge2",
         extra=lambda tmp: _merge_commit(spark, tmp),
     )
-    root_s = str(root)
-
-    class CdfPart(InputPartition):
-        def __init__(self, root, repo, kind, version, rel, planner_pid):
-            self.root = root
-            self.repo = repo
-            self.kind = kind
-            self.version = version
-            self.rel = rel
-            self.planner_pid = planner_pid
-
-    class LakeCdfStreamReader(DataSourceStreamReader):
-        """Offset/partition planning in the runner process (inject
-        REPO_ROOT first — repo_kernel discipline); row IO in executor
-        workers."""
-
-        def __init__(self, store_root, repo_root):
-            self.root = store_root
-            self.repo = repo_root
-            self.cur = -1
-
-        def _repo_mod(self, name):
-            import importlib
-            import sys as _sys
-
-            if self.repo not in _sys.path:
-                _sys.path.insert(0, self.repo)
-            return importlib.import_module(name)
-
-        def initialOffset(self):
-            return {"version": -1}
-
-        def latestOffset(self):
-            # source-intrinsic newest committed version — restart-safe
-            # monotone announcement; see LakeTailStreamReader
-            from pathlib import Path as _P
-
-            lake = self._repo_mod("hdfs_mr_spark.sources.lake")
-            vs = lake._log_versions(_P(self.root))
-            if vs:
-                self.cur = max(self.cur, vs[-1])
-            return {"version": self.cur}
-
-        def partitions(self, start, end):
-            import os as _os
-
-            # recovery clamp — see LakeTailStreamReader.partitions()
-            self.cur = max(self.cur, end["version"])
-            src = self._repo_mod("hdfs_mr_spark.streaming.lake_source")
-            return [
-                CdfPart(self.root, self.repo, kind, v, rel, _os.getpid())
-                for kind, v, rel in src.plan_cdf_partitions(
-                    self.root, start["version"], end["version"])
-            ]
-
-        def read(self, partition):
-            import os as _os
-
-            if _os.getpid() == partition.planner_pid:
-                raise RuntimeError(
-                    "lake CDF rows routed through the planner process"
-                    " — executor-side read contract broken"
-                )
-            from pathlib import Path as _P
-
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            v = partition.version
-            if partition.kind == "diff":
-                # legacy commit (no recorded sidecars): replay the
-                # pyarrow full-row diff ON THE EXECUTOR
-                import sys as _sys
-
-                if partition.repo not in _sys.path:
-                    _sys.path.insert(0, partition.repo)
-                from hdfs_mr_spark.sources.lake import version_changes
-
-                yield from version_changes(
-                    _P(partition.root), v, use_cdc=False)
-                return
-            if partition.kind == "cdc":
-                t = pq.read_table(
-                    _P(partition.root) / partition.rel,
-                    columns=["_change_type", "o_orderkey",
-                             "o_orderpriority", "o_totalprice"],
-                )
-                types = t.column("_change_type").to_pylist()
-            else:  # insert: one added data file
-                t = pq.read_table(
-                    _P(partition.root) / partition.rel,
-                    columns=["o_orderkey", "o_orderpriority",
-                             "o_totalprice"],
-                )
-                types = ["insert"] * t.num_rows
-            cents = pc.cast(
-                pc.round(pc.multiply(t.column("o_totalprice"), 100),
-                         round_mode="half_towards_infinity"),
-                "int64",
-            )
-            yield from zip(
-                types,
-                [v] * t.num_rows,
-                t.column("o_orderkey").to_pylist(),
-                t.column("o_orderpriority").to_pylist(),
-                cents.to_pylist(),
-            )
-
-        def commit(self, end):
-            self.cur = max(self.cur, end["version"])
-
-    class LakeCdfSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "hmr_lake_cdf"
-
-        def schema(self):
-            return (
-                "_change_type string, _commit_version bigint, "
-                "o_orderkey bigint, o_orderpriority string, cents bigint"
-            )
-
-        def streamReader(self, schema):
-            return LakeCdfStreamReader(
-                self.options["path"], self.options["repo"]
-            )
-
-    try:
-        spark.dataSource.register(LakeCdfSource)
-    except Exception as exc:
-        if "exist" not in str(exc).lower() and "already" not in str(exc).lower():
-            raise
+    spark.dataSource.register(lake_stream_source(
+        "hmr_lake_cdf",
+        "_change_type string, _commit_version bigint, "
+        "o_orderkey bigint, o_orderpriority string, cents bigint",
+        "plan_cdf_partitions", "read_change_unit",
+    ))
 
     agg = (
         spark.readStream.format("hmr_lake_cdf")
-        .option("path", root_s)
-        .option("repo", _REPO_ROOT)
+        .option("path", str(root))
         .load()
         .groupBy("_change_type", "_commit_version")
         .agg(
@@ -2751,12 +2392,7 @@ def stream_python_datasource_sink(spark, sf_dir):
         def streamWriter(self, schema, overwrite):
             return EpochWriter(self.options["path"])
 
-    try:
-        spark.dataSource.register(EpochSink)
-    except Exception as exc:
-        if ("exist" not in str(exc).lower()
-                and "already" not in str(exc).lower()):
-            raise
+    spark.dataSource.register(EpochSink)
 
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
@@ -2786,10 +2422,10 @@ def stream_python_datasource_sink(spark, sf_dir):
         ref_log = out / "_refusals.log"
         n_refused = len(ref_log.read_text().split()) if ref_log.exists() else 0
         back_schema = "doc_id bigint, text_len bigint"
+        epochs = sorted(str(f) for f in out.glob("epoch-*.jsonl"))
         back = (
-            spark.read.schema(back_schema).json(str(out / "epoch-*.jsonl"))
-            if any(out.glob("epoch-*.jsonl"))
-            else spark.createDataFrame([], back_schema)
+            spark.read.schema(back_schema).json(epochs)
+            if epochs else spark.createDataFrame([], back_schema)
         )
         return (
             back.groupBy((F.col("doc_id") % 5).cast("bigint").alias("bucket"))

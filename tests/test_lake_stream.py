@@ -6,8 +6,9 @@ Two layers, two test surfaces:
   (streaming/lake_source.py) and is exercised here directly, no Spark
   query in the loop: initialOffset, one-committed-version-per-read,
   readBetweenOffsets checkpoint replay, remove-action refusal;
-- the SCALE PATH lives in the registry ops (stream_lake_tail /
-  stream_lake_cdf, full DataSourceStreamReader): partition planning is
+- the SCALE PATH lives in the one reader lake_source.lake_stream_source
+  builds for the registry ops (stream_lake_tail / stream_lake_cdf /
+  stream_lake_partition_tail, full DataSourceStreamReader): planning is
   pinned via the shared planner functions (one partition per commit
   file — fan-out > 1 proves executors see parallel work), and the
   executor-side read contract is pinned structurally here plus at
@@ -180,18 +181,67 @@ def _op_source(name: str) -> str:
     ["stream_lake_tail", "stream_lake_cdf", "stream_lake_partition_tail"],
 )
 def test_full_reader_not_driver_pump(op):
-    """Structural pin of VERDICT r10 item 1: both lake streaming ops
-    register a full streamReader (partition-planned, executor reads),
-    never the simpleStreamReader driver pump, and read() carries the
+    """Structural pin of VERDICT r10 item 1: every lake streaming op
+    registers the source lake_stream_source builds — a full
+    streamReader (partition-planned, executor reads), never the
+    simpleStreamReader driver pump — whose read() carries the
     planner-pid guard that turns any driver-routed row into a hard
     runtime failure (so the dual-SF sweeps re-prove the property on
     every run)."""
-    src = _op_source(op)
+    from hdfs_mr_spark.streaming.lake_source import lake_stream_source
+
+    assert "lake_stream_source(" in _op_source(op)
+    src = inspect.getsource(lake_stream_source)
     assert "def streamReader(self, schema):" in src
     assert "def simpleStreamReader" not in src
     assert "DataSourceStreamReader" in src
     assert "partition.planner_pid" in src and "RuntimeError" in src
     assert "def partitions(self, start, end):" in src
+
+
+def test_lake_stream_source_ships_by_value(tmp_path):
+    """The source lake_stream_source builds unpickles and plans in a
+    process that cannot import the package (the source runner's and
+    the executors' situation), and its read() refuses to serve rows in
+    the process that planned them."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from hdfs_mr_spark.sources.lake import _commit_or_raise
+    from hdfs_mr_spark.streaming.lake_source import lake_stream_source
+
+    store = tmp_path / "store"
+    _commit_or_raise(store, 0, {"add": ["data/a.parquet"], "remove": []})
+    _commit_or_raise(store, 1, {"add": ["data/b.parquet"], "remove": []})
+    blob = tmp_path / "source.pkl"
+    blob.write_bytes(cloudpickle.dumps(lake_stream_source(
+        "hmr_probe_tail", "id bigint", "plan_tail_partitions",
+        "read_added_file")))
+    probe = f"""
+import pickle, sys
+assert not any("hdfs_mr_spark" in m for m in sys.modules)
+cls = pickle.loads(open({str(blob)!r}, "rb").read())
+reader = cls({{"path": {str(store)!r}}}).streamReader(None)
+end = reader.latestOffset()
+parts = reader.partitions(reader.initialOffset(), end)
+print(end, [p.unit for p in parts])
+try:
+    list(reader.read(parts[0]))
+except RuntimeError as exc:
+    print("refused:", exc)
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run([sys.executable, "-c", probe], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=120)
+    assert out.returncode == 0, out.stderr
+    lines = out.stdout.splitlines()
+    assert lines[0] == ("{'version': 1} "
+                        "[(0, 'data/a.parquet'), (1, 'data/b.parquet')]")
+    assert lines[1].startswith("refused: hmr_probe_tail rows routed")
 
 
 def test_tail_plan_partition_filter(spark, append_store):
@@ -240,7 +290,6 @@ def test_tail_restart_no_redelivery(spark, append_store, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from hdfs_mr_spark.functions.udfs import REPO_ROOT
     from hdfs_mr_spark.sources.lake import _commit, version_adds
     from hdfs_mr_spark.streaming.queries import stream_lake_tail
 
@@ -252,7 +301,7 @@ def test_tail_restart_no_redelivery(spark, append_store, tmp_path):
     def run(name):
         q = (
             spark.readStream.format("hmr_lake_tail")
-            .option("path", str(store)).option("repo", REPO_ROOT)
+            .option("path", str(store))
             .load()
             .groupBy("o_orderstatus").agg(F.count("*").alias("n"))
             .writeStream.outputMode("complete").format("memory")
@@ -269,7 +318,7 @@ def test_tail_restart_no_redelivery(spark, append_store, tmp_path):
     base = run("hmr_restart_a")
     assert sum(base.values()) > 0
     readd = version_adds(store, 0)[0]
-    assert _commit(store / "_log", 3, {"add": [readd], "remove": []})
+    assert _commit(store, 3, {"add": [readd], "remove": []})
     after = run("hmr_restart_b")
     delta = collections.Counter(
         pq.read_table(store / readd, columns=["o_orderstatus"])

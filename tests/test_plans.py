@@ -1266,16 +1266,16 @@ def test_lake_stats_skipping_scans_one_file(spark):
     the pruned scan still pushes the residual predicate down."""
     from datetime import datetime
 
-    from hdfs_mr_spark.sources.lake import _pruned_files
+    from hdfs_mr_spark.sources.lake import _prune, _snapshot
     from hdfs_mr_spark.sources.scans import _fixture_dir
 
     # build (or reuse) the store, then interrogate the layout directly
     df = all_specs()["lake_stats_skipping"].fn(spark, SF_SMOKE)
-    root = _fixture_dir(SF_SMOKE) / "lake_stats"
-    files, live = _pruned_files(
-        root, "o_orderdate",
+    snap = _snapshot(_fixture_dir(SF_SMOKE) / "lake_stats")
+    files = _prune(snap, {"o_orderdate": (
         datetime(1997, 1, 1), datetime(1997, 12, 31, 23, 59, 59, 999999),
-    )
+    )})
+    live = len(snap)
     assert live == 7 and len(files) == 1, (live, files)
     # the op's own plan reads exactly that one file
     inputs = df.inputFiles()
@@ -1291,14 +1291,13 @@ def test_lake_delete_vectors_broadcast_anti_join_no_rewrite(spark):
     the deletion vector as a BROADCAST left-anti hash join (the sidecar
     is delete-cardinality-sized by contract; a shuffle or NL join here
     would re-partition the 100 TB scan side)."""
-    from hdfs_mr_spark.sources.lake import (_snapshot_delete_files,
-                                            _snapshot_files)
+    from hdfs_mr_spark.sources.lake import _delete_files, _snapshot
     from hdfs_mr_spark.sources.scans import _fixture_dir
 
     df = all_specs()["lake_delete_vectors"].fn(spark, SF_SMOKE)
     root = _fixture_dir(SF_SMOKE) / "lake_dv"
-    assert len(_snapshot_files(root)) == 6
-    assert len(_snapshot_delete_files(root)) == 1
+    assert len(_snapshot(root)) == 6
+    assert len(_delete_files(root)) == 1
     inputs = df.inputFiles()
     data_inputs = [f for f in inputs if "/data/" in f]
     dv_inputs = [f for f in inputs if "/dv/" in f]
@@ -1376,24 +1375,16 @@ def test_lake_vacuum_respects_restore(spark):
     computed as (all-ever-added minus LATEST-live) must therefore keep
     the re-added v1 files — an implementation that folded only remove
     actions (ignoring later re-adds) would delete live data."""
-    import json as _json
-
-    from hdfs_mr_spark.sources.lake import _log_versions, _snapshot_files
+    from hdfs_mr_spark.sources.lake import _replay, _snapshot, _vacuum_dead
     from hdfs_mr_spark.sources.scans import _fixture_dir
 
     all_specs()["lake_restore_version"].fn(spark, SF_SMOKE)
     root = _fixture_dir(SF_SMOKE) / "lake_restore"
-    live = set(_snapshot_files(root))
-    ever = set()
+    live = set(_snapshot(root))
     removed_ever = set()
-    for v in _log_versions(root):
-        acts = _json.loads((root / "_log" / f"v{v:010d}.json").read_text())
-        ever.update(
-            e["path"] if isinstance(e, dict) else e
-            for e in acts.get("add", [])
-        )
+    for _, acts in _replay(root):
         removed_ever.update(acts.get("remove", []))
-    dead = ever - live
+    dead = set(_vacuum_dead(root)[1])
     # every latest-live file was BOTH added and (by the merge) removed
     # at some version — the naive remove-fold would kill all of them
     assert live <= removed_ever
@@ -1617,6 +1608,53 @@ def test_stream_drains_written_once():
             if fn in banned:
                 offenders.append(f"queries.py:{node.lineno} {fn}( in {owner}")
     assert offenders == []
+
+
+def test_lake_log_format_written_once():
+    """The lake commit-log format lives in the log layer of
+    sources/lake.py: across hdfs_mr_spark/ and tools/ the "_log"
+    directory literal appears only in _log_dir and the v{...:010d}.json
+    version-file format only in _version_path; DataSourceStreamReader
+    is subclassed in one place (lake_source.lake_stream_source); and no
+    assert wraps a commit, so python -O strips none."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import hdfs_mr_spark
+
+    repo = Path(hdfs_mr_spark.__file__).resolve().parents[1]
+    version_file = re.compile(r"v\{[^{}]*:010d\}\.json")
+    commits = {"_commit", "_commit_or_raise"}
+    offenders, readers = [], []
+    files = [*(repo / "hdfs_mr_spark").rglob("*.py"),
+             *(repo / "tools").glob("*.py")]
+    for path in sorted(files):
+        rel = str(path.relative_to(repo))
+        for top in ast.parse(path.read_text()).body:
+            owner = getattr(top, "name", "<module>")
+            layer = rel == "hdfs_mr_spark/sources/lake.py" and owner
+            for node in ast.walk(top):
+                where = f"{rel}:{getattr(node, 'lineno', 0)} in {owner}"
+                if (isinstance(node, ast.Constant) and node.value == "_log"
+                        and layer != "_log_dir"):
+                    offenders.append(f"{where}: '_log'")
+                if (isinstance(node, ast.JoinedStr)
+                        and version_file.search(ast.unparse(node))
+                        and layer != "_version_path"):
+                    offenders.append(f"{where}: version-file name")
+                if isinstance(node, ast.ClassDef) and any(
+                        getattr(b, "id", getattr(b, "attr", None))
+                        == "DataSourceStreamReader" for b in node.bases):
+                    readers.append(where)
+                if isinstance(node, ast.Assert) and any(
+                        isinstance(c, ast.Call)
+                        and getattr(c.func, "id", getattr(c.func, "attr", None))
+                        in commits for c in ast.walk(node.test)):
+                    offenders.append(f"{where}: assert around a commit")
+    assert offenders == []
+    assert [r.split(":")[0] for r in readers] == [
+        "hdfs_mr_spark/streaming/lake_source.py"], readers
 
 
 def test_udfs_decode_through_media_codecs():

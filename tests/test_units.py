@@ -2797,37 +2797,33 @@ def test_lake_commit_log_primitives(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from hdfs_mr_spark.sources.lake import (
-        _commit,
-        _log_versions,
-        _snapshot_files,
-    )
+    from hdfs_mr_spark.sources.lake import _commit, _log_versions, _snapshot
 
     root = tmp_path
     log = root / "_log"
-    assert _commit(log, 0, {"add": ["data/a", "data/b"], "remove": []})
-    assert _commit(log, 1, {"add": ["data/c"], "remove": []})
+    assert _commit(root, 0, {"add": ["data/a", "data/b"], "remove": []})
+    assert _commit(root, 1, {"add": ["data/c"], "remove": []})
     # conflicting writer loses, then retries at the next version
-    assert not _commit(log, 1, {"add": ["data/x"], "remove": []})
-    assert _commit(log, 2, {"add": ["data/x"], "remove": []})
+    assert not _commit(root, 1, {"add": ["data/x"], "remove": []})
+    assert _commit(root, 2, {"add": ["data/x"], "remove": []})
     # the losing attempt must not have clobbered v1's content
     v1 = json.loads((log / "v0000000001.json").read_text())
     assert v1["add"] == ["data/c"]
     # COW rewrite: v3 tombstones a+b, adds d
-    assert _commit(log, 3, {"add": ["data/d"], "remove": ["data/a", "data/b"]})
+    assert _commit(root, 3, {"add": ["data/d"], "remove": ["data/a", "data/b"]})
     assert _log_versions(root) == [0, 1, 2, 3]
-    assert _snapshot_files(root) == ["data/c", "data/d", "data/x"]
-    assert _snapshot_files(root, as_of=1) == ["data/a", "data/b", "data/c"]
-    assert _snapshot_files(root, as_of=0) == ["data/a", "data/b"]
+    assert sorted(_snapshot(root)) == ["data/c", "data/d", "data/x"]
+    assert sorted(_snapshot(root, as_of=1)) == ["data/a", "data/b", "data/c"]
+    assert sorted(_snapshot(root, as_of=0)) == ["data/a", "data/b"]
     # checkpoint at v2: folds rooted there must match the full fold
     pq.write_table(
         pa.table({"path": pa.array(sorted({"data/a", "data/b", "data/c",
                                            "data/x"}), pa.string())}),
         log / "ckpt_0000000002.parquet",
     )
-    assert _snapshot_files(root) == ["data/c", "data/d", "data/x"]
+    assert sorted(_snapshot(root)) == ["data/c", "data/d", "data/x"]
     # as-of BELOW the checkpoint must ignore it
-    assert _snapshot_files(root, as_of=1) == ["data/a", "data/b", "data/c"]
+    assert sorted(_snapshot(root, as_of=1)) == ["data/a", "data/b", "data/c"]
 
 
 def test_lake_stats_skipping_kernel(tmp_path):
@@ -2836,41 +2832,38 @@ def test_lake_stats_skipping_kernel(tmp_path):
     [min,max] files, keeps stat-less files CONSERVATIVELY, and the
     boundary is inclusive on both ends (a file whose max == lo or
     min == hi must be scanned)."""
-    from hdfs_mr_spark.sources.lake import (
-        _commit,
-        _pruned_files,
-        _snapshot_adds,
-        _snapshot_files,
-    )
+    from hdfs_mr_spark.sources.lake import _commit, _prune, _snapshot
 
-    log = tmp_path / "_log"
+    root = tmp_path
     s = lambda a, b: {"k": {"min": a, "max": b}}  # noqa: E731
-    assert _commit(log, 0, {"add": [
+    assert _commit(root, 0, {"add": [
         {"path": "data/a", "stats": s(0, 9)},
         {"path": "data/b", "stats": s(10, 19)},
     ], "remove": []})
-    assert _commit(log, 1, {"add": [
+    assert _commit(root, 1, {"add": [
         {"path": "data/c", "stats": s(20, 29)},
         {"path": "data/nostats"},  # bare-path r9 format: no stats
     ], "remove": []})
     # COW rewrite of b — new file, new stats; old tombstoned
-    assert _commit(log, 2, {"add": [
+    assert _commit(root, 2, {"add": [
         {"path": "data/b2", "stats": s(12, 17)},
     ], "remove": ["data/b"]})
-    assert _snapshot_files(tmp_path) == [
+    assert sorted(_snapshot(tmp_path)) == [
         "data/a", "data/b2", "data/c", "data/nostats"]
-    adds = _snapshot_adds(tmp_path)
+    adds = {f: e.get("stats", {}) for f, e in _snapshot(tmp_path).items()}
     assert adds["data/b2"]["k"]["min"] == 12 and adds["data/nostats"] == {}
-    files, live = _pruned_files(tmp_path, "k", 12, 17)
+    snap = _snapshot(tmp_path)
+    files, live = _prune(snap, {"k": (12, 17)}), len(snap)
     assert live == 4 and files == ["data/b2", "data/nostats"]
     # inclusive boundaries both ends
-    assert _pruned_files(tmp_path, "k", 9, 9)[0] == ["data/a", "data/nostats"]
-    assert _pruned_files(tmp_path, "k", 29, 40)[0] == [
+    assert _prune(snap, {"k": (9, 9)}) == ["data/a", "data/nostats"]
+    assert _prune(snap, {"k": (29, 40)}) == [
         "data/c", "data/nostats"]
     # disjoint range: only the conservative stat-less file survives
-    assert _pruned_files(tmp_path, "k", 100, 200)[0] == ["data/nostats"]
+    assert _prune(snap, {"k": (100, 200)}) == ["data/nostats"]
     # as-of prunes against the HISTORICAL file set (pre-COW b, not b2)
-    files_v1, live_v1 = _pruned_files(tmp_path, "k", 12, 17, as_of=1)
+    snap_v1 = _snapshot(tmp_path, as_of=1)
+    files_v1, live_v1 = _prune(snap_v1, {"k": (12, 17)}), len(snap_v1)
     assert live_v1 == 4 and files_v1 == ["data/b", "data/nostats"]
 
 
@@ -2882,16 +2875,109 @@ def test_lake_version_adds_refuses_removes(tmp_path):
 
     from hdfs_mr_spark.sources.lake import _commit, version_adds
 
-    log = tmp_path / "_log"
-    assert _commit(log, 0, {"add": ["data/a"], "remove": []})
-    assert _commit(log, 1, {"add": [
+    root = tmp_path
+    assert _commit(root, 0, {"add": ["data/a"], "remove": []})
+    assert _commit(root, 1, {"add": [
         {"path": "data/b", "stats": {"k": {"min": 1, "max": 2}}}
     ], "remove": []})
-    assert _commit(log, 2, {"add": ["data/c"], "remove": ["data/a"]})
+    assert _commit(root, 2, {"add": ["data/c"], "remove": ["data/a"]})
     assert version_adds(tmp_path, 0) == ["data/a"]
     assert version_adds(tmp_path, 1) == ["data/b"]  # dict add normalized
     with _pytest.raises(ValueError, match="remove-actions"):
         version_adds(tmp_path, 2)
+
+
+def test_lake_snapshot_checkpoint_seeded(tmp_path):
+    """_snapshot starts from the newest checkpoint at or below as_of:
+    below the checkpoint it replays the log from v0, at it the
+    checkpoint alone is the snapshot, above it the checkpoint plus the
+    JSON tail. The checkpoint here holds a path the log never added
+    (data/ck), so each result shows which path the fold took. A
+    checkpoint records only paths: its entries carry no stats, and the
+    pruner keeps them."""
+    from hdfs_mr_spark.sources.lake import (_commit, _prune, _snapshot,
+                                            _write_checkpoint)
+
+    s = lambda a, b: {"k": {"min": a, "max": b}}  # noqa: E731
+    assert _commit(tmp_path, 0, {"add": [
+        {"path": "data/a", "stats": s(0, 9)}, "data/b"], "remove": []})
+    assert _commit(tmp_path, 1, {"add": ["data/c"], "remove": ["data/b"]})
+    assert _commit(tmp_path, 2, {"add": [
+        {"path": "data/d", "stats": s(20, 29)}], "remove": []})
+    v0 = _snapshot(tmp_path, 0)
+    assert v0 == {"data/a": {"path": "data/a", "stats": s(0, 9)},
+                  "data/b": {"path": "data/b"}}
+    _write_checkpoint(tmp_path, 1, ["data/a", "data/c", "data/ck"])
+    assert _snapshot(tmp_path, 0) == v0
+    seeded = {f: {"path": f} for f in ("data/a", "data/c", "data/ck")}
+    assert _snapshot(tmp_path, 1) == seeded
+    above = _snapshot(tmp_path, 2)
+    assert above == {**seeded,
+                     "data/d": {"path": "data/d", "stats": s(20, 29)}}
+    assert _snapshot(tmp_path) == above
+    assert _prune(above, {"k": (100, 200)}) == [
+        "data/a", "data/c", "data/ck"]
+
+
+def test_lake_vacuum_fold_counts_stats_adds_by_path(tmp_path):
+    """The vacuum fold (every file ever added minus the latest snapshot)
+    counts stats-carrying adds by path, and a file re-added after its
+    removal is live again."""
+    from hdfs_mr_spark.sources.lake import _commit, _vacuum_dead
+
+    st = {"k": {"min": 0, "max": 1}}
+    assert _commit(tmp_path, 0, {"add": [
+        {"path": "data/a", "stats": st}, "data/b"], "remove": []})
+    assert _commit(tmp_path, 1, {"add": [
+        {"path": "data/c", "stats": st}], "remove": ["data/a"]})
+    assert _commit(tmp_path, 2, {"add": [
+        {"path": "data/a", "stats": st}], "remove": ["data/b"]})
+    assert _vacuum_dead(tmp_path) == (3, ["data/b"])
+
+
+def test_lake_prune_encodes_datetime_bounds(tmp_path):
+    """Pruner bounds are raw values: a datetime is encoded the way
+    _file_stats records timestamps (ISO, space-separated), so it
+    prunes exactly as the encoded string would."""
+    from datetime import datetime
+
+    from hdfs_mr_spark.sources.lake import _commit, _prune, _snapshot
+
+    def ts(lo, hi):
+        return {"o_orderdate": {"min": lo, "max": hi}}
+
+    assert _commit(tmp_path, 0, {"add": [
+        {"path": "data/96", "stats": ts("1996-01-02 00:00:00",
+                                        "1996-12-31 00:00:00")},
+        {"path": "data/97", "stats": ts("1997-01-01 00:00:00",
+                                        "1997-12-31 23:59:59.999999")},
+        "data/nostats",
+    ], "remove": []})
+    snap = _snapshot(tmp_path)
+    lo, hi = datetime(1997, 12, 31, 23, 59, 59, 999999), datetime(1998, 1, 1)
+    assert _prune(snap, {"o_orderdate": (lo, hi)}) == [
+        "data/97", "data/nostats"]
+    assert _prune(snap, {"o_orderdate": (lo, hi)}) == _prune(
+        snap, {"o_orderdate": (lo.isoformat(sep=" "), hi.isoformat(sep=" "))})
+    assert _prune(snap, {"o_orderdate": (datetime(1998, 1, 1),
+                                         datetime(1999, 1, 1))}) == [
+        "data/nostats"]
+
+
+def test_lake_commit_or_raise_names_the_conflict(tmp_path):
+    """A commit that must win raises LakeCommitConflict (with the
+    version) instead of returning False, and leaves the winner's
+    content in place."""
+    import pytest as _pytest
+
+    from hdfs_mr_spark.sources.lake import (LakeCommitConflict, _actions,
+                                            _commit_or_raise)
+
+    _commit_or_raise(tmp_path, 0, {"add": ["data/a"], "remove": []})
+    with _pytest.raises(LakeCommitConflict) as err:
+        _commit_or_raise(tmp_path, 0, {"add": ["data/x"], "remove": []})
+    assert err.value.version == 0
+    assert _actions(tmp_path, 0)["add"] == ["data/a"]
 
 
 def test_avi_container_walk_and_refusals():

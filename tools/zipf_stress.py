@@ -270,23 +270,21 @@ def deep_lake_diagnostics(spark, store_root: Path) -> dict:
       target partition's 5 files),
     - the 50-step incremental planning loop a long-running stream
       actually executes (one (v-1, v] plan per micro-batch),
-    - a REAL end-to-end drain through a DataSourceStreamReader that
-      mirrors stream_lake_partition_tail's reader (same shared
-      planner, same planner-pid guard, parameterized store/column —
-      the op body itself is closed over its 7-commit fixture, which
-      is exactly why this harness exists),
+    - a REAL end-to-end drain through the reader
+      stream_lake_partition_tail uses (lake_source.lake_stream_source:
+      shared planner, planner-pid guard), pointed at this store and
+      partition column by options — the op body itself is closed over
+      its 7-commit fixture, which is exactly why this harness exists,
 
     and verifies the drained rows equal the target partition's
     content exactly."""
     import shutil
 
     from pyspark.sql import functions as F
-    from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
-                                        InputPartition)
 
-    from hdfs_mr_spark.functions.udfs import REPO_ROOT
-    from hdfs_mr_spark.sources.lake import _commit
-    from hdfs_mr_spark.streaming.lake_source import plan_tail_partitions
+    from hdfs_mr_spark.sources.lake import _commit_or_raise
+    from hdfs_mr_spark.streaming.lake_source import (lake_stream_source,
+                                                     plan_tail_partitions)
     from hdfs_mr_spark.streaming.queries import _drain
 
     n_commits, n_parts, rows_per_file = 50, 10, 5000
@@ -304,7 +302,7 @@ def deep_lake_diagnostics(spark, store_root: Path) -> dict:
                           "val": pa.array(ids * 31 % 997)}),
                 root / rel,
             )
-            assert _commit(root / "_log", k, {
+            _commit_or_raise(root, k, {
                 "add": [{"path": rel, "partitionValues": {"p": str(pval)}}],
                 "remove": [],
             })
@@ -321,88 +319,17 @@ def deep_lake_diagnostics(spark, store_root: Path) -> dict:
         )
     t_plan_incremental = round(time.time() - t0, 4)
 
-    root_s, repo = str(root), REPO_ROOT
-
-    class DeepPart(InputPartition):
-        def __init__(self, root, rel, planner_pid):
-            self.root, self.rel, self.planner_pid = root, rel, planner_pid
-
-    class DeepTailReader(DataSourceStreamReader):
-        # parameterized mirror of stream_lake_partition_tail's reader
-        # (streaming/queries.py) — shared planner, executor-side
-        # pyarrow reads behind the same planner-pid guard
-        def __init__(self):
-            self.cur = -1
-
-        def _mod(self, name):
-            import importlib
-            import sys as _sys
-
-            if repo not in _sys.path:
-                _sys.path.insert(0, repo)
-            return importlib.import_module(name)
-
-        def initialOffset(self):
-            return {"version": -1}
-
-        def latestOffset(self):
-            from pathlib import Path as _P
-
-            lake = self._mod("hdfs_mr_spark.sources.lake")
-            vs = lake._log_versions(_P(root_s))
-            if vs:
-                self.cur = max(self.cur, vs[-1])
-            return {"version": self.cur}
-
-        def partitions(self, start, end):
-            import os as _os
-
-            self.cur = max(self.cur, end["version"])
-            src = self._mod("hdfs_mr_spark.streaming.lake_source")
-            return [
-                DeepPart(root_s, f, _os.getpid())
-                for _v, f in src.plan_tail_partitions(
-                    root_s, start["version"], end["version"], "p", "3")
-            ]
-
-        def read(self, partition):
-            import os as _os
-
-            if _os.getpid() == partition.planner_pid:
-                raise RuntimeError("rows routed through planner process")
-            from pathlib import Path as _P
-
-            import pyarrow.parquet as _pq
-
-            t = _pq.read_table(_P(partition.root) / partition.rel,
-                               columns=["id", "val"])
-            yield from zip(t.column("id").to_pylist(),
-                           t.column("val").to_pylist())
-
-        def commit(self, end):
-            self.cur = max(self.cur, end["version"])
-
-    class DeepTailSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "hmr_deep_lake_tail"
-
-        def schema(self):
-            return "id bigint, val bigint"
-
-        def streamReader(self, schema):
-            return DeepTailReader()
-
-    try:
-        spark.dataSource.register(DeepTailSource)
-    except Exception as exc:
-        if ("exist" not in str(exc).lower()
-                and "already" not in str(exc).lower()):
-            raise
+    # the same reader as stream_lake_partition_tail, on the deep log
+    spark.dataSource.register(lake_stream_source(
+        "hmr_deep_lake_tail", "id bigint, val bigint",
+        "plan_tail_partitions", "read_added_file",
+    ))
 
     t0 = time.time()
     d = _drain(
-        spark.readStream.format("hmr_deep_lake_tail").load()
+        spark.readStream.format("hmr_deep_lake_tail")
+        .option("path", str(root))
+        .option("part_col", "p").option("part_val", "3").load()
         .groupBy().agg(F.count("*").alias("n"), F.sum("id").alias("s"))
         .writeStream.format("memory").outputMode("complete"),
         timeout=600,
