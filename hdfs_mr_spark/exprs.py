@@ -17,7 +17,7 @@ scale-8 decimal is ~1e5 looser than the double's 1e-13 error.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, Observation
 from pyspark.sql import functions as F
 
 DEC = "decimal(38,8)"
@@ -92,3 +92,50 @@ def fold_by_key(df, keys, order, fields, zero, step, finish=None):
     return rows.select(
         *keys, F.aggregate("rows", zero, step, finish).alias("fold")
     )
+
+
+def relax(edges, seeds, rounds):
+    """Min-plus relaxation from ``seeds`` over weighted ``edges``.
+
+    ``edges`` has columns ``src, dst, w`` and ``seeds`` has ``node, d``.
+    Each round relaxes only the nodes whose distance improved in the
+    round before (delta Bellman-Ford), merges the candidates into the
+    distances with one full outer join, and checkpoints that merge; the
+    checkpoint's job also counts the improved nodes (an ``observe``
+    metric, so the count costs no job of its own). The loop stops after
+    ``rounds`` rounds or at the first round that improves nothing. BFS
+    is the unit-weight case; min-label components is weight 0 from
+    ``(id, id)`` seeds.
+
+    Returns ``(dist, trace)``: ``dist`` has ``node, d`` (every node
+    reached within the rounds run), ``trace`` the improved count per
+    round. A trace that ends in 0 reached a fixpoint.
+    """
+    dist = frontier = seeds
+    trace: list[int] = []
+    for _ in range(rounds):
+        cand = (
+            frontier.join(edges, F.col("node") == F.col("src"))
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min(F.col("d") + F.col("w")).alias("nd"))
+        )
+        # nd is NULL for nodes no candidate reached, so imp is not true
+        # there and d passes through
+        imp = F.col("d").isNull() | (F.col("nd") < F.col("d"))
+        improved = Observation()
+        merged = (
+            cand.join(dist, "node", "full")
+            .select(
+                "node",
+                F.when(imp, F.col("nd")).otherwise(F.col("d")).alias("d"),
+                imp.alias("imp"),
+            )
+            .observe(improved, F.count_if("imp").alias("n"))
+            .localCheckpoint()
+        )
+        dist = merged.select("node", "d")
+        frontier = merged.filter("imp").select("node", "d")
+        trace.append(improved.get["n"])
+        if trace[-1] == 0:
+            break
+    return dist, trace

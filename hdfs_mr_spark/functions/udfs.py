@@ -3399,7 +3399,11 @@ def llm_multimodal_exif(spark, sf_dir):
                 blob = build(int(doc_id), h)
                 rec = parse(blob)
                 num, den = rec[0x011A]
-                assert den == 100, den
+                if den != 100:
+                    raise ValueError(
+                        f"doc_id {int(doc_id)}: XResolution denominator "
+                        f"is {den}, not 100"
+                    )
                 rows.append({
                     "byte_order": rec["byte_order"],
                     "orientation": rec[0x0112],

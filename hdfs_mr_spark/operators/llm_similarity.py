@@ -2972,8 +2972,14 @@ def llm_sim_knn_ivf_pq_compact(spark, sf_dir):
     # store AND the declared base/delta split — a partial fold (lost
     # delta partition) or a double-absorb surfaces here, then again in
     # the oracle pins
-    assert meta["n_base_folded"] == n_base_live == n_base
-    assert meta["n_delta_folded"] == n_delta_live == n_total - n_base
+    if not (meta["n_base_folded"] == n_base_live == n_base
+            and meta["n_delta_folded"] == n_delta_live == n_total - n_base):
+        raise RuntimeError(
+            f"llm_sim_knn_ivf_pq_compact: {cstore} folded "
+            f"{meta['n_base_folded']} base + {meta['n_delta_folded']} delta "
+            f"rows; the live stores hold {n_base_live} + {n_delta_live} "
+            f"and the split declares {n_base} + {n_total - n_base}"
+        )
     # ONE partition-pruned scan — the union is gone, that's the point
     return _ivf_pq_serve(spark, sf_dir, cstore, extra=(
         F.lit(meta["n_base_folded"]).cast("bigint").alias("n_base_folded"),

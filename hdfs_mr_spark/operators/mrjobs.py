@@ -12,11 +12,81 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from hdfs_mr_spark.exprs import dsum, sql_dsum
+from hdfs_mr_spark.exprs import dsum, relax, sql_dsum
 from hdfs_mr_spark.io import fan_out, table
 from hdfs_mr_spark.registry import query
 
 _FAM = "2.9 MR composite jobs"
+
+
+_EDGE_CTES = """
+sh AS (
+  SELECT doc_id,
+         list_distinct(list_transform(range(1, len(l) - 1),
+                       i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS shingles
+  FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents) d
+),
+tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
+sizes AS (SELECT doc_id, COUNT(*) AS sz FROM tok GROUP BY doc_id),
+inter AS (
+  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS n_common
+  FROM tok a JOIN tok b ON a.s = b.s AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id
+),
+edges AS (
+  SELECT i.d1, i.d2 FROM inter i
+  JOIN sizes s1 ON i.d1 = s1.doc_id
+  JOIN sizes s2 ON i.d2 = s2.doc_id
+  WHERE CAST(i.n_common AS DOUBLE)
+        / CAST(s1.sz + s2.sz - i.n_common AS DOUBLE) >= 0.5
+)"""
+
+# The doc graph's symmetric edge list (mr_pagerank, mr_triangle_count,
+# mr_clustering_coeff).
+_BIDIR_CTE = """bidir AS (
+  SELECT d1 AS src, d2 AS dst FROM edges
+  UNION ALL
+  SELECT d2 AS src, d1 AS dst FROM edges
+)"""
+
+
+def _pagerank_round_sql(i: int) -> str:
+    """One unrolled PageRank round as a DuckDB CTE (twin of the Spark
+    loop in mr_pagerank)."""
+    return f"""
+r{i} AS (
+  SELECT n.doc_id,
+         CAST(150000 + (850 * COALESCE(SUM(p.r // dg.deg), 0)) // 1000 AS BIGINT) AS r
+  FROM documents n
+  LEFT JOIN bidir e ON e.dst = n.doc_id
+  LEFT JOIN r{i - 1} p ON p.doc_id = e.src
+  LEFT JOIN deg dg ON dg.src = e.src
+  GROUP BY n.doc_id
+)"""
+
+
+def _kmeans_round_sql(i: int) -> str:
+    """One unrolled Lloyd iteration as DuckDB CTEs (twin of the Spark
+    loop in mr_kmeans)."""
+    return f"""
+d{i} AS (
+  SELECT v.vec_id, c.cid,
+         SUM((v.val - c.cval) * (v.val - c.cval)) AS d
+  FROM vdim v JOIN c{i - 1} c ON v.pos = c.pos
+  GROUP BY v.vec_id, c.cid
+),
+a{i} AS (
+  SELECT vec_id, cid FROM (
+    SELECT vec_id, cid,
+           row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rk
+    FROM d{i}
+  ) WHERE rk = 1
+),
+c{i} AS (
+  SELECT a.cid, v.pos, SUM(v.val) // COUNT(*) AS cval
+  FROM a{i} a JOIN vdim v ON v.vec_id = a.vec_id
+  GROUP BY a.cid, v.pos
+)"""
 
 
 @query(
@@ -199,80 +269,13 @@ def mr_join_agg(spark, sf_dir):
 
 @query(
     "mr_pagerank",
-    oracle="""
-WITH 
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(l) - 1),
-                       i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS shingles
-  FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents) d
-),
-tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM tok GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS n_common
-  FROM tok a JOIN tok b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-edges AS (
-  SELECT i.d1, i.d2 FROM inter i
-  JOIN sizes s1 ON i.d1 = s1.doc_id
-  JOIN sizes s2 ON i.d2 = s2.doc_id
-  WHERE CAST(i.n_common AS DOUBLE)
-        / CAST(s1.sz + s2.sz - i.n_common AS DOUBLE) >= 0.5
-),
-bidir AS (
-  SELECT d1 AS src, d2 AS dst FROM edges
-  UNION ALL
-  SELECT d2 AS src, d1 AS dst FROM edges
-),
+    oracle=f"""
+WITH {_EDGE_CTES},
+{_BIDIR_CTE},
 deg AS (SELECT src, COUNT(*) AS deg FROM bidir GROUP BY src),
-r0 AS (SELECT doc_id, CAST(1000000 AS BIGINT) AS r FROM documents),
-r1 AS (
-  SELECT n.doc_id,
-         CAST(150000 + (850 * COALESCE(SUM(p.r // dg.deg), 0)) // 1000 AS BIGINT) AS r
-  FROM documents n
-  LEFT JOIN bidir e ON e.dst = n.doc_id
-  LEFT JOIN r0 p ON p.doc_id = e.src
-  LEFT JOIN deg dg ON dg.src = e.src
-  GROUP BY n.doc_id
-),
-r2 AS (
-  SELECT n.doc_id,
-         CAST(150000 + (850 * COALESCE(SUM(p.r // dg.deg), 0)) // 1000 AS BIGINT) AS r
-  FROM documents n
-  LEFT JOIN bidir e ON e.dst = n.doc_id
-  LEFT JOIN r1 p ON p.doc_id = e.src
-  LEFT JOIN deg dg ON dg.src = e.src
-  GROUP BY n.doc_id
-),
-r3 AS (
-  SELECT n.doc_id,
-         CAST(150000 + (850 * COALESCE(SUM(p.r // dg.deg), 0)) // 1000 AS BIGINT) AS r
-  FROM documents n
-  LEFT JOIN bidir e ON e.dst = n.doc_id
-  LEFT JOIN r2 p ON p.doc_id = e.src
-  LEFT JOIN deg dg ON dg.src = e.src
-  GROUP BY n.doc_id
-),
-r4 AS (
-  SELECT n.doc_id,
-         CAST(150000 + (850 * COALESCE(SUM(p.r // dg.deg), 0)) // 1000 AS BIGINT) AS r
-  FROM documents n
-  LEFT JOIN bidir e ON e.dst = n.doc_id
-  LEFT JOIN r3 p ON p.doc_id = e.src
-  LEFT JOIN deg dg ON dg.src = e.src
-  GROUP BY n.doc_id
-),
-r5 AS (
-  SELECT n.doc_id,
-         CAST(150000 + (850 * COALESCE(SUM(p.r // dg.deg), 0)) // 1000 AS BIGINT) AS r
-  FROM documents n
-  LEFT JOIN bidir e ON e.dst = n.doc_id
-  LEFT JOIN r4 p ON p.doc_id = e.src
-  LEFT JOIN deg dg ON dg.src = e.src
-  GROUP BY n.doc_id
-)
+r0 AS (SELECT doc_id, CAST(1000000 AS BIGINT) AS r FROM documents),"""
+    + ",".join(_pagerank_round_sql(i) for i in range(1, 6))
+    + """
 SELECT r5.doc_id, r5.r AS rank_micro,
        CAST(COALESCE(dg.deg, 0) AS BIGINT) AS degree
 FROM r5 LEFT JOIN deg dg ON dg.src = r5.doc_id
@@ -287,8 +290,9 @@ def mr_pagerank(spark, sf_dir):
     (in MR terms: one full map/shuffle/reduce pass materialized through
     the DFS; here the five rounds compose into ONE lazy Catalyst plan —
     no intermediate materialization at all, the exact thing MR cannot
-    do; only the shared edge set is checkpointed, being consumed six
-    times). All rank arithmetic is integer micro-units (rank div deg,
+    do; the only checkpoints are the loop invariants: the symmetric
+    edge list, the edges with their source degree, and the edge-node
+    set). All rank arithmetic is integer micro-units (rank div deg,
     (850*sum) div 1000), so partial-aggregation order can't perturb a
     single bit and DuckDB replays the identical 5 unrolled iterations.
     Isolated docs converge to the damping floor 0.15; 2-cliques hold the
@@ -352,61 +356,9 @@ WITH vdim AS (
   FROM embeddings e,
        LATERAL unnest(range(1, len(e.embedding) + 1)) AS p(pos)
 ),
-c0 AS (SELECT vec_id AS cid, pos, val AS cval FROM vdim WHERE vec_id < 8),
-d1 AS (
-  SELECT v.vec_id, c.cid,
-         SUM((v.val - c.cval) * (v.val - c.cval)) AS d
-  FROM vdim v JOIN c0 c ON v.pos = c.pos
-  GROUP BY v.vec_id, c.cid
-),
-a1 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rk
-    FROM d1
-  ) WHERE rk = 1
-),
-c1 AS (
-  SELECT a.cid, v.pos, SUM(v.val) // COUNT(*) AS cval
-  FROM a1 a JOIN vdim v ON v.vec_id = a.vec_id
-  GROUP BY a.cid, v.pos
-),
-d2 AS (
-  SELECT v.vec_id, c.cid,
-         SUM((v.val - c.cval) * (v.val - c.cval)) AS d
-  FROM vdim v JOIN c1 c ON v.pos = c.pos
-  GROUP BY v.vec_id, c.cid
-),
-a2 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rk
-    FROM d2
-  ) WHERE rk = 1
-),
-c2 AS (
-  SELECT a.cid, v.pos, SUM(v.val) // COUNT(*) AS cval
-  FROM a2 a JOIN vdim v ON v.vec_id = a.vec_id
-  GROUP BY a.cid, v.pos
-),
-d3 AS (
-  SELECT v.vec_id, c.cid,
-         SUM((v.val - c.cval) * (v.val - c.cval)) AS d
-  FROM vdim v JOIN c2 c ON v.pos = c.pos
-  GROUP BY v.vec_id, c.cid
-),
-a3 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rk
-    FROM d3
-  ) WHERE rk = 1
-),
-c3 AS (
-  SELECT a.cid, v.pos, SUM(v.val) // COUNT(*) AS cval
-  FROM a3 a JOIN vdim v ON v.vec_id = a.vec_id
-  GROUP BY a.cid, v.pos
-)
+c0 AS (SELECT vec_id AS cid, pos, val AS cval FROM vdim WHERE vec_id < 8),"""
+    + ",".join(_kmeans_round_sql(i) for i in (1, 2, 3))
+    + """
 SELECT a3.vec_id, CAST(a3.cid AS BIGINT) AS cluster,
        CAST(COUNT(*) OVER (PARTITION BY a3.cid) AS BIGINT) AS cluster_size
 FROM a3
@@ -471,29 +423,6 @@ def mr_kmeans(spark, sf_dir):
     )
 
 
-_EDGE_CTES = """
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(l) - 1),
-                       i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS shingles
-  FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents) d
-),
-tok AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM tok GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS n_common
-  FROM tok a JOIN tok b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-edges AS (
-  SELECT i.d1, i.d2 FROM inter i
-  JOIN sizes s1 ON i.d1 = s1.doc_id
-  JOIN sizes s2 ON i.d2 = s2.doc_id
-  WHERE CAST(i.n_common AS DOUBLE)
-        / CAST(s1.sz + s2.sz - i.n_common AS DOUBLE) >= 0.5
-)"""
-
-
 def _oriented_triangles(spark, sf_dir):
     """Degree-ordered oriented-triangle enumeration over the exact
     near-dup graph. Returns ``(tri, deg)``: each triangle exactly once
@@ -540,11 +469,7 @@ def _oriented_triangles(spark, sf_dir):
     oracle=f"""
 WITH
 {_EDGE_CTES},
-bidir AS (
-  SELECT d1 AS src, d2 AS dst FROM edges
-  UNION ALL
-  SELECT d2 AS src, d1 AS dst FROM edges
-),
+{_BIDIR_CTE},
 deg AS (SELECT src AS node, COUNT(*) AS deg FROM bidir GROUP BY src),
 okey AS (SELECT node, deg * 100000000 + node AS k FROM deg),
 oriented AS (
@@ -796,10 +721,9 @@ def mr_tera_validate(spark, sf_dir):
     )
 
 
-@query(
-    "mr_bfs",
-    oracle="""
-WITH RECURSIVE inc AS (
+# The customer-part purchase incidence and its symmetric edge list
+# (mr_bfs, mr_label_propagation; mr_sssp adds the weight).
+_PURCHASE_CTES = """inc AS (
   SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
   FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
   WHERE l.l_quantity >= 40
@@ -808,7 +732,50 @@ bidir AS (
   SELECT 'c' || c AS src, 'p' || p AS dst FROM inc
   UNION ALL
   SELECT 'p' || p, 'c' || c FROM inc
-),
+)"""
+
+
+def _purchase_graph(spark, sf_dir):
+    """The customer-part purchase incidence of mr_bfs, mr_sssp and
+    mr_label_propagation: one row per (cnode, pnode) pair joined by a
+    high-quantity line (l_quantity >= 40), with w the smallest such
+    quantity. Nodes are namespaced 'c<custkey>' and 'p<partkey>'. It is
+    checkpointed because each query reads it more than once."""
+    o = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 40)
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy(
+            F.concat(F.lit("c"), F.col("o_custkey")).alias("cnode"),
+            F.concat(F.lit("p"), F.col("l_partkey")).alias("pnode"),
+        )
+        .agg(F.min("l_quantity").cast("bigint").alias("w"))
+        .localCheckpoint()
+    )
+
+
+def _purchase_paths(spark, sf_dir, w):
+    """Shortest distances within 4 hops over the purchase graph with
+    edge weight ``w``, from every customer whose key is a multiple of
+    500: ``node, d`` for every node reached."""
+    inc = _purchase_graph(spark, sf_dir)
+    edges = inc.select(
+        F.col("cnode").alias("src"), F.col("pnode").alias("dst"), w.alias("w")
+    ).union(inc.select("pnode", "cnode", w))
+    seeds = (
+        inc.select(F.col("cnode").alias("node"))
+        .distinct()
+        .filter(F.substring("node", 2, 100).cast("bigint") % 500 == 0)
+        .select("node", F.lit(0).cast("bigint").alias("d"))
+        .localCheckpoint()
+    )
+    return relax(edges, seeds, 4)[0]
+
+
+@query(
+    "mr_bfs",
+    oracle=f"""
+WITH RECURSIVE {_PURCHASE_CTES},
 bfs(node, lvl) AS (
   SELECT 'c' || c, 0 FROM (SELECT DISTINCT c FROM inc) WHERE c % 500 = 0
   UNION ALL
@@ -831,57 +798,17 @@ def mr_bfs(spark, sf_dir):
     is exactly what dies first at 100 TB, while the incidence list is
     linear in the fact table.
 
-    Scale design — frontier-delta iteration: each round expands ONLY
-    the newly discovered frontier (anti-join against the known set), so
+    Scale design: BFS is shortest paths with unit weights, so it runs
+    on exprs.relax, the delta relaxation mr_sssp uses. Each round
+    expands only the nodes first reached in the round before, so
     per-round shuffle volume tracks the frontier and total work is
-    O(|E|) over all rounds (Pregel discipline); frontiers are
+    O(|E|) over all rounds (Pregel discipline); each round's merge is
     localCheckpoint'ed to cut the iterative lineage. The oracle replays
     the definition as a level-bounded recursive CTE + MIN(lvl): BFS
     first-discovery level IS the minimum level, so they agree."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 40)
-    # r15-opt (guide §2.4/§5.4): inc was consumed THREE times lazily (both
-    # union branches of bidir + the seed filter), re-running the
-    # lineitem x orders join + distinct each time; checkpoint it once and
-    # derive all three cheaply. The per-round dist checkpoint is dropped:
-    # dist is a flat union of already-checkpointed frontiers (no lineage
-    # growth to cut), so eagerly re-materializing the growing union each
-    # round was pure overhead.
-    inc = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey")).alias("cnode"),
-            F.concat(F.lit("p"), F.col("l_partkey")).alias("pnode"),
-        )
-        .distinct()
-        .localCheckpoint()
+    return _purchase_paths(spark, sf_dir, F.lit(1)).select(
+        "node", F.col("d").cast("int").alias("hop")
     )
-    bidir = inc.select(
-        F.col("cnode").alias("src"), F.col("pnode").alias("dst")
-    ).union(inc.select(F.col("pnode").alias("src"), F.col("cnode").alias("dst")))
-    seeds = (
-        inc.select(F.col("cnode").alias("node"))
-        .distinct()
-        .filter(F.substring("node", 2, 100).cast("bigint") % 500 == 0)
-        .select("node", F.lit(0).cast("int").alias("hop"))
-        .localCheckpoint()
-    )
-    dist = seeds
-    frontier = seeds
-    for _ in range(4):
-        reached = bidir.join(
-            frontier, bidir.src == frontier.node
-        ).select(F.col("dst").alias("node"), (F.col("hop") + 1).alias("hop"))
-        frontier = (
-            reached.join(dist, "node", "left_anti")
-            .groupBy("node")
-            .agg(F.min("hop").cast("int").alias("hop"))
-            .localCheckpoint()
-        )
-        if frontier.isEmpty():
-            break
-        dist = dist.unionByName(frontier)
-    return dist
 
 
 @query(
@@ -965,11 +892,7 @@ def mr_merkle_checksum(spark, sf_dir):
     oracle=f"""
 WITH
 {_EDGE_CTES},
-bidir AS (
-  SELECT d1 AS src, d2 AS dst FROM edges
-  UNION ALL
-  SELECT d2 AS src, d1 AS dst FROM edges
-),
+{_BIDIR_CTE},
 deg AS (SELECT src AS node, COUNT(*) AS deg FROM bidir GROUP BY src),
 okey AS (SELECT node, deg * 100000000 + node AS k FROM deg),
 oriented AS (
@@ -1071,72 +994,20 @@ def mr_sssp(spark, sf_dir):
     never see float order effects).
 
     The MR classic is one relax-pass per job; here each round is one
-    equi-join + combiner min. Scale design is mr_bfs' frontier-delta
-    discipline upgraded for weights: a round relaxes ONLY nodes whose
-    tentative distance improved last round (classic delta Bellman-Ford
-    — a settled node's out-edges were already relaxed with its final
+    equi-join + combiner min, run by exprs.relax (shared with mr_bfs
+    and llm_dedup_clusters). A round relaxes ONLY nodes whose tentative
+    distance improved last round (classic delta Bellman-Ford — a
+    settled node's out-edges were already relaxed with its final
     distance, re-relaxing them cannot produce anything new), so shuffle
     volume per round tracks the improving frontier, not |V|. Each
     round's candidate set collapses map-side (groupBy min BEFORE the
-    merge join), frontiers/dist localCheckpoint to cut lineage, and an
+    merge join), the merge is localCheckpoint'ed to cut lineage, and an
     early-exit fires when a round improves nothing. The hop bound makes
     the semantics 'shortest distance using <= 4 edges' — exactly what
     the oracle's level-bounded recursive CTE + MIN(d) enumerates."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 40)
-    # r15-opt (guide §2.4/§5.4, the mr_bfs discipline): inc was consumed
-    # three times lazily (both union branches + the seed filter),
-    # re-running the join + min-groupBy each time; checkpoint it once.
-    inc = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.concat(F.lit("c"), F.col("o_custkey")).alias("cnode"),
-            F.concat(F.lit("p"), F.col("l_partkey")).alias("pnode"),
-        )
-        .agg(F.min("l_quantity").cast("bigint").alias("w"))
-        .localCheckpoint()
+    return _purchase_paths(spark, sf_dir, F.col("w")).select(
+        "node", F.col("d").alias("dist")
     )
-    edges = inc.select(
-        F.col("cnode").alias("src"), F.col("pnode").alias("dst"), "w"
-    ).union(inc.select(F.col("pnode"), F.col("cnode"), "w"))
-    dist = (
-        inc.select(F.col("cnode").alias("node"))
-        .distinct()
-        .filter(F.substring("node", 2, 100).cast("bigint") % 500 == 0)
-        .select("node", F.lit(0).cast("bigint").alias("d"))
-        .localCheckpoint()
-    )
-    frontier = dist
-    for _ in range(4):
-        cand = (
-            frontier.join(edges, F.col("node") == F.col("src"))
-            .select(F.col("dst").alias("node"), (F.col("d") + F.col("w")).alias("d"))
-            .groupBy("node")
-            .agg(F.min("d").alias("nd"))
-        )
-        # r16-opt (guide §2.4): the improved-filter left join and the
-        # dist-update full join are the SAME merge — fuse them into one
-        # full outer join checkpointed once per round (improved and the
-        # new dist become projections of it), halving the per-round
-        # join + eager-materialization count. 2.5/2.7 -> 2.2/2.4 s at
-        # sf0.1; results identical (nd is NULL for un-relaxed nodes, so
-        # imp is false there and d passes through).
-        imp = F.col("d").isNull() | (F.col("nd") < F.col("d"))
-        merged = (
-            cand.join(dist, "node", "full")
-            .select(
-                "node",
-                F.when(imp, F.col("nd")).otherwise(F.col("d")).alias("d"),
-                imp.alias("imp"),
-            )
-            .localCheckpoint()
-        )
-        improved = merged.filter("imp").select("node", "d")
-        if improved.isEmpty():
-            break
-        dist = merged.select("node", "d")
-        frontier = improved
-    return dist.select("node", F.col("d").alias("dist"))
 
 
 @query(
@@ -1276,19 +1147,21 @@ def _lpa_round_sql(prev: str, out: str) -> str:
 )"""
 
 
+def _lpa_round(labels, edges):
+    """One synchronous LPA round: each ``dst`` of ``edges`` takes the
+    most frequent ``lbl`` among its ``src`` neighbours, the smallest on
+    a tie (mode with deterministic=True)."""
+    return (
+        labels.join(edges, F.col("node") == F.col("src"))
+        .groupBy(F.col("dst").alias("node"))
+        .agg(F.mode("lbl", True).alias("lbl"))
+    )
+
+
 @query(
     "mr_label_propagation",
     oracle=f"""
-WITH inc AS (
-  SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-  WHERE l.l_quantity >= 40
-),
-bidir AS (
-  SELECT 'c' || c AS src, 'p' || p AS dst FROM inc
-  UNION ALL
-  SELECT 'p' || p, 'c' || c FROM inc
-),
+WITH {_PURCHASE_CTES},
 l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM bidir),
 {_lpa_round_sql('l0', 'l1')},
 {_lpa_round_sql('l1', 'l2')},
@@ -1313,50 +1186,20 @@ def mr_label_propagation(spark, sf_dir):
     LPA can oscillate on bipartite graphs — this one IS bipartite, so
     a fixpoint loop would never be correct here).
 
-    Scale: each round is one equi-join against the edge list + a
-    combiner-shape (node, label) count + one per-node window —
-    shuffle volume O(|E|) per round, labels localCheckpoint'ed so the
-    3-round lineage never re-executes; identical plan discipline to
-    mr_pagerank's rounds."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 40)
-    # r15-opt (guide §2.4, the mr_bfs discipline): inc was consumed twice
-    # by the union — the lineitem x orders join + distinct ran 2x per
-    # query; checkpoint it once and derive the edge list lazily.
-    inc = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey")).alias("cnode"),
-            F.concat(F.lit("p"), F.col("l_partkey")).alias("pnode"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    Scale: each round is one equi-join against the edge list + one
+    per-node mode aggregate — shuffle volume O(|E|) per round, labels
+    localCheckpoint'ed so the 3-round lineage never re-executes.
+    mode(lbl, deterministic=True) picks the smallest of the most
+    frequent labels: the oracle's ORDER BY c DESC, lbl ASC."""
+    inc = _purchase_graph(spark, sf_dir)
     edges = inc.select(
         F.col("cnode").alias("src"), F.col("pnode").alias("dst")
-    ).union(inc.select(F.col("pnode"), F.col("cnode")))
+    ).union(inc.select("pnode", "cnode"))
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     ).localCheckpoint()
     for _ in range(3):
-        cnt = (
-            labels.join(edges, F.col("node") == F.col("src"))
-            .groupBy(F.col("dst").alias("nnode"), "lbl")
-            .agg(F.count("*").alias("c"))
-            .withColumnRenamed("nnode", "node")
-        )
-        # r15-opt (guide §2.3): the most-frequent-label pick was a
-        # row_number window — a second full shuffle + SORT of every
-        # (node, label, c) row per round. min(struct(-c, lbl)) is the
-        # identical total order (c DESC == -c ASC, then lbl ASC; lbl is
-        # unique within a node's rows so there is no residual tie) as a
-        # combiner-shape aggregate with map-side partials.
-        labels = (
-            cnt.groupBy("node")
-            .agg(F.min(F.struct((-F.col("c")).alias("nc"), "lbl")).alias("m"))
-            .select("node", F.col("m.lbl").alias("lbl"))
-            .localCheckpoint()
-        )
+        labels = _lpa_round(labels, edges).localCheckpoint()
     # community size via combiner groupBy + join, NOT a window
     # partitioned by label: a dominant community would make that
     # window one giant partition (the skew shape the plan gates exist

@@ -261,7 +261,8 @@ def write_ocf(
             json.dumps(schema, sort_keys=True).encode()
             + str(len(rows)).encode()
         ).digest()
-    assert len(sync) == SYNC_LEN
+    if len(sync) != SYNC_LEN:
+        raise ValueError(f"avro sync marker is {len(sync)} bytes, not {SYNC_LEN}")
     header = bytearray()
     header.extend(MAGIC)
     meta = {

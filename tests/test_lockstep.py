@@ -14,3 +14,19 @@ from hdfs_mr_spark import lockstep
 def test_survey_registry_bench_lockstep():
     report = lockstep.lockstep_report()
     assert lockstep.is_green(report), report
+
+
+def test_coverage_md_is_current():
+    """COVERAGE.md is exactly what tools/coverage_snapshot.py renders now:
+    every impl row points at its query's current line and the bench
+    column reads the newest headline BENCH_r<N>.json record. Regenerate
+    with `python tools/coverage_snapshot.py` after moving a query."""
+    import importlib.util
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    spec = importlib.util.spec_from_file_location(
+        "coverage_snapshot", repo / "tools" / "coverage_snapshot.py")
+    snapshot = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(snapshot)
+    assert (repo / "COVERAGE.md").read_text() == snapshot.render()

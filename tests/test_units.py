@@ -1017,7 +1017,9 @@ def test_pixels_kernel_decodes_through_module_codec():
 def test_sssp_matches_python_bellman_ford(spark):
     """mr_sssp vs an independent driver-side Bellman-Ford over the same
     edge list (third implementation, neither Spark-iterative nor
-    recursive-CTE): 4-hop-bounded distances must agree exactly."""
+    recursive-CTE): 4-hop-bounded distances must agree exactly. The
+    same reference with unit weights is BFS, and must give mr_bfs's
+    hops."""
     import duckdb
 
     from tests.conftest import SF_SMOKE
@@ -1033,31 +1035,91 @@ def test_sssp_matches_python_bellman_ford(spark):
         FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
         WHERE l.l_quantity >= 40 GROUP BY 1, 2
     """).fetchall()
-    adj: dict[str, list[tuple[str, int]]] = {}
-    for c, p, w in edges:
-        adj.setdefault(c, []).append((p, w))
-        adj.setdefault(p, []).append((c, w))
-    dist = {
-        n: 0 for n in adj
-        if n.startswith("c") and int(n[1:]) % 500 == 0
-    }
-    frontier = dict(dist)
-    for _ in range(4):
-        nxt: dict[str, int] = {}
-        for n, d in frontier.items():
-            for m, w in adj.get(n, ()):
-                nd = d + w
-                if nd < dist.get(m, 1 << 60) and nd < nxt.get(m, 1 << 60):
-                    nxt[m] = nd
-        if not nxt:
-            break
-        dist.update(nxt)
-        frontier = nxt
-    got = {
-        r.node: r.dist
-        for r in all_specs()["mr_sssp"].fn(spark, SF_SMOKE).collect()
-    }
-    assert got == dist
+
+    def bellman_ford(unit):
+        adj: dict[str, list[tuple[str, int]]] = {}
+        for c, p, w in edges:
+            w = 1 if unit else w
+            adj.setdefault(c, []).append((p, w))
+            adj.setdefault(p, []).append((c, w))
+        dist = {
+            n: 0 for n in adj
+            if n.startswith("c") and int(n[1:]) % 500 == 0
+        }
+        frontier = dict(dist)
+        for _ in range(4):
+            nxt: dict[str, int] = {}
+            for n, d in frontier.items():
+                for m, w in adj.get(n, ()):
+                    nd = d + w
+                    if nd < dist.get(m, 1 << 60) and nd < nxt.get(m, 1 << 60):
+                        nxt[m] = nd
+            if not nxt:
+                break
+            dist.update(nxt)
+            frontier = nxt
+        return dist
+
+    specs = all_specs()
+    sssp = {r.node: r.dist for r in specs["mr_sssp"].fn(spark, SF_SMOKE).collect()}
+    assert sssp == bellman_ford(unit=False)
+    bfs = {r.node: r.hop for r in specs["mr_bfs"].fn(spark, SF_SMOKE).collect()}
+    assert bfs == bellman_ford(unit=True)
+
+
+def test_lpa_round_ties_match_count_then_min_struct(spark):
+    """One mr_label_propagation round (one mode aggregate) equals the
+    count + min(struct(-c, lbl)) round it replaced, on a graph where
+    string order decides the ties: 'c10' beats 'c9', and 'c9' beats
+    'p1'."""
+    from pyspark.sql import functions as F
+
+    from hdfs_mr_spark.operators.mrjobs import _lpa_round
+
+    labels = spark.createDataFrame(
+        [("a", "c10"), ("b", "c9"), ("c", "c9"), ("d", "p1"),
+         ("e", "p1"), ("f", "c10")], "node string, lbl string")
+    edges = spark.createDataFrame(
+        [("a", "x"), ("b", "x"),                 # x: c10 / c9 tie
+         ("c", "y"), ("d", "y"),                 # y: c9 / p1 tie
+         ("b", "z"), ("d", "z"), ("e", "z"), ("f", "z"),  # z: p1 by count
+         ("a", "w")],
+        "src string, dst string")
+    cnt = (
+        labels.join(edges, F.col("node") == F.col("src"))
+        .groupBy(F.col("dst").alias("nnode"), "lbl")
+        .agg(F.count("*").alias("c"))
+        .withColumnRenamed("nnode", "node")
+    )
+    replica = (
+        cnt.groupBy("node")
+        .agg(F.min(F.struct((-F.col("c")).alias("nc"), "lbl")).alias("m"))
+        .select("node", F.col("m.lbl").alias("lbl"))
+    )
+    got = sorted(map(tuple, _lpa_round(labels, edges).collect()))
+    assert got == sorted(map(tuple, replica.collect()))
+    assert got == [("w", "c10"), ("x", "c10"), ("y", "c9"), ("z", "p1")]
+
+
+def test_relax_chain_converges_and_guard_raises(spark):
+    """On a 64-node chain, weight-0 relaxation from (id, id) seeds
+    improves 63, 62, ..., 1 nodes and then reaches its fixpoint with
+    every label 0; llm_dedup_clusters' guard raises with the per-round
+    trace when the round bound stops it one round short."""
+    from hdfs_mr_spark.exprs import relax
+    from hdfs_mr_spark.operators.llm_dedup import _min_label_components
+
+    n = 64
+    nodes = spark.range(n).withColumnRenamed("id", "node")
+    edges = spark.createDataFrame(
+        [(i, i + 1, 0) for i in range(n - 1)]
+        + [(i + 1, i, 0) for i in range(n - 1)],
+        "src bigint, dst bigint, w int")
+    dist, trace = relax(edges, nodes.selectExpr("node", "node AS d"), n)
+    assert trace == [*range(n - 1, 0, -1), 0]
+    assert sorted(tuple(r) for r in dist.collect()) == [(i, 0) for i in range(n)]
+    with pytest.raises(RuntimeError, match=r"within 63 rounds.*\[63, 62, "):
+        _min_label_components(nodes, edges, n - 1)
 
 
 def test_theilsen_matches_python_reference(spark):
@@ -4704,8 +4766,9 @@ def test_stream_drains_of_zero_batches_return_empty_answer(
 
 @pytest.mark.parametrize("n_rows", [0, 1])
 def test_sequential_folds_on_degenerate_inputs(spark, tmp_path, n_rows):
-    """The per-key folds return their oracle's answer on zero-row and
-    one-row copies of documents, lineitem and orders."""
+    """The per-key folds, the exprs.relax callers and label propagation
+    return their oracle's answer on zero-row and one-row copies of
+    documents, lineitem and orders."""
     import pyarrow.parquet as pq
 
     from hdfs_mr_spark.check import check_query, oracle_connection
@@ -4724,6 +4787,7 @@ def test_sequential_folds_on_degenerate_inputs(spark, tmp_path, n_rows):
     specs = all_specs()
     for name in ("llm_tokenizer_viterbi", "llm_tokenizer_wordpiece",
                  "ts_forecast_croston", "ts_holt_winters",
-                 "ts_forecast_ets_damped", "ts_dtw"):
+                 "ts_forecast_ets_damped", "ts_dtw", "mr_bfs", "mr_sssp",
+                 "mr_label_propagation", "llm_dedup_clusters"):
         res = check_query(specs[name], spark, con, sf)
         assert res.ok, (name, res.detail)
